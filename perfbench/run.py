@@ -2,7 +2,7 @@
 """Benchmark runner: builds the engine and the harness, makes the fixture
 data, runs one workload in one Spark process and prints its metrics.
 
-    python3 perfbench/run.py --workload batch_sweep --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload batch_sweep --seed 1 --seconds 16 --trace 0
 
 Workloads: batch_sweep, dossier_requests, index_churn. The last line of
 standard output is one JSON object: {"correct", "attempted", "failed",
@@ -11,9 +11,8 @@ standard output is one JSON object: {"correct", "attempted", "failed",
 human-readable report.
 
 Extra options: --data-dir DIR runs on an existing fixture directory instead
-of the generated one; --ops N fixes the operation count; --setups N sets
-how many times set-up is repeated (default 3); --record OUT (batch_sweep)
-writes results, digests and oracle SQL for oracle_check.py.
+of the generated one; --record OUT (batch_sweep) writes results, digests
+and oracle SQL for oracle_check.py.
 
 Everything the run builds or writes stays under the work directory
 ($CARGO_TARGET_DIR, default .bench_build) of the checkout.
@@ -68,13 +67,18 @@ def source_hash():
 
 
 def build(work):
-    """Compiles engine + harness with sbt once per source state; returns the
-    runtime classpath."""
+    """Compiles engine + harness with sbt unless the last build was of the
+    same sources (the classes directories hold only the last build);
+    returns the runtime classpath."""
+    if not os.path.isfile(os.path.join(ROOT, "build.sbt")):
+        sys.exit(f"[perfbench] no engine build ({ROOT}/build.sbt) to benchmark")
     stamp = source_hash()
-    cp_file = os.path.join(work, f"classpath-{stamp}.txt")
+    cp_file = os.path.join(work, "classpath.txt")
     if os.path.isfile(cp_file):
         with open(cp_file) as f:
-            return f.read().strip()
+            built, _, cp = f.read().partition("\n")
+        if built == stamp:
+            return cp.strip()
     env = dict(os.environ, COURSIER_MODE="offline",
                SBT_OPTS="-Dsbt.override.build.repos=true -Dsbt.offline=true "
                         "-Dsbt.server.forcestart=false -Xmx2g")
@@ -91,7 +95,7 @@ def build(work):
         sys.stderr.write(p.stdout[-4000:] + p.stderr[-4000:])
         sys.exit("[perfbench] build failed")
     with open(cp_file, "w") as f:
-        f.write(lines[-1])
+        f.write(stamp + "\n" + lines[-1])
     return lines[-1]
 
 
@@ -130,8 +134,6 @@ def main():
     ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--data-dir")
-    ap.add_argument("--ops", type=int)
-    ap.add_argument("--setups", type=int, default=3)
     ap.add_argument("--record")
     a = ap.parse_args()
 
@@ -149,10 +151,7 @@ def main():
             "-cp", cp, "perfbench.Main",
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
             "--trace", str(a.trace), "--data", data, "--data-key", data_key(data),
-            "--work", run_dir, "--expected", os.path.join(BENCH, "expected_digests.json"),
-            "--setups", str(a.setups)])
-    if a.ops:
-        cmd += ["--ops", str(a.ops)]
+            "--work", run_dir, "--expected", os.path.join(BENCH, "expected_digests.json")])
     if a.record:
         cmd += ["--record", os.path.abspath(a.record)]
     env = dict(os.environ, SPARK_LOCAL_DIRS=os.path.join(run_dir, "spark-local"))

@@ -45,7 +45,7 @@ final class BatchSweep(a: Args) extends Workload {
   private lazy val expected: Map[String, String] = BatchSweep.loadExpected(a.expected, a.dataKey)
 
   /** Fixture load: every table's parquet footer and row count. */
-  def setup(s: SparkSession, rep: Int): Unit = {
+  def setup(s: SparkSession): Unit = {
     spark = s
     BatchSweep.tables.foreach(graft.Tables(s, a.data).t(_).count())
   }
@@ -75,10 +75,21 @@ final class BatchSweep(a: Args) extends Workload {
     case None => Some(s"no expected digest for data ${a.dataKey}")
   }
 
-  /** The ER blocker behind g50, measured beside the run: candidate volume
-    * of the prefix-filter join and the pairs it keeps. */
+  /** Measured beside the run: the ER blocker behind g50 (candidate volume
+    * of the prefix-filter join and the pairs it keeps), and the graph calls
+    * behind g39 and g37 on their inputs (strongest chains from the first
+    * 100 users over INTERACTED, the time-ordered 1-2 hop reach motif). */
   override def traceCounters(t: Tracer): Unit = {
-    val labels = graft.Tables(spark, a.data).part
+    import graft.graph.{GraphBuilder, Hop, Motif, Ubo}
+    val tables = graft.Tables(spark, a.data)
+    val e = Ubo.interactedWeighted(tables)
+    val owners = e.filter(col("src") < GraphBuilder.UserBase + 100L).select(col("src").as("owner"))
+    t.add("graph.rows_out", t.call("graph", "strongestChain")(Ubo.strongestChain(e, owners, maxHops = 4).count()).toDouble)
+    val reach = Motif("u", None, Seq(Hop("w", relType = Some("INTERACTED"), timeOrdered = true,
+      maxDelay = Some("1 HOUR"), repeat = Some((1, 2)))), notEqual = Seq(("u", "w")))
+    t.add("graph.rows_out", t.call("graph", "Motif.find")(Motif.find(GraphBuilder(tables), reach).count()).toDouble)
+
+    val labels = tables.part
       .groupBy(concat_ws(" ", col("p_name"), col("p_brand"), col("p_type")).as("label"))
       .agg(min(col("p_partkey")).as("id"))
       .select("id", "label")

@@ -31,7 +31,7 @@ final class DossierRequests(a: Args) extends Workload {
 
   private def rev(df: DataFrame) = df.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
 
-  def setup(s: SparkSession, rep: Int): Unit = {
+  def setup(s: SparkSession): Unit = {
     spark = s
     val t = graft.Tables(s, a.data)
     biz = GraphBuilder.edges(t)
@@ -50,8 +50,6 @@ final class DossierRequests(a: Args) extends Workload {
     Seq(Ego(GraphBuilder.CustomerBase), Cone(GraphBuilder.SupplierBase),
         Conn(GraphBuilder.CustomerBase, GraphBuilder.CustomerBase + 1)).foreach(run(_, warm))
   }
-
-  override def teardown(): Unit = { biz.unpersist(); layers.foreach(_.unpersist()) }
 
   // about 0.6 s per request on 4 cores
   def nOps(seconds: Int): Int = math.max(11, math.round(seconds / 0.6).toInt)

@@ -65,7 +65,7 @@ final class IndexChurn(a: Args) extends Workload {
     ids.toSeq.sorted.map(i => (i, vecs(i).toSeq)).toDF("vec_id", "embedding")
   }
 
-  def setup(s: SparkSession, rep: Int): Unit = {
+  def setup(s: SparkSession): Unit = {
     spark = s
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
@@ -76,7 +76,7 @@ final class IndexChurn(a: Args) extends Workload {
     val rng = new Random(a.seed)
     def pick(ids: Iterable[Long]) = rng.shuffle(ids.toSeq.sorted).take(ids.size * 3 / 5).toSet
     init = (pick(docs.keys), pick(vecs.keys))
-    root = new File(a.work, s"indexes-$rep")
+    root = new File(a.work, "indexes")
     deleteTree(root)
     root.mkdirs()
     // 8 term shards: the corpus has a few dozen distinct terms
@@ -92,8 +92,6 @@ final class IndexChurn(a: Args) extends Workload {
         LshProbe(Seq((-1L, docs(init._1.min))), Set.empty, Set.empty),
         IvfProbe(vecs(init._2.min), Set.empty, Set.empty)).foreach(run(_, warm))
   }
-
-  override def teardown(): Unit = deleteTree(root)
 
   private def deleteTree(f: File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteTree))

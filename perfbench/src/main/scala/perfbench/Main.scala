@@ -13,11 +13,9 @@ import org.apache.spark.sql.SparkSession
 trait Workload {
   type O
   /** Starts from a fresh session: loads or caches fixtures, builds indexes. */
-  def setup(spark: SparkSession, rep: Int): Unit
-  /** First calls of each operation kind, once, after the last set-up. */
+  def setup(spark: SparkSession): Unit
+  /** First calls of each operation kind, once, after the set-up. */
   def warmUp(): Unit = ()
-  /** Releases what [[setup]] built, before the session stops. */
-  def teardown(): Unit = ()
   /** Operations in one run of `seconds` nominal length. */
   def nOps(seconds: Int): Int
   def plan(seed: Long, n: Int): IndexedSeq[O]
@@ -41,7 +39,10 @@ trait Workload {
 
 final case class Args(workload: String, seed: Long, seconds: Int, trace: Boolean,
                       data: String, dataKey: String, work: String, expected: String,
-                      setups: Int, ops: Option[Int], record: Option[String], cpus: Int)
+                      record: Option[String]) {
+  /** The session runs at local[nproc]. */
+  val cpus: Int = Runtime.getRuntime.availableProcessors
+}
 
 object Main {
   def parse(a: Array[String]): Args = {
@@ -49,9 +50,7 @@ object Main {
     def need(k: String) = m.getOrElse(k, sys.error(s"missing --$k"))
     Args(need("workload"), m.getOrElse("seed", "1").toLong, m.getOrElse("seconds", "10").toInt,
       m.getOrElse("trace", "0") == "1", need("data"), m.getOrElse("data-key", ""),
-      need("work"), m.getOrElse("expected", ""), m.getOrElse("setups", "3").toInt,
-      m.get("ops").map(_.toInt), m.get("record"),
-      m.getOrElse("cpus", Runtime.getRuntime.availableProcessors.toString).toInt)
+      need("work"), m.getOrElse("expected", ""), m.get("record"))
   }
 
   def median(xs: Seq[Double]): Double = {
@@ -85,26 +84,19 @@ object Main {
       case _ => sys.error("--record applies to batch_sweep only")
     }}
 
-    // set-up, repeated; the last session serves the run
-    var spark: SparkSession = null
-    val setupS = (1 to a.setups).map { rep =>
-      val t0 = System.nanoTime()
-      spark = graft.GraftSession.local(a.cpus.toString)
-      wl.setup(spark, rep)
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (rep < a.setups) { wl.teardown(); spark.stop() }
-      dt
-    }
-    val w0 = System.nanoTime()
+    // set-up: session start, fixture load or cache, index build, warm-up
+    val t0 = System.nanoTime()
+    val spark = graft.GraftSession.local(a.cpus.toString)
+    wl.setup(spark)
+    val setupS = (System.nanoTime() - t0) / 1e9
     wl.warmUp()
-    val warmS = (System.nanoTime() - w0) / 1e9
+    val warmS = (System.nanoTime() - t0) / 1e9 - setupS
 
-    val n = a.ops.getOrElse(wl.nOps(a.seconds))
+    val n = wl.nOps(a.seconds)
     val ops = wl.plan(a.seed, n)
     val tracer = new Tracer(a.trace)
     tracer.attach(spark)
     val heap = new HeapPeak
-    heap.sample()
     val cpu = new CpuMeter
     spark.sparkContext.addSparkListener(cpu)
     val threads = ManagementFactory.getThreadMXBean
@@ -125,7 +117,6 @@ object Main {
       clientCpuNs += threads.getCurrentThreadCpuTime - c0
       gcRun += gcMs() - gc0
       wl.settle(ops(i), tracer)
-      heap.sample()
     }
     val jitRun = jitMs() - jit0
     org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext, 30000L)
@@ -143,7 +134,7 @@ object Main {
     } ++ (try wl.finalCheck() catch { case e: Exception => Seq(s"final check error: $e") })
       .map(r => s"final state: $r")
     failures.take(20).foreach(f => System.err.println(s"[perfbench] FAILED $f"))
-    tracer.aside("counters")(wl.traceCounters(tracer))
+    if (a.trace) tracer.aside("counters")(wl.traceCounters(tracer))
     tracer.detach()
     val heapPeakMb = heap.finish()
 
@@ -151,15 +142,14 @@ object Main {
     val (tailS, tailPct) = tail(lat.toSeq)
     // gated in BENCHMARK.json; the rest of the report is informational
     val e2e = Seq(
-      ("setup_s", median(setupS) + warmS, "s",
-        f"median of ${setupS.map(x => f"$x%.2f").mkString(" ")} + warm-up $warmS%.2f"),
+      ("setup_s", setupS + warmS, "s", f"set-up $setupS%.2f + warm-up $warmS%.2f"),
       ("run_s", runS, "s", s"${ops.size} operations"),
       ("op_geomean_s", math.exp(lat.map(math.log).sum / lat.length), "s", s"n=${ops.size}"),
       ("cpu_s", cpuS, "s", f"client thread ${clientCpuNs / 1e9}%.2f + Spark tasks ${cpu.taskCpuNs.get / 1e9}%.2f"))
     val extra = Seq(
       ("op_p50_s", median(lat.toSeq), "s", s"n=${ops.size}"),
       ("op_tail_s", tailS, "s", f"p$tailPct%.1f, n=${ops.size}"),
-      ("heap_peak_mb", heapPeakMb, "MB", "peak live heap after full GC"),
+      ("heap_peak_mb", heapPeakMb, "MB", "peak heap after a collection"),
       ("fail_frac", failures.size.toDouble / ops.size, "ratio", s"${failures.size}/${ops.size}")) ++
       wl.extraMetrics(ops.zip(lat.toSeq))
 
@@ -204,15 +194,37 @@ final class CpuMeter extends org.apache.spark.scheduler.SparkListener {
     Option(e.taskMetrics).foreach(m => taskCpuNs.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime))
 }
 
-/** Peak live driver heap over the timed run: the heap left after a full
-  * collection, taken between operations (outside their timing) and once at
-  * the end. Collecting between operations also keeps one operation's
-  * garbage out of the next one's latency. */
+/** Peak driver heap after a collection, over the timed run: the heap
+  * pools' usage right after each collection, as the collectors report it
+  * in their notifications. It reads what the run's own collections leave
+  * and forces none. */
 final class HeapPeak {
-  private var peak = 0L
-  def sample(): Unit = {
-    System.gc()
-    peak = math.max(peak, ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed)
+  import javax.management.{Notification, NotificationEmitter, NotificationListener}
+  import javax.management.openmbean.CompositeData
+  import com.sun.management.GarbageCollectionNotificationInfo
+
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == java.lang.management.MemoryType.HEAP).map(_.getName).toSet
+  private val peak = new java.util.concurrent.atomic.AtomicLong
+  private val listener = new NotificationListener {
+    def handleNotification(n: Notification, hb: Any): Unit =
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val after = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+          .getGcInfo.getMemoryUsageAfterGc.asScala
+        val used = after.collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+        peak.accumulateAndGet(used, math.max(_, _))
+      }
   }
-  def finish(): Double = { sample(); peak / (1024.0 * 1024.0) }
+  private val emitters = ManagementFactory.getGarbageCollectorMXBeans.asScala.collect {
+    case e: NotificationEmitter => e.addNotificationListener(listener, null, null); e
+  }
+
+  /** Stops listening; the peak in MB, at least the heap pools' usage
+    * after their last collection (their collection usage). */
+  def finish(): Double = {
+    emitters.foreach(_.removeNotificationListener(listener))
+    val lastCollected = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => heapPools(p.getName)).flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum
+    math.max(peak.get, lastCollected) / (1024.0 * 1024.0)
+  }
 }

@@ -4,13 +4,17 @@ import scala.collection.mutable
 
 /** Per-layer figures of a traced run, computed from the recorded spans,
   * jobs, plans and counters. Every name is printed on every workload; a
-  * layer the workload bypasses reads 0. The `graph.*` call figures come
-  * only from dossier_requests, which is outside BENCHMARK.json's workload
-  * set, so they stay out of the result line ([[inResult]]). */
+  * layer the workload bypasses reads 0. */
 object PerLayer {
-  def inResult(name: String): Boolean = !name.startsWith("graph.")
+  /** Figures no workload of BENCHMARK.json makes: dossier_requests' graph
+    * calls, and the graph and rel self time of timed operations
+    * (batch_sweep measures graph and rel calls beside the run). The result
+    * line leaves them out; the report lines keep them. */
+  def inResult(name: String): Boolean =
+    !dossierFns.exists(fn => name.startsWith(s"graph.$fn.")) && !Set("graph.self_ms", "rel.self_ms")(name)
 
-  val graphFns = Seq("egoMembers", "connectionDistance", "propagateLayers")
+  val dossierFns = Seq("egoMembers", "connectionDistance", "propagateLayers")
+  val graphFns = dossierFns ++ Seq("strongestChain", "Motif.find")
   val textOps = Seq("bm25.probe", "bm25.append", "bm25.remove", "bm25.compact",
                     "lsh.probe", "ivf.probe")
   val selfLayers = Seq("op" -> "bench", "compose" -> "compose", "graph" -> "graph",

@@ -3,10 +3,12 @@
 median, quartiles and quartile spread (IQR / median), next to the bound
 BENCHMARK.json gives it.
 
-    python3 perfbench/steadiness.py --seeds 1-10 [--workload W ...] [--out FILE]
+    python3 perfbench/steadiness.py --seeds 1-10 [--workload W ...] [--out FILE --set NAME]
 
 Seeds are a range `a-b` or a comma list. With --out the figures are written
-as JSON (merged into FILE per workload and seed set).
+as JSON, merged into FILE under workload and set name (default: the seeds),
+and every metric's median is compared with the same workload's other sets
+in FILE: the change against each, next to the bound.
 """
 import argparse
 import json
@@ -33,6 +35,7 @@ def main():
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--workload", action="append")
     ap.add_argument("--out")
+    ap.add_argument("--set")
     a = ap.parse_args()
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     record = json.load(open(a.out)) if a.out and os.path.isfile(a.out) else {}
@@ -58,16 +61,21 @@ def main():
         for k, v in values.items():
             q1, med, q3 = statistics.quantiles(v, n=4)
             rows[k] = {"median": med, "q1": q1, "q3": q3, "spread": (q3 - q1) / med,
-                       "bound": bounds[k], "n": len(v)}
+                       "bound": bounds[k], "n": len(v), "seeds": a.seeds}
             flag = "" if k == "setup_s" or (q3 - q1) / med < bounds[k] / 3 else "  <-- above bound/3"
             print(f"  {k:14s} median {med:10.4f}  q1 {q1:10.4f}  q3 {q3:10.4f}  "
                   f"spread {(q3 - q1) / med:6.3f}  bound {bounds[k]}{flag}")
         print(f"  wall per run: median {statistics.median(walls):.1f} s, max {max(walls):.1f} s")
-        record.setdefault(w, {})[a.seeds] = rows
-    if a.out:
-        with open(a.out, "w") as f:
-            json.dump(record, f, indent=2, sort_keys=True)
-            f.write("\n")
+        name = a.set or a.seeds
+        for other, orows in sorted(record.get(w, {}).items()):
+            if other != name:
+                print(f"  against set {other}: " + ", ".join(
+                    f"{k} {rows[k]['median'] / orows[k]['median'] - 1:+.3f}" for k in rows if k in orows))
+        record.setdefault(w, {})[name] = rows
+        if a.out:
+            with open(a.out, "w") as f:
+                json.dump(record, f, indent=2, sort_keys=True)
+                f.write("\n")
 
 
 if __name__ == "__main__":
