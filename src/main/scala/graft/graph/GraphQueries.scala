@@ -322,10 +322,12 @@ object GraphQueries {
     val dateDf = dates.map(ds => s.range(1).select(asOf(ds).as("as_of")))
       .reduce(_.unionByName(_))
     // step 1 = identity on the reversed dated supplied layer at the 2
-    // seeds (Ubo.seedStepAsOf — bit-identical, one join+agg elided; r17)
-    val s1 = Ubo.seedStepAsOf(rev(supplied),
+    // seeds (Ubo.seedStep on a dated layer — bit-identical, one join+agg
+    // elided; r17)
+    val s1 = Ubo.seedStep(rev(supplied),
       col("src").between(GraphBuilder.SupplierBase + 1L, GraphBuilder.SupplierBase + 2L))
-    val cones = Ubo.propagateLayersAsOf(Seq(rev(contains), rev(placed)), s1)
+    val cones = Ubo.propagateLayers(Seq(rev(contains), rev(placed)), s1,
+        materializeLayers = false)
       .select(col("as_of"), col("owner").as("supplier"), col("entity").as("holder"),
               round(col("share"), 6).as("share6"))
     val w = Window.partitionBy("as_of", "supplier")
@@ -360,12 +362,12 @@ object GraphQueries {
     // 2 dated layers + 2 edge-union branches — however many dates)
     val g = GraphBuilder.edges(t).transform(Materialize.apply)
     val sy = seeds.crossJoin(dateDf).select(col("owner").as("seed"), col("as_of"))
-    val mem = Traversals.egoMembersAsOf(g, sy, 2).transform(Materialize.apply)
+    val mem = Traversals.egoMembers(g, sy, 2).transform(Materialize.apply)
     val egoNodeRows = mem.groupBy(col("seed"), col("as_of"))
       .agg(count(lit(1)).cast("double").as("score"))
       .select(col("as_of"), col("seed").as("supplier"), lit("ego_nodes").as("section"),
               lit(0L).as("key"), lit("nodes").as("detail"), col("score"))
-    val egoEdgeRows = Traversals.inducedEdgesAsOf(g, mem)
+    val egoEdgeRows = Traversals.inducedEdges(g, mem)
       .groupBy(col("seed"), col("as_of"), col("rel_type"))
       .agg(count(lit(1)).cast("double").as("score"))
       .select(col("as_of"), col("seed").as("supplier"), lit("ego_edges").as("section"),
@@ -2813,9 +2815,9 @@ object GraphQueries {
     // add zero scans, only pre-agg-sized rows; the placed layer (per-order
     // edges, nothing to pre-aggregate away) explodes dates per order row
     // and filters, one scan likewise. (2) the propagation batches the date
-    // axis exactly the way g53 batches seeds: Ubo.propagateLayersAsOf
-    // carries as_of through the step join keys, so suppliers × dates cost
-    // the same three joins as one cone. Rank-truncated top-5 per
+    // axis exactly the way g53 batches seeds: Ubo.propagateLayers, given a
+    // dated init, carries as_of through the step join keys, so suppliers ×
+    // dates cost the same three joins as one cone. Rank-truncated top-5 per
     // (date, supplier) — the g03 dilution lesson.
     E("g56_ubo_asof", (s, d) => {
       val t = Tables(s, d)
@@ -2825,12 +2827,13 @@ object GraphQueries {
       def rev(df: DataFrame) = df.select(col("as_of"),
         col("dst").as("src"), col("src").as("dst"), col("weight"))
       // step 1 = identity on the reversed dated supplied layer at the 3
-      // seeds (Ubo.seedStepAsOf — bit-identical per (owner, as_of) cell,
-      // one join+agg step elided; the layers carry exactly the slider
-      // dates the old seed frame crossed in; r17)
-      val s1 = Ubo.seedStepAsOf(rev(supplied),
+      // seeds (Ubo.seedStep on a dated layer — bit-identical per (owner,
+      // as_of) cell, one join+agg step elided; the layers carry exactly
+      // the slider dates the old seed frame crossed in; r17)
+      val s1 = Ubo.seedStep(rev(supplied),
         col("src").between(GraphBuilder.SupplierBase + 1L, GraphBuilder.SupplierBase + 3L))
-      val cones = Ubo.propagateLayersAsOf(Seq(rev(contains), rev(placed)), s1)
+      val cones = Ubo.propagateLayers(Seq(rev(contains), rev(placed)), s1,
+        materializeLayers = false)
         .select(year(col("as_of")).cast("long").as("as_of_year"),
                 col("owner").as("supplier"), col("entity").as("holder"),
                 round(col("share"), 6).as("share6"))
@@ -3105,7 +3108,7 @@ object GraphQueries {
     // NOW is g57; an audit asks it at past slider positions, where the
     // answer legitimately DIFFERS (orders not yet placed, parts not yet
     // shipped). The batch key grows from seed to (seed, as_of) exactly as
-    // s09 extends s07 (egoMembersAsOf's free-batch-key shape): one
+    // s09 extends s07 (egoMembers' free-batch-key shape): one
     // traversal answers every (pair, position), the meet join carries
     // as_of in its keys so no cross-date leakage is possible (pinned by
     // ConnectionSpec on a fixture with a not-yet-valid edge). The two
@@ -3126,7 +3129,7 @@ object GraphQueries {
       val dates = Seq("1992-06-30 23:59:59", "1998-12-31 23:59:59")
         .map(Tuple1(_)).toDF("ds")
       val pairs = base.crossJoin(dates.select(col("ds").cast("timestamp_ntz").as("as_of")))
-      Traversals.connectionDistanceAsOf(ebiz, pairs, 2)
+      Traversals.connectionDistance(ebiz, pairs, 2)
         .select(col("s_id"), col("t_id"), year(col("as_of")).cast("long").as("as_of_year"),
                 col("dist"), col("n_meet"), col("meet_min"))
         .orderBy("s_id", "t_id", "as_of_year")
@@ -3721,7 +3724,7 @@ object GraphQueries {
     // shape). g62's graded ego sections traverse nation hubs UNCAPPED —
     // at sf6.4 each (seed, date) ego pulls ~1/25 of all suppliers/
     // customers (388→888 s swing, SCALE.md round-12 note 1). This grades
-    // the bounded form: `capEgoMembersAsOf` truncates each (seed, date)
+    // the bounded form: `capEgoMembers` truncates each (seed, date)
     // frame to the top-`cap` members by (depth, induced strength, id) —
     // the s09-capped convention — with the PRE-CAP total surfaced so a
     // consumer sees the truncation, then summarizes the capped frame's
@@ -3741,12 +3744,12 @@ object GraphQueries {
         .map(ds => s.range(1).select(lit(ds).cast("timestamp_ntz").as("as_of")))
         .reduce(_.unionByName(_))
       val sy = seeds.crossJoin(dateDf)
-      val mem = Traversals.egoMembersAsOf(g, sy, 2)
-      val capped = Traversals.capEgoMembersAsOf(gppm, mem, 40)
+      val mem = Traversals.egoMembers(g, sy, 2)
+      val capped = Traversals.capEgoMembers(gppm, mem, 40)
         .transform(Materialize.apply)
       val kept = capped.groupBy("seed", "as_of")
         .agg(count(lit(1)).as("n_kept"), max(col("n_total")).as("n_total"))
-      val e = Traversals.inducedEdgesAsOf(gppm, capped)
+      val e = Traversals.inducedEdges(gppm, capped)
         .groupBy(col("seed"), col("as_of"), col("rel_type"))
         .agg(count(lit(1)).as("n_edges"), sum(col("weight")).cast("long").as("sum_w_ppm"))
       kept.join(e, Seq("seed", "as_of"), "left")
@@ -3834,7 +3837,7 @@ object GraphQueries {
     // divide 1997's quantities by 1997's totals, the g56 semantics; a
     // validity filter over today's weights would be wrong the same way a
     // filtered cone is), and the DP batches the date axis through
-    // (owner, as_of) state (Ubo.strongestChainAsOf). Spec pins the 2001
+    // (owner, as_of) state (Ubo.strongestChain). Spec pins the 2001
     // slice ≡ g59 (date past all data ⇒ dated web ≡ undated web) and
     // cross-date strength divergence.
     E("g64_strongest_asof", (s, d) => {
@@ -3849,7 +3852,7 @@ object GraphQueries {
         .toDF("s_id", "t_id")
       val pairs = base.crossJoin(dates.map(Tuple1(_)).toDF("ds")
         .select(col("ds").cast("timestamp_ntz").as("as_of")))
-      Traversals.strongestConnectionsAsOf(web, pairs, 2)
+      Traversals.strongestConnections(web, pairs, 2)
         .select(col("s_id"), col("t_id"), year(col("as_of")).cast("long").as("as_of_year"),
                 col("strength6"), col("chain"), col("hops"))
         .orderBy("s_id", "t_id", "as_of_year")
@@ -4113,12 +4116,12 @@ object GraphQueries {
     // over years" — "what did supplier S's dossier look like in 1996 vs
     // 2001?" is the audit-trail question). Three sections, each the as-of
     // form of its g52 sibling, each batching the date axis for free:
-    // owners from Ubo.propagateLayersAsOf over datedUboLayers (shared
+    // owners from Ubo.propagateLayers over datedUboLayers (shared
     // with g56 — dates add conditional sums, never scans; renormalization
     // semantics inherited), risk flags from the SAME dated supplied layer
     // (a part's concentration ratio in 1996 uses 1996's supplier mix —
     // the g56 renormalization argument applied to g52's ratio), ego
-    // summaries from ONE egoMembersAsOf traversal for all (seed, date)
+    // summaries from ONE egoMembers traversal for all (seed, date)
     // pairs (the s09 shape). Long format (as_of_year, supplier, section,
     // key, detail, score) — the g52 contract with the slider axis
     // prepended. Top-3 owners per (date, supplier), rank-truncated (the

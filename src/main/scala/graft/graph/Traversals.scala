@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DataFrame-native bounded traversals (SURVEY.md §2 G2/G5/G14, §4.3).
@@ -32,12 +33,6 @@ object Traversals {
     */
   def kHop(edges: DataFrame, start: DataFrame, maxHops: Int,
            broadcastMaxRows: Long = 4000000L): DataFrame = {
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
-    // Materialize + count in ONE job per level — see Materialize.counted
-    // (r17 opt, VERDICT r16 #6: the gate added a count job per level).
-    def materializeCounted(df: DataFrame): (DataFrame, Long) =
-      Materialize.counted(df)
     // Materialize the edge list once: the edge derivation (unions + window
     // functions in GraphBuilder) would otherwise recompute on every hop.
     // Reachability is invariant under edge multiplicity, so dedup up front:
@@ -45,40 +40,66 @@ object Traversals {
     // multiply each hop's join output before the per-level distinct —
     // distinct-ing once here shrinks every subsequent shuffle.
     val e = edges.select(col("src"), col("dst")).distinct().transform(Materialize.apply)
-    val (visited0, count0) = materializeCounted(
-      start.select(col("id")).distinct().withColumn("depth", lit(0L)))
+    levels(e, start.select(col("id")).distinct().withColumn("depth", lit(0L)),
+      Nil, maxHops, broadcastMaxRows, parents = false)
+  }
+
+  /** The BFS level loop under [[kHop]], [[egoMembers]] and
+    * [[egoMembersParents]]. Rows carry `keys` (Nil, seed, or seed + as_of)
+    * besides `id`; with as_of, `e` carries `active_from` and validity is a
+    * residual predicate on the hop join. A level reduces the hop to
+    * distinct (keys, id) — or with `parents` to the min discovering node —
+    * and anti-joins the visited set per key. Every level, seed level
+    * included, is one [[Materialize.counted]] job whose count feeds the
+    * broadcast gate; `visited` stays a lazy union (lineage depth maxHops).
+    *
+    * Broadcast hints: bounded traversals are drill-downs, so the frontier
+    * and visited sets are orders of magnitude smaller than the edge table —
+    * broadcasting them means the EDGE TABLE NEVER SHUFFLES (one scan of
+    * cached blocks per hop, one exchange for the frontier distinct). The
+    * materialized frontier is RDD-backed with unknown stats, so AQE cannot
+    * discover this conversion itself; the measured row counts gate the
+    * hints instead (see [[kHop]]'s `broadcastMaxRows`).
+    */
+  private def levels(e: DataFrame, level0: DataFrame, keys: Seq[String], maxHops: Int,
+                     broadcastMaxRows: Long, parents: Boolean): DataFrame = {
+    def gated(df: DataFrame, rows: Long): DataFrame =
+      if (rows <= broadcastMaxRows) broadcast(df) else df
+    val cell = keys :+ "id"
+    val hop =
+      if (keys.contains("as_of")) col("src") === col("fid") && col("active_from") <= col("as_of")
+      else col("src") === col("fid")
+    val (visited0, count0) = Materialize.counted(level0)
     var visited = visited0
-    var frontier = visited.select("id")
-    var i = 1
-    // One materialization per level (the frontier); `visited` stays a lazy
-    // union over checkpointed levels — its lineage depth is maxHops, which is
-    // always small (bounded traversal), so re-checkpointing it and probing
-    // isEmpty would only add ~2 jobs per level for nothing. An empty
-    // frontier makes the remaining joins no-ops at negligible cost.
-    //
-    // Broadcast hints: bounded traversals are drill-downs, so the frontier
-    // and visited sets are orders of magnitude smaller than the edge table —
-    // broadcasting them means the EDGE TABLE NEVER SHUFFLES (one scan of
-    // cached blocks per hop, one exchange for the frontier distinct). The
-    // materialized frontier is RDD-backed with unknown stats, so AQE cannot
-    // discover this conversion itself; the measured row counts gate the
-    // hints instead (see `broadcastMaxRows` above).
+    var frontier = visited.select(cell.map(col): _*)
     var frontierCount = count0
     var visitedCount = frontierCount
-    while (i <= maxHops) {
-      val (next, nextCount) = materializeCounted(
-        e.join(gated(frontier.withColumnRenamed("id", "fid"), frontierCount),
-          col("src") === col("fid"))
-        .select(col("dst").as("id")).distinct()
-        .join(gated(visited.select("id"), visitedCount), Seq("id"), "left_anti"))
+    for (i <- 1 to maxHops) {
+      val reached = e.join(gated(frontier.withColumnRenamed("id", "fid"), frontierCount), hop)
+      val level =
+        if (parents) reached.groupBy(keys.map(col) :+ col("dst"): _*)
+          .agg(min(col("fid")).as("parent"))
+          .withColumnRenamed("dst", "id")
+        else reached.select(keys.map(col) :+ col("dst").as("id"): _*).distinct()
+      val (next, nextCount) = Materialize.counted(
+        level.join(gated(visited.select(cell.map(col): _*), visitedCount), cell, "left_anti"))
       frontierCount = nextCount
       visitedCount += frontierCount
       visited = visited.unionByName(next.withColumn("depth", lit(i.toLong)))
-      frontier = next
-      i += 1
+      frontier = if (parents) next.select(cell.map(col): _*) else next
     }
     visited
   }
+
+  /** `Seq("as_of")` when a batch frame carries the Time-Slider's snapshot
+    * date, else Nil: every loop reads its as-of form from its input. */
+  private[graph] def asOfKey(df: DataFrame): Seq[String] =
+    if (df.columns.contains("as_of")) Seq("as_of") else Nil
+
+  /** A dated batch fails loudly on input lacking a column its form needs. */
+  private[graph] def requireDated(df: DataFrame, column: String, what: String): Unit =
+    require(df.columns.contains(column), s"$what: a batch with as_of needs edges with " +
+      s"`$column` (got ${df.columns.mkString(", ")})")
 
   /** Undirected view of a directed edge list. */
   def symmetrize(edges: DataFrame): DataFrame =
@@ -142,135 +163,65 @@ object Traversals {
     * measured broadcast gate and per-level localCheckpoint as [[kHop]];
     * the visited anti-join is per (seed, id), so overlapping
     * neighborhoods don't collapse into each other.
+    *
+    * Multi-SNAPSHOT form, the Time-Slider's feed (README.md:17): `seeds`
+    * carrying `as_of` make the (seed, as_of) PAIR the batch key, rows come
+    * out as (seed, as_of, id, depth), and `edges` need `valid_from`. The
+    * pair rides the per-level join exactly as seed does (the g53 "batch key
+    * is free" shape) with validity a residual predicate on that join, so
+    * the edge table is scanned `radius` times TOTAL, not radius × positions
+    * (branch-per-year re-scans ≈ positions/2 full scans per level on
+    * cumulative validity windows). Parallel edge instances collapse to
+    * `min(valid_from)` (NULL ⇒ epoch): a node is reachable at `as_of` iff
+    * SOME instance had started, and the reduction shrinks the join's left
+    * side to distinct pairs.
     */
   def egoMembers(edges: DataFrame, seeds: DataFrame, radius: Int,
-                 broadcastMaxRows: Long = 4000000L): DataFrame = {
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
-    val e = symmetrize(edges).distinct().transform(Materialize.apply)
-    val (visited0, count0) = Materialize.counted(seeds.select(col("seed")).distinct()
-      .select(col("seed"), col("seed").as("id"), lit(0L).as("depth")))
-    var visited = visited0
-    var frontier = visited.select("seed", "id")
-    var frontierCount = count0
-    var visitedCount = frontierCount
-    for (i <- 1 to radius) {
-      val (next, nextCount) = Materialize.counted(
-        e.join(gated(frontier.withColumnRenamed("id", "fid"), frontierCount),
-          col("src") === col("fid"))
-        .select(col("seed"), col("dst").as("id")).distinct()
-        .join(gated(visited.select("seed", "id"), visitedCount), Seq("seed", "id"), "left_anti"))
-      frontierCount = nextCount
-      visitedCount += frontierCount
-      visited = visited.unionByName(next.withColumn("depth", lit(i.toLong)))
-      frontier = next
-    }
-    visited
+                 broadcastMaxRows: Long = 4000000L): DataFrame =
+    ego(edges, seeds, radius, broadcastMaxRows, parents = false)
+
+  /** [[egoMembers]] / [[egoMembersParents]]: undirected edges (`active_from` per pair
+    * when dated) and depth-0 rows (each batch key, its seed as member) via [[levels]]. */
+  private def ego(edges: DataFrame, seeds: DataFrame, radius: Int,
+                  broadcastMaxRows: Long, parents: Boolean): DataFrame = {
+    val keys = "seed" +: asOfKey(seeds)
+    val e =
+      if (keys.size == 1) symmetrize(edges).distinct().transform(Materialize.apply)
+      else {
+        requireDated(edges, "valid_from", "egoMembers")
+        def vf = coalesce(col("valid_from"), lit("1970-01-01 00:00:00").cast("timestamp_ntz")).as("vf")
+        edges.select(col("src"), col("dst"), vf)
+          .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), vf))
+          .groupBy("src", "dst").agg(min(col("vf")).as("active_from"))
+          .transform(Materialize.apply)
+      }
+    val parent = if (parents) Seq(lit(-1L).as("parent")) else Nil
+    levels(e, seeds.select(keys.map(col): _*).distinct()
+      .select(keys.map(col) ++ Seq(col("seed").as("id"), lit(0L).as("depth")) ++ parent: _*),
+      keys, radius, broadcastMaxRows, parents)
   }
 
   /** Per-seed induced edge lists: every edge whose BOTH endpoints belong
     * to the same seed's member set, tagged with that seed. Two equi-joins
     * against the (small, measured-gate broadcast) membership table — the
     * edge table never shuffles when the gate holds.
+    *
+    * `members` carrying `as_of` ([[egoMembers]]' snapshot output) also
+    * need the edge INSTANCE valid at that position (`edges` need
+    * `valid_from`): traversal collapses parallel instances, the document
+    * lists every valid one — a post-join filter on the joined as_of.
     */
   def inducedEdges(edges: DataFrame, members: DataFrame,
                    broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val m = members.select(col("seed"), col("id")).distinct().transform(Materialize.apply)
+    val keys = "seed" +: asOfKey(members)
+    val dated = keys.size > 1
+    if (dated) requireDated(edges, "valid_from", "inducedEdges")
+    val (m, rows) = Materialize.counted(members.select(keys.map(col) :+ col("id"): _*).distinct())
     val hint: DataFrame => DataFrame =
-      if (m.count() <= broadcastMaxRows) broadcast else identity
-    edges.join(hint(m.select(col("seed"), col("id").as("src"))), Seq("src"))
-      .join(hint(m.select(col("seed"), col("id").as("dst"))), Seq("seed", "dst"))
-  }
-
-  /** Per-seed member CAP for ego exports: keeps each seed's top `cap`
-    * members ranked by (min depth asc, induced incident-weight strength
-    * desc, id asc), so a supernode ego cannot emit an unbounded document
-    * (a radius-2 ego on a hub otherwise collect_lists millions of nodes
-    * into ONE json value — the export's only unbounded allocation; the
-    * VERDICT r10 s07 caveat). Ranking semantics: depth dominates (the
-    * whole 1-hop shell outranks any 2-hop node — truncation peels the
-    * neighborhood from the outside in), strength = the member's total
-    * incident edge weight WITHIN the pre-cap induced subgraph (computed
-    * by one [[inducedEdges]] pass, so it reflects prominence in the
-    * document being drawn, not global degree), id breaks ties
-    * deterministically. The seed itself is depth 0 and always survives.
-    *
-    * Returns (seed, id, depth, n_total) with `n_total` the PRE-cap member
-    * count — callers surface it next to the cap so consumers can SEE
-    * truncation instead of mistaking a capped document for the whole
-    * neighborhood. The per-seed window shuffle partitions on seed; its
-    * partitions are ego-sized (bounded by the radius gate), never
-    * board-sized.
-    */
-  /** Batched multi-seed, multi-SNAPSHOT ego membership — the Time-Slider's
-    * data feed (reference: README.md:17, the slider renders the seed's
-    * neighborhood at each slider position). `seeds` carries (seed, as_of)
-    * pairs; one traversal answers EVERY slider position of every seed: the
-    * batch key is the PAIR, carried through the per-level join exactly the
-    * way [[egoMembers]] carries seed (the g53 "batch key is free" shape),
-    * and snapshot validity is a residual predicate on that join — so the
-    * edge table is scanned `radius` times TOTAL, not radius × positions
-    * (the branch-per-year alternative re-scans per position; on CUMULATIVE
-    * validity windows the late-year branches read almost everything, so
-    * Σ branch-scan ≈ positions/2 full scans per level — this form wins
-    * whenever the edge scan is the bottleneck, which at 100 TB it is).
-    * Parallel edge instances collapse to one traversal edge with
-    * `min(valid_from)` (NULL ⇒ always-active ⇒ epoch): a node is reachable
-    * at `as_of` iff SOME instance had started — `min ≤ as_of` is exactly
-    * that ∃, and the reduction shrinks the per-level join's left side to
-    * distinct pairs. Same measured broadcast gate and per-level
-    * materialization as [[egoMembers]].
-    */
-  def egoMembersAsOf(edges: DataFrame, seeds: DataFrame, radius: Int,
-                     broadcastMaxRows: Long = 4000000L): DataFrame = {
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
-    val epoch = lit("1970-01-01 00:00:00").cast("timestamp_ntz")
-    val e = edges
-      .select(col("src"), col("dst"), coalesce(col("valid_from"), epoch).as("vf"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
-        coalesce(col("valid_from"), epoch).as("vf")))
-      .groupBy("src", "dst").agg(min(col("vf")).as("active_from"))
-      .transform(Materialize.apply)
-    var visited = seeds.select(col("seed"), col("as_of")).distinct()
-      .select(col("seed"), col("as_of"), col("seed").as("id"), lit(0L).as("depth"))
-      .transform(Materialize.apply)
-    var frontier = visited.select("seed", "as_of", "id")
-    var frontierCount = visited.count()
-    var visitedCount = frontierCount
-    for (i <- 1 to radius) {
-      val (next, nextCount) = Materialize.counted(
-        e.join(gated(frontier.withColumnRenamed("id", "fid"), frontierCount),
-          col("src") === col("fid") && col("active_from") <= col("as_of"))
-        .select(col("seed"), col("as_of"), col("dst").as("id")).distinct()
-        .join(gated(visited.select("seed", "as_of", "id"), visitedCount),
-          Seq("seed", "as_of", "id"), "left_anti"))
-      frontierCount = nextCount
-      visitedCount += frontierCount
-      visited = visited.unionByName(next.withColumn("depth", lit(i.toLong)))
-      frontier = next
-    }
-    visited
-  }
-
-  /** Per-(seed, as_of) induced edge lists for [[egoMembersAsOf]] members:
-    * both endpoints in the same slider position's member set AND the edge
-    * instance itself valid at that position (members collapse parallel
-    * instances for traversal; the DOCUMENT lists every valid instance).
-    * Same two gated equi-joins as [[inducedEdges]] — the edge table never
-    * shuffles under the gate; validity is a post-join filter on the
-    * already-joined as_of.
-    */
-  def inducedEdgesAsOf(edges: DataFrame, members: DataFrame,
-                       broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val m = members.select(col("seed"), col("as_of"), col("id")).distinct()
-      .transform(Materialize.apply)
-    val hint: DataFrame => DataFrame =
-      if (m.count() <= broadcastMaxRows) broadcast else identity
-    edges.join(hint(m.select(col("seed"), col("as_of"), col("id").as("src"))), Seq("src"))
-      .join(hint(m.select(col("seed"), col("as_of"), col("id").as("dst"))),
-        Seq("seed", "as_of", "dst"))
-      .filter(col("valid_from").isNull || col("valid_from") <= col("as_of"))
+      if (rows <= broadcastMaxRows) broadcast else identity
+    val ind = edges.join(hint(m.select(keys.map(col) :+ col("id").as("src"): _*)), Seq("src"))
+      .join(hint(m.select(keys.map(col) :+ col("id").as("dst"): _*)), keys :+ "dst")
+    if (dated) ind.filter(col("valid_from").isNull || col("valid_from") <= col("as_of")) else ind
   }
 
   /** [[egoMembers]] carrying a PARENT pointer: per (seed, id), the minimum
@@ -283,35 +234,12 @@ object Traversals {
     * comes from a node whose OWN min depth is d−1, since no-self-loop
     * symmetric graphs admit no shorter-walk padding inside the bound —
     * the min over discovering-frontier parents equals the min over
-    * min-depth-row parents).
+    * min-depth-row parents). Seeds carrying `as_of` batch per snapshot as
+    * in [[egoMembers]].
     */
   def egoMembersParents(edges: DataFrame, seeds: DataFrame, radius: Int,
-                        broadcastMaxRows: Long = 4000000L): DataFrame = {
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
-    val e = symmetrize(edges).distinct().transform(Materialize.apply)
-    var visited = seeds.select(col("seed")).distinct()
-      .select(col("seed"), col("seed").as("id"), lit(0L).as("depth"),
-              lit(-1L).as("parent"))
-      .transform(Materialize.apply)
-    var frontier = visited.select("seed", "id")
-    var frontierCount = visited.count()
-    var visitedCount = frontierCount
-    for (i <- 1 to radius) {
-      val (next, nextCount) = Materialize.counted(
-        e.join(gated(frontier.withColumnRenamed("id", "fid"), frontierCount),
-          col("src") === col("fid"))
-        .groupBy(col("seed"), col("dst"))
-        .agg(min(col("fid")).as("parent"))
-        .withColumnRenamed("dst", "id")
-        .join(gated(visited.select("seed", "id"), visitedCount), Seq("seed", "id"), "left_anti"))
-      frontierCount = nextCount
-      visitedCount += frontierCount
-      visited = visited.unionByName(next.withColumn("depth", lit(i.toLong)))
-      frontier = next.select("seed", "id")
-    }
-    visited
-  }
+                        broadcastMaxRows: Long = 4000000L): DataFrame =
+    ego(edges, seeds, radius, broadcastMaxRows, parents = true)
 
   /** [[connectionDistance]] plus the WITNESS PATH: for each connected
     * (s_id, t_id) pair, one canonical shortest path rendered as an
@@ -327,18 +255,9 @@ object Traversals {
     */
   def connectionPaths(edges: DataFrame, pairs: DataFrame, radius: Int,
                       broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val seeds = pairs.select(col("s_id").as("seed"))
-      .unionByName(pairs.select(col("t_id").as("seed"))).distinct()
-    val m = egoMembersParents(edges, seeds, radius, broadcastMaxRows)
+    val m = egoMembersParents(edges, endpoints(pairs, "seed", Nil), radius, broadcastMaxRows)
       .transform(Materialize.apply) // reused: both meet sides + 2·radius backtracks
-    val meets = pairs
-      .join(m.select(col("seed").as("s_id"), col("id"), col("depth").as("df")), Seq("s_id"))
-      .join(m.select(col("seed").as("t_id"), col("id"), col("depth").as("db")),
-            Seq("t_id", "id"))
-      .select(col("s_id"), col("t_id"), col("id"), (col("df") + col("db")).as("tot"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("s_id", "t_id")
-    var cur = meets.withColumn("dist", min(col("tot")).over(w))
-      .filter(col("tot") === col("dist"))
+    var cur = shortestMeets(pairs, m, Nil)
       .groupBy("s_id", "t_id", "dist")
       .agg(min(col("id")).as("meet"))
       .select(col("s_id"), col("t_id"), col("dist"),
@@ -385,29 +304,44 @@ object Traversals {
     * (1 = a single bottleneck entity, large = structurally entangled); at
     * smaller distances the visible window widens toward the endpoints.
     * `meet_min` is the least such node id, a deterministic witness.
+    *
+    * AT each Time-Slider position: `pairs` carrying `as_of` get the
+    * distance over edges whose earliest instance had started by that date
+    * ("were X and Y connected in 1996?"), one row per (s_id, t_id, as_of);
+    * `edges` need `valid_from`. The (seed, as_of) batch key of
+    * [[egoMembers]] answers every (pair, position) in one traversal, and
+    * the meet joins carry as_of so nothing leaks between positions.
     */
   def connectionDistance(edges: DataFrame, pairs: DataFrame, radius: Int,
                          broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val seeds = pairs.select(col("s_id").as("seed"))
-      .unionByName(pairs.select(col("t_id").as("seed"))).distinct()
-    val m = egoMembers(edges, seeds, radius, broadcastMaxRows)
+    val k = asOfKey(pairs)
+    val m = egoMembers(edges, endpoints(pairs, "seed", k), radius, broadcastMaxRows)
       .transform(Materialize.apply) // reused as both cone sides of the meet
-    val meets = pairs
-      .join(m.select(col("seed").as("s_id"), col("id"), col("depth").as("df")), Seq("s_id"))
-      .join(m.select(col("seed").as("t_id"), col("id"), col("depth").as("db")),
-            Seq("t_id", "id"))
-      .select(col("s_id"), col("t_id"), col("id"), (col("df") + col("db")).as("tot"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("s_id", "t_id")
-    val best = meets.withColumn("dist", min(col("tot")).over(w))
-      .filter(col("tot") === col("dist"))
-      .groupBy("s_id", "t_id", "dist")
+    val best = shortestMeets(pairs, m, k)
+      .groupBy("s_id", ("t_id" +: k) :+ "dist": _*)
       .agg(count(lit(1)).as("n_meet"), min(col("id")).as("meet_min"))
-    pairs.join(best, Seq("s_id", "t_id"), "left")
-      .select(col("s_id"), col("t_id"),
+    pairs.join(best, Seq("s_id", "t_id") ++ k, "left")
+      .select((Seq(col("s_id"), col("t_id")) ++ k.map(col)) ++ Seq(
               coalesce(col("dist"), lit(-1L)).as("dist"),
               coalesce(col("n_meet"), lit(0L)).as("n_meet"),
-              coalesce(col("meet_min"), lit(-1L)).as("meet_min"))
+              coalesce(col("meet_min"), lit(-1L)).as("meet_min")): _*)
   }
+
+  /** Every pair endpoint as a batch row (column `as`, plus the key `k`). */
+  private def endpoints(pairs: DataFrame, as: String, k: Seq[String]): DataFrame =
+    pairs.select(col("s_id").as(as) +: k.map(col): _*)
+      .unionByName(pairs.select(col("t_id").as(as) +: k.map(col): _*)).distinct()
+
+  /** Meet nodes at each pair's least total depth: (s_id, t_id, k…, id, tot, dist). */
+  private def shortestMeets(pairs: DataFrame, m: DataFrame, k: Seq[String]): DataFrame = pairs
+    .join(m.select((col("seed").as("s_id") +: k.map(col)) ++
+      Seq(col("id"), col("depth").as("df")): _*), "s_id" +: k)
+    .join(m.select((col("seed").as("t_id") +: k.map(col)) ++
+      Seq(col("id"), col("depth").as("db")): _*), ("t_id" +: k) :+ "id")
+    .select((Seq(col("s_id"), col("t_id")) ++ k.map(col)) ++
+      Seq(col("id"), (col("df") + col("db")).as("tot")): _*)
+    .withColumn("dist", min(col("tot")).over(Window.partitionBy("s_id", "t_id" +: k: _*)))
+    .filter(col("tot") === col("dist"))
 
   /** Batched s–t STRONGEST connection via bidirectional meet-in-the-middle
     * on MAX-PRODUCT: for every (s_id, t_id) pair, the maximum-product chain
@@ -437,184 +371,101 @@ object Traversals {
     * each cone at |seeds| × |nodes| with ONE chain string per cell — never
     * a path enumeration. Pairs with no ≤ 2·radius connection report
     * strength 0, chain '-', hops −1.
+    *
+    * AT each Time-Slider position: `pairs` carrying `as_of` need a DATED,
+    * per-position-renormalized web (as_of, src, dst, weight) as `edges` —
+    * "how STRONG was the strongest chain in 1996?" (with g57/g59/g60 the
+    * {distance, strength} × {now, as-of} matrix). (owner, as_of) is the
+    * [[Ubo.strongestChain]] batch key, the meet joins carry as_of, and the
+    * exactness argument holds per position.
     */
   def strongestConnections(edges: DataFrame, pairs: DataFrame, radius: Int): DataFrame = {
-    val symw = edges.select(col("src"), col("dst"), col("weight"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-    val seeds = pairs.select(col("s_id").as("owner"))
-      .unionByName(pairs.select(col("t_id").as("owner"))).distinct()
+    val k = asOfKey(pairs)
+    if (k.nonEmpty) requireDated(edges, "as_of", "strongestConnections")
+    val symw = edges.select(k.map(col) ++ Seq(col("src"), col("dst"), col("weight")): _*)
+      .unionByName(edges.select(k.map(col) ++
+        Seq(col("dst").as("src"), col("src").as("dst"), col("weight")): _*))
+    val seeds = endpoints(pairs, "owner", k)
     // level-0 rows join the DP output so a pair can meet AT an endpoint
     // (hops_t = 0 ⇒ the whole chain lives in one cone); the re-rank uses
     // the same (share DESC, chain ASC) order, where the seed's own 1.0 row
     // wins every tie (its chain is a strict prefix, so it sorts first)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("owner"), col("entity"))
+    val w = Window.partitionBy((col("owner") +: k.map(col)) :+ col("entity"): _*)
       .orderBy(col("share").desc, col("chain"))
-    val lvl0 = seeds.select(col("owner"), col("owner").as("entity"),
+    val lvl0 = seeds.select((col("owner") +: k.map(col)) ++ Seq(col("owner").as("entity"),
       lit(1.0).cast("double").as("share"), col("owner").cast("string").as("chain"),
-      lit(0).as("hops"))
+      lit(0).as("hops")): _*)
     val cones = lvl0.unionByName(Ubo.strongestChain(symw, seeds, radius))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
       .transform(Materialize.apply) // reused as both meet sides
-    val f = cones.select(col("owner").as("s_id"), col("entity").as("id"),
-      col("share").as("share_s"), col("chain").as("chain_s"), col("hops").as("hops_s"))
-    val b = cones.select(col("owner").as("t_id"), col("entity").as("id"),
-      col("share").as("share_t"), col("chain").as("chain_t"), col("hops").as("hops_t"))
+    def side(end: String, x: String) = cones.select((col("owner").as(end) +: k.map(col)) ++
+      Seq(col("entity").as("id"), col("share").as(s"share_$x"), col("chain").as(s"chain_$x"),
+          col("hops").as(s"hops_$x")): _*)
     // chain_t runs t→…→m; symmetric weights make its reversal m→…→t the
     // same product, so the full chain is chain_s ++ reverse(chain_t)[2:]
     // — string surgery on the ≤ |pairs|-dominated meet rows only, never
     // in the frontier (the g58 discipline)
     val rt = reverse(split(col("chain_t"), "->"))
-    val meets = pairs.join(f, Seq("s_id")).join(b, Seq("t_id", "id"))
+    val meets = pairs.join(side("s_id", "s"), "s_id" +: k).join(side("t_id", "t"), ("t_id" +: k) :+ "id")
       .withColumn("strength", col("share_s") * col("share_t"))
       .withColumn("chain", concat_ws("->",
         concat(split(col("chain_s"), "->"), slice(rt, lit(2), size(rt) - 1))))
       .withColumn("hops", (col("hops_s") + col("hops_t")).cast("long"))
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("s_id", "t_id").orderBy(col("strength").desc, col("chain"))
+    val pw = Window.partitionBy("s_id", "t_id" +: k: _*).orderBy(col("strength").desc, col("chain"))
     val best = meets.withColumn("rn", row_number().over(pw)).filter(col("rn") === 1)
-      .select(col("s_id"), col("t_id"), round(col("strength"), 6).as("strength6"),
-              col("chain"), col("hops"))
-    pairs.join(best, Seq("s_id", "t_id"), "left")
-      .select(col("s_id"), col("t_id"),
+      .select((Seq(col("s_id"), col("t_id")) ++ k.map(col)) ++ Seq(
+              round(col("strength"), 6).as("strength6"), col("chain"), col("hops")): _*)
+    pairs.join(best, Seq("s_id", "t_id") ++ k, "left")
+      .select((Seq(col("s_id"), col("t_id")) ++ k.map(col)) ++ Seq(
               coalesce(col("strength6"), lit(0.0)).as("strength6"),
               coalesce(col("chain"), lit("-")).as("chain"),
-              coalesce(col("hops"), lit(-1L)).as("hops"))
+              coalesce(col("hops"), lit(-1L)).as("hops")): _*)
   }
 
-  /** [[strongestConnections]] AT each Time-Slider position: pairs carry an
-    * `as_of` column; `edges` are a DATED per-position-renormalized
-    * weighted web (as_of, src, dst, weight) — "how STRONG was the
-    * strongest chain between X and Y in 1996?", completing the
-    * {distance, strength} × {now, as-of} matrix with g57/g59/g60. The
-    * batch key grows from owner to (owner, as_of) through
-    * [[Ubo.strongestChainAsOf]] (the g56 free-batch-key argument on the
-    * Viterbi recurrence), the meet joins gain as_of in their keys so no
-    * strength leaks between positions, and the exactness argument is
-    * [[strongestConnections]]'s walk-dominance split applied per position
-    * (each as_of is an independent weighted graph with weights ≤ 1).
+  /** Per-seed member CAP for ego exports: keeps each seed's top `cap`
+    * members ranked by (min depth asc, induced incident-weight strength
+    * desc, id asc), so a supernode ego cannot emit an unbounded document
+    * (a radius-2 ego on a hub otherwise collect_lists millions of nodes
+    * into ONE json value — the export's only unbounded allocation; the
+    * VERDICT r10 s07 caveat). Ranking semantics: depth dominates (the
+    * whole 1-hop shell outranks any 2-hop node — truncation peels the
+    * neighborhood from the outside in), strength = the member's total
+    * incident edge weight WITHIN the pre-cap induced subgraph (computed
+    * by one [[inducedEdges]] pass, so it reflects prominence in the
+    * document being drawn, not global degree), id breaks ties
+    * deterministically. The seed itself is depth 0 and always survives.
+    *
+    * Returns (seed, id, depth, n_total) with `n_total` the PRE-cap member
+    * count — callers surface it next to the cap so consumers can SEE
+    * truncation instead of mistaking a capped document for the whole
+    * neighborhood. The per-seed window shuffle partitions on seed; its
+    * partitions are ego-sized (bounded by the radius gate), never
+    * board-sized.
+    *
+    * Members carrying `as_of` rank per (seed, as_of) — a LOCATED_IN hub
+    * ego growing with the board (the SCALE.md s09 caveat) is truncated per
+    * slider position — with strength taken in the position's OWN
+    * validity-filtered induced snapshot (`edges` need `valid_from`).
     */
-  def strongestConnectionsAsOf(edges: DataFrame, pairs: DataFrame, radius: Int): DataFrame = {
-    val symw = edges.select(col("as_of"), col("src"), col("dst"), col("weight"))
-      .unionByName(edges.select(col("as_of"), col("dst").as("src"),
-        col("src").as("dst"), col("weight")))
-    val seeds = pairs.select(col("s_id").as("owner"), col("as_of"))
-      .unionByName(pairs.select(col("t_id").as("owner"), col("as_of"))).distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("owner"), col("as_of"), col("entity"))
-      .orderBy(col("share").desc, col("chain"))
-    val lvl0 = seeds.select(col("owner"), col("as_of"), col("owner").as("entity"),
-      lit(1.0).cast("double").as("share"), col("owner").cast("string").as("chain"),
-      lit(0).as("hops"))
-    val cones = lvl0.unionByName(Ubo.strongestChainAsOf(symw, seeds, radius))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-      .transform(Materialize.apply) // reused as both meet sides
-    val f = cones.select(col("owner").as("s_id"), col("as_of"), col("entity").as("id"),
-      col("share").as("share_s"), col("chain").as("chain_s"), col("hops").as("hops_s"))
-    val b = cones.select(col("owner").as("t_id"), col("as_of"), col("entity").as("id"),
-      col("share").as("share_t"), col("chain").as("chain_t"), col("hops").as("hops_t"))
-    val rt = reverse(split(col("chain_t"), "->"))
-    val meets = pairs.join(f, Seq("s_id", "as_of")).join(b, Seq("t_id", "as_of", "id"))
-      .withColumn("strength", col("share_s") * col("share_t"))
-      .withColumn("chain", concat_ws("->",
-        concat(split(col("chain_s"), "->"), slice(rt, lit(2), size(rt) - 1))))
-      .withColumn("hops", (col("hops_s") + col("hops_t")).cast("long"))
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("s_id", "t_id", "as_of").orderBy(col("strength").desc, col("chain"))
-    val best = meets.withColumn("rn", row_number().over(pw)).filter(col("rn") === 1)
-      .select(col("s_id"), col("t_id"), col("as_of"),
-              round(col("strength"), 6).as("strength6"), col("chain"), col("hops"))
-    pairs.join(best, Seq("s_id", "t_id", "as_of"), "left")
-      .select(col("s_id"), col("t_id"), col("as_of"),
-              coalesce(col("strength6"), lit(0.0)).as("strength6"),
-              coalesce(col("chain"), lit("-")).as("chain"),
-              coalesce(col("hops"), lit(-1L)).as("hops"))
-  }
-
-  /** [[connectionDistance]] AT each Time-Slider position: pairs carry an
-    * `as_of` column and the answer is the shortest undirected distance
-    * over edges whose earliest instance had started by that date ("were X
-    * and Y connected in 1996?" — README.md:17's slider × README.md:11's
-    * navigation). The batch key grows from seed to the (seed, as_of) PAIR
-    * exactly as [[egoMembersAsOf]] extends [[egoMembers]] (the g56
-    * free-batch-key argument, verbatim): one traversal answers every
-    * (pair, position), `radius` edge scans TOTAL, and the meet equi-join
-    * gains as_of in its keys so no mass leaks between slider positions.
-    * Same −1 beyond-2·radius contract and deterministic (n_meet,
-    * meet_min) witnesses as the untimed form.
-    */
-  def connectionDistanceAsOf(edges: DataFrame, pairs: DataFrame, radius: Int,
-                             broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val seeds = pairs.select(col("s_id").as("seed"), col("as_of"))
-      .unionByName(pairs.select(col("t_id").as("seed"), col("as_of"))).distinct()
-    val m = egoMembersAsOf(edges, seeds, radius, broadcastMaxRows)
-      .transform(Materialize.apply) // reused as both cone sides of the meet
-    val meets = pairs
-      .join(m.select(col("seed").as("s_id"), col("as_of"), col("id"),
-        col("depth").as("df")), Seq("s_id", "as_of"))
-      .join(m.select(col("seed").as("t_id"), col("as_of"), col("id"),
-        col("depth").as("db")), Seq("t_id", "as_of", "id"))
-      .select(col("s_id"), col("t_id"), col("as_of"), col("id"),
-              (col("df") + col("db")).as("tot"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("s_id", "t_id", "as_of")
-    val best = meets.withColumn("dist", min(col("tot")).over(w))
-      .filter(col("tot") === col("dist"))
-      .groupBy("s_id", "t_id", "as_of", "dist")
-      .agg(count(lit(1)).as("n_meet"), min(col("id")).as("meet_min"))
-    pairs.join(best, Seq("s_id", "t_id", "as_of"), "left")
-      .select(col("s_id"), col("t_id"), col("as_of"),
-              coalesce(col("dist"), lit(-1L)).as("dist"),
-              coalesce(col("n_meet"), lit(0L)).as("n_meet"),
-              coalesce(col("meet_min"), lit(-1L)).as("meet_min"))
-  }
-
   def capEgoMembers(edges: DataFrame, members: DataFrame, cap: Int,
                     broadcastMaxRows: Long = 4000000L): DataFrame = {
     require(cap >= 1, s"cap must keep at least the seed, got $cap")
-    val m = members.select(col("seed"), col("id"), col("depth"))
+    val keys = "seed" +: asOfKey(members)
+    if (keys.size > 1) requireDated(edges, "valid_from", "capEgoMembers")
+    val validity = if (keys.size > 1) Seq(col("valid_from")) else Nil
+    val m = members.select(keys.map(col) ++ Seq(col("id"), col("depth")): _*)
       .transform(Materialize.apply)
-    val ind = inducedEdges(edges.select(col("src"), col("dst"), col("weight")),
+    val ind = inducedEdges(edges.select(Seq(col("src"), col("dst"), col("weight")) ++ validity: _*),
       m, broadcastMaxRows)
-    val strength = ind.select(col("seed"), col("src").as("id"), col("weight"))
-      .unionByName(ind.select(col("seed"), col("dst").as("id"), col("weight")))
-      .groupBy("seed", "id").agg(sum(col("weight")).as("strength"))
-    val bySeed = org.apache.spark.sql.expressions.Window.partitionBy("seed")
+    val strength = ind.select(keys.map(col) ++ Seq(col("src").as("id"), col("weight")): _*)
+      .unionByName(ind.select(keys.map(col) ++ Seq(col("dst").as("id"), col("weight")): _*))
+      .groupBy(keys.head, keys.tail :+ "id": _*).agg(sum(col("weight")).as("strength"))
+    val bySeed = Window.partitionBy(keys.head, keys.tail: _*)
     val rank = bySeed.orderBy(col("depth").asc, col("strength").desc_nulls_last, col("id").asc)
-    m.join(strength, Seq("seed", "id"), "left")
+    m.join(strength, keys :+ "id", "left")
       .withColumn("rnk", row_number().over(rank))
       .withColumn("n_total", count(lit(1)).over(bySeed))
       .filter(col("rnk") <= cap)
-      .select(col("seed"), col("id"), col("depth"), col("n_total"))
-  }
-
-  /** [[capEgoMembers]] for the Time-Slider's (seed, as_of) members
-    * ([[egoMembersAsOf]] output): same depth-then-induced-strength-then-id
-    * ranking, per (seed, as_of) WINDOW — a LOCATED_IN hub ego that grows
-    * linearly with the board (the SCALE.md s09 caveat) is truncated per
-    * slider position instead of emitting an unbounded document, and the
-    * pre-cap `n_total` rides along so a consumer can SEE the truncation.
-    * Strength is the member's incident edge weight within the position's
-    * OWN induced snapshot ([[inducedEdgesAsOf]] — validity-filtered), so
-    * prominence reflects the frame being drawn, not a later year's edges.
-    * The seed survives at every position (depth 0 dominates the ranking).
-    */
-  def capEgoMembersAsOf(edges: DataFrame, members: DataFrame, cap: Int,
-                        broadcastMaxRows: Long = 4000000L): DataFrame = {
-    require(cap >= 1, s"cap must keep at least the seed, got $cap")
-    val m = members.select(col("seed"), col("as_of"), col("id"), col("depth"))
-      .transform(Materialize.apply)
-    val ind = inducedEdgesAsOf(
-      edges.select(col("src"), col("dst"), col("weight"), col("valid_from")),
-      m, broadcastMaxRows)
-    val strength = ind.select(col("seed"), col("as_of"), col("src").as("id"), col("weight"))
-      .unionByName(ind.select(col("seed"), col("as_of"), col("dst").as("id"), col("weight")))
-      .groupBy("seed", "as_of", "id").agg(sum(col("weight")).as("strength"))
-    val byPos = org.apache.spark.sql.expressions.Window.partitionBy("seed", "as_of")
-    val rank = byPos.orderBy(col("depth").asc, col("strength").desc_nulls_last, col("id").asc)
-    m.join(strength, Seq("seed", "as_of", "id"), "left")
-      .withColumn("rnk", row_number().over(rank))
-      .withColumn("n_total", count(lit(1)).over(byPos))
-      .filter(col("rnk") <= cap)
-      .select(col("seed"), col("as_of"), col("id"), col("depth"), col("n_total"))
+      .select(keys.map(col) ++ Seq(col("id"), col("depth"), col("n_total")): _*)
   }
 }

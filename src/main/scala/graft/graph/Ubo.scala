@@ -105,74 +105,44 @@ object Ubo {
     *
     * `ownerPred` must select exactly the seed srcs (lit(true) when the
     * seed set is the layer's whole src domain, as in g03's
-    * all-customers cone).
+    * all-customers cone). A DATED layer (carrying `as_of`, unique per
+    * (as_of, src, dst)) yields (owner, as_of, entity, share), per cell.
     */
   def seedStep(layer: DataFrame, ownerPred: Column,
                epsilon: Option[Double] = None): DataFrame = {
     var s1 = layer.filter(ownerPred)
-      .select(col("src").as("owner"), col("dst").as("entity"),
-              col("weight").as("share"))
+      .select((col("src").as("owner") +: Traversals.asOfKey(layer).map(col)) ++
+              Seq(col("dst").as("entity"), col("weight").as("share")): _*)
     epsilon.foreach(eps => s1 = s1.filter(col("share") >= eps))
     s1
   }
-
-  /** [[seedStep]] with the slider position riding along — the identity
-    * argument is per (owner, as_of) cell and unchanged (dated layers are
-    * unique per (as_of, src, dst); the seed frame is seeds × the same
-    * slider dates the layers were built for). */
-  def seedStepAsOf(layer: DataFrame, ownerPred: Column): DataFrame =
-    layer.filter(ownerPred)
-      .select(col("src").as("owner"), col("as_of"),
-              col("dst").as("entity"), col("weight").as("share"))
 
   /** Layered variant: step k joins only `layers(k)` — on a layered DAG
     * (customer→order→part→supplier) each step's probe side shrinks to the
     * one relevant edge set instead of the full union. Identical results to
     * [[propagate]] when layers partition the edges by source type (a join on
     * `entity = src` can only ever match the matching layer).
+    *
+    * Batched over SNAPSHOT DATES when `init` carries `as_of`: the layers
+    * must carry `as_of` too and each step joins on (entity = src AND as_of)
+    * — every slider position's cone propagates in the SAME joins (the g53
+    * free-batch-key argument on the date axis), and no share mass leaks
+    * between positions. Callers build the per-date layers from one scan.
     */
   def propagateLayers(layers: Seq[DataFrame], init: DataFrame,
                       epsilon: Option[Double] = None,
                       materializeLayers: Boolean = true): DataFrame = {
-    var own = init.select(col("owner"), col("entity"), col("share"))
+    val k = Traversals.asOfKey(init)
+    var own = init.select((col("owner") +: k.map(col)) ++ Seq(col("entity"), col("share")): _*)
     var i = 1
     layers.foreach { layer =>
-      val e0 = layer.select(col("src"), col("dst"), col("weight"))
+      if (k.nonEmpty) Traversals.requireDated(layer, "as_of", "propagateLayers")
+      val e0 = layer.select(k.map(col) ++ Seq(col("src"), col("dst"), col("weight")): _*)
       val e = if (materializeLayers) e0.transform(Materialize.apply) else e0
       own = step(own, e, epsilon)
       // mid-loop lineage truncation only: a checkpoint after the LAST step
       // is pure overhead (one extra job + a block-manager round trip for a
       // result every caller consumes exactly once — r17 opt, guide §2/§5)
-      if (i % 3 == 0 && i < layers.size) own = own.transform(Materialize.apply)
-      i += 1
-    }
-    own
-  }
-
-  /** [[propagateLayers]] batched over SNAPSHOT DATES: layers and state both
-    * carry an `as_of` column and each step joins on (entity = src AND
-    * as_of = as_of) — every slider position's ownership cone propagates in
-    * the SAME three joins (the g53 free-batch-key argument extended from
-    * the owner column to the date axis: state is bounded by
-    * |owners| × |dates| × cone, and k dates never re-run the plan). The
-    * per-date layers themselves are built by the CALLER from conditional
-    * aggregates over one scan — this function only contracts that the
-    * join respects the date key, so share mass never leaks between
-    * slider positions.
-    */
-  def propagateLayersAsOf(layers: Seq[DataFrame], init: DataFrame): DataFrame = {
-    var own = init.select(col("owner"), col("as_of"), col("entity"), col("share"))
-    var i = 1
-    layers.foreach { layer =>
-      val e = layer.select(col("as_of").as("e_as_of"), col("src"), col("dst"), col("weight"))
-      own = graft.rel.Regroup.aggregateByNewKeys(
-          own.join(e, col("entity") === col("src") && col("as_of") === col("e_as_of")),
-          groupKeys = Seq(col("owner"), col("as_of"), col("dst")),
-          aggs = Seq(sum(col("share") * col("weight")).as("share")),
-          // (as_of, dst) = the next step's join keys — see step()
-          partitionKeys = Seq(col("as_of"), col("dst")))
-        .select(col("owner"), col("as_of"), col("dst").as("entity"), col("share"))
-      // mid-loop only — see propagateLayers
       if (i % 3 == 0 && i < layers.size) own = own.transform(Materialize.apply)
       i += 1
     }
@@ -206,7 +176,39 @@ object Ubo {
     * drill-down contract of [[propagate]]'s cyclic form, with a ≤
     * maxHops+1-id string column riding along. Mirrored step-for-step by
     * [[UboSql.chainStep]].
+    *
+    * AT each Time-Slider position: `owners` carrying `as_of` need a DATED
+    * web (`edges` with `as_of`, see GraphQueries.datedUboLayers); as_of
+    * joins the step-join and argmax keys, so positions ride the state width
+    * (the g56 argument) and the prune's proof holds per position. Mirrored
+    * by [[UboSql.chainStepAsOf]].
     */
+  def strongestChain(edges: DataFrame, owners: DataFrame, maxHops: Int): DataFrame = {
+    val keys = "owner" +: Traversals.asOfKey(owners)
+    val k = keys.tail
+    if (k.nonEmpty) Traversals.requireDated(edges, "as_of", "strongestChain")
+    val e = edges.select(k.map(c => col(c).as(s"e_$c")) ++
+      Seq(col("src"), col("dst"), col("weight")): _*).transform(Materialize.apply)
+    var frontier = owners.select(keys.map(col): _*).distinct()
+      .select(keys.map(col) ++ Seq(col("owner").as("entity"), lit(1.0).as("share"),
+              col("owner").cast("string").as("chain")): _*)
+    var best: DataFrame = null
+    for (i <- 1 to maxHops) {
+      frontier = argmaxByCell(
+        frontier.join(e, onEntity(k))
+          .select(keys.map(col) ++ Seq(col("dst").as("entity"),
+                  (col("share") * col("weight")).as("share"),
+                  concat(col("chain"), lit("->"), col("dst").cast("string")).as("chain")): _*),
+        keys)
+        .transform(Materialize.apply) // reused: level output + next join
+      val lvl = frontier.withColumn("hops", lit(i))
+      best = if (best == null) lvl else best.unionByName(lvl)
+    }
+    // cross-level argmax: hops rides along (chain determines hops, so the
+    // (share, chain) order can never need it as a tie-break)
+    argmaxByCell(best, keys, "hops")
+  }
+
   /** The per-cell argmax `(share DESC, chain ASC)` as an AGGREGATE instead
     * of a `row_number = 1` window (r17 opt, guide §2.3 "aggregate before
     * you shuffle"): `min(struct(-share, chain))` picks the identical
@@ -217,77 +219,21 @@ object Ubo {
     * join fan-out collapses to ≤ one row per (keys, entity) cell PER
     * PARTITION before the exchange, where the window shipped every
     * extension row and sorted it. Same rows out, far fewer rows shuffled.
+    * `extra` columns ride along in the winner's struct.
     */
-  private def argmaxByCell(extended: DataFrame, keys: Seq[String]): DataFrame =
+  private def argmaxByCell(extended: DataFrame, keys: Seq[String], extra: String*): DataFrame = {
+    val fields = "chain" +: extra
     extended
       .groupBy(keys.map(col) :+ col("entity"): _*)
-      .agg(min(struct((-col("share")).as("ns"), col("chain").as("chain"))).as("b"))
-      .select(keys.map(col) :+ col("entity") :+
-        (-col("b.ns")).as("share") :+ col("b.chain").as("chain"): _*)
-
-  def strongestChain(edges: DataFrame, owners: DataFrame, maxHops: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("weight")).transform(Materialize.apply)
-    var frontier = owners.select(col("owner")).distinct()
-      .select(col("owner"), col("owner").as("entity"), lit(1.0).as("share"),
-              col("owner").cast("string").as("chain"))
-    var best: DataFrame = null
-    for (i <- 1 to maxHops) {
-      frontier = argmaxByCell(
-        frontier.join(e, col("entity") === col("src"))
-          .select(col("owner"), col("dst").as("entity"),
-                  (col("share") * col("weight")).as("share"),
-                  concat(col("chain"), lit("->"), col("dst").cast("string")).as("chain")),
-        keys = Seq("owner"))
-        .transform(Materialize.apply) // reused: level output + next join
-      val lvl = frontier.withColumn("hops", lit(i))
-      best = if (best == null) lvl else best.unionByName(lvl)
-    }
-    // cross-level argmax: hops rides along (chain determines hops, so the
-    // (share, chain) order can never need it as a tie-break)
-    best
-      .groupBy(col("owner"), col("entity"))
-      .agg(min(struct((-col("share")).as("ns"), col("chain").as("chain"),
-                      col("hops").as("hops"))).as("b"))
-      .select(col("owner"), col("entity"), (-col("b.ns")).as("share"),
-              col("b.chain").as("chain"), col("b.hops").as("hops"))
+      .agg(min(struct((-col("share")).as("ns") +: fields.map(c => col(c).as(c)): _*)).as("b"))
+      .select((keys.map(col) :+ col("entity") :+ (-col("b.ns")).as("share")) ++
+        fields.map(c => col(s"b.$c").as(c)): _*)
   }
 
-  /** [[strongestChain]] AT each Time-Slider position: `edges` carry an
-    * `as_of` column (a DATED, per-date-renormalized web — see
-    * GraphQueries.datedUboLayers) and `owners` carry (owner, as_of); the
-    * DP runs per position by adding as_of to the step-join and argmax-
-    * window keys — the g56 free-batch-key argument applied to the Viterbi
-    * recurrence: positions ride the state width, never extra passes. The
-    * per-step rn=1 prune and its optimal-substructure proof are unchanged
-    * (each position is an independent weighted graph). Mirrored by
-    * [[UboSql.chainStepAsOf]].
-    */
-  def strongestChainAsOf(edges: DataFrame, owners: DataFrame, maxHops: Int): DataFrame = {
-    val e = edges.select(col("as_of").as("e_as_of"), col("src"), col("dst"), col("weight"))
-      .transform(Materialize.apply)
-    var frontier = owners.select(col("owner"), col("as_of")).distinct()
-      .select(col("owner"), col("as_of"), col("owner").as("entity"),
-              lit(1.0).as("share"), col("owner").cast("string").as("chain"))
-    var best: DataFrame = null
-    for (i <- 1 to maxHops) {
-      frontier = argmaxByCell(
-        frontier.join(e,
-          col("entity") === col("src") && col("as_of") === col("e_as_of"))
-        .select(col("owner"), col("as_of"), col("dst").as("entity"),
-                (col("share") * col("weight")).as("share"),
-                concat(col("chain"), lit("->"), col("dst").cast("string")).as("chain")),
-        keys = Seq("owner", "as_of"))
-        .transform(Materialize.apply) // reused: level output + next join
-      val lvl = frontier.withColumn("hops", lit(i))
-      best = if (best == null) lvl else best.unionByName(lvl)
-    }
-    best
-      .groupBy(col("owner"), col("as_of"), col("entity"))
-      .agg(min(struct((-col("share")).as("ns"), col("chain").as("chain"),
-                      col("hops").as("hops"))).as("b"))
-      .select(col("owner"), col("as_of"), col("entity"), (-col("b.ns")).as("share"),
-              col("b.chain").as("chain"), col("b.hops").as("hops"))
-  }
+  /** The step join: entity = src, plus as_of = e_as_of (the layer's as_of
+    * renamed) for a dated batch. */
+  private def onEntity(k: Seq[String]): Column =
+    k.foldLeft(col("entity") === col("src"))((on, c) => on && col(c) === col(s"e_$c"))
 
   /** One propagation step. The step is the canonical
     * [[graft.rel.Regroup.aggregateByNewKeys]] case — all three conditions
@@ -301,18 +247,20 @@ object Ubo {
     */
   def step(own: DataFrame, layer: DataFrame,
            epsilon: Option[Double] = None): DataFrame = {
+    val k = Traversals.asOfKey(own)
     // partition the fan-out on dst ALONE (a subset of the group keys, so
     // the agg still collapses fully): the step's output is then hash-
     // partitioned on what becomes `entity` — exactly the NEXT step's join
     // key — so the following join re-exchanges only the layer side, never
-    // the propagated state (§2.4 exchange reuse; r17 opt)
+    // the propagated state (§2.4 exchange reuse; r17 opt). A dated step
+    // partitions on (as_of, dst), the next step's dated join keys.
     var next = graft.rel.Regroup.aggregateByNewKeys(
-      own.join(layer, col("entity") === col("src")),
-      groupKeys = Seq(col("owner"), col("dst")),
+      own.join(if (k.isEmpty) layer else layer.withColumnRenamed("as_of", "e_as_of"), onEntity(k)),
+      groupKeys = (col("owner") +: k.map(col)) :+ col("dst"),
       aggs = Seq(sum(col("share") * col("weight")).as("share")),
-      partitionKeys = Seq(col("dst")))
+      partitionKeys = k.map(col) :+ col("dst"))
     epsilon.foreach(eps => next = next.filter(col("share") >= eps))
-    next.select(col("owner"), col("dst").as("entity"), col("share"))
+    next.select((col("owner") +: k.map(col)) ++ Seq(col("dst").as("entity"), col("share")): _*)
   }
 }
 
@@ -373,7 +321,7 @@ object UboSql {
        |  WHERE rn = 1)""".stripMargin
 
   /** [[chainStep]] with the slider position in the join and window keys —
-    * the mirror of [[Ubo.strongestChainAsOf]]'s step. */
+    * the mirror of [[Ubo.strongestChain]]'s dated step. */
   def chainStepAsOf(prev: String, cur: String, edges: String): String =
     s"""$cur AS (
        |  SELECT owner, as_of, entity, share, chain FROM (

@@ -161,7 +161,7 @@ object SourceQueries {
     * `maxNodesPerPosition` is the as-of-aware supernode guard (VERDICT
     * r11 #5 — SCALE.md records LOCATED_IN hubs growing s09 documents
     * linearly with the board): when set, each (seed, as_of) membership is
-    * truncated via [[graft.graph.Traversals.capEgoMembersAsOf]] (min
+    * truncated via [[graft.graph.Traversals.capEgoMembers]] (min
     * depth, then induced incident weight WITHIN that position's validity
     * snapshot, then id — seed always kept) BEFORE the induced-edge and
     * collect_list steps, and the output carries `n_nodes_total` (pre-cap)
@@ -173,9 +173,9 @@ object SourceQueries {
       radius: Int, maxNodesPerPosition: Option[Int] = None): DataFrame = {
     val t = Tables(s, d)
     val g = graft.graph.GraphBuilder.edges(t)
-    val raw = graft.graph.Traversals.egoMembersAsOf(g, sy.select("seed", "as_of"), radius)
+    val raw = graft.graph.Traversals.egoMembers(g, sy.select("seed", "as_of"), radius)
     val members = maxNodesPerPosition match {
-      case Some(cap) => graft.graph.Traversals.capEgoMembersAsOf(g, raw, cap)
+      case Some(cap) => graft.graph.Traversals.capEgoMembers(g, raw, cap)
         .transform(graft.graph.Materialize.apply) // reused: nodes agg + induced edges
       case None => raw
     }
@@ -185,7 +185,7 @@ object SourceQueries {
       .agg(count(lit(1)).as("n_nodes"),
            to_json(sort_array(collect_list(
              struct(col("id"), col("label"), col("name"))))).as("nodes_json"))
-    val ed = graft.graph.Traversals.inducedEdgesAsOf(g, members)
+    val ed = graft.graph.Traversals.inducedEdges(g, members)
       .select(col("seed"), col("as_of"), col("src"), col("dst"), col("rel_type"),
               floor(col("weight") * 1e6 + 0.5).cast("long").as("w_ppm"))
       .groupBy("seed", "as_of")
@@ -517,12 +517,12 @@ object SourceQueries {
     // graph at each position being the validity snapshot (valid_from <=
     // Dec-31 of that year). ONE batched traversal answers every position
     // of every seed — the batch key is the (seed, as_of) PAIR carried
-    // through the per-level join (Traversals.egoMembersAsOf; the g53
+    // through the per-level join (Traversals.egoMembers; the g53
     // free-batch-key shape), with snapshot validity a residual predicate
     // on that join, so the edge union is scanned radius times TOTAL
     // instead of radius x positions (on cumulative validity windows the
     // branch-per-year alternative's late branches re-read nearly the full
-    // edge set — see the egoMembersAsOf scaladoc for the scan arithmetic).
+    // edge set — see the egoMembers scaladoc for the scan arithmetic).
     // Early-position documents can legitimately have zero temporal edges
     // in range; the left join + '[]' coalesce keeps every slider position
     // present (a slider with missing frames is a rendering bug). Same
@@ -643,7 +643,7 @@ object SourceQueries {
     // (src, dst, rel_type, valid_from): an instance is "added" at the
     // first position where both endpoints are members AND the instance
     // has activated. Scale shape: ONE batched traversal for every (seed,
-    // position) (egoMembersAsOf — positions ride the batch key, the s09
+    // position) (egoMembers — positions ride the batch key, the s09
     // argument verbatim), then the delta is a self-anti-join on the
     // position axis SHIFTED BY ONE — the shift is a when-chain over the
     // literal position list, not a join, so the whole delta costs two
@@ -659,7 +659,7 @@ object SourceQueries {
         .select(col("seed"), col("year"), col("ts").cast("timestamp_ntz").as("as_of"))
       val t = Tables(s, d)
       val g = graft.graph.GraphBuilder.edges(t)
-      val members = graft.graph.Traversals.egoMembersAsOf(g, sy.select("seed", "as_of"), 2)
+      val members = graft.graph.Traversals.egoMembers(g, sy.select("seed", "as_of"), 2)
         .join(broadcast(sy.select("seed", "as_of", "year")), Seq("seed", "as_of"))
         .select("seed", "year", "as_of", "id")
         .transform(graft.graph.Materialize.apply)
@@ -673,7 +673,7 @@ object SourceQueries {
       val addAgg = members.join(prevM, Seq("seed", "year", "id"), "left_anti")
         .groupBy("seed", "year")
         .agg(count(lit(1)).as("n_nodes_added"), min(col("id")).as("first_new_node"))
-      val ind = graft.graph.Traversals.inducedEdgesAsOf(g, members)
+      val ind = graft.graph.Traversals.inducedEdges(g, members)
         .join(broadcast(sy.select("seed", "as_of", "year")), Seq("seed", "as_of"))
         .select(col("seed"), col("year"), col("src"), col("dst"), col("rel_type"),
                 // ntz → ltz in the UTC session, so epoch micros match the

@@ -61,7 +61,7 @@ object ExplainAudit {
     "g62_dossier_asof" -> "final plan is post-checkpoint by design (dated supplied layer + graph build + propagation all materialize); the ENFORCED pin is PlanSpec 'g62: slider dates and dossier sections hold lineitem at 4 scans' — 2 dated layers + 2 materialized edge-union branches, for any number of slider positions or sections",
     "g63_fanin_velocity" -> "ONE hash exchange on the target feeds BOTH the value-bounded RANGE-frame window and the per-target peak aggregation (same key ⇒ partitioning reuse; enforced on the scale-tier derivation in PlanSpec); no self-join, no bucket duplication",
     "t15_fanin_alert" -> "dedup-then-count: HashAggregate-free dropDuplicates (window, src, dst) feeding the windowed count — in batch Catalyst plans both as aggregates over ONE exchange sequence; the streaming form chains two watermark-bounded stateful operators (StreamingSpec)",
-    "s11_timeslider_delta" -> "post-checkpoint final plan joins the materialized member/instance tables to their position-SHIFTED selves (left_anti) — the shift is a when-chain projection, NOT a join; slider positions add zero edge scans (the shared egoMembersAsOf primitive is PlanSpec-pinned via s09)",
+    "s11_timeslider_delta" -> "post-checkpoint final plan joins the materialized member/instance tables to their position-SHIFTED selves (left_anti) — the shift is a when-chain projection, NOT a join; slider positions add zero edge scans (the shared egoMembers primitive, given (seed, as_of) seeds, is PlanSpec-pinned via s09)",
     "s10_graphml_import" -> "the xpath extraction must stay a per-row projection over the document column (posexplode realignment — no shuffle introduced by the parse); aggregation above it is ordinary partial/final",
     "g64_strongest_asof" -> "the g59 meet shape with as_of in the DP state and BOTH meet join key sets — dated layers feed one (owner, as_of)-batched Viterbi recurrence; positions ride state width, never extra passes",
     "s12_nodelink_import" -> "from_json + explode must stay per-row projections over the document columns (JsonToStructs then Generate — no shuffle from the parse); same re-aggregation shape as s10")

@@ -51,7 +51,7 @@ class AsofCompositionSpec extends SparkSpec {
       .toDF("seed", "ts")
       .select(col("seed"), col("ts").cast("timestamp_ntz").as("as_of"))
     val t = Tables(spark, sfDir)
-    val m = Traversals.egoMembersAsOf(GraphBuilder.edges(t), sy, 2)
+    val m = Traversals.egoMembers(GraphBuilder.edges(t), sy, 2)
       .select(col("seed"), year(col("as_of")).as("y"), col("id")).collect()
       .groupBy(r => (r.getAs[Long]("seed"), r.getAs[Int]("y").toLong))
       .map { case (k, rs) => k -> rs.map(_.getAs[Long]("id")).toSet }

@@ -141,7 +141,7 @@ class ConnectionSpec extends SparkSpec {
     def asOfDf(pairs: Seq[(Long, Long, String)]) =
       pairs.toDF("s_id", "t_id", "ds")
         .select(col("s_id"), col("t_id"), col("ds").cast("timestamp_ntz").as("as_of"))
-    val batched = graph.Traversals.connectionDistanceAsOf(
+    val batched = graph.Traversals.connectionDistance(
         e, asOfDf(Seq(
           (1L, 3L, "1996-06-30 00:00:00"), (1L, 3L, "2001-06-30 00:00:00"),
           (2L, 4L, "1996-06-30 00:00:00"), (2L, 4L, "2001-06-30 00:00:00"))), radius = 2)
@@ -159,7 +159,7 @@ class ConnectionSpec extends SparkSpec {
     assert(batched((2L, 4L, 2001))._1 === 2L)
     // batching over dates must equal one call per date
     Seq("1996-06-30 00:00:00", "2001-06-30 00:00:00").foreach { ds =>
-      val solo = graph.Traversals.connectionDistanceAsOf(
+      val solo = graph.Traversals.connectionDistance(
           e, asOfDf(Seq((1L, 3L, ds), (2L, 4L, ds))), radius = 2)
         .collect()
         .map(r => (r.getAs[Long]("s_id"), r.getAs[Long]("t_id"),

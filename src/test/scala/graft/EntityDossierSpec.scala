@@ -136,7 +136,7 @@ class EntityDossierSpec extends SparkSpec {
       .withColumn("as_of", col("as_of").cast("timestamp_ntz"))
       .select(lit(10L).as("owner"), col("as_of"), lit(10L).as("entity"),
               lit(1.0).cast("double").as("share"))
-    val out = graph.Ubo.propagateLayersAsOf(Seq(layer), init).collect()
+    val out = graph.Ubo.propagateLayers(Seq(layer), init).collect()
       .map(r => (r.getAs[java.time.LocalDateTime]("as_of").getYear,
         r.getAs[Long]("entity"), r.getAs[Double]("share"))).toSet
     assert(out === Set((1996, 20L, 1.0), (2001, 20L, 0.25), (2001, 30L, 0.75)),

@@ -354,7 +354,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("s09: per-level slider frontier broadcasts with the validity residual on the join") {
-    // egoMembersAsOf's contract: every slider position of every seed rides
+    // egoMembers' as-of contract: every slider position of every seed rides
     // ONE traversal — the per-level join broadcasts the (seed, as_of)
     // frontier under the measured gate, and snapshot validity
     // (active_from <= as_of) is a RESIDUAL on that broadcast join, never a

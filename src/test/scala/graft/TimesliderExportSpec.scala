@@ -111,14 +111,14 @@ class TimesliderExportSpec extends SparkSpec {
       .withColumn("valid_from", col("valid_from").cast("timestamp_ntz"))
     val seeds = Seq(("1995-12-31 23:59:59"), ("1999-12-31 23:59:59"))
       .toDF("ts").select(lit(1L).as("seed"), col("ts").cast("timestamp_ntz").as("as_of"))
-    val members = graph.Traversals.egoMembersAsOf(edges, seeds, radius = 3)
+    val members = graph.Traversals.egoMembers(edges, seeds, radius = 3)
     val byAsOf = members.collect()
       .groupBy(_.getAs[java.time.LocalDateTime]("as_of").getYear)
       .map { case (y, rs) => y -> rs.map(_.getAs[Long]("id")).toSet }
     assert(byAsOf(1995) === Set(1L, 2L, 3L),
       "1995: 2→3 active via its 1995-06 instance; 3→4 (1996) not yet valid")
     assert(byAsOf(1999) === Set(1L, 2L, 3L, 4L), "1999: whole chain valid")
-    val ind = graph.Traversals.inducedEdgesAsOf(edges, members).collect()
+    val ind = graph.Traversals.inducedEdges(edges, members).collect()
       .groupBy(_.getAs[java.time.LocalDateTime]("as_of").getYear)
       .map { case (y, rs) =>
         y -> rs.map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"),
