@@ -270,17 +270,12 @@ object Algorithms {
     * COST NOTE (ADVICE r13): the entry Materialize checkpoints the full
     * label table on every call, so a per-micro-batch maintenance loop pays
     * an O(|labels|) materialization write per batch ON TOP of the one
-    * broadcast remap scan. Pass `baseMaterialized = true` when the labels
-    * come from a stored table (parquet-backed state, the foreachBatch
-    * deployment shape) — reading storage is already the materialized form
-    * and re-checkpointing it is pure waste; the default stays safe for
-    * arbitrary incoming plans (an unmaterialized base would re-execute its
-    * lineage in every one of the joins below).
+    * broadcast remap scan; an unmaterialized base would instead re-execute
+    * its lineage in every one of the joins below.
     */
-  def ccIncrement(baseLabels: DataFrame, deltaEdges: DataFrame,
-                  baseMaterialized: Boolean = false): DataFrame = {
-    val base0 = baseLabels.select(col("id"), col("component"))
-    val base = if (baseMaterialized) base0 else base0.transform(Materialize.apply)
+  def ccIncrement(baseLabels: DataFrame, deltaEdges: DataFrame): DataFrame = {
+    val base = baseLabels.select(col("id"), col("component"))
+      .transform(Materialize.apply)
     val de = deltaEdges.select(col("src"), col("dst"))
     val compEdges = de
       .join(base.select(col("id").as("src"), col("component").as("ca")),
@@ -387,10 +382,9 @@ object Algorithms {
     * rebuild is the thing being replaced.
     */
   def ccDecrement(baseLabels: DataFrame, survivingEdges: DataFrame,
-                  removedEdges: DataFrame,
-                  baseMaterialized: Boolean = false): DataFrame = {
-    val base0 = baseLabels.select(col("id"), col("component"))
-    val base = if (baseMaterialized) base0 else base0.transform(Materialize.apply)
+                  removedEdges: DataFrame): DataFrame = {
+    val base = baseLabels.select(col("id"), col("component"))
+      .transform(Materialize.apply)
     // ABSOLUTE-SIZE FLOOR (VERDICT r14 #4): on a small graph the rebuild is
     // trivially cheap (the union-find tier — measured 0.6 s vs 4.1 s for
     // the incremental dataflow on the 96k-label windowed graph, SCALE.md
@@ -976,13 +970,7 @@ object Algorithms {
   def betweennessDistributed(edges: DataFrame, nSources: Int,
                              maxDepth: Int = 128,
                              prepped: Boolean = false,
-                             broadcastMaxRows: Long = 2000000L,
-                             // per-superstep observer (phase "fwd"/"bwd",
-                             // level, state rows) — rides on counts the loop
-                             // already takes for the broadcast gate, so
-                             // instrumentation adds no jobs (ScaleUp/SCALE.md
-                             // rehearsals; no-op default for graded paths)
-                             onLevel: (String, Int, Long) => Unit = (_, _, _) => ()): DataFrame = {
+                             broadcastMaxRows: Long = 2000000L): DataFrame = {
     // Broadcast hints gated on MEASURED per-level counts, exactly kHop's
     // pattern: the per-(source, node) state frames are localCheckpoint'd
     // (no stats → AQE can't find the conversion), and when they fit the
@@ -1026,7 +1014,6 @@ object Algorithms {
         .join(gated(visited, visitedRows), Seq("s", "v"), "left_anti")
         .transform(Materialize.apply)
       frontierRows = next.count()
-      onLevel("fwd", depth, frontierRows)
       if (frontierRows > 0) {
         visitedRows += frontierRows
         // kHop's convention: visited stays a LAZY union over checkpointed
@@ -1061,7 +1048,6 @@ object Algorithms {
           coalesce(col("delta"), lit(0.0)).as("delta"))
         .transform(Materialize.apply)
       deltaRows = lvlRows
-      onLevel("bwd", d, lvlRows)
       acc += deltas
     }
     // sum dependencies over sources, excluding each source's own row

@@ -210,10 +210,8 @@ object GraphQueries {
     d.map { case (k, v) => s"WHEN '$k' THEN '$v'" }.mkString(" ")
 
   /** g54's linkage inputs — (registry id|raw abbreviated text, its
-    * normalized id|label view, canonical catalog id|label) — extracted so
-    * tools/FuzzyScaleProbe measures the EXACT graded inputs (the g07
-    * edge-list precedent: probe and query single-sourced). */
-  private[graft] def g54Inputs(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    * normalized id|label view, canonical catalog id|label). */
+  private def g54Inputs(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     import graft.rel.TokenSetJoin
     val fwd = g54Abbrev.toMap                  // canonical -> registry form
     val rev = g54Abbrev.map(_.swap).toMap      // the normalization pack
@@ -242,7 +240,7 @@ object GraphQueries {
     * exactly the independent-failure shape the fused score exists for.
     * Returns (registry(id, raw, norm), catalog(id, label)).
     */
-  private[graft] def g61Inputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  private def g61Inputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (registry, _, labels) = g54Inputs(s, d)
     val rev = g54Abbrev.map(_.swap).toMap
     val reg2 = registry.select(col("id"),
@@ -423,9 +421,8 @@ object GraphQueries {
   }
 
   /** g07_cc_full's order-contracted edge list (see the entry's comment for
-    * the contraction proof) — extracted so scale probes (tools/CcTierProbe)
-    * measure the EXACT graded graph, single-sourced with the query. */
-  private[graft] def ccFullContractedEdges(s: SparkSession, d: String): DataFrame = {
+    * the contraction proof). */
+  private def ccFullContractedEdges(s: SparkSession, d: String): DataFrame = {
     val t = Tables(s, d)
     val custOrder = t.orders.select(
       (lit(GraphBuilder.CustomerBase) + col("o_custkey")).as("cust"),

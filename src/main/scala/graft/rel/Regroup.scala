@@ -25,12 +25,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   *   3. SPILL: the default plan's partial-agg hash map actually spills
   *      (check the agg node's spill metrics) — below memory, the wasted
   *      partial pass is cheap and the extra exchange is pure overhead.
-  * Negative results are part of the rule: `tools/InterAggProbe` (l03's
-  * inverted-index agg — fan-out but no spilling map → no benefit) and
-  * `tools/G11Probe` (g11's pair agg — same) both measured the exchange
-  * as a wash or regression, and stayed on the default plan. `tools/
-  * UboProfile` / `tools/Step3Probe` measured the win this helper encodes:
-  * the isolated g03 step 54.7 → 10.0 s, whole query halved at sf0.8.
+  * Negative results are part of the rule: l03's inverted-index agg
+  * (fan-out but no spilling map → no benefit) and g11's pair agg (same)
+  * both measured the exchange as a wash or regression, and stayed on the
+  * default plan. The win this helper encodes: the isolated g03 step
+  * 54.7 → 10.0 s, whole query halved at sf0.8. The one-off probes that
+  * took these measurements are in git history (readable at commit
+  * 1ff956e); re-check a case with `graft.tools.MicroBench`, whose
+  * records carry the spill and shuffle volumes the rule reads.
   */
 object Regroup {
 

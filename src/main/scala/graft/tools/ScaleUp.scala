@@ -54,13 +54,13 @@ import org.apache.spark.sql.functions._
   * stay disjoint in time (one LAG seam edge per boundary), per-window
   * density equals the source's, and windowed-motif work scales ~k. Use
   * the default for graph-shape rehearsals, `--epochs` for windowed
-  * temporal ones. MEASURED (SCALE.md round-9 entry, tools/EpochsProbe,
-  * k = 8): the feared ~k² growth does not materialize on the graded
-  * surface — every graded temporal operator anchors on an entity
-  * (node/user equi-key) whose id space is copy-disjoint, so both models
-  * scale ~k (g35 relays: interleaved +0.29% cross-copy, epochs exactly
-  * +copies−1 seam edges). The k² regime needs a pure time-proximity
-  * pair join with no entity anchor, a scale-killer shape no graded
+  * temporal ones. MEASURED (SCALE.md round-9 entry, k = 8; the probe is
+  * readable at commit 1ff956e): the feared ~k² growth does not
+  * materialize on the graded surface — every graded temporal operator
+  * anchors on an entity (node/user equi-key) whose id space is
+  * copy-disjoint, so both models scale ~k (g35 relays: interleaved
+  * +0.29% cross-copy, epochs exactly +copies−1 seam edges). The k²
+  * regime needs a pure time-proximity pair join with no entity anchor, a scale-killer shape no graded
   * query uses. `--epochs` remains the recommendation for temporal
   * rehearsals: its timeline physics match real corpus growth and its
   * seam contribution is exactly countable.

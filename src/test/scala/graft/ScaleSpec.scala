@@ -12,7 +12,7 @@ class ScaleSpec extends SparkSpec {
   // the bucketed co-located-join contract moved to BucketingSpec (round 11:
   // richer assertions — zero Exchange of ANY kind, Bucketed:true scans,
   // result-equality vs the plain layout — against the reusable
-  // sources/Bucketing writer that tools/BucketProbe also measures with)
+  // sources/Bucketing writer; SCALE.md round 11 records its measured win)
 
   test("csv and json sinks round-trip with explicit schemas") {
     val dir = Files.createTempDirectory("graft-export").toString
