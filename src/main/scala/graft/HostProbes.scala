@@ -90,17 +90,29 @@ object HostProbes {
     (io < 0 || io < quietIoPressurePct) && (dirty < 0 || dirty < quietDirtyKb)
   }
 
-  /** Spin-wait (re-sampling every ~3 s probe window + 5 s sleep) until all
-    * three probes are quiet or the deadline passes; true iff quiet on exit.
-    * The io/dirty probes are read AFTER the 3 s CPU window so one
-    * iteration's verdict reflects a single instant (window end) — sampling
-    * them first let a writeback burst starting mid-window be declared
-    * quiet. */
+  /** Runnable tasks on the host besides the reader (the 4th /proc/loadavg
+    * field counts it), or -1 if unreadable. */
+  private def runnableOthers(): Int =
+    try {
+      val src = scala.io.Source.fromFile("/proc/loadavg")
+      try src.mkString.trim.split("\\s+")(3).takeWhile(_ != '/').toInt - 1 finally src.close()
+    } catch { case _: Throwable => -1 }
+
+  /** Spin-wait until the host is quiet or the deadline passes; true iff
+    * quiet on exit, 5 s sleeps between checks. A check is first a point
+    * check — io-quiet, and the median of five runnable-task samples 50 ms
+    * apart below [[quietExternalCores]] (this JVM idles between queries) —
+    * and only when that reads busy the ~3 s CPU window, with the io/dirty
+    * probes read AFTER the window so the verdict reflects one instant
+    * (sampling them first let a writeback burst starting mid-window be
+    * declared quiet). */
   def awaitQuiet(deadlineNanos: Long): Boolean = {
-    def quiet(): Boolean = {
-      val cpuOk = externalBusyCores(3000) < quietExternalCores
-      cpuOk && ioQuiet()
+    def pointQuiet(): Boolean = {
+      val rs = (1 to 5).map { i => if (i > 1) Thread.sleep(50); runnableOthers() }.sorted
+      rs.head >= 0 && rs(2) < quietExternalCores && ioQuiet()
     }
+    def quiet(): Boolean =
+      pointQuiet() || (externalBusyCores(3000) < quietExternalCores && ioQuiet())
     var ok = quiet()
     while (!ok && System.nanoTime() < deadlineNanos) {
       Thread.sleep(5000)

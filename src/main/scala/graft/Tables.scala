@@ -12,7 +12,21 @@ import org.apache.spark.sql.functions._
   * unchanged, and Catalyst still gets pushdown/pruning from the scan node.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  /** The fixture file read with its schema resolved once per session
+    * (keyed on path, length and modification time, so a rewritten file is
+    * resolved again): only the first read of a file runs parquet's
+    * schema-inference job. */
+  def t(name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    val path = new org.apache.hadoop.fs.Path(p)
+    scala.util.Try(path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path))
+      .toOption.filter(_.isFile) match {
+      case Some(st) =>
+        spark.read.schema(SessionCache(spark, p, (st.getLen, st.getModificationTime))(
+          spark.read.parquet(p).schema)).parquet(p)
+      case None => spark.read.parquet(p) // a directory, or missing: Spark's own error
+    }
+  }
   def region: DataFrame = t("region")
   def events: DataFrame = Tables.normalizeEventsTs(t("events"))
   def nation: DataFrame = t("nation")

@@ -22,9 +22,18 @@ object SourceQueries {
   private final case class E(name: String, fn: Q, sql: Option[String])
 
   // private[graft]: ScaleSpec reads s06's feed back for the corrupt-row
-  // assertions — sharing the path/schema keeps test and query in lockstep
-  private[graft] def tmpDir(leaf: String): String =
-    new java.io.File(new java.io.File(sys.props("java.io.tmpdir"), "graft_fmt"), leaf).getPath
+  // assertions — sharing the path/schema keeps test and query in lockstep.
+  // One directory per application id, so two sessions on one host never
+  // write over each other's round-trip files; it is deleted at JVM exit.
+  private[graft] def tmpDir(leaf: String): String = {
+    val sc = SparkSession.active.sparkContext
+    val base = new org.apache.hadoop.fs.Path(
+      new java.io.File(new java.io.File(sys.props("java.io.tmpdir"), "graft_fmt"),
+        sc.applicationId).toURI)
+    val fs = base.getFileSystem(sc.hadoopConfiguration)
+    if (fs.mkdirs(base)) fs.deleteOnExit(base)
+    new org.apache.hadoop.fs.Path(base, leaf).toUri.getPath
+  }
 
   /** s06's read schema incl. the corrupt-record column (shared with
     * ScaleSpec so the recovery-path test cannot drift from the query). */

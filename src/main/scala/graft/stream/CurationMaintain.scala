@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.text.{LlmQueries, LshIndex}
+import graft.text.{LlmQueries, LshIndex, ShardStore}
 
 /** The CURATION TICK as a continuously-running ingest loop (round 16 —
   * the streaming deployment of the graded l55 composition, built on
@@ -43,6 +43,11 @@ import graft.text.{LlmQueries, LshIndex}
   * shrinking survivor set; ingest appends in-shard. The accepted store
   * shards by contiguous doc-id range exactly like the index, so an
   * erasure rewrites only touched shards of BOTH.
+  *
+  * Layout ([[graft.text.ShardStore]]): `lsh/` is a saved [[LshIndex]];
+  * `accepted/shard=` is the text store, its shard width and schema in the
+  * store directory's manifest. Both erasures are
+  * [[graft.text.ShardStore.rewriteTouched]].
   */
 object CurationMaintain {
 
@@ -50,20 +55,18 @@ object CurationMaintain {
     * store over a seed corpus (both sharded by contiguous id range). */
   def init(spark: SparkSession, storeDir: String, seed: DataFrame,
            rowsPerShard: Long = LshIndex.defaultRowsPerShard): Unit = {
-    import spark.implicits._
     LshIndex.save(LshIndex.build(seed.select(col("doc_id"), col("text"))),
       s"$storeDir/lsh", rowsPerShard)
-    seed.select(col("doc_id"), col("text"))
-      .withColumn("shard", (col("doc_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$storeDir/accepted")
-    Seq(rowsPerShard).toDF("rows_per_shard")
-      .coalesce(1).write.mode("overwrite").parquet(s"$storeDir/meta")
+    ShardStore.commit(spark, storeDir, Map("rows_per_shard" -> rowsPerShard),
+      Map(ShardStore.overwrite(ShardStore.withIdShard(seed.select(col("doc_id"), col("text")),
+        "doc_id", rowsPerShard), storeDir, "accepted", "shard")))
   }
 
   /** The accepted corpus as (doc_id, text) — what the next batch dedups
     * against, and the curated output a training run reads. */
   def accepted(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/accepted").select("doc_id", "text")
+    ShardStore.read(spark, storeDir, ShardStore.manifest(spark, storeDir), "accepted")
+      .select("doc_id", "text")
 
   /** Fold one signed micro-batch through the tick. Returns the packed
     * bins of THIS batch's accepted slice — (shard, bin_id, n_docs,
@@ -78,7 +81,7 @@ object CurationMaintain {
       .transform(graft.graph.Materialize.apply)
     if (!erase.isEmpty) {
       LshIndex.removeFrom(spark, s"$storeDir/lsh", erase)
-      removeAccepted(spark, storeDir, erase)
+      ShardStore.rewriteTouched(spark, storeDir, "accepted", "shard", "doc_id", erase)
     }
     if (arrivals.isEmpty) return LlmQueries.packGreedy(arrivals, cap)
     // stage 1a: WITHIN-BATCH dedup — two near-identical docs arriving in
@@ -126,42 +129,11 @@ object CurationMaintain {
     // dedups against (in-shard appends on both stores)
     if (!passed.isEmpty) {
       LshIndex.appendTo(spark, s"$storeDir/lsh", passed)
-      val rowsPerShard = spark.read.parquet(s"$storeDir/meta")
-        .head().getAs[Long]("rows_per_shard")
-      passed.withColumn("shard", (col("doc_id") / lit(rowsPerShard)).cast("long"))
-        .write.mode("append").partitionBy("shard").parquet(s"$storeDir/accepted")
+      val rowsPerShard = ShardStore.manifest(spark, storeDir).meta("rows_per_shard")
+      ShardStore.append(ShardStore.withIdShard(passed, "doc_id", rowsPerShard),
+        storeDir, "accepted", "shard")
     }
     // stage 3: pack this batch's accepted slice for the downstream trainer
     LlmQueries.packGreedy(passed, cap)
-  }
-
-  /** Erase doc ids from the accepted store: rewrite only the shards that
-    * hold them (dynamic overwrite scoped to this write), drop emptied
-    * shard directories, no-op on unknown ids — the LshIndex.removeFrom
-    * economics applied to the text store. */
-  private def removeAccepted(spark: SparkSession, storeDir: String,
-                             ids: DataFrame): Unit = {
-    import spark.implicits._
-    val idFrame = ids.select(col("doc_id")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    val stored = spark.read.parquet(s"$storeDir/accepted")
-    val touched = stored.join(idFrame, Seq("doc_id"), "left_semi")
-      .select("shard").distinct().as[Long].collect().sorted.toSeq
-    if (touched.isEmpty) return
-    val touchedLits = touched.map(java.lang.Long.valueOf)
-    val survivors = stored
-      .filter(col("shard").isin(touchedLits: _*))
-      .join(idFrame, Seq("doc_id"), "left_anti")
-      .transform(graft.graph.Materialize.apply)
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(s"$storeDir/accepted")
-    val stillPopulated = survivors.select("shard").distinct().as[Long].collect().toSet
-    val hconf = spark.sparkContext.hadoopConfiguration
-    (touched.toSet -- stillPopulated).foreach { sh =>
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/accepted/shard=$sh")
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
   }
 }

@@ -38,6 +38,12 @@ import org.apache.spark.sql.functions._
   * too, N/avgdl/df shift exactly as if the docs were gone), and
   * [[compact]] later rewrites the touched shards to physically drop the
   * rows (the erasure-completion step; replaying either verb is a no-op).
+  *
+  * Layout ([[ShardStore]]): `postings/tshard=`, `doclens/shard=` and
+  * `tombstones/` parquet tables; the term-shard count, the doclen shard
+  * width and the three schemas live in the directory's manifest, read on
+  * the driver, so a probe or append launches no meta or schema-inference
+  * job. Compaction's rewrites are [[ShardStore.rewriteTouched]].
   */
 final case class Bm25Index(postings: DataFrame, doclens: DataFrame) {
 
@@ -115,35 +121,40 @@ object Bm25Index {
   }
 
   /** Persist: postings sharded by term hash (probe pruning), doclens by
-    * contiguous doc-id range, an empty tombstone table, geometry meta. */
+    * contiguous doc-id range, an empty tombstone table; the geometry and
+    * the three schemas go to the manifest ([[ShardStore]]). */
   def save(idx: Bm25Index, dir: String,
            nTermShards: Int = defaultTermShards,
            rowsPerShard: Long = defaultRowsPerShard): Unit = {
     val spark = idx.postings.sparkSession
-    import spark.implicits._
-    idx.postings.withColumn("tshard", tshardCol(nTermShards))
-      .write.mode("overwrite").partitionBy("tshard").parquet(s"$dir/postings")
-    idx.doclens.withColumn("shard", (col("doc_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/doclens")
+    ShardStore.commit(spark, dir,
+      Map("n_term_shards" -> nTermShards.toLong, "rows_per_shard" -> rowsPerShard),
+      Map(ShardStore.overwrite(idx.postings.withColumn("tshard", tshardCol(nTermShards)),
+            dir, "postings", "tshard"),
+          ShardStore.overwrite(ShardStore.withIdShard(idx.doclens, "doc_id", rowsPerShard),
+            dir, "doclens", "shard"),
+          ShardStore.overwrite(noTombstones(spark), dir, "tombstones")))
+  }
+
+  private def noTombstones(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$dir/tombstones")
-    Seq((nTermShards, rowsPerShard)).toDF("n_term_shards", "rows_per_shard")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+
+  /** The persisted tables read with their declared schemas (no Spark
+    * job), and the distinct tombstoned ids every read path anti-joins. */
+  private def tables(spark: SparkSession, dir: String) = {
+    val m = ShardStore.manifest(spark, dir)
+    (m, ShardStore.read(spark, dir, m, "postings"), ShardStore.read(spark, dir, m, "doclens"),
+     ShardStore.read(spark, dir, m, "tombstones").select(col("doc_id")).distinct())
   }
 
   /** Load the SERVING view: postings/doclens with tombstoned docs
     * anti-joined away — identical scores to an index rebuilt over
     * survivors, whether or not [[compact]] has run yet. */
   def load(spark: SparkSession, dir: String): Bm25Index = {
-    val tomb = spark.read.parquet(s"$dir/tombstones")
-      .select(col("doc_id")).distinct()
+    val (_, postings, doclens, tomb) = tables(spark, dir)
     Bm25Index(
-      spark.read.parquet(s"$dir/postings")
-        .select("doc_id", "token", "tf")
-        .join(tomb, Seq("doc_id"), "left_anti"),
-      spark.read.parquet(s"$dir/doclens")
-        .select("doc_id", "dl")
-        .join(tomb, Seq("doc_id"), "left_anti"))
+      postings.select("doc_id", "token", "tf").join(tomb, Seq("doc_id"), "left_anti"),
+      doclens.select("doc_id", "dl").join(tomb, Seq("doc_id"), "left_anti"))
   }
 
   /** Incremental ingest against a persisted index: tokenize ONLY the new
@@ -151,15 +162,13 @@ object Bm25Index {
     * nothing on disk is rewritten, and the very next probe serves the
     * union's exact scores (stats recompute from the appended doclens). */
   def appendTo(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (nTermShards, rowsPerShard) =
-      (meta.getAs[Int]("n_term_shards"), meta.getAs[Long]("rows_per_shard"))
+    val m = ShardStore.manifest(spark, dir)
     val tok = Retrieval.tokenize(delta)
       .transform(graft.graph.Materialize.apply)
-    postingsOf(tok).withColumn("tshard", tshardCol(nTermShards))
-      .write.mode("append").partitionBy("tshard").parquet(s"$dir/postings")
-    doclensOf(tok).withColumn("shard", (col("doc_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("append").partitionBy("shard").parquet(s"$dir/doclens")
+    ShardStore.append(postingsOf(tok).withColumn("tshard", tshardCol(m.int("n_term_shards"))),
+      dir, "postings", "tshard")
+    ShardStore.append(ShardStore.withIdShard(doclensOf(tok), "doc_id", m.meta("rows_per_shard")),
+      dir, "doclens", "shard")
   }
 
   /** Persisted erasure, tombstone form (see the class doc for why the
@@ -170,37 +179,34 @@ object Bm25Index {
     * (tombstones are distinct'd at read; [[compact]] clears them). The
     * bytes remain until [[compact]] — the erasure-completion step. */
   def removeFrom(spark: SparkSession, dir: String, ids: DataFrame): Long = {
-    val idf = ids.select(col("doc_id")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    idf.write.mode("append").parquet(s"$dir/tombstones")
-    idf.count()
+    val (idf, n) = graft.graph.Materialize.counted(ids.select(col("doc_id")).distinct())
+    ShardStore.append(idf, dir, "tombstones")
+    n
   }
 
   /** Probe a PERSISTED index without loading it whole: the postings read
     * prunes to the term shards the query's tokens hash into — the
-    * collected pruning set is bounded by the SHARD DOMAIN (nTermShards),
-    * never by Q, and the exact term match stays a broadcast semi-join
-    * (the l48 no-literal-list rule). Tombstones anti-join both tables, so
-    * a probe between removeFrom and compact already serves survivors. */
+    * collected pruning set is bounded by the SHARD DOMAIN (nTermShards
+    * per partition of the term set), never by Q, and the exact term match
+    * stays a broadcast semi-join (the l48 no-literal-list rule).
+    * Tombstones anti-join both tables, so a probe between removeFrom and
+    * compact already serves survivors. */
   def probeFrom(spark: SparkSession, dir: String, qterms: DataFrame,
                 topK: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import spark.implicits._
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val nTermShards = meta.getAs[Int]("n_term_shards")
+    val (m, postings, doclens, tomb) = tables(spark, dir)
     val terms = qterms.select(col("token")).distinct()
       .transform(graft.graph.Materialize.apply)
-    val shards = terms.select(pmod(xxhash64(col("token")), lit(nTermShards.toLong)).as("t"))
-      .distinct().as[Long].collect().sorted
-    val tomb = spark.read.parquet(s"$dir/tombstones")
-      .select(col("doc_id")).distinct()
-    val tf = spark.read.parquet(s"$dir/postings")
+    // distinct within each partition, not across them: one job and no
+    // shuffle, at most nTermShards rows a partition
+    val shards = terms.select(tshardCol(m.int("n_term_shards"))).as[Long]
+      .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+    val tf = postings
       .filter(col("tshard").isin(shards.map(java.lang.Long.valueOf): _*))
       .join(broadcast(terms), Seq("token"), "left_semi")
       .join(tomb, Seq("doc_id"), "left_anti")
       .select("doc_id", "token", "tf")
-    val dl = spark.read.parquet(s"$dir/doclens")
-      .select("doc_id", "dl")
-      .join(tomb, Seq("doc_id"), "left_anti")
+    val dl = doclens.select("doc_id", "dl").join(tomb, Seq("doc_id"), "left_anti")
     Retrieval.scoreTf(tf, dl, qterms, topK, k1, b)
   }
 
@@ -210,42 +216,16 @@ object Bm25Index {
     * then clear the tombstone table. Untouched partitions are
     * byte-identical; emptied partition directories are dropped; probes
     * before and after are equal (the tombstone anti-join was already
-    * serving survivors); replaying compact on a clean index is a no-op. */
+    * serving survivors); replaying compact on a clean index is a no-op.
+    * Both rewrites are [[ShardStore.rewriteTouched]] (its crash-window
+    * note applies; the tombstones are cleared only after both). */
   def compact(spark: SparkSession, dir: String): Bm25CompactStats = {
-    import spark.implicits._
-    val tomb = spark.read.parquet(s"$dir/tombstones")
-      .select(col("doc_id")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    val nTomb = tomb.count()
+    val (_, _, _, distinctTomb) = tables(spark, dir)
+    val (tomb, nTomb) = graft.graph.Materialize.counted(distinctTomb)
     if (nTomb == 0L) return Bm25CompactStats(0L, Seq.empty, Seq.empty)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def rewrite(sub: String, shardCol: String): Seq[Long] = {
-      val stored = spark.read.parquet(s"$dir/$sub")
-      val hit = stored.join(tomb, Seq("doc_id"), "left_semi")
-        .select(col(shardCol)).distinct()
-        .as[Long].collect().sorted.toSeq
-      if (hit.isEmpty) return Seq.empty
-      val touchedLits = hit.map(java.lang.Long.valueOf)
-      val survivors = stored
-        .filter(col(shardCol).isin(touchedLits: _*))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .transform(graft.graph.Materialize.apply)
-      survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(shardCol).parquet(s"$dir/$sub")
-      val stillPopulated =
-        survivors.select(shardCol).distinct().as[Long].collect().toSet
-      (hit.toSet -- stillPopulated).foreach { sh =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$sub/$shardCol=$sh")
-        val fs = p.getFileSystem(hconf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      hit
-    }
-    val termShards = rewrite("postings", "tshard")
-    val dlShards = rewrite("doclens", "shard")
-    spark.range(0).select(col("id").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$dir/tombstones")
-    Bm25CompactStats(nTomb, termShards, dlShards)
+    val termShards = ShardStore.rewriteTouched(spark, dir, "postings", "tshard", "doc_id", tomb)
+    val dlShards = ShardStore.rewriteTouched(spark, dir, "doclens", "shard", "doc_id", tomb)
+    ShardStore.overwrite(noTombstones(spark), dir, "tombstones")
+    Bm25CompactStats(nTomb, termShards.touched, dlShards.touched)
   }
 }

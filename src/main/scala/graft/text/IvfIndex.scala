@@ -26,6 +26,14 @@ import org.apache.spark.sql.functions._
   * driver contract is a single DataFrame); IvfIndexSpec proves the
   * persisted round-trip returns the identical result, which is the form a
   * 100 TB deployment runs.
+  *
+  * Layout ([[ShardStore]]): `assigned/cluster=` and a one-file
+  * `centroids/` table, both schemas declared in the directory's manifest
+  * (`cluster` reads back as the LONG it was built as). [[IvfIndex.load]]
+  * collects the centroids once per session per manifest version and
+  * reuses them, so a warm load plus a probe is the probe's one scan job;
+  * [[IvfIndex.refresh]] commits a new version, and the next load sees the
+  * refitted centroids.
   */
 final case class IvfIndex(centroids: Array[(Long, Array[Double])], assigned: DataFrame) {
 
@@ -155,21 +163,29 @@ object IvfIndex {
     * (data, k). `embeddings` must carry (vec_id, embedding); all other
     * columns ride along into the index.
     */
-  def build(embeddings: DataFrame, k: Int): IvfIndex = {
-    val spark = embeddings.sparkSession
+  def build(embeddings: DataFrame, k: Int): IvfIndex =
+    fitted(embeddings, LlmQueries.lloydModel(
+      embeddings.select(col("vec_id"), col("embedding")), k))
+
+  /** The index of a Lloyd fit (centroid table, assignments): centroids
+    * collected to the driver (ids ascending, coordinates in position
+    * order), assignments joined to the input and materialized —
+    * build-once means the quantizer dataflow runs ONCE here, not lazily
+    * on every downstream action over the index. */
+  private def fitted(embeddings: DataFrame, fit: (DataFrame, DataFrame)): IvfIndex = {
+    val (c1, a2) = fit
+    IvfIndex(centroidsOf(c1), embeddings.join(a2, "vec_id")
+      .withColumnRenamed("cid", "cluster")
+      .transform(graft.graph.Materialize.apply))
+  }
+
+  private def centroidsOf(c1: DataFrame): Array[(Long, Array[Double])] = {
+    val spark = c1.sparkSession
     import spark.implicits._
-    val (c1, a2) = LlmQueries.lloydModel(
-      embeddings.select(col("vec_id"), col("embedding")), k)
-    val cents = c1.as[(Long, Long, Double)].collect()
+    c1.as[(Long, Long, Double)].collect()
       .groupBy(_._1).map { case (cid, rows) =>
         (cid, rows.sortBy(_._2).map(_._3))
       }.toArray.sortBy(_._1)
-    // materialize: build-once means the quantizer dataflow runs ONCE here,
-    // not lazily on every downstream action over the index
-    val assigned = embeddings.join(a2, "vec_id")
-      .withColumnRenamed("cid", "cluster")
-      .transform(graft.graph.Materialize.apply)
-    IvfIndex(cents, assigned)
   }
 
   /** The PRODUCTION fit (round 16): [[build]] with the Lloyd update count
@@ -182,31 +198,24 @@ object IvfIndex {
     * centroid table improves. `updates = 1` equals [[build]] exactly
     * (IvfIndexSpec pins it), which is why the graded queries keep the
     * 1-update form — their DuckDB oracle mirrors it CTE for CTE. */
-  def buildIterated(embeddings: DataFrame, k: Int, updates: Int): IvfIndex = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val (c1, a2) = LlmQueries.lloydModelIterated(
-      embeddings.select(col("vec_id"), col("embedding")), k, updates)
-    val cents = c1.as[(Long, Long, Double)].collect()
-      .groupBy(_._1).map { case (cid, rows) =>
-        (cid, rows.sortBy(_._2).map(_._3))
-      }.toArray.sortBy(_._1)
-    val assigned = embeddings.join(a2, "vec_id")
-      .withColumnRenamed("cid", "cluster")
-      .transform(graft.graph.Materialize.apply)
-    IvfIndex(cents, assigned)
-  }
+  def buildIterated(embeddings: DataFrame, k: Int, updates: Int): IvfIndex =
+    fitted(embeddings, LlmQueries.lloydModelIterated(
+      embeddings.select(col("vec_id"), col("embedding")), k, updates))
 
   /** Persist: assignments partitioned by bucket (the layout that turns
-    * nprobe into partition pruning), centroids as one small file.
+    * nprobe into partition pruning), centroids as one small file, both
+    * schemas in the manifest ([[ShardStore]]).
     */
   def save(idx: IvfIndex, dir: String): Unit = {
     val spark = idx.assigned.sparkSession
+    ShardStore.commit(spark, dir, Map.empty,
+      Map(ShardStore.overwrite(idx.assigned, dir, "assigned", "cluster"),
+          ShardStore.overwrite(centroidTable(spark, idx.centroids), dir, "centroids")))
+  }
+
+  private def centroidTable(spark: SparkSession, cents: Array[(Long, Array[Double])]): DataFrame = {
     import spark.implicits._
-    idx.assigned.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$dir/assigned")
-    idx.centroids.toSeq.toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    cents.toSeq.toDF("cluster", "centroid").coalesce(1)
   }
 
   /** Incremental ingest against a PERSISTED index (VERDICT r8 #4): assign
@@ -219,8 +228,7 @@ object IvfIndex {
     * [[build]] + [[save]].
     */
   def appendTo(spark: SparkSession, dir: String, delta: DataFrame): Unit =
-    load(spark, dir).assign(delta)
-      .write.mode("append").partitionBy("cluster").parquet(s"$dir/assigned")
+    ShardStore.append(load(spark, dir).assign(delta), dir, "assigned", "cluster")
 
   /** Centroid REFRESH against a persisted index (VERDICT r12 #5): appends
     * assign against the centroids fit on the ORIGINAL corpus, so recall
@@ -327,10 +335,7 @@ object IvfIndex {
     // stays ∝ sample — updates=1 is lloydModel exactly (the graded form)
     val (c1, _) = LlmQueries.lloydModelIterated(
       sample.select(col("vec_id"), col("embedding")), k, updates)
-    val cents = c1.as[(Long, Long, Double)].collect()
-      .groupBy(_._1).map { case (cid, rows) =>
-        (cid, rows.sortBy(_._2).map(_._3))
-      }.toArray.sortBy(_._1)
+    val cents = centroidsOf(c1)
     val probeIdx = IvfIndex(cents, spark.emptyDataFrame)
     val freshAssigned = body.join(probeIdx.probe(body, nprobe = 1), "vec_id")
       .transform(graft.graph.Materialize.apply)
@@ -395,53 +400,41 @@ object IvfIndex {
   }
 
   /** Shared write side of [[refresh]]/[[refreshSampled]]: diff fresh vs old
-    * assignments, rewrite only the moved buckets (dynamic partition
-    * overwrite), drop emptied buckets, overwrite the centroid table. */
+    * assignments, rewrite only the moved buckets and drop emptied ones
+    * ([[ShardStore.overwriteShards]]; a crash between the two is
+    * recovered by replaying the refresh — it converges to the same
+    * bytes), overwrite the centroid table, then commit a new manifest
+    * version so loaded handles pick up the new centroids. */
   private def rewriteDiff(spark: SparkSession, dir: String, fresh: IvfIndex,
                           current: DataFrame, k: Int,
                           effectiveRate: Double = 1.0): IvfRefreshStats = {
-    import spark.implicits._
-    val joined = fresh.assigned
+    val m = ShardStore.manifest(spark, dir)
+    // one aggregate per bucket id over both ends of every vector (its new
+    // and its old bucket): new size, moves in, moves at either end
+    val moved = col("cluster") =!= col("old_cluster")
+    val ends = fresh.assigned
       .join(current.select(col("vec_id"), col("old_cluster")), "vec_id")
-      .transform(graft.graph.Materialize.apply)
-    val nTotal = joined.count()
-    val moved = joined.filter(col("cluster") =!= col("old_cluster"))
-    val nMoved = moved.count()
-    val affected = moved
-      .select(explode(array(col("cluster"), col("old_cluster"))).as("c"))
-      .distinct().as[Long].collect().sorted.toSeq
-    if (affected.nonEmpty) {
-      // dynamic overwrite scoped to THIS write via the writer option
-      // (ADVICE r15: a session-conf toggle would leak into concurrent
-      // writes); crash between write and the emptied-bucket delete is
-      // recovered by replaying the refresh — it converges to the same
-      // bytes.
-      fresh.assigned
-        .filter(col("cluster").isin(affected.map(java.lang.Long.valueOf): _*))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster").parquet(s"$dir/assigned")
-      // dynamic overwrite only touches partitions PRESENT in the written
-      // data — a bucket that lost its every row must be dropped explicitly.
-      // Hadoop FileSystem API, not java.nio (VERDICT r13 #2): the rest of
-      // the write path is storage-agnostic and refresh must work on the
-      // same HDFS/S3 layouts — Export.compactParquet's pattern.
-      val stillPopulated = fresh.assigned
-        .filter(col("cluster").isin(affected.map(java.lang.Long.valueOf): _*))
-        .select("cluster").distinct().as[Long].collect().toSet
-      val hconf = spark.sparkContext.hadoopConfiguration
-      (affected.toSet -- stillPopulated).foreach { c =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/assigned/cluster=$c")
-        val fs = p.getFileSystem(hconf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
+      .select(explode(array(
+        struct(col("cluster").as("c"), lit(true).as("now"), moved.as("moved")),
+        struct(col("old_cluster").as("c"), lit(false).as("now"), moved.as("moved")))).as("e"))
+      .select("e.*")
+    val buckets = ends.groupBy("c")
+      .agg(count(when(col("now"), lit(1))).as("size"),
+           count(when(col("now") && col("moved"), lit(1))).as("moved_in"),
+           count(when(col("moved"), lit(1))).as("moves"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val affected = buckets.collect { case (c, _, _, mv) if mv > 0 => c }.sorted.toSeq
+    if (affected.nonEmpty)
+      ShardStore.overwriteShards(spark, dir, "assigned", "cluster",
+        fresh.assigned.filter(col("cluster").isin(affected.map(java.lang.Long.valueOf): _*)),
+        buckets.collect { case (c, 0L, _, mv) if mv > 0 => c }.sorted.toSeq)
     // centroid table rewritten UNCONDITIONALLY: a refit can shift centroid
     // coordinates without moving any assignment (and the sampled refit
     // almost always does) — the on-disk (centroids, assignments) pair must
     // stay mutually consistent or a loaded probe ranks with stale geometry
-    fresh.centroids.toSeq.toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    IvfRefreshStats(nTotal, nMoved, affected, k, effectiveRate)
+    ShardStore.overwrite(centroidTable(spark, fresh.centroids), dir, "centroids")
+    ShardStore.commit(spark, dir, m.meta, m.schemas)
+    IvfRefreshStats(buckets.map(_._2).sum, buckets.map(_._3).sum, affected, k, effectiveRate)
   }
 
   /** PERSISTED erasure (VERDICT r14 #1 — completes the erasure arc:
@@ -451,10 +444,9 @@ object IvfIndex {
     * from a saved index by rewriting ONLY the buckets that held deleted
     * vectors:
     *
-    *   1. semi-join the id batch against the assignments → the touched
-    *      bucket set (≤ |ids| buckets; the id batch is erasure-sized, so
-    *      this is one partition-pruned probe of the layout, not a scan
-    *      when ids' buckets are known — and one scan when they aren't);
+    *   1. one aggregate of the assignments marked against the id batch
+    *      → the touched bucket set (≤ |ids| buckets), the erased count
+    *      and the buckets left with no survivor, in one scan;
     *   2. rewrite each touched `cluster=` directory with its SURVIVORS
     *      (anti-join on vec_id) via dynamic partition overwrite — every
     *      untouched bucket is byte-identical on disk;
@@ -474,49 +466,27 @@ object IvfIndex {
     * buckets in practice), never the index; the probe path is untouched.
     * IvfIndexSpec proves the trio: remove∘probe ≡ probe-over-survivors,
     * untouched buckets byte-identical, and remove∘append round-trip.
+    * Steps 1–3 are [[ShardStore.rewriteTouched]] (its crash-window note
+    * applies).
     */
   def removeFrom(spark: SparkSession, dir: String, ids: DataFrame): IvfRemoveStats = {
-    import spark.implicits._
-    val idFrame = ids.select(col("vec_id")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    val assigned = spark.read.parquet(s"$dir/assigned")
-      .withColumn("cluster", col("cluster").cast("long"))
-    val hit = assigned.join(idFrame, Seq("vec_id"), "left_semi")
-      .transform(graft.graph.Materialize.apply)
-    val nRemoved = hit.count()
-    if (nRemoved == 0L) return IvfRemoveStats(0L, Seq.empty)
-    val touched = hit.select("cluster").distinct().as[Long].collect().sorted.toSeq
-    val touchedLits = touched.map(java.lang.Long.valueOf)
-    val survivors = assigned
-      .filter(col("cluster").isin(touchedLits: _*))
-      .join(idFrame, Seq("vec_id"), "left_anti")
-      .transform(graft.graph.Materialize.apply)
-    // per-write dynamic overwrite + replay-converging crash window —
-    // same note as [[rewriteDiff]]'s write (ADVICE r15)
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cluster").parquet(s"$dir/assigned")
-    val stillPopulated = survivors.select("cluster").distinct().as[Long].collect().toSet
-    val hconf = spark.sparkContext.hadoopConfiguration
-    (touched.toSet -- stillPopulated).foreach { c =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/assigned/cluster=$c")
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    IvfRemoveStats(nRemoved, touched)
+    val r = ShardStore.rewriteTouched(spark, dir, "assigned", "cluster", "vec_id", ids)
+    IvfRemoveStats(r.keys, r.touched)
   }
 
+  /** Load a persisted index with no Spark job once warm: the centroids
+    * are collected once per session per manifest version and reused by
+    * every later load (a [[refresh]] commits a new version, so the next
+    * load sees its centroids); the assignments are read with their
+    * declared schema, `cluster` a LONG as built. */
   def load(spark: SparkSession, dir: String): IvfIndex = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cluster"), col("centroid")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    // partition-column inference types `cluster` as INT (the built index
-    // carries LongType); cast it back so built and loaded indexes are
-    // schema-identical instead of relying on implicit encoder upcasts.
-    // Position is already right — the build's join appends cluster last,
-    // matching where inference puts the partition column.
-    IvfIndex(cents, spark.read.parquet(s"$dir/assigned")
-      .withColumn("cluster", col("cluster").cast("long")))
+    val m = ShardStore.manifest(spark, dir)
+    val cents = graft.SessionCache(spark, s"$dir/centroids", m.commit) {
+      ShardStore.read(spark, dir, m, "centroids")
+        .select(col("cluster"), col("centroid")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1)
+    }
+    IvfIndex(cents, ShardStore.read(spark, dir, m, "assigned"))
   }
 }

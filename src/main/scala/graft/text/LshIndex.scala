@@ -26,6 +26,11 @@ import org.apache.spark.sql.functions._
   * bucket rows inside the sharded layout; [[removeFrom]] (erasure — the
   * g68/g69/t17b/l47c contract) rewrites only the shards holding deleted
   * docs and is idempotent under at-least-once redelivery.
+  *
+  * Layout ([[ShardStore]]): one `buckets/shard=` parquet table; the band
+  * width, the shard width and the bucket schema live in the directory's
+  * manifest, read on the driver, so [[LshIndex.load]] and
+  * [[LshIndex.appendTo]] launch no meta or schema-inference job.
   */
 final case class LshIndex(buckets: DataFrame, bandRows: Int) {
 
@@ -166,24 +171,23 @@ object LshIndex {
       .transform(graft.graph.Materialize.apply), bandRows)
 
   /** Persist: bucket rows sharded by contiguous doc-id range (see
-    * [[defaultRowsPerShard]]), band width recorded alongside. */
+    * [[defaultRowsPerShard]]); band width, shard width and the bucket
+    * schema go to the manifest ([[ShardStore]]). */
   def save(idx: LshIndex, dir: String,
            rowsPerShard: Long = defaultRowsPerShard): Unit = {
     val spark = idx.buckets.sparkSession
-    import spark.implicits._
-    idx.buckets
-      .withColumn("shard", (col("doc_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/buckets")
-    Seq((idx.bandRows, rowsPerShard)).toDF("band_rows", "rows_per_shard")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    ShardStore.commit(spark, dir,
+      Map("band_rows" -> idx.bandRows.toLong, "rows_per_shard" -> rowsPerShard),
+      Map(ShardStore.overwrite(ShardStore.withIdShard(idx.buckets, "doc_id", rowsPerShard),
+        dir, "buckets", "shard")))
   }
 
+  /** Load a persisted index: geometry from the manifest on the driver,
+    * buckets read with their declared schema — no Spark job. */
   def load(spark: SparkSession, dir: String): LshIndex = {
-    // meta columns read BY NAME (ADVICE r15): positional gets would
-    // silently mis-read if the meta schema ever grows or reorders
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val bandRows = meta.getAs[Int]("band_rows")
-    LshIndex(spark.read.parquet(s"$dir/buckets").drop("shard")
+    val m = ShardStore.manifest(spark, dir)
+    val bandRows = m.int("band_rows")
+    LshIndex(ShardStore.read(spark, dir, m, "buckets")
       .select(col("doc_id") +: bandCols(bandRows).map(col): _*), bandRows)
   }
 
@@ -192,52 +196,19 @@ object LshIndex {
     * disk is rewritten. Signatures are per-document, so the appended
     * index equals a from-scratch rebuild of the union (LshIndexSpec). */
   def appendTo(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (bandRows, rowsPerShard) =
-      (meta.getAs[Int]("band_rows"), meta.getAs[Long]("rows_per_shard"))
-    buckets(delta, bandRows)
-      .withColumn("shard", (col("doc_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("append").partitionBy("shard").parquet(s"$dir/buckets")
+    val m = ShardStore.manifest(spark, dir)
+    ShardStore.append(ShardStore.withIdShard(buckets(delta, m.int("band_rows")), "doc_id",
+      m.meta("rows_per_shard")), dir, "buckets", "shard")
   }
 
   /** Persisted erasure (the IvfIndex.removeFrom pattern on the dedup
     * side): delete the given doc ids' bucket rows by rewriting ONLY the
     * shards that hold them — every untouched shard is byte-identical,
     * emptied shard directories are dropped, and replaying the batch is a
-    * no-op (unknown ids touch nothing). */
+    * no-op (unknown ids touch nothing). One path for every index:
+    * [[ShardStore.rewriteTouched]] (its crash-window note applies). */
   def removeFrom(spark: SparkSession, dir: String, ids: DataFrame): LshRemoveStats = {
-    import spark.implicits._
-    val idFrame = ids.select(col("doc_id")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    val stored = spark.read.parquet(s"$dir/buckets")
-    val hit = stored.join(idFrame, Seq("doc_id"), "left_semi")
-      .transform(graft.graph.Materialize.apply)
-    val nDocs = hit.select("doc_id").distinct().count()
-    if (nDocs == 0L) return LshRemoveStats(0L, Seq.empty)
-    val touched = hit.select("shard").distinct()
-      .as[Long].collect().sorted.toSeq
-    val touchedLits = touched.map(java.lang.Long.valueOf)
-    val survivors = stored
-      .filter(col("shard").isin(touchedLits: _*))
-      .join(idFrame, Seq("doc_id"), "left_anti")
-      .transform(graft.graph.Materialize.apply)
-    // dynamic overwrite scoped to THIS write via the writer option (takes
-    // precedence over the session conf — ADVICE r15: mutating the session
-    // conf would leak dynamic mode into concurrent writes). Crash window:
-    // a failure between this write and the emptied-shard delete below
-    // leaves erased rows on disk until the batch is replayed — replay
-    // converges (unknown ids are no-ops, surviving shards rewrite to the
-    // same bytes), which is the at-least-once recovery expectation.
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(s"$dir/buckets")
-    val stillPopulated = survivors.select("shard").distinct().as[Long].collect().toSet
-    val hconf = spark.sparkContext.hadoopConfiguration
-    (touched.toSet -- stillPopulated).foreach { sh =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/buckets/shard=$sh")
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    LshRemoveStats(nDocs, touched)
+    val r = ShardStore.rewriteTouched(spark, dir, "buckets", "shard", "doc_id", ids)
+    LshRemoveStats(r.keys, r.touched)
   }
 }

@@ -196,16 +196,35 @@ object Pq {
   def adcPacked(codebook: DataFrame, packedCodes: DataFrame, query: DataFrame,
                 m: Int, subDim: Int = 8): DataFrame = {
     requireSingleQuery(query, m, subDim)
-    val book = codebook.select(col("sub"), col("cid"), col("pos"), col("c"))
+    val book = bookOf(codebook)
+    queryVector(query).fold(noScores(packedCodes)) { qv =>
+      packedCodes.select(col("vec_id"), caseScore(book, qv, m, subDim).as("pq_d2"))
+    }
+  }
+
+  /** The codebook on the driver: (sub, cid) → the centroid's subDim
+    * coordinates in position order. */
+  private def bookOf(codebook: DataFrame): Map[(Long, Long), Array[Double]] =
+    codebook.select(col("sub"), col("cid"), col("pos"), col("c"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
       .groupBy(_._1).view
       .mapValues(_.map(_._2).sortBy(_._1).map(_._2).toArray).toMap
-    val qRow = query.select(expr("transform(embedding, v -> CAST(v AS DOUBLE))"))
-      .take(1)
-    if (qRow.isEmpty) // empty query slice: schema-only result, never a throw
-      return packedCodes.select(col("vec_id"),
-        lit(null).cast("double").as("pq_d2")).limit(0)
-    val qv = qRow.head.getSeq[Double](0).toArray
+
+  /** The one query row's embedding as doubles; None for an empty slice. */
+  private def queryVector(query: DataFrame): Option[Array[Double]] =
+    query.select(expr("transform(embedding, v -> CAST(v AS DOUBLE))"))
+      .take(1).headOption.map(_.getSeq[Double](0).toArray)
+
+  /** Empty query slice: schema-only result, never a throw. */
+  private def noScores(packedCodes: DataFrame): DataFrame =
+    packedCodes.select(col("vec_id"), lit(null).cast("double").as("pq_d2")).limit(0)
+
+  /** ADC of `qv` as a compiled CASE-lookup chain over the codes array:
+    * the m×k table summed on the driver in fixed sequential
+    * within-subspace order (bit-stable across runs), one `when` chain per
+    * subspace, rounded to 6. */
+  private def caseScore(book: Map[(Long, Long), Array[Double]], qv: Array[Double],
+                        m: Int, subDim: Int): Column = {
     val table: Map[(Long, Long), Double] = book.map { case ((s, cid), c) =>
       var d = 0.0
       var j = 0
@@ -221,8 +240,7 @@ object Pq {
         when(element_at(col("codes"), s + 1) === cid, lit(d)).otherwise(acc)
       }
     }
-    packedCodes.select(col("vec_id"),
-      round(perSub.reduce(_ + _), 6).as("pq_d2"))
+    round(perSub.reduce(_ + _), 6)
   }
 
   /** Residual vectors against the coarse IVF tessellation — the encoding
@@ -266,40 +284,19 @@ object Pq {
                         probed: Seq[Long], m: Int, subDim: Int = 8): DataFrame = {
     requireSingleQuery(query, m, subDim)
     require(probed.nonEmpty, "adcPackedResidual needs at least one probed bucket")
-    val book = codebook.select(col("sub"), col("cid"), col("pos"), col("c"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
-      .groupBy(_._1).view
-      .mapValues(_.map(_._2).sortBy(_._1).map(_._2).toArray).toMap
-    val qRow = query.select(expr("transform(embedding, v -> CAST(v AS DOUBLE))"))
-      .take(1)
-    if (qRow.isEmpty) // empty query slice: schema-only result, never a throw
-      return packedCodes.select(col("vec_id"),
-        lit(null).cast("double").as("pq_d2")).limit(0)
-    val qv = qRow.head.getSeq[Double](0).toArray
+    val book = bookOf(codebook)
+    val qv = queryVector(query) match {
+      case Some(v) => v
+      case None => return noScores(packedCodes)
+    }
     val centById = centroids.toMap
     val branches = probed.distinct.sorted.map { cl =>
       val cent = centById.getOrElse(cl,
         throw new IllegalArgumentException(s"probed bucket $cl not in centroid table"))
-      // the per-bucket table: fixed sequential within-subspace order, the
-      // same driver loop as adcPacked (bit-stable across runs)
-      val table: Map[(Long, Long), Double] = book.map { case ((s0, cid), c) =>
-        var dd = 0.0
-        var j = 0
-        while (j < c.length) {
-          val i = s0.toInt * subDim + j
-          val diff = (qv(i) - cent(i)) - c(j); dd += diff * diff; j += 1
-        }
-        (s0, cid) -> dd
-      }.toMap
-      val perSub = (0 until m).map { s0 =>
-        val cases = table.toSeq.collect { case ((sl, cid), dd) if sl == s0 => (cid, dd) }
-          .sortBy(_._1)
-        cases.foldLeft(lit(0.0)) { case (acc, (cid, dd)) =>
-          when(element_at(col("codes"), s0 + 1) === cid, lit(dd)).otherwise(acc)
-        }
-      }
+      // the query's residual against this bucket, scored by adcPacked's chain
+      val resid = qv.indices.map(i => qv(i) - cent(i)).toArray
       packedCodes.filter(col("cluster") === cl)
-        .select(col("vec_id"), round(perSub.reduce(_ + _), 6).as("pq_d2"))
+        .select(col("vec_id"), caseScore(book, resid, m, subDim).as("pq_d2"))
     }
     branches.reduce(_.unionByName(_))
   }
@@ -372,8 +369,10 @@ object Pq {
 
   /** Persist a fitted PQ artifact (VERDICT r15 #2 — the code table joins
     * the maintained-artifact roster alongside IvfIndex and LshIndex):
-    * packed codes sharded by contiguous id range, the codebook and the
-    * geometry (m, subDim, shard width) alongside. A deployment fits once
+    * packed codes sharded by contiguous id range (`codes/shard=`), the
+    * codebook as one file; the geometry (m, subDim, shard width) and both
+    * schemas go to the manifest ([[ShardStore]]), and a load serves the
+    * codebook from the session's per-version copy. A deployment fits once
     * ([[model]] + [[pack]]), saves, then serves ([[load]] +
     * [[adcPacked]]), ingests ([[encodeTo]] — encode-only, no refit), and
     * erases ([[removeFrom]]) without ever touching the fit again;
@@ -382,25 +381,34 @@ object Pq {
   def save(codebook: DataFrame, packedCodes: DataFrame, dir: String, m: Int,
            subDim: Int = 8, rowsPerShard: Long = defaultRowsPerShard): Unit = {
     val spark = codebook.sparkSession
-    import spark.implicits._
-    packedCodes.select(col("vec_id"), col("codes"))
-      .withColumn("shard", (col("vec_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/codes")
-    codebook.select(col("sub"), col("cid"), col("pos"), col("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-    Seq((m, subDim, rowsPerShard)).toDF("m", "sub_dim", "rows_per_shard")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    ShardStore.commit(spark, dir,
+      Map("m" -> m.toLong, "sub_dim" -> subDim.toLong, "rows_per_shard" -> rowsPerShard),
+      Map(ShardStore.overwrite(ShardStore.withIdShard(
+            packedCodes.select(col("vec_id"), col("codes")), "vec_id", rowsPerShard),
+            dir, "codes", "shard"),
+          ShardStore.overwrite(codebook.select(col("sub"), col("cid"), col("pos"), col("c"))
+            .coalesce(1), dir, "codebook")))
   }
 
-  /** Load a persisted PQ artifact. Meta columns read by name (the
-    * LshIndex.load lesson — positional gets mis-read on schema growth). */
+  /** The saved codebook, collected once per session per manifest version
+    * and served as a local table (no Spark job once warm). */
+  private def codebookOf(spark: SparkSession, dir: String, meta: Manifest): DataFrame = {
+    val schema = meta.schemas("codebook")
+    val rows = graft.SessionCache(spark, s"$dir/codebook", meta.commit) {
+      ShardStore.read(spark, dir, meta, "codebook").collect()
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Load a persisted PQ artifact: geometry from the manifest, the codes
+    * read with their declared schema, the codebook from the session's
+    * per-version copy. */
   def load(spark: SparkSession, dir: String): PqStore = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = ShardStore.manifest(spark, dir)
     PqStore(
-      spark.read.parquet(s"$dir/codebook"),
-      spark.read.parquet(s"$dir/codes").drop("shard")
-        .select(col("vec_id"), col("codes")),
-      meta.getAs[Int]("m"), meta.getAs[Int]("sub_dim"))
+      codebookOf(spark, dir, meta),
+      ShardStore.read(spark, dir, meta, "codes").select(col("vec_id"), col("codes")),
+      meta.int("m"), meta.int("sub_dim"))
   }
 
   /** Incremental ingest against a persisted code table: encode the
@@ -410,13 +418,12 @@ object Pq {
     * per-vector function of (codebook, vector), the appended table equals
     * a one-pass encode of the union corpus (PqSpec proves it). */
   def encodeTo(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (m, rowsPerShard) =
-      (meta.getAs[Int]("m"), meta.getAs[Long]("rows_per_shard"))
-    val cb = spark.read.parquet(s"$dir/codebook")
-    pack(encode(cb, delta.select(col("vec_id"), col("embedding")), m), m)
-      .withColumn("shard", (col("vec_id") / lit(rowsPerShard)).cast("long"))
-      .write.mode("append").partitionBy("shard").parquet(s"$dir/codes")
+    val meta = ShardStore.manifest(spark, dir)
+    val m = meta.int("m")
+    val codes = pack(encode(codebookOf(spark, dir, meta),
+      delta.select(col("vec_id"), col("embedding")), m), m)
+    ShardStore.append(ShardStore.withIdShard(codes, "vec_id", meta.meta("rows_per_shard")),
+      dir, "codes", "shard")
   }
 
   /** Persisted erasure (the IvfIndex/LshIndex.removeFrom pattern on the
@@ -428,34 +435,11 @@ object Pq {
     * nothing — the at-least-once redelivery contract). The codebook is
     * KEPT: deletion does not move the per-subspace tessellation (every
     * survivor's argmin code is unchanged), the same argument as the IVF
-    * centroids under [[IvfIndex.removeFrom]]. */
+    * centroids under [[IvfIndex.removeFrom]]. The rewrite is
+    * [[ShardStore.rewriteTouched]] (its crash-window note applies). */
   def removeFrom(spark: SparkSession, dir: String, ids: DataFrame): PqRemoveStats = {
-    import spark.implicits._
-    val idFrame = ids.select(col("vec_id")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    val stored = spark.read.parquet(s"$dir/codes")
-    val hit = stored.join(idFrame, Seq("vec_id"), "left_semi")
-      .transform(graft.graph.Materialize.apply)
-    val nRemoved = hit.count()
-    if (nRemoved == 0L) return PqRemoveStats(0L, Seq.empty)
-    val touched = hit.select("shard").distinct().as[Long].collect().sorted.toSeq
-    val survivors = stored
-      .filter(col("shard").isin(touched.map(java.lang.Long.valueOf): _*))
-      .join(idFrame, Seq("vec_id"), "left_anti")
-      .transform(graft.graph.Materialize.apply)
-    // per-write dynamic overwrite + replay-converging crash window — the
-    // LshIndex.removeFrom note applies verbatim
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(s"$dir/codes")
-    val stillPopulated = survivors.select("shard").distinct().as[Long].collect().toSet
-    val hconf = spark.sparkContext.hadoopConfiguration
-    (touched.toSet -- stillPopulated).foreach { sh =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/codes/shard=$sh")
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    PqRemoveStats(nRemoved, touched)
+    val r = ShardStore.rewriteTouched(spark, dir, "codes", "shard", "vec_id", ids)
+    PqRemoveStats(r.keys, r.touched)
   }
 
   /** DuckDB mirror of [[model]] + [[adc]]: CTE chain over the
