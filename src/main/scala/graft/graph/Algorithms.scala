@@ -4,6 +4,8 @@ import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gates
+
 /** Convergent graph algorithms (SURVEY.md §2 G4/G7/G9/G10, §3.2 path 2).
   *
   * Two tiers, by design:
@@ -78,50 +80,25 @@ object Algorithms {
       .map { case (id, comp) => (id, comp) }.toDF("id", "component")
   }
 
-  /** CC with tier auto-selection, the undirected sibling of [[scc]]: exact
-    * driver-side union-find below the edge-count gate, GraphX Pregel above
-    * it. GraphX CC launches a Pregel superstep — a full job with scheduling
-    * and shuffle — per diameter hop, hundreds of tiny jobs on audit-sized
-    * graphs; that made g07_cc_full the host-contention lightning rod (6.2×
-    * under load vs ~1.3× for relational queries — VERDICT r6). Union-find
-    * streams the edge list once through the driver instead: two jobs total.
-    *
-    * The gate is ONE cheap count ([[scc]]'s protocol) over RAW edges — an
-    * upper bound on distinct edges, erring toward the distributed tier —
-    * because unlike Tarjan, union-find needs no dedup (duplicate unions are
-    * no-ops), so the local tier runs with ZERO shuffles. The default is 4×
-    * Tarjan's gate because the footprint is smaller: edges STREAM through
-    * (toLocalIterator holds one partition of (Long, Long) tuples at a time,
-    * never the whole list) and the resident state is the parent map alone,
-    * ~40-60 bytes per NODE with LongMap headers — ~150 MB at the 4M-edge
-    * gate even if every edge introduces a node, safe on a default driver.
-    * Both tiers share the output contract (every vertex of the edge list,
-    * component = min vertex id); GraphAlgosSpec cross-validates them on the
-    * same graphs.
+  /** CC with tier auto-selection, the undirected sibling of [[scc]]:
+    * driver union-find, then GraphX Pregel, then the Kiveris star tier, by
+    * the raw edge count ([[graft.Gates.ccLocalEdges]],
+    * [[graft.Gates.graphxEdges]]). GraphX CC launches a Pregel superstep — a
+    * full job with scheduling and shuffle — per diameter hop, hundreds of
+    * tiny jobs on audit-sized graphs; that made g07_cc_full the
+    * host-contention lightning rod (6.2× under load vs ~1.3× for relational
+    * queries — VERDICT r6). Union-find streams the edge list once through
+    * the driver instead. The gate counts RAW edges because union-find needs
+    * no dedup (duplicate unions are no-ops), so the local tier runs with
+    * ZERO shuffles. All tiers share the output contract (every vertex of the
+    * edge list, component = min vertex id); GraphAlgosSpec cross-validates
+    * them on the same graphs.
     */
-  /** Upper gate for the GraphX Pregel tier, in RAW edge-list rows (the same
-    * one-cheap-count protocol as `localMaxEdges`). MEASURED single-JVM
-    * ceiling, round 10: g07's contracted graph HOLDS at ~84M edges with a
-    * 32g heap (sf6.4, rounds 9+10) and FAILS at ~167M (sf12.8 — heap OOM at
-    * 32g, heartbeat-starved GC death at 64g, with MEMORY_AND_DISK caching;
-    * the killers are Pregel's task-local per-partition arrays, which no
-    * storage level spills). 100M sits between the measured hold and fail
-    * points. Above it, [[connectedComponentsStar]] (Kiveris alternating
-    * star: pure Catalyst shuffles, disk-backed, O(log² n) rounds) completes
-    * the same sf12.8 graph in ~640 s where Pregel dies — slower per round
-    * but bounded by the shuffle machinery's spill path, not the heap. On a
-    * real cluster the Pregel ceiling scales with executor count (the arrays
-    * are per-partition), so deployments can raise the gate; the default
-    * encodes what THIS library has actually measured.
-    */
-  val graphxMaxEdges: Long = 100000000L
-
-  def cc(edges: DataFrame, localMaxEdges: Long = 4000000L,
-         graphxMax: Long = graphxMaxEdges): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).transform(Materialize.apply)
-    val n = e.count()
-    if (n <= localMaxEdges) ccUnionFind(e)
-    else if (n <= graphxMax) connectedComponents(e) // dedupes internally before Pregel
+  def cc(edges: DataFrame): DataFrame = {
+    val (e, n) = Materialize.counted(edges.select(col("src"), col("dst")))
+    if (Gates.fits(e.sparkSession, n, Gates.ccLocalEdges)) ccUnionFind(e)
+    else if (Gates.fits(e.sparkSession, n, Gates.graphxEdges))
+      connectedComponents(e) // dedupes internally before Pregel
     else connectedComponentsStar(e)
   }
 
@@ -199,38 +176,6 @@ object Algorithms {
     lab.select(col("v").as("id"), col("label").as("community"))
   }
 
-  /** Connected components as alternating min-label propagation in pure
-    * DataFrames — no RDD conversion, every round is a Catalyst join+agg
-    * (pushdown/AQE/codegen apply), converges in O(diameter) rounds.
-    * Same output contract as [[connectedComponents]] (component = min id);
-    * cross-validated against GraphX in AlgorithmsSpec.
-    */
-  def connectedComponentsDF(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val sym = Traversals.symmetrize(edges).transform(Materialize.apply)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id")).transform(Materialize.apply)
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("nid"), col("component")), col("dst") === col("nid"))
-        .groupBy(col("src").as("mid")).agg(min(col("component")).as("nbr_min"))
-      val next = labels.join(nbrMin, col("id") === col("mid"), "left_outer")
-        .select(col("id"), least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"))
-        .transform(Materialize.apply)
-      converged = next
-        .join(labels.select(col("id"), col("component").as("old")), "id")
-        .filter(col("component") =!= col("old")).isEmpty
-      labels = next
-      i += 1
-    }
-    // label propagation needs O(longest min-label path) rounds; returning an
-    // under-converged labeling would silently break the min-id contract
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsDF did not converge in $maxIter rounds — raise maxIter (component diameter exceeds it)")
-    labels
-  }
-
   /** INCREMENTAL connected components — maintain a standing CC labeling
     * under edge ARRIVALS without re-running global CC (the graph-side
     * sibling of the t17 dossier materialized view; graded as
@@ -286,17 +231,14 @@ object Algorithms {
               coalesce(col("cb"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
     // merge map over component-graph labels: (old label/new id → merged min)
-    val mergeRaw = cc(compEdges)
-      .select(col("id").as("component"), col("component").as("merged"))
-      .transform(Materialize.apply)
-    // measured broadcast gate (house protocol — one cheap count): a
-    // batch-sized delta's merge map broadcasts so the standing label table
-    // is SCANNED, never shuffled; a corpus-scale delta (merge map past the
-    // gate) falls back to the shuffle join Catalyst would pick anyway —
+    val (mergeRaw, nMerge) = Materialize.counted(cc(compEdges)
+      .select(col("id").as("component"), col("component").as("merged")))
+    // a batch-sized delta's merge map broadcasts so the standing label
+    // table is SCANNED, never shuffled; a corpus-scale delta (merge map past
+    // the gate) falls back to the shuffle join Catalyst would pick anyway —
     // at that delta size a full cc() re-run is the honest competitor and
     // the caller should consider it
-    val merge =
-      if (mergeRaw.count() <= broadcastMergeMaxRows) broadcast(mergeRaw) else mergeRaw
+    val merge = Gates.broadcastIf(mergeRaw, nMerge, Gates.mergeBroadcastRows)
     val rebased = base.join(merge, Seq("component"), "left")
       .select(col("id"),
               coalesce(col("merged"), col("component")).as("component"))
@@ -310,23 +252,6 @@ object Algorithms {
       .select(col("id"), coalesce(col("merged"), col("id")).as("component"))
     rebased.unionByName(newLabeled)
   }
-
-  /** Broadcast gate for [[ccIncrement]]'s merge map: ~16 B/row of (long,
-    * long) plus hash-relation overhead keeps 10M rows around 300 MB —
-    * comfortably under executor broadcast budgets; above it the remap
-    * joins degrade gracefully to shuffles instead of OOMing the build
-    * side. */
-  val broadcastMergeMaxRows: Long = 10000000L
-
-  /** [[ccDecrement]]'s absolute-size floor: with at most this many labels
-    * AND at most [[rebuildFloorEdges]] surviving edges, a from-scratch
-    * [[cc]] lands in the driver union-find tier — seconds, cheaper than
-    * the incremental dataflow's fixed join/stitch overhead (measured
-    * round 14). Matched to cc's own `localMaxEdges` gate on the edge side
-    * so the floored rebuild is always the one-pass streaming tier. */
-  val rebuildFloorLabels: Long = 4000000L
-  /** Edge-side bound for [[rebuildFloorLabels]] — cc's union-find gate. */
-  val rebuildFloorEdges: Long = 4000000L
 
   /** DECREMENTAL connected components — maintain a standing CC labeling
     * under edge REMOVALS (expiry, retraction) without a global re-run: the
@@ -357,8 +282,8 @@ object Algorithms {
     * (additions go through [[ccIncrement]], not here).
     *
     * Scale shape at 100 TB: step (1) joins the REMOVED set (batch-sized)
-    * against the label table on id; the touched-label set broadcasts (same
-    * [[broadcastMergeMaxRows]] gate as ccIncrement), so steps (2)+(3) cost
+    * against the label table on id; the touched-label set broadcasts (the
+    * [[graft.Gates.mergeBroadcastRows]] gate, as ccIncrement), so (2)+(3) cost
     * one semi-join pruning pass over the surviving edges + one scan of the
     * standing labels — no convergence iterations over the corpus. The
     * induced-subgraph CC itself is work ∝ touched components, routed
@@ -383,25 +308,21 @@ object Algorithms {
     */
   def ccDecrement(baseLabels: DataFrame, survivingEdges: DataFrame,
                   removedEdges: DataFrame): DataFrame = {
-    val base = baseLabels.select(col("id"), col("component"))
-      .transform(Materialize.apply)
+    val spark = baseLabels.sparkSession
+    val (base, nLabels) = Materialize.counted(baseLabels.select(col("id"), col("component")))
     // ABSOLUTE-SIZE FLOOR (VERDICT r14 #4): on a small graph the rebuild is
-    // trivially cheap (the union-find tier — measured 0.6 s vs 4.1 s for
-    // the incremental dataflow on the 96k-label windowed graph, SCALE.md
-    // round 14), so below the floor route STRAIGHT to cc(surviving) + the
-    // singleton stitch: same output contract (full node universe, edgeless
-    // nodes as singletons), provably equal labels (cc is deterministic
-    // min-id). Two cheap counts decide — labels first (needed by the
-    // majority gate anyway), surviving edges only when labels are already
-    // small (the edge count is one scan, and it is only paid in the regime
-    // where the rebuild is a candidate). With this plus the
-    // majority-touched gate below, the operator is never-worse-than-rebuild
-    // at BOTH regime ends.
-    val nLabels = base.count()
-    if (nLabels <= rebuildFloorLabels) {
-      val surv = survivingEdges.select(col("src"), col("dst"))
-        .transform(Materialize.apply)
-      if (surv.count() <= rebuildFloorEdges) {
+    // trivially cheap (the union-find tier, see Gates.ccLocalEdges), so
+    // below the floor route STRAIGHT to cc(surviving) + the singleton
+    // stitch: same output contract (full node universe, edgeless nodes as
+    // singletons), provably equal labels (cc is deterministic min-id). Two
+    // counts decide — labels first (needed by the majority gate anyway),
+    // surviving edges only when labels are already small (the edge count is
+    // one scan, and it is only paid in the regime where the rebuild is a
+    // candidate). With this plus the majority-touched gate below, the
+    // operator is never-worse-than-rebuild at BOTH regime ends.
+    if (Gates.fits(spark, nLabels, Gates.ccLocalEdges)) {
+      val (surv, nSurv) = Materialize.counted(survivingEdges.select(col("src"), col("dst")))
+      if (Gates.fits(spark, nSurv, Gates.ccLocalEdges)) {
         // ccUnionFind DIRECTLY, not cc(): cc would re-materialize and
         // re-count the edges this gate just counted, and the union-find
         // output is a driver-built dataset — re-evaluation is free, so no
@@ -416,14 +337,11 @@ object Algorithms {
     }
     val re = removedEdges.select(col("src"), col("dst"))
     // the components the removals touch — only these can split
-    val touchedRaw = re.select(col("src").as("id"))
+    val (touchedRaw, nTouched) = Materialize.counted(re.select(col("src").as("id"))
       .unionByName(re.select(col("dst").as("id"))).distinct()
       .join(base, Seq("id"))
-      .select(col("component")).distinct()
-      .transform(Materialize.apply)
-    val touched =
-      if (touchedRaw.count() <= broadcastMergeMaxRows) broadcast(touchedRaw)
-      else touchedRaw
+      .select(col("component")).distinct())
+    val touched = Gates.broadcastIf(touchedRaw, nTouched, Gates.mergeBroadcastRows)
     // SELF-GATING REBUILD FALLBACK (measured, round 14): when the blast
     // radius IS the graph — removals inside a giant component that holds
     // most of the labels — the "incremental" path pays the induced-
@@ -485,10 +403,10 @@ object Algorithms {
     * (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond" —
     * PAPERS.md) in pure DataFrame ops. Converges in O(log² n) rounds
     * regardless of component diameter — the property that matters at
-    * 100 TB, where min-label propagation ([[connectedComponentsDF]]) pays
-    * one shuffle round per hop of the longest path and GraphX pays a
-    * Pregel superstep for the same. Every round is two groupBy-min +
-    * two joins, all Catalyst (AQE-coalesced, codegen'd, skew-splittable).
+    * 100 TB, where min-label propagation pays one shuffle round per hop of
+    * the longest path and GraphX pays a Pregel superstep for the same.
+    * Every round is two groupBy-min + two joins, all Catalyst
+    * (AQE-coalesced, codegen'd, skew-splittable).
     *
     * large-star: every neighbor v > u links to m = min(Γ(u) ∪ {u});
     * small-star: on the canonical (u > v) list, every small neighbor and u
@@ -535,20 +453,15 @@ object Algorithms {
   }
 
   /** SCC with tier auto-selection: exact local Tarjan below the
-    * driver-memory line, GraphX Pregel above it. The threshold is distinct
-    * edges — ONE cheap count. Footprint sizing is for the REAL driver-side
-    * structure, not the raw 16 bytes/edge: the collected tuples plus the
-    * adjacency/index/low/onStack maps cost ~200-300 bytes per edge with JVM
-    * object headers, so the 1M default keeps the Tarjan tier around a few
-    * hundred MB — safe on a default 1-2 GB driver, not just on a big one.
-    * This turns the extract-then-analyze guidance (SCALE.md) into a
-    * measured decision instead of a caller guess; both tiers share the
-    * output contract and are cross-validated in AlgorithmsSpec/PropertySpec.
+    * driver-memory line ([[graft.Gates.localEdges]] distinct edges), GraphX
+    * Pregel above it. This turns the extract-then-analyze guidance
+    * (SCALE.md) into a measured decision instead of a caller guess; both
+    * tiers share the output contract and are cross-validated in
+    * AlgorithmsSpec/PropertySpec.
     */
-  def scc(edges: DataFrame, localMaxEdges: Long = 1000000L): DataFrame = {
-    val distinct = edges.select(col("src"), col("dst")).distinct()
-      .transform(Materialize.apply)
-    if (distinct.count() <= localMaxEdges) sccTarjan(distinct)
+  def scc(edges: DataFrame): DataFrame = {
+    val (distinct, n) = Materialize.counted(edges.select(col("src"), col("dst")).distinct())
+    if (Gates.fits(distinct.sparkSession, n, Gates.localEdges)) sccTarjan(distinct)
     else stronglyConnectedComponents(distinct)
   }
 
@@ -879,10 +792,10 @@ object Algorithms {
     * O(sources × E) — the documented cap that keeps it off the 100 TB
     * cliff; full Brandes is O(VE) and intentionally not offered.
     *
-    * Below `localMaxEdges` distinct edges the in-process tier collects the
-    * edge list and runs classic Brandes (extract-then-analyze, mirroring
-    * the reference's NetworkX path — README.md:28 — and ~100× faster than
-    * distributed supersteps on audit-sized subgraphs). Above it, the
+    * Below [[graft.Gates.localEdges]] distinct edges the in-process tier
+    * collects the edge list and runs classic Brandes (extract-then-analyze,
+    * mirroring the reference's NetworkX path — README.md:28 — and ~100×
+    * faster than distributed supersteps on audit-sized subgraphs). Above it, the
     * DISTRIBUTED tier runs the identical math as dataflow: a multi-source
     * level-synchronous BFS (one shuffle join per level, state one row per
     * reached (source, node) pair) followed by per-level dependency
@@ -892,13 +805,12 @@ object Algorithms {
     * pair-dependency reimplementation.
     */
   def betweennessSampled(edges: DataFrame, nSources: Int,
-                         localMaxEdges: Long = 1000000L,
                          maxDepth: Int = 128): DataFrame = {
-    val distinct = edges.select(col("src"), col("dst")).distinct()
-      .transform(Materialize.apply)
+    val (distinct, n) = Materialize.counted(edges.select(col("src"), col("dst")).distinct())
     // the gate already deduped + checkpointed — the tiers must not repeat
     // that shuffle on the largest dataset in the job (prepped = true)
-    if (distinct.count() <= localMaxEdges) betweennessLocal(distinct, nSources)
+    if (Gates.fits(distinct.sparkSession, n, Gates.localEdges))
+      betweennessLocal(distinct, nSources)
     else betweennessDistributed(distinct, nSources, maxDepth, prepped = true)
   }
 
@@ -969,17 +881,15 @@ object Algorithms {
     */
   def betweennessDistributed(edges: DataFrame, nSources: Int,
                              maxDepth: Int = 128,
-                             prepped: Boolean = false,
-                             broadcastMaxRows: Long = 2000000L): DataFrame = {
+                             prepped: Boolean = false): DataFrame = {
     // Broadcast hints gated on MEASURED per-level counts, exactly kHop's
     // pattern: the per-(source, node) state frames are localCheckpoint'd
     // (no stats → AQE can't find the conversion), and when they fit the
     // gate the EDGE TABLE NEVER SHUFFLES — each superstep is one scan of
     // cached edge blocks plus a broadcast. Past the gate it degrades to
-    // ordinary shuffle joins, never a driver structure. 2M three-column
-    // rows ≈ 50 MB per executor copy.
+    // ordinary shuffle joins, never a driver structure.
     def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
+      Gates.broadcastIf(df, rows, Gates.betweennessBroadcastRows)
     // `prepped` skips the dedup + checkpoint when the caller (the
     // betweennessSampled gate) already did both — repeating it here would
     // be a second full shuffle + copy of the biggest dataset in the job
@@ -995,11 +905,9 @@ object Algorithms {
       .transform(Materialize.apply)
     // forward BFS: levels(d) = (s, v, sigma) for nodes first reached at
     // distance d from source s, sigma = #shortest s→v paths
-    var frontier = sources
-      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))
-      .transform(Materialize.apply)
+    var (frontier, frontierRows) = Materialize.counted(sources
+      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma")))
     var visited = frontier.select("s", "v")
-    var frontierRows = frontier.count()
     var visitedRows = frontierRows
     val levels = scala.collection.mutable.ArrayBuffer((frontier, frontierRows))
     var depth = 0
@@ -1007,13 +915,13 @@ object Algorithms {
       depth += 1
       if (depth > maxDepth) throw new IllegalStateException(
         s"betweennessDistributed exceeded maxDepth=$maxDepth levels")
-      val next = gated(frontier, frontierRows).join(e, col("v") === col("src"))
+      val (next, nextRows) = Materialize.counted(gated(frontier, frontierRows)
+        .join(e, col("v") === col("src"))
         .groupBy(col("s"), col("dst"))
         .agg(sum(col("sigma")).as("sigma"))
         .select(col("s"), col("dst").as("v"), col("sigma"))
-        .join(gated(visited, visitedRows), Seq("s", "v"), "left_anti")
-        .transform(Materialize.apply)
-      frontierRows = next.count()
+        .join(gated(visited, visitedRows), Seq("s", "v"), "left_anti"))
+      frontierRows = nextRows
       if (frontierRows > 0) {
         visitedRows += frontierRows
         // kHop's convention: visited stays a LAZY union over checkpointed

@@ -1306,8 +1306,8 @@ object GraphQueries {
     E("g07_cc_users", (s, d) => {
       val e2 = Ubo.interactedPairs(Tables(s, d)).filter(col("cnt") >= 2)
         .select(col("src"), col("dst"))
-      // gated like g07_cc_full: union-find drill-down under 4M edges,
-      // GraphX above (the strong user graph is far under the gate)
+      // gated like g07_cc_full: union-find drill-down under
+      // Gates.ccLocalEdges (the strong user graph is far under it)
       Algorithms.cc(e2).orderBy("id")
     }, Some(s"""
       WITH RECURSIVE ${UboSql.interactedPairsCte},
@@ -1334,15 +1334,15 @@ object GraphQueries {
       // so no component minimum is ever an order. Orders re-enter afterward
       // with their customer's component. Cross-validated against the
       // uncontracted formulation in AlgorithmsSpec.
-      // GraphX over the Catalyst min-label twin: measured 5.3 s vs 8.9 s at
-      // sf0.1 pre-contraction — vertex-program iteration wins once the
-      // convergence loop dominates; the DF twin stays in the library.
+      // GraphX over a Catalyst min-label propagation: measured 5.3 s vs
+      // 8.9 s at sf0.1 pre-contraction — vertex-program iteration wins once
+      // the convergence loop dominates.
       // Tier gate (round 7): Algorithms.cc streams the contracted graph
       // (1.3M distinct edges at sf0.1) through driver union-find — two
       // jobs instead of GraphX's hundreds of Pregel micro-jobs, which made
       // this query the host-contention lightning rod; GraphX remains the
-      // path above the 4M-edge gate (and the Kiveris star tier above
-      // GraphX's measured single-JVM ceiling — see Algorithms.cc).
+      // path above Gates.ccLocalEdges (and the Kiveris star tier above
+      // Gates.graphxEdges).
       val custOrder = t.orders.select(
         (lit(GraphBuilder.CustomerBase) + col("o_custkey")).as("cust"),
         (lit(GraphBuilder.OrderBase) + col("o_orderkey")).as("order"))
@@ -1440,7 +1440,7 @@ object GraphQueries {
     // BetweennessSpec additionally verifies both tiers against an
     // independent pair-dependency reimplementation. betweennessSampled is
     // GATED like scc: measured distinct-edge count picks the local collect
-    // tier below 1M edges, the dataflow tier above — no ungated collect.
+    // tier below Gates.localEdges, the dataflow tier above.
     E("g10_betweenness", (s, d) => {
       val e2 = Ubo.interactedPairs(Tables(s, d)).filter(col("cnt") >= 2)
         .select(col("src"), col("dst"))
@@ -2323,7 +2323,7 @@ object GraphQueries {
     // SAME-NATION fuzzy pairs (g46's double-registration signal — merging
     // across jurisdictions is an analyst call, not an automatic action)
     // close into clusters via connected components (tiered Algorithms.cc
-    // — union-find under the 4M-edge gate, Pregel above), the min-id
+    // — union-find under Gates.ccLocalEdges, Pregel above), the min-id
     // member is the canonical survivor, and the output is the (entity →
     // canonical) map an auditor reviews before applying a merge. Only
     // actually-merged rows (id <> canonical) are emitted — that IS the
@@ -3887,8 +3887,8 @@ object GraphQueries {
       c0 AS (SELECT seed AS owner, as_of, seed AS entity, CAST(1.0 AS DOUBLE) AS share,
                     CAST(seed AS VARCHAR) AS chain
              FROM (SELECT s_id AS seed, as_of FROM pr UNION SELECT t_id, as_of FROM pr)),
-      ${UboSql.chainStepAsOf("c0", "c1", "symw")},
-      ${UboSql.chainStepAsOf("c1", "c2", "symw")},
+      ${UboSql.chainStep("c0", "c1", "symw", Seq("as_of"))},
+      ${UboSql.chainStep("c1", "c2", "symw", Seq("as_of"))},
       allc AS (SELECT owner, as_of, entity, share, chain, 0 AS hops FROM c0
                UNION ALL SELECT owner, as_of, entity, share, chain, 1 FROM c1
                UNION ALL SELECT owner, as_of, entity, share, chain, 2 FROM c2),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gates
+
 /** DataFrame-native bounded traversals (SURVEY.md §2 G2/G5/G14, §4.3).
   *
   * Spark 4.1's DataFrame API has no recursion operator, so bounded iteration
@@ -23,16 +25,13 @@ object Traversals {
     * directed hops over `edges` (columns `src`, `dst`). Returns (id, depth)
     * where depth is the minimum hop count — BFS order guarantees min-depth.
     *
-    * `broadcastMaxRows` gates the frontier/visited broadcast hints: the sets
-    * are single-long-column, so the default 4M rows ≈ 32 MB per executor
-    * copy. The sets are materialized anyway, so the per-level count that
-    * feeds the gate is one cheap job over checkpointed blocks — a measured
-    * decision, not a hard-coded hint (a whole-graph BFS whose reachable set
-    * outgrows the gate degrades to ordinary shuffle joins instead of
-    * overflowing the driver).
+    * The frontier/visited broadcast hints are gated on the sets' measured
+    * sizes ([[graft.Gates.broadcastRows]]): the sets are materialized
+    * anyway, so the per-level count that feeds the gate is the level's one
+    * checkpoint job (a whole-graph BFS whose reachable set outgrows the gate
+    * degrades to ordinary shuffle joins instead of overflowing the driver).
     */
-  def kHop(edges: DataFrame, start: DataFrame, maxHops: Int,
-           broadcastMaxRows: Long = 4000000L): DataFrame = {
+  def kHop(edges: DataFrame, start: DataFrame, maxHops: Int): DataFrame = {
     // Materialize the edge list once: the edge derivation (unions + window
     // functions in GraphBuilder) would otherwise recompute on every hop.
     // Reachability is invariant under edge multiplicity, so dedup up front:
@@ -41,7 +40,7 @@ object Traversals {
     // distinct-ing once here shrinks every subsequent shuffle.
     val e = edges.select(col("src"), col("dst")).distinct().transform(Materialize.apply)
     levels(e, start.select(col("id")).distinct().withColumn("depth", lit(0L)),
-      Nil, maxHops, broadcastMaxRows, parents = false)
+      Nil, maxHops, parents = false)
   }
 
   /** The BFS level loop under [[kHop]], [[egoMembers]] and
@@ -59,12 +58,10 @@ object Traversals {
     * cached blocks per hop, one exchange for the frontier distinct). The
     * materialized frontier is RDD-backed with unknown stats, so AQE cannot
     * discover this conversion itself; the measured row counts gate the
-    * hints instead (see [[kHop]]'s `broadcastMaxRows`).
+    * hints instead ([[graft.Gates.broadcastIf]]).
     */
   private def levels(e: DataFrame, level0: DataFrame, keys: Seq[String], maxHops: Int,
-                     broadcastMaxRows: Long, parents: Boolean): DataFrame = {
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
+                     parents: Boolean): DataFrame = {
     val cell = keys :+ "id"
     val hop =
       if (keys.contains("as_of")) col("src") === col("fid") && col("active_from") <= col("as_of")
@@ -75,14 +72,15 @@ object Traversals {
     var frontierCount = count0
     var visitedCount = frontierCount
     for (i <- 1 to maxHops) {
-      val reached = e.join(gated(frontier.withColumnRenamed("id", "fid"), frontierCount), hop)
+      val reached =
+        e.join(Gates.broadcastIf(frontier.withColumnRenamed("id", "fid"), frontierCount), hop)
       val level =
         if (parents) reached.groupBy(keys.map(col) :+ col("dst"): _*)
           .agg(min(col("fid")).as("parent"))
           .withColumnRenamed("dst", "id")
         else reached.select(keys.map(col) :+ col("dst").as("id"): _*).distinct()
-      val (next, nextCount) = Materialize.counted(
-        level.join(gated(visited.select(cell.map(col): _*), visitedCount), cell, "left_anti"))
+      val (next, nextCount) = Materialize.counted(level.join(
+        Gates.broadcastIf(visited.select(cell.map(col): _*), visitedCount), cell, "left_anti"))
       frontierCount = nextCount
       visitedCount += frontierCount
       visited = visited.unionByName(next.withColumn("depth", lit(i.toLong)))
@@ -136,22 +134,21 @@ object Traversals {
     * neighborhood of `centerId` (reference: interactive relationship mapping
     * renders a neighborhood, README.md:11).
     */
-  def egoNet(edges: DataFrame, centerId: Long, radius: Int,
-             broadcastMaxRows: Long = 4000000L): DataFrame = {
+  def egoNet(edges: DataFrame, centerId: Long, radius: Int): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.transform(Materialize.apply) // reused: symmetrize + 2 induced joins
     val start = spark.range(1).select(lit(centerId).as("id"))
-    val reach = kHop(symmetrize(e), start, radius, broadcastMaxRows).select(col("id"))
+    val reach = kHop(symmetrize(e), start, radius).select(col("id"))
     // ego neighborhoods are drill-down-sized; the materialized reach set is
     // RDD-backed (no stats), so hint the broadcast for the induced joins —
     // gated on the measured reach size, same contract as the kHop hints
     // (one cheap count over checkpointed blocks; oversized reach degrades
     // to shuffle semi-joins instead of overflowing the driver)
-    val reachGated =
-      if (reach.count() <= broadcastMaxRows) (df: DataFrame) => broadcast(df)
-      else (df: DataFrame) => df
-    e.join(reachGated(reach.withColumnRenamed("id", "sid")), col("src") === col("sid"), "left_semi")
-      .join(reachGated(reach.withColumnRenamed("id", "did")), col("dst") === col("did"), "left_semi")
+    val n = reach.count()
+    e.join(Gates.broadcastIf(reach.withColumnRenamed("id", "sid"), n),
+        col("src") === col("sid"), "left_semi")
+      .join(Gates.broadcastIf(reach.withColumnRenamed("id", "did"), n),
+        col("dst") === col("did"), "left_semi")
   }
 
   /** Batched multi-seed ego membership: for every seed in `seeds` (one
@@ -176,14 +173,13 @@ object Traversals {
     * SOME instance had started, and the reduction shrinks the join's left
     * side to distinct pairs.
     */
-  def egoMembers(edges: DataFrame, seeds: DataFrame, radius: Int,
-                 broadcastMaxRows: Long = 4000000L): DataFrame =
-    ego(edges, seeds, radius, broadcastMaxRows, parents = false)
+  def egoMembers(edges: DataFrame, seeds: DataFrame, radius: Int): DataFrame =
+    ego(edges, seeds, radius, parents = false)
 
   /** [[egoMembers]] / [[egoMembersParents]]: undirected edges (`active_from` per pair
     * when dated) and depth-0 rows (each batch key, its seed as member) via [[levels]]. */
   private def ego(edges: DataFrame, seeds: DataFrame, radius: Int,
-                  broadcastMaxRows: Long, parents: Boolean): DataFrame = {
+                  parents: Boolean): DataFrame = {
     val keys = "seed" +: asOfKey(seeds)
     val e =
       if (keys.size == 1) symmetrize(edges).distinct().transform(Materialize.apply)
@@ -198,7 +194,7 @@ object Traversals {
     val parent = if (parents) Seq(lit(-1L).as("parent")) else Nil
     levels(e, seeds.select(keys.map(col): _*).distinct()
       .select(keys.map(col) ++ Seq(col("seed").as("id"), lit(0L).as("depth")) ++ parent: _*),
-      keys, radius, broadcastMaxRows, parents)
+      keys, radius, parents)
   }
 
   /** Per-seed induced edge lists: every edge whose BOTH endpoints belong
@@ -211,16 +207,14 @@ object Traversals {
     * `valid_from`): traversal collapses parallel instances, the document
     * lists every valid one — a post-join filter on the joined as_of.
     */
-  def inducedEdges(edges: DataFrame, members: DataFrame,
-                   broadcastMaxRows: Long = 4000000L): DataFrame = {
+  def inducedEdges(edges: DataFrame, members: DataFrame): DataFrame = {
     val keys = "seed" +: asOfKey(members)
     val dated = keys.size > 1
     if (dated) requireDated(edges, "valid_from", "inducedEdges")
     val (m, rows) = Materialize.counted(members.select(keys.map(col) :+ col("id"): _*).distinct())
-    val hint: DataFrame => DataFrame =
-      if (rows <= broadcastMaxRows) broadcast else identity
-    val ind = edges.join(hint(m.select(keys.map(col) :+ col("id").as("src"): _*)), Seq("src"))
-      .join(hint(m.select(keys.map(col) :+ col("id").as("dst"): _*)), keys :+ "dst")
+    def side(end: String) =
+      Gates.broadcastIf(m.select(keys.map(col) :+ col("id").as(end): _*), rows)
+    val ind = edges.join(side("src"), Seq("src")).join(side("dst"), keys :+ "dst")
     if (dated) ind.filter(col("valid_from").isNull || col("valid_from") <= col("as_of")) else ind
   }
 
@@ -237,9 +231,8 @@ object Traversals {
     * min-depth-row parents). Seeds carrying `as_of` batch per snapshot as
     * in [[egoMembers]].
     */
-  def egoMembersParents(edges: DataFrame, seeds: DataFrame, radius: Int,
-                        broadcastMaxRows: Long = 4000000L): DataFrame =
-    ego(edges, seeds, radius, broadcastMaxRows, parents = true)
+  def egoMembersParents(edges: DataFrame, seeds: DataFrame, radius: Int): DataFrame =
+    ego(edges, seeds, radius, parents = true)
 
   /** [[connectionDistance]] plus the WITNESS PATH: for each connected
     * (s_id, t_id) pair, one canonical shortest path rendered as an
@@ -253,9 +246,8 @@ object Traversals {
     * rows; path strings exist only for the ≤ |pairs| witness rows).
     * Pairs beyond 2·radius report dist −1 and path '-'.
     */
-  def connectionPaths(edges: DataFrame, pairs: DataFrame, radius: Int,
-                      broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val m = egoMembersParents(edges, endpoints(pairs, "seed", Nil), radius, broadcastMaxRows)
+  def connectionPaths(edges: DataFrame, pairs: DataFrame, radius: Int): DataFrame = {
+    val m = egoMembersParents(edges, endpoints(pairs, "seed", Nil), radius)
       .transform(Materialize.apply) // reused: both meet sides + 2·radius backtracks
     var cur = shortestMeets(pairs, m, Nil)
       .groupBy("s_id", "t_id", "dist")
@@ -312,10 +304,9 @@ object Traversals {
     * [[egoMembers]] answers every (pair, position) in one traversal, and
     * the meet joins carry as_of so nothing leaks between positions.
     */
-  def connectionDistance(edges: DataFrame, pairs: DataFrame, radius: Int,
-                         broadcastMaxRows: Long = 4000000L): DataFrame = {
+  def connectionDistance(edges: DataFrame, pairs: DataFrame, radius: Int): DataFrame = {
     val k = asOfKey(pairs)
-    val m = egoMembers(edges, endpoints(pairs, "seed", k), radius, broadcastMaxRows)
+    val m = egoMembers(edges, endpoints(pairs, "seed", k), radius)
       .transform(Materialize.apply) // reused as both cone sides of the meet
     val best = shortestMeets(pairs, m, k)
       .groupBy("s_id", ("t_id" +: k) :+ "dist": _*)
@@ -447,16 +438,15 @@ object Traversals {
     * slider position — with strength taken in the position's OWN
     * validity-filtered induced snapshot (`edges` need `valid_from`).
     */
-  def capEgoMembers(edges: DataFrame, members: DataFrame, cap: Int,
-                    broadcastMaxRows: Long = 4000000L): DataFrame = {
+  def capEgoMembers(edges: DataFrame, members: DataFrame, cap: Int): DataFrame = {
     require(cap >= 1, s"cap must keep at least the seed, got $cap")
     val keys = "seed" +: asOfKey(members)
     if (keys.size > 1) requireDated(edges, "valid_from", "capEgoMembers")
     val validity = if (keys.size > 1) Seq(col("valid_from")) else Nil
     val m = members.select(keys.map(col) ++ Seq(col("id"), col("depth")): _*)
       .transform(Materialize.apply)
-    val ind = inducedEdges(edges.select(Seq(col("src"), col("dst"), col("weight")) ++ validity: _*),
-      m, broadcastMaxRows)
+    val ind = inducedEdges(
+      edges.select(Seq(col("src"), col("dst"), col("weight")) ++ validity: _*), m)
     val strength = ind.select(keys.map(col) ++ Seq(col("src").as("id"), col("weight")): _*)
       .unionByName(ind.select(keys.map(col) ++ Seq(col("dst").as("id"), col("weight")): _*))
       .groupBy(keys.head, keys.tail :+ "id": _*).agg(sum(col("weight")).as("strength"))

@@ -181,7 +181,7 @@ object Ubo {
     * web (`edges` with `as_of`, see GraphQueries.datedUboLayers); as_of
     * joins the step-join and argmax keys, so positions ride the state width
     * (the g56 argument) and the prune's proof holds per position. Mirrored
-    * by [[UboSql.chainStepAsOf]].
+    * by [[UboSql.chainStep]] with the as_of key.
     */
   def strongestChain(edges: DataFrame, owners: DataFrame, maxHops: Int): DataFrame = {
     val keys = "owner" +: Traversals.asOfKey(owners)
@@ -307,28 +307,22 @@ object UboSql {
 
   /** One unrolled [[Ubo.strongestChain]] DP step: extend every frontier
     * cell by one edge, keep the (share DESC, chain ASC) argmax per
-    * (owner, entity). The window sits in an outer subquery so both engines
-    * rank the SAME computed (share, chain) values.
+    * (owner, keys…, entity). The window sits in an outer subquery so both
+    * engines rank the SAME computed (share, chain) values. `keys` is the
+    * batch key beside owner — `Seq("as_of")` for the dated step, whose
+    * slider position joins the step-join and window keys.
     */
-  def chainStep(prev: String, cur: String, edges: String): String =
+  def chainStep(prev: String, cur: String, edges: String, keys: Seq[String] = Nil): String = {
+    val k = keys.map(c => s", $c").mkString
+    val pk = keys.map(c => s", p.$c").mkString
+    val on = keys.map(c => s" AND e.$c = p.$c").mkString
     s"""$cur AS (
-       |  SELECT owner, entity, share, chain FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY owner, entity
+       |  SELECT owner$k, entity, share, chain FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY owner$k, entity
        |                                 ORDER BY share DESC, chain) AS rn
-       |    FROM (SELECT p.owner, e.dst AS entity, p.share * e.weight AS share,
+       |    FROM (SELECT p.owner$pk, e.dst AS entity, p.share * e.weight AS share,
        |                 p.chain || '->' || CAST(e.dst AS VARCHAR) AS chain
-       |          FROM $prev p JOIN $edges e ON e.src = p.entity))
+       |          FROM $prev p JOIN $edges e ON e.src = p.entity$on))
        |  WHERE rn = 1)""".stripMargin
-
-  /** [[chainStep]] with the slider position in the join and window keys —
-    * the mirror of [[Ubo.strongestChain]]'s dated step. */
-  def chainStepAsOf(prev: String, cur: String, edges: String): String =
-    s"""$cur AS (
-       |  SELECT owner, as_of, entity, share, chain FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY owner, as_of, entity
-       |                                 ORDER BY share DESC, chain) AS rn
-       |    FROM (SELECT p.owner, p.as_of, e.dst AS entity, p.share * e.weight AS share,
-       |                 p.chain || '->' || CAST(e.dst AS VARCHAR) AS chain
-       |          FROM $prev p JOIN $edges e ON e.src = p.entity AND e.as_of = p.as_of))
-       |  WHERE rn = 1)""".stripMargin
+  }
 }

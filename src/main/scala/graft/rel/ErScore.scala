@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gates
+import graft.graph.Materialize
+
 /** COMPOSITE entity-resolution match score — one ranked screening queue
   * over candidate pairs, fusing the library's matchers into a single
   * Fellegi–Sunter-style score (reference README.md:15 lists name,
@@ -104,28 +107,22 @@ object ErScore {
     * symmetric-delete lev ≤ `levTier` pairs on the raw text.
     */
   def screeningQueue(registry: DataFrame, catalog: DataFrame,
-                     blockThreshold: Double, levTier: Int = 1, topK: Int = 3,
-                     broadcastMaxRows: Long = 4000000L): DataFrame = {
+                     blockThreshold: Double, levTier: Int = 1, topK: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(registry.sparkSession)
-    val reg = registry.select(col("id"), col("raw"), col("norm"))
-      .transform(graft.graph.Materialize.apply) // reused: 2 blockers + rescoring
-    val cat = catalog.select(col("id"), col("label"))
-      .transform(graft.graph.Materialize.apply)
-    val (nReg, nCat) = (reg.count(), cat.count())
-    def gate(df: DataFrame, n: Long) =
-      if (n <= broadcastMaxRows) broadcast(df) else df
+    // reused: 2 blockers + rescoring
+    val (reg, nReg) = Materialize.counted(registry.select(col("id"), col("raw"), col("norm")))
+    val (cat, nCat) = Materialize.counted(catalog.select(col("id"), col("label")))
     val candA = TokenSetJoin.joinJaccard(
-        reg.select(col("id"), col("norm").as("label")), cat,
-        blockThreshold, broadcastMaxRows)
+        reg.select(col("id"), col("norm").as("label")), cat, blockThreshold)
       .select(col("id_l"), col("id_r"))
     val candB = FuzzyJoin.joinLev(
         reg.select(col("id"), col("raw").as("name")),
         cat.select(col("id"), col("label").as("name")), levTier)
       .select(col("id_l"), col("id_r"))
     val scored = candA.unionByName(candB).distinct()
-      .join(gate(reg.select(col("id").as("id_l"), col("raw").as("registry_label"),
+      .join(Gates.broadcastIf(reg.select(col("id").as("id_l"), col("raw").as("registry_label"),
         TokenSetJoin.tokens(col("norm")).as("toks_l")), nReg), Seq("id_l"))
-      .join(gate(cat.select(col("id").as("id_r"), col("label").as("catalog_label"),
+      .join(Gates.broadcastIf(cat.select(col("id").as("id_r"), col("label").as("catalog_label"),
         TokenSetJoin.tokens(col("label")).as("toks_r")), nCat), Seq("id_r"))
       .withColumn("n_common",
         size(array_intersect(col("toks_l"), col("toks_r"))).cast("long"))

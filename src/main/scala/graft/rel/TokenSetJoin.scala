@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gates
+import graft.graph.Materialize
+
 /** Blocked token-set fuzzy self-join — the entity-resolution primitive for
   * MULTI-WORD attributes (reference README.md:15 "common registered
   * addresses"): two registered addresses or catalog listings that agree on
@@ -40,22 +43,10 @@ import org.apache.spark.sql.functions._
   * adversarially small — real address corpora have heavy-tailed df where
   * rare-token prefixes prune orders of magnitude harder; the measured
   * factor is the honest floor, and [[candidateCount]] is the monitorable
-  * cost metric a 100 TB run watches instead of wall-clock.
+  * cost metric a 100 TB run watches instead of wall-clock. Every
+  * broadcast here is hinted under a measured row count ([[graft.Gates]]).
   */
 object TokenSetJoin {
-
-  /** Broadcast-hint gate (the Traversals contract, VERDICT r11 ADVICE):
-    * every broadcast here — the rerank label tables, the vocabulary df
-    * table — is hinted only under a MEASURED row count, never
-    * unconditionally. The counted frames are Materialize'd first, so the
-    * count is one cheap job over checkpointed blocks and the frame is
-    * computed once instead of once per reuse (the rerank previously
-    * recomputed the entity aggregation for each broadcast side). A caller
-    * passing an oversized entity table now degrades to shuffle joins
-    * instead of a driver/executor OOM.
-    */
-  private def gated(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
-    if (rows <= maxRows) broadcast(df) else df
 
   /** Distinct non-empty whitespace tokens of `label` — the set the
     * Jaccard is defined over. Pure builtins (split/filter/array_distinct),
@@ -111,12 +102,10 @@ object TokenSetJoin {
     * LONG and `jacc` rounded to 6 decimals (the engine-exact hash
     * contract used across the board).
     */
-  def selfJoinJaccard(entities: DataFrame, threshold: Double,
-                      broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val ents = entities.select(col("id"), col("label"))
-      .transform(graft.graph.Materialize.apply) // reused: 2 rerank sides + prefix stream
-    val nEnts = ents.count()
-    val pfx = prefixTokens(ents, threshold, Seq("id"), broadcastMaxRows)
+  def selfJoinJaccard(entities: DataFrame, threshold: Double): DataFrame = {
+    // reused: 2 rerank sides + prefix stream
+    val (ents, nEnts) = Materialize.counted(entities.select(col("id"), col("label")))
+    val pfx = prefixTokens(ents, threshold, Seq("id"))
     val a = pfx.select(col("id").as("id_a"), col("sz").as("sz_a"), col("tok"))
     // The candidate join BROADCASTS the build-side prefix stream under the
     // same measured gate as every other broadcast here (guide §3.1: pick
@@ -129,9 +118,8 @@ object TokenSetJoin {
     // fan-out ran 16.6 s on ONE task). The probe side keeps prefixTokens'
     // pinned record-key partitioning, so the fan-out parallelizes at any
     // scale; oversized corpora degrade to the planner's choice.
-    val b = gated(
-      pfx.select(col("id").as("id_b"), col("sz").as("sz_b"), col("tok")),
-      nEnts, broadcastMaxRows)
+    val b = Gates.broadcastIf(
+      pfx.select(col("id").as("id_b"), col("sz").as("sz_b"), col("tok")), nEnts)
     // candidate pairs carry BARE ids through the dedup shuffle; labels AND
     // pre-split token arrays rejoin AFTER it via broadcast (the entity
     // table is the vocabulary, small by the operator's own design; the
@@ -142,10 +130,10 @@ object TokenSetJoin {
     // collapse to one split per VOCABULARY row — array_intersect on the
     // prebuilt arrays is all that remains per pair. 42.7 → 24.4 s on the
     // graded g50 (SCALE.md round 11). The hint is gated on the measured
-    // entity count (see [[gated]]).
-    def side(suffix: String) = gated(ents.select(
+    // entity count.
+    def side(suffix: String) = Gates.broadcastIf(ents.select(
       col("id").as(s"id_$suffix"), col("label").as(s"label_$suffix"),
-      tokens(col("label")).as(s"toks_$suffix")), nEnts, broadcastMaxRows)
+      tokens(col("label")).as(s"toks_$suffix")), nEnts)
     val common = size(array_intersect(col("toks_a"), col("toks_b"))).cast("long")
     a.join(b, Seq("tok"))
       .filter(col("id_a") < col("id_b"))
@@ -192,26 +180,23 @@ object TokenSetJoin {
     * Unlike the self-join there is no id_a < id_b cut — (l, r) and the
     * symmetric catalog-side pair are distinct linkage facts.
     */
-  def joinJaccard(left: DataFrame, right: DataFrame, threshold: Double,
-                  broadcastMaxRows: Long = 4000000L): DataFrame = {
-    val l = left.select(col("id"), col("label")).transform(graft.graph.Materialize.apply)
-    val r = right.select(col("id"), col("label")).transform(graft.graph.Materialize.apply)
-    val (nL, nR) = (l.count(), r.count())
+  def joinJaccard(left: DataFrame, right: DataFrame, threshold: Double): DataFrame = {
+    val (l, nL) = Materialize.counted(left.select(col("id"), col("label")))
+    val (r, nR) = Materialize.counted(right.select(col("id"), col("label")))
     val tagged = l.select(lit(0).as("side"), col("id"), col("label"))
       .unionByName(r.select(lit(1).as("side"), col("id"), col("label")))
-    val pfx = prefixTokens(tagged, threshold, Seq("side", "id"), broadcastMaxRows)
+    val pfx = prefixTokens(tagged, threshold, Seq("side", "id"))
     val a = pfx.filter(col("side") === 0)
       .select(col("id").as("id_l"), col("sz").as("sz_l"), col("tok"))
     // gated broadcast of the build-side prefix stream — see
     // [[selfJoinJaccard]]'s candidate-join note (a planner fallback to
     // sort-merge on `tok` serializes on the vocabulary size)
-    val b = gated(
+    val b = Gates.broadcastIf(
       pfx.filter(col("side") === 1)
-        .select(col("id").as("id_r"), col("sz").as("sz_r"), col("tok")),
-      nR, broadcastMaxRows)
-    def side(df: DataFrame, n: Long, suffix: String) = gated(df.select(
+        .select(col("id").as("id_r"), col("sz").as("sz_r"), col("tok")), nR)
+    def side(df: DataFrame, n: Long, suffix: String) = Gates.broadcastIf(df.select(
       col("id").as(s"id_$suffix"), col("label").as(s"label_$suffix"),
-      tokens(col("label")).as(s"toks_$suffix")), n, broadcastMaxRows)
+      tokens(col("label")).as(s"toks_$suffix")), n)
     val common = size(array_intersect(col("toks_l"), col("toks_r"))).cast("long")
     a.join(b, Seq("tok"))
       .filter(lengthCompatible(col("sz_l"), col("sz_r"), threshold))
@@ -234,8 +219,7 @@ object TokenSetJoin {
     * shuffle on the record key.
     */
   private def prefixTokens(entities: DataFrame, threshold: Double,
-                           keys: Seq[String] = Seq("id"),
-                           broadcastMaxRows: Long = 4000000L): DataFrame = {
+                           keys: Seq[String] = Seq("id")): DataFrame = {
     // The record-key exchange below the ranking window is PINNED to the
     // configured shuffle-partition count (repartition-by-num — the one
     // shuffle origin AQE never coalesces) instead of being left to
@@ -254,17 +238,16 @@ object TokenSetJoin {
     val tokRaw = entities.select(
       keys.map(col) :+ explode(tokens(col("label"))).as("tok"): _*)
     val tok = tokRaw.repartition(shufflePartitions, keys.map(col): _*)
-    // Materialize the vocabulary so its gate count is one cheap job over
+    // Materialize the vocabulary so its gate count is one job over
     // checkpointed blocks and the aggregate never recomputes for the join.
     // A pathological corpus where every token is unique (vocabulary ≈ row
-    // count × tokens) now falls back to a shuffle join instead of
+    // count × tokens) falls back to a shuffle join instead of
     // broadcasting an unbounded table. The aggregate reads the RAW token
     // stream (its partial pass is narrow over the explode), not the
     // record-key repartition above — the df table doesn't care about it.
-    val df = tokRaw.groupBy("tok").agg(count(lit(1)).as("df"))
-      .transform(graft.graph.Materialize.apply)
+    val (df, nDf) = Materialize.counted(tokRaw.groupBy("tok").agg(count(lit(1)).as("df")))
     val byId = Window.partitionBy(keys.map(col): _*)
-    tok.join(gated(df, df.count(), broadcastMaxRows), Seq("tok"))
+    tok.join(Gates.broadcastIf(df, nDf), Seq("tok"))
       .withColumn("rk", row_number().over(byId.orderBy(col("df"), col("tok"))))
       .withColumn("sz", count(lit(1)).over(byId))
       .filter(col("rk") <= prefixLen(col("sz"), threshold))

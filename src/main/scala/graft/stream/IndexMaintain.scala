@@ -48,31 +48,37 @@ object IndexMaintain {
   /** Fold one signed micro-batch of documents into a persisted
     * [[LshIndex]] directory. `batch` carries (doc_id, text, erased);
     * erased rows' text is ignored. Erasures first (see object doc). */
-  def applyDocBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
-    val erase = batch.filter(col("erased")).select(col("doc_id"))
-    val arrivals = batch.filter(!col("erased")).select(col("doc_id"), col("text"))
-    if (!erase.isEmpty) LshIndex.removeFrom(spark, dir, erase)
-    if (!arrivals.isEmpty) LshIndex.appendTo(spark, dir, arrivals)
-  }
+  def applyDocBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit =
+    applySigned(batch, "doc_id", "text")(
+      LshIndex.removeFrom(spark, dir, _), LshIndex.appendTo(spark, dir, _))
 
   /** Fold one signed micro-batch of vectors into a persisted
     * [[IvfIndex]] directory. `batch` carries (vec_id, embedding, erased);
     * erased rows' embedding is ignored. */
-  def applyVecBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
-    val erase = batch.filter(col("erased")).select(col("vec_id"))
-    val arrivals = batch.filter(!col("erased")).select(col("vec_id"), col("embedding"))
-    if (!erase.isEmpty) IvfIndex.removeFrom(spark, dir, erase)
-    if (!arrivals.isEmpty) IvfIndex.appendTo(spark, dir, arrivals)
-  }
+  def applyVecBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit =
+    applySigned(batch, "vec_id", "embedding")(
+      IvfIndex.removeFrom(spark, dir, _), IvfIndex.appendTo(spark, dir, _))
 
   /** Fold one signed micro-batch of vectors into a persisted [[Pq]] code
     * table. Same batch shape as [[applyVecBatch]] — a deployment that
     * serves IVF-PQ runs both against the same feed. */
-  def applyCodeBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
-    val erase = batch.filter(col("erased")).select(col("vec_id"))
-    val arrivals = batch.filter(!col("erased")).select(col("vec_id"), col("embedding"))
-    if (!erase.isEmpty) Pq.removeFrom(spark, dir, erase)
-    if (!arrivals.isEmpty) Pq.encodeTo(spark, dir, arrivals)
+  def applyCodeBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit =
+    applySigned(batch, "vec_id", "embedding")(
+      Pq.removeFrom(spark, dir, _), Pq.encodeTo(spark, dir, _))
+
+  /** The signed-batch fold under every index: the erased ids go to
+    * `remove`, then the arrivals' (id, payload) to `append`, each leg only
+    * when the batch holds rows for it. The two emptiness checks are limit-1
+    * probes: on a driver-local batch (a Seq turned DataFrame) Spark answers
+    * them on the driver with no job, and on a distributed batch each is one
+    * job. One aggregate deciding both legs runs two jobs on either kind
+    * under AQE (its exchange's and its result's). */
+  private def applySigned(batch: DataFrame, id: String, payload: String)(
+      remove: DataFrame => Any, append: DataFrame => Unit): Unit = {
+    val erase = batch.filter(col("erased")).select(col(id))
+    val arrivals = batch.filter(!col("erased")).select(col(id), col(payload))
+    if (!erase.isEmpty) remove(erase)
+    if (!arrivals.isEmpty) append(arrivals)
   }
 }
 

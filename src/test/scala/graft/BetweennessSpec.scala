@@ -11,7 +11,7 @@ import graft.graph.{Algorithms, Traversals, Ubo}
   *     checked against both tiers;
   *  2. cross-tier equality (local collect vs distributed dataflow) on
   *     crafted graphs and on the graded g10 subgraph;
-  *  3. the gate itself: a tiny localMaxEdges forces the distributed tier
+  *  3. the gate itself: forcing the gates selects the distributed tier
   *     and the result must not change.
   */
 class BetweennessSpec extends SparkSpec {
@@ -172,8 +172,8 @@ class BetweennessSpec extends SparkSpec {
     val sym = Traversals.symmetrize(e2)
     val viaGate = Algorithms.betweennessSampled(sym, 16) // small graph → local tier
       .as[(Long, Double)].collect().toMap
-    val forced = Algorithms.betweennessSampled(sym, 16, localMaxEdges = 0L) // → distributed tier
-      .as[(Long, Double)].collect().toMap
+    val forced = gatesForced(Algorithms.betweennessSampled(sym, 16) // → distributed tier
+      .as[(Long, Double)].collect().toMap)
     assertClose(viaGate, forced)
     assert(viaGate.nonEmpty)
   }

@@ -23,17 +23,22 @@ class CcDecrementSpec extends SparkSpec {
   private def labels(df: DataFrame): Map[Long, Long] =
     df.select("id", "component").as[(Long, Long)].collect().toMap
 
-  /** decrement ≡ rebuild-on-surviving + singletons for edge-less nodes. */
+  /** decrement ≡ rebuild-on-surviving + singletons for edge-less nodes,
+    * with default gates (every fixture here sits under the rebuild floor)
+    * and with the gates forced, which runs the incremental path: the
+    * touched components, the majority-touched fallback and the stitch. */
   private def checkEquiv(base: Seq[(Long, Long)],
                          removed: Seq[(Long, Long)]): Map[Long, Long] = {
     val surviving = base.filterNot(removed.contains)
-    val dec = labels(Algorithms.ccDecrement(
+    def dec = labels(Algorithms.ccDecrement(
       Algorithms.cc(edges(base)), edges(surviving), edges(removed)))
     val reb = labels(Algorithms.cc(edges(surviving)))
     val allNodes = (base.map(_._1) ++ base.map(_._2)).toSet
     val expected = allNodes.map(n => n -> reb.getOrElse(n, n)).toMap
-    assert(dec === expected)
-    dec
+    val got = dec
+    assert(got === expected)
+    assert(gatesForced(dec) === expected, "the incremental path (gates forced) diverged")
+    got
   }
 
   //   1-2-3   10-11   20-21-22 (21-22 also bridged 20-22 → cycle)

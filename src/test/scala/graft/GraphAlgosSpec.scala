@@ -52,27 +52,27 @@ class TraversalsSpec extends SparkSpec {
   }
 
   test("above the broadcast gate the traversals degrade to shuffle joins with IDENTICAL results") {
-    // broadcastMaxRows = 0 forces every gated hint off — the plan kHop /
+    // forcing the gates turns every gated hint off — the plan kHop /
     // egoMembers / inducedEdges run when a reachable set outgrows the 4M
     // gate at scale (SCALE.md round 11: g02's visited set is one doubling
     // from crossing it). The degraded path must be a pure plan change:
     // same rows, same depths, same induced edges.
     val e = GraphBuilder.edges(Tables(spark, sfDir))
     val start = Seq(GraphBuilder.CustomerBase + 1L).toDF("id")
-    def rows(bcast: Long) =
-      Traversals.kHop(e, start, 3, broadcastMaxRows = bcast)
+    def rows =
+      Traversals.kHop(e, start, 3)
         .as[(Long, Long)].collect().toSet
-    val broadcastPath = rows(4000000L)
-    assert(broadcastPath.nonEmpty && broadcastPath === rows(0L),
+    val broadcastPath = rows
+    assert(broadcastPath.nonEmpty && broadcastPath === gatesForced(rows),
       "kHop results must not depend on the broadcast gate")
     val seeds = Seq(GraphBuilder.CustomerBase + 1L).toDF("seed")
-    def ego(bcast: Long) = {
-      val m = Traversals.egoMembers(e, seeds, 2, broadcastMaxRows = bcast)
-      Traversals.inducedEdges(e, m, broadcastMaxRows = bcast)
+    def ego = {
+      val m = Traversals.egoMembers(e, seeds, 2)
+      Traversals.inducedEdges(e, m)
         .select("src", "dst", "rel_type").as[(Long, Long, String)].collect().toSet
     }
-    val egoBroadcast = ego(4000000L)
-    assert(egoBroadcast.nonEmpty && egoBroadcast === ego(0L),
+    val egoBroadcast = ego
+    assert(egoBroadcast.nonEmpty && egoBroadcast === gatesForced(ego),
       "ego extraction results must not depend on the broadcast gate")
   }
 }
@@ -178,26 +178,13 @@ class AlgorithmsSpec extends SparkSpec {
 
   test("cc gate: both tiers agree on the graded strong user graph") {
     // same posture as BetweennessSpec's cross-tier case: force the
-    // distributed tier (gate = 0) on the graph the drill-down tier grades
-    // and assert identical labelings
+    // distributed tier (every gate at 0 selects the star tier) on the graph
+    // the drill-down tier grades and assert identical labelings
     val t = Tables(spark, sfDir)
     val e2 = graft.graph.Ubo.interactedPairs(t).filter(col("cnt") >= 2).select("src", "dst")
     val local = Algorithms.cc(e2).as[(Long, Long)].collect().toMap
-    val dist = Algorithms.cc(e2, localMaxEdges = 0L).as[(Long, Long)].collect().toMap
+    val dist = gatesForced(Algorithms.cc(e2).as[(Long, Long)].collect().toMap)
     assert(local === dist)
-  }
-
-  test("connectedComponentsDF matches GraphX CC (Catalyst-native twin)") {
-    val e = Seq((1L, 2L), (3L, 4L), (4L, 5L), (7L, 8L), (8L, 3L)).toDF("src", "dst")
-    val gx = Algorithms.connectedComponents(e).as[(Long, Long)].collect().toMap
-    val df = Algorithms.connectedComponentsDF(e).as[(Long, Long)].collect().toMap
-    assert(df === gx)
-    // real-data cross-check on the strong user graph
-    val t = Tables(spark, sfDir)
-    val e2 = graft.graph.Ubo.interactedPairs(t).filter(col("cnt") >= 2).select("src", "dst")
-    val gx2 = Algorithms.connectedComponents(e2).as[(Long, Long)].collect().toMap
-    val df2 = Algorithms.connectedComponentsDF(e2).as[(Long, Long)].collect().toMap
-    assert(df2 === gx2)
   }
 
   test("hitsBounded: star graph concentrates authority on the center") {
@@ -332,7 +319,7 @@ class AlgorithmsSpec extends SparkSpec {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L))
       .toDF("src", "dst")
     val local = Algorithms.scc(e).as[(Long, Long)].collect().toMap
-    val forced = Algorithms.scc(e, localMaxEdges = 0L).as[(Long, Long)].collect().toMap
+    val forced = gatesForced(Algorithms.scc(e).as[(Long, Long)].collect().toMap)
     assert(local === forced, "local Tarjan tier and GraphX tier must agree")
   }
 

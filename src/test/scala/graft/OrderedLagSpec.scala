@@ -130,7 +130,7 @@ class OrderedLagSpec extends SparkSpec {
     // Force the threshold below the test feed: the scale tier must kick in
     // and the plan must contain NO WindowExec (the single-task sort the
     // tiering exists to avoid), while the result multiset is unchanged.
-    val forced = GraphBuilder.userTransitions(t, windowMaxRows = 1L)
+    val forced = gatesForced(GraphBuilder.userTransitions(t))
     val plan = forced.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"scale tier must not plan a global window:\n$plan")
     assert(multiset(forced) === multiset(GraphBuilder.userTransitions(t)))

@@ -25,4 +25,11 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `f` run with every measured gate forced to its scale branch
+    * ([[Gates.ForceKey]]); evaluate what is compared inside `f`. */
+  def gatesForced[T](f: => T): T = {
+    spark.conf.set(Gates.ForceKey, "true")
+    try f finally spark.conf.unset(Gates.ForceKey)
+  }
 }
