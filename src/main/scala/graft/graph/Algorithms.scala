@@ -419,10 +419,8 @@ object Algorithms {
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id"))).distinct()
       .transform(Materialize.apply)
-    var e = sym0.filter(col("src") > col("dst"))
-      .select(col("src").as("u"), col("dst").as("v")).distinct()
-      .transform(Materialize.apply)
-    var eCount = e.count()
+    var (e, eCount) = Materialize.counted(sym0.filter(col("src") > col("dst"))
+      .select(col("src").as("u"), col("dst").as("v")).distinct())
     var converged = false
     var round = 0
     while (round < maxRounds && !converged) {
@@ -435,11 +433,9 @@ object Algorithms {
       // large emits (bigger node, neighborhood min): already canonical u > v
       val minsS = large.groupBy("u").agg(min(col("v")).as("m"))
       val withM = large.join(minsS, "u")
-      val small = withM.select(col("v").as("u"), col("m").as("v"))
+      val (small, smallCount) = Materialize.counted(withM.select(col("v").as("u"), col("m").as("v"))
         .unionByName(withM.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-        .transform(Materialize.apply)
-      val smallCount = small.count()
+        .filter(col("u") =!= col("v")).distinct())
       // fixpoint test: equal-size sets with empty one-way difference are equal
       converged = smallCount == eCount && small.except(e).isEmpty
       e = small
@@ -766,14 +762,14 @@ object Algorithms {
   def harmonicKHop(edges: DataFrame, k: Int): DataFrame = {
     val sym = graft.graph.Traversals.symmetrize(edges).distinct()
       .transform(Materialize.apply)
-    var levels = List(sym.select(col("src").as("s"), col("dst").as("v")).distinct()
-      .transform(Materialize.apply))
-    for (_ <- 2 to k)
-      levels = levels.head.join(sym, col("v") === col("src"))
-        .select(col("s"), col("dst").as("v")).distinct()
-        .transform(Materialize.apply) :: levels
-    val lv = levels.reverse.zipWithIndex
-      .map { case (df, i) => df.withColumn("dist", lit(i + 1)) }
+    // level 0 is the edge table itself; level 1 projects it, level i > 1 walks one hop
+    val levels = Traversals.levels((sym, Traversals.Unmeasured), k) { (prev, _, earlier) =>
+      (if (earlier.isEmpty) prev.select(col("src").as("s"), col("dst").as("v"))
+       else prev.join(sym, col("v") === col("src")).select(col("s"), col("dst").as("v")))
+        .distinct()
+    }
+    val lv = levels.tail.zipWithIndex
+      .map { case ((df, _), i) => df.withColumn("dist", lit(i + 1)) }
       .reduce(_ unionByName _)
       .filter(col("v") =!= col("s"))
       .groupBy("s", "v").agg(min(col("dist")).as("dist"))
@@ -867,8 +863,9 @@ object Algorithms {
     * join (frontier × edges), one partial-aggregating groupBy (sums sigma
     * over same-level parents — map-side combine applies), and one anti-join
     * against the visited set (so only strictly-shorter-distance discoveries
-    * survive; same-level edges are correctly NOT BFS-DAG edges). Lineage is
-    * truncated per level via [[Materialize]].
+    * survive; same-level edges are correctly NOT BFS-DAG edges): the
+    * [[Traversals.bfs]] step of [[Traversals.levels]], gated at
+    * [[graft.Gates.betweennessBroadcastRows]].
     *
     * Backward pass — Brandes' dependency accumulation, one level at a time
     * from the deepest: BFS-DAG edges level d → d+1 are recovered by joining
@@ -882,12 +879,7 @@ object Algorithms {
   def betweennessDistributed(edges: DataFrame, nSources: Int,
                              maxDepth: Int = 128,
                              prepped: Boolean = false): DataFrame = {
-    // Broadcast hints gated on MEASURED per-level counts, exactly kHop's
-    // pattern: the per-(source, node) state frames are localCheckpoint'd
-    // (no stats → AQE can't find the conversion), and when they fit the
-    // gate the EDGE TABLE NEVER SHUFFLES — each superstep is one scan of
-    // cached edge blocks plus a broadcast. Past the gate it degrades to
-    // ordinary shuffle joins, never a driver structure.
+    // the backward pass gates its broadcasts on the levels' counts, as the forward step does
     def gated(df: DataFrame, rows: Long): DataFrame =
       Gates.broadcastIf(df, rows, Gates.betweennessBroadcastRows)
     // `prepped` skips the dedup + checkpoint when the caller (the
@@ -903,35 +895,18 @@ object Algorithms {
       .unionByName(e.select(col("dst").as("id")))
       .distinct().orderBy(col("id")).limit(nSources)
       .transform(Materialize.apply)
-    // forward BFS: levels(d) = (s, v, sigma) for nodes first reached at
+    // forward BFS: level d = (s, v, sigma) for nodes first reached at
     // distance d from source s, sigma = #shortest s→v paths
-    var (frontier, frontierRows) = Materialize.counted(sources
-      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma")))
-    var visited = frontier.select("s", "v")
-    var visitedRows = frontierRows
-    val levels = scala.collection.mutable.ArrayBuffer((frontier, frontierRows))
-    var depth = 0
-    while (frontierRows > 0) {
-      depth += 1
-      if (depth > maxDepth) throw new IllegalStateException(
-        s"betweennessDistributed exceeded maxDepth=$maxDepth levels")
-      val (next, nextRows) = Materialize.counted(gated(frontier, frontierRows)
-        .join(e, col("v") === col("src"))
-        .groupBy(col("s"), col("dst"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("s"), col("dst").as("v"), col("sigma"))
-        .join(gated(visited, visitedRows), Seq("s", "v"), "left_anti"))
-      frontierRows = nextRows
-      if (frontierRows > 0) {
-        visitedRows += frontierRows
-        // kHop's convention: visited stays a LAZY union over checkpointed
-        // levels (lineage depth = level count, always small) — re-copying
-        // the whole set every level would be O(depth × |visited|) work
-        visited = visited.unionByName(next.select("s", "v"))
-        levels += ((next, frontierRows))
-        frontier = next
-      }
-    }
+    val reached = Traversals.levels(Materialize.counted(sources
+      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))), maxDepth)(
+      Traversals.bfs(Seq("s", "v"), Gates.betweennessBroadcastRows)(
+        _.join(e, col("v") === col("src"))
+          .groupBy(col("s"), col("dst"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .select(col("s"), col("dst").as("v"), col("sigma"))))
+    if (reached.size > maxDepth && reached.last._2 > 0L) throw new IllegalStateException(
+      s"betweennessDistributed exceeded maxDepth=$maxDepth levels")
+    val levels = if (reached.size > 1 && reached.last._2 == 0L) reached.init else reached
     // backward accumulation: deepest level has delta = 0
     var deltas = levels.last._1.withColumn("delta", lit(0.0))
     var deltaRows = levels.last._2

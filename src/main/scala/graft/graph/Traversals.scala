@@ -6,32 +6,74 @@ import org.apache.spark.sql.functions._
 
 import graft.Gates
 
-/** DataFrame-native bounded traversals (SURVEY.md §2 G2/G5/G14, §4.3).
-  *
-  * Spark 4.1's DataFrame API has no recursion operator, so bounded iteration
-  * runs as a driver-side loop of joins — the idiomatic Spark pattern. Each
-  * level is `localCheckpoint`ed: it truncates the logical plan so the k-th
-  * level doesn't re-derive levels 1..k-1 (lineage blowup is the classic
-  * failure mode of iterative DataFrame code; SURVEY.md §7.3).
-  *
-  * Scale posture: each hop is one equi-join on `src` — a shuffle-partitioned
-  * hash join that AQE can skew-split if a supernode appears. The visited-set
-  * anti-join keeps the frontier a set, so path multiplicity never multiplies
-  * the data volume (unlike the naive path-enumeration join).
+/** DataFrame-native bounded traversals (SURVEY.md §2 G2/G5/G14, §4.3) and
+  * the level loop under every graph frontier ([[levels]]).
   */
 object Traversals {
+
+  /** One frontier level: its frame and its measured row count. */
+  private[graph] type Level = (DataFrame, Long)
+
+  /** The row count of a level 0 the caller leaves lazy (a walk's seed). */
+  private[graph] val Unmeasured = -1L
+
+  /** The level loop under every frontier in this package: [[kHop]] and the
+    * ego traversals, [[Algorithms.betweennessDistributed]]'s forward pass,
+    * [[Algorithms.harmonicKHop]], [[Ubo.strongestChain]] and [[simplePaths]].
+    * Spark's DataFrame API has no recursion operator, so a bounded traversal
+    * is a driver-side loop of joins.
+    *
+    * Level i (1 ≤ i ≤ maxLevels) is `step(level i−1, its row count, levels
+    * 0..i−2)`, materialized and counted in ONE [[Materialize.counted]] job.
+    * The checkpoint truncates lineage, so level k does not re-derive levels
+    * 1..k−1 (the classic failure mode of iterative DataFrame code, SURVEY.md
+    * §7.3), and the count feeds the next step's gates. Level 0 is the
+    * caller's: counted when a step gates on it, or [[Unmeasured]] when the
+    * caller leaves it lazy. A level is computed from the one before it
+    * alone, so the first empty level ends the loop: no job runs past it.
+    *
+    * Returns level 0 and every level computed, the empty last one included.
+    */
+  private[graph] def levels(level0: Level, maxLevels: Int)
+                           (step: (DataFrame, Long, Seq[Level]) => DataFrame): Seq[Level] = {
+    var out = Vector(level0)
+    while (out.size <= maxLevels && out.last._2 != 0L)
+      out :+= Materialize.counted(step(out.last._1, out.last._2, out.init))
+    out
+  }
+
+  /** The BFS step for [[levels]]: `expand` takes the gated previous level
+    * to the next level's candidate rows, and the step keeps those whose
+    * `cell` (the node column plus its batch key) no earlier level holds.
+    * The visited set stays a LAZY union of the levels' cells (lineage depth
+    * = level count, always small; re-copying it every level would be
+    * O(depth × |visited|) work), anti-joined per cell, so the frontier stays
+    * a set and path multiplicity never multiplies the data volume.
+    *
+    * Broadcast hints: bounded traversals are drill-downs, so the frontier
+    * and visited sets are orders of magnitude smaller than the edge table —
+    * broadcasting them means the EDGE TABLE NEVER SHUFFLES (one scan of
+    * cached blocks per hop). The levels are RDD-backed with unknown stats,
+    * so AQE cannot find this conversion itself; their measured row counts
+    * gate the hints at `max` rows ([[graft.Gates.broadcastIf]]), and past
+    * the gate the joins stay shuffle joins instead of overflowing the driver.
+    */
+  private[graph] def bfs(cell: Seq[String], max: Long)(expand: DataFrame => DataFrame)
+      : (DataFrame, Long, Seq[Level]) => DataFrame = { (prev, rows, earlier) =>
+    val visited = earlier :+ ((prev, rows))
+    expand(Gates.broadcastIf(prev, rows, max)).join(Gates.broadcastIf(
+      visited.map(_._1.select(cell.map(col): _*)).reduce(_ unionByName _), visited.map(_._2).sum, max),
+      cell, "left_anti")
+  }
 
   /** Min-depth BFS: nodes reachable from `start` (column `id`) in ≤ maxHops
     * directed hops over `edges` (columns `src`, `dst`). Returns (id, depth)
     * where depth is the minimum hop count — BFS order guarantees min-depth.
-    *
-    * The frontier/visited broadcast hints are gated on the sets' measured
-    * sizes ([[graft.Gates.broadcastRows]]): the sets are materialized
-    * anyway, so the per-level count that feeds the gate is the level's one
-    * checkpoint job (a whole-graph BFS whose reachable set outgrows the gate
-    * degrades to ordinary shuffle joins instead of overflowing the driver).
     */
-  def kHop(edges: DataFrame, start: DataFrame, maxHops: Int): DataFrame = {
+  def kHop(edges: DataFrame, start: DataFrame, maxHops: Int): DataFrame =
+    withDepth(kHopLevels(edges, start, maxHops))
+
+  private def kHopLevels(edges: DataFrame, start: DataFrame, maxHops: Int): Seq[Level] = {
     // Materialize the edge list once: the edge derivation (unions + window
     // functions in GraphBuilder) would otherwise recompute on every hop.
     // Reachability is invariant under edge multiplicity, so dedup up front:
@@ -39,55 +81,35 @@ object Traversals {
     // multiply each hop's join output before the per-level distinct —
     // distinct-ing once here shrinks every subsequent shuffle.
     val e = edges.select(col("src"), col("dst")).distinct().transform(Materialize.apply)
-    levels(e, start.select(col("id")).distinct().withColumn("depth", lit(0L)),
+    bfsLevels(e, start.select(col("id")).distinct().withColumn("depth", lit(0L)),
       Nil, maxHops, parents = false)
   }
 
-  /** The BFS level loop under [[kHop]], [[egoMembers]] and
-    * [[egoMembersParents]]. Rows carry `keys` (Nil, seed, or seed + as_of)
-    * besides `id`; with as_of, `e` carries `active_from` and validity is a
-    * residual predicate on the hop join. A level reduces the hop to
-    * distinct (keys, id) — or with `parents` to the min discovering node —
-    * and anti-joins the visited set per key. Every level, seed level
-    * included, is one [[Materialize.counted]] job whose count feeds the
-    * broadcast gate; `visited` stays a lazy union (lineage depth maxHops).
-    *
-    * Broadcast hints: bounded traversals are drill-downs, so the frontier
-    * and visited sets are orders of magnitude smaller than the edge table —
-    * broadcasting them means the EDGE TABLE NEVER SHUFFLES (one scan of
-    * cached blocks per hop, one exchange for the frontier distinct). The
-    * materialized frontier is RDD-backed with unknown stats, so AQE cannot
-    * discover this conversion itself; the measured row counts gate the
-    * hints instead ([[graft.Gates.broadcastIf]]).
-    */
-  private def levels(e: DataFrame, level0: DataFrame, keys: Seq[String], maxHops: Int,
-                     parents: Boolean): DataFrame = {
+  /** The BFS levels under [[kHop]], [[egoMembers]] and [[egoMembersParents]].
+    * Rows carry `keys` (Nil, seed, or seed + as_of) besides `id`; with
+    * as_of, `e` carries `active_from` and validity is a residual predicate
+    * on the hop join. A level reduces the hop to distinct (keys, id) — or
+    * with `parents` to the min discovering node. */
+  private def bfsLevels(e: DataFrame, level0: DataFrame, keys: Seq[String], maxHops: Int,
+                        parents: Boolean): Seq[Level] = {
     val cell = keys :+ "id"
     val hop =
       if (keys.contains("as_of")) col("src") === col("fid") && col("active_from") <= col("as_of")
       else col("src") === col("fid")
-    val (visited0, count0) = Materialize.counted(level0)
-    var visited = visited0
-    var frontier = visited.select(cell.map(col): _*)
-    var frontierCount = count0
-    var visitedCount = frontierCount
-    for (i <- 1 to maxHops) {
-      val reached =
-        e.join(Gates.broadcastIf(frontier.withColumnRenamed("id", "fid"), frontierCount), hop)
-      val level =
-        if (parents) reached.groupBy(keys.map(col) :+ col("dst"): _*)
-          .agg(min(col("fid")).as("parent"))
-          .withColumnRenamed("dst", "id")
-        else reached.select(keys.map(col) :+ col("dst").as("id"): _*).distinct()
-      val (next, nextCount) = Materialize.counted(level.join(
-        Gates.broadcastIf(visited.select(cell.map(col): _*), visitedCount), cell, "left_anti"))
-      frontierCount = nextCount
-      visitedCount += frontierCount
-      visited = visited.unionByName(next.withColumn("depth", lit(i.toLong)))
-      frontier = if (parents) next.select(cell.map(col): _*) else next
-    }
-    visited
+    levels(Materialize.counted(level0), maxHops)(bfs(cell, Gates.broadcastRows) { frontier =>
+      val reached = e.join(frontier.select(cell.map(col): _*).withColumnRenamed("id", "fid"), hop)
+      if (parents) reached.groupBy(keys.map(col) :+ col("dst"): _*)
+        .agg(min(col("fid")).as("parent"))
+        .withColumnRenamed("dst", "id")
+      else reached.select(keys.map(col) :+ col("dst").as("id"): _*).distinct()
+    })
   }
+
+  /** BFS levels as one frame: level 0 carries its own `depth`, level i gets depth i. */
+  private def withDepth(levels: Seq[Level]): DataFrame = levels.zipWithIndex.map {
+    case ((df, _), 0) => df
+    case ((df, _), i) => df.withColumn("depth", lit(i.toLong))
+  }.reduce(_ unionByName _)
 
   /** `Seq("as_of")` when a batch frame carries the Time-Slider's snapshot
     * date, else Nil: every loop reads its as-of form from its input. */
@@ -113,21 +135,19 @@ object Traversals {
   def simplePaths(edges: DataFrame, startId: Long, maxDepth: Int): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst")).transform(Materialize.apply)
-    var frontier = spark.range(1).select(
+    val start = spark.range(1).select(
       lit(startId.toString).as("path_str"), lit(startId).as("last"),
       lit(0).as("depth"), array(lit(startId)).as("visited"))
-    var acc: Option[DataFrame] = None
-    for (i <- 1 to maxDepth) {
-      frontier = frontier.join(e, col("src") === col("last"))
+    val paths = levels((start, Unmeasured), maxDepth) { (prev, _, earlier) =>
+      prev.join(e, col("src") === col("last"))
         .filter(!array_contains(col("visited"), col("dst")))
         .select(concat(col("path_str"), lit("->"), col("dst").cast("string")).as("path_str"),
-                col("dst").as("last"), lit(i).as("depth"),
+                col("dst").as("last"), lit(earlier.size + 1).as("depth"),
                 array_append(col("visited"), col("dst")).as("visited"))
-        .transform(Materialize.apply)
-      acc = Some(acc.map(_.unionByName(frontier)).getOrElse(frontier))
     }
     // maxDepth < 1 → no paths (empty result, not a crash)
-    acc.getOrElse(frontier.limit(0)).select(col("path_str"), col("depth"))
+    paths.tail.map(_._1).reduceOption(_ unionByName _).getOrElse(start.limit(0))
+      .select(col("path_str"), col("depth"))
   }
 
   /** Ego network: the subgraph induced by the ≤ radius undirected
@@ -138,13 +158,12 @@ object Traversals {
     val spark = edges.sparkSession
     val e = edges.transform(Materialize.apply) // reused: symmetrize + 2 induced joins
     val start = spark.range(1).select(lit(centerId).as("id"))
-    val reach = kHop(symmetrize(e), start, radius).select(col("id"))
-    // ego neighborhoods are drill-down-sized; the materialized reach set is
-    // RDD-backed (no stats), so hint the broadcast for the induced joins —
-    // gated on the measured reach size, same contract as the kHop hints
-    // (one cheap count over checkpointed blocks; oversized reach degrades
-    // to shuffle semi-joins instead of overflowing the driver)
-    val n = reach.count()
+    val lv = kHopLevels(symmetrize(e), start, radius)
+    val reach = withDepth(lv).select(col("id"))
+    // the reach set is RDD-backed (no stats): its size, the levels' summed
+    // counts (disjoint by the visited anti-join), gates the induced joins'
+    // broadcast hints as in [[bfs]]
+    val n = lv.map(_._2).sum
     e.join(Gates.broadcastIf(reach.withColumnRenamed("id", "sid"), n),
         col("src") === col("sid"), "left_semi")
       .join(Gates.broadcastIf(reach.withColumnRenamed("id", "did"), n),
@@ -177,7 +196,7 @@ object Traversals {
     ego(edges, seeds, radius, parents = false)
 
   /** [[egoMembers]] / [[egoMembersParents]]: undirected edges (`active_from` per pair
-    * when dated) and depth-0 rows (each batch key, its seed as member) via [[levels]]. */
+    * when dated) and depth-0 rows (each batch key, its seed as member) via [[bfsLevels]]. */
   private def ego(edges: DataFrame, seeds: DataFrame, radius: Int,
                   parents: Boolean): DataFrame = {
     val keys = "seed" +: asOfKey(seeds)
@@ -192,9 +211,9 @@ object Traversals {
           .transform(Materialize.apply)
       }
     val parent = if (parents) Seq(lit(-1L).as("parent")) else Nil
-    levels(e, seeds.select(keys.map(col): _*).distinct()
+    withDepth(bfsLevels(e, seeds.select(keys.map(col): _*).distinct()
       .select(keys.map(col) ++ Seq(col("seed").as("id"), lit(0L).as("depth")) ++ parent: _*),
-      keys, radius, parents)
+      keys, radius, parents))
   }
 
   /** Per-seed induced edge lists: every edge whose BOTH endpoints belong

@@ -189,21 +189,20 @@ object Ubo {
     if (k.nonEmpty) Traversals.requireDated(edges, "as_of", "strongestChain")
     val e = edges.select(k.map(c => col(c).as(s"e_$c")) ++
       Seq(col("src"), col("dst"), col("weight")): _*).transform(Materialize.apply)
-    var frontier = owners.select(keys.map(col): _*).distinct()
+    val owned = owners.select(keys.map(col): _*).distinct()
       .select(keys.map(col) ++ Seq(col("owner").as("entity"), lit(1.0).as("share"),
               col("owner").cast("string").as("chain")): _*)
-    var best: DataFrame = null
-    for (i <- 1 to maxHops) {
-      frontier = argmaxByCell(
-        frontier.join(e, onEntity(k))
+    val chains = Traversals.levels((owned, Traversals.Unmeasured), maxHops) { (prev, _, _) =>
+      argmaxByCell(
+        prev.join(e, onEntity(k))
           .select(keys.map(col) ++ Seq(col("dst").as("entity"),
                   (col("share") * col("weight")).as("share"),
                   concat(col("chain"), lit("->"), col("dst").cast("string")).as("chain")): _*),
         keys)
-        .transform(Materialize.apply) // reused: level output + next join
-      val lvl = frontier.withColumn("hops", lit(i))
-      best = if (best == null) lvl else best.unionByName(lvl)
     }
+    val best = chains.tail.zipWithIndex
+      .map { case ((df, _), i) => df.withColumn("hops", lit(i + 1)) }
+      .reduce(_ unionByName _)
     // cross-level argmax: hops rides along (chain determines hops, so the
     // (share, chain) order can never need it as a tie-break)
     argmaxByCell(best, keys, "hops")

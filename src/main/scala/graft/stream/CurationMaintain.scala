@@ -129,9 +129,9 @@ object CurationMaintain {
     // dedups against (in-shard appends on both stores)
     if (!passed.isEmpty) {
       LshIndex.appendTo(spark, s"$storeDir/lsh", passed)
-      val rowsPerShard = ShardStore.manifest(spark, storeDir).meta("rows_per_shard")
-      ShardStore.append(ShardStore.withIdShard(passed, "doc_id", rowsPerShard),
-        storeDir, "accepted", "shard")
+      val m = ShardStore.manifest(spark, storeDir)
+      ShardStore.append(ShardStore.withIdShard(passed, "doc_id", m.meta("rows_per_shard")),
+        storeDir, m, "accepted", "shard")
     }
     // stage 3: pack this batch's accepted slice for the downstream trainer
     LlmQueries.packGreedy(passed, cap)

@@ -166,9 +166,9 @@ object Bm25Index {
     val tok = Retrieval.tokenize(delta)
       .transform(graft.graph.Materialize.apply)
     ShardStore.append(postingsOf(tok).withColumn("tshard", tshardCol(m.int("n_term_shards"))),
-      dir, "postings", "tshard")
+      dir, m, "postings", "tshard")
     ShardStore.append(ShardStore.withIdShard(doclensOf(tok), "doc_id", m.meta("rows_per_shard")),
-      dir, "doclens", "shard")
+      dir, m, "doclens", "shard")
   }
 
   /** Persisted erasure, tombstone form (see the class doc for why the
@@ -180,7 +180,7 @@ object Bm25Index {
     * bytes remain until [[compact]] — the erasure-completion step. */
   def removeFrom(spark: SparkSession, dir: String, ids: DataFrame): Long = {
     val (idf, n) = graft.graph.Materialize.counted(ids.select(col("doc_id")).distinct())
-    ShardStore.append(idf, dir, "tombstones")
+    ShardStore.append(idf, dir, ShardStore.manifest(spark, dir), "tombstones")
     n
   }
 

@@ -227,8 +227,10 @@ object IvfIndex {
     * periodic refits; a refit (quality, not correctness) is a fresh
     * [[build]] + [[save]].
     */
-  def appendTo(spark: SparkSession, dir: String, delta: DataFrame): Unit =
-    ShardStore.append(load(spark, dir).assign(delta), dir, "assigned", "cluster")
+  def appendTo(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
+    val m = ShardStore.manifest(spark, dir)
+    ShardStore.append(load(spark, dir, m).assign(delta), dir, m, "assigned", "cluster")
+  }
 
   /** Centroid REFRESH against a persisted index (VERDICT r12 #5): appends
     * assign against the centroids fit on the ORIGINAL corpus, so recall
@@ -326,8 +328,8 @@ object IvfIndex {
       lit(math.round(effRate * 4294967296.0))
     // the SAMPLE is what Lloyd re-reads across its rounds — materialize it,
     // not the corpus-sized body
-    val sample = body.filter(keep).transform(graft.graph.Materialize.apply)
-    require(sample.count() >= k,
+    val (sample, nSample) = graft.graph.Materialize.counted(body.filter(keep))
+    require(nSample >= k,
       s"sample too small to fit $k centroids — raise rate (got rate=$rate, effective=$effRate)")
     // `updates` threads the round-16 production-fit knob into the refit
     // path it was designed for: the iterated rounds re-read THE SAMPLE
@@ -479,8 +481,10 @@ object IvfIndex {
     * every later load (a [[refresh]] commits a new version, so the next
     * load sees its centroids); the assignments are read with their
     * declared schema, `cluster` a LONG as built. */
-  def load(spark: SparkSession, dir: String): IvfIndex = {
-    val m = ShardStore.manifest(spark, dir)
+  def load(spark: SparkSession, dir: String): IvfIndex =
+    load(spark, dir, ShardStore.manifest(spark, dir))
+
+  private def load(spark: SparkSession, dir: String, m: Manifest): IvfIndex = {
     val cents = graft.SessionCache(spark, s"$dir/centroids", m.commit) {
       ShardStore.read(spark, dir, m, "centroids")
         .select(col("cluster"), col("centroid")).collect()

@@ -198,7 +198,7 @@ object LshIndex {
   def appendTo(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
     val m = ShardStore.manifest(spark, dir)
     ShardStore.append(ShardStore.withIdShard(buckets(delta, m.int("band_rows")), "doc_id",
-      m.meta("rows_per_shard")), dir, "buckets", "shard")
+      m.meta("rows_per_shard")), dir, m, "buckets", "shard")
   }
 
   /** Persisted erasure (the IvfIndex.removeFrom pattern on the dedup

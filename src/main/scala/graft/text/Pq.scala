@@ -423,7 +423,7 @@ object Pq {
     val codes = pack(encode(codebookOf(spark, dir, meta),
       delta.select(col("vec_id"), col("embedding")), m), m)
     ShardStore.append(ShardStore.withIdShard(codes, "vec_id", meta.meta("rows_per_shard")),
-      dir, "codes", "shard")
+      dir, meta, "codes", "shard")
   }
 
   /** Persisted erasure (the IvfIndex/LshIndex.removeFrom pattern on the

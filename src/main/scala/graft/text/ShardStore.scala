@@ -83,9 +83,22 @@ object ShardStore {
     table -> StructType(data ++ shard)
   }
 
-  /** Append `df` to `table`: new files inside their shard directories. */
-  def append(df: DataFrame, dir: String, table: String, shardCol: String = ""): Unit =
-    write(df, dir, table, shardCol, "append")
+  /** Append `df` to `table`: new files inside their shard directories.
+    * The rows are first conformed, by column name, to the table's declared
+    * schema in `m` (the manifest the caller read): every file of a table
+    * must agree on each column's type, or the next read of the table fails
+    * (a `Seq[Double]` embedding appended to a float index). A declared
+    * column `df` lacks fails here, before anything is written; columns the
+    * schema does not declare are not written, as no read would see them. */
+  def append(df: DataFrame, dir: String, m: Manifest, table: String,
+             shardCol: String = ""): Unit = {
+    val declared = m.schemas(table)
+    val missing = declared.fieldNames.filterNot(df.columns.contains)
+    require(missing.isEmpty, s"append to $dir/$table: the rows lack the declared " +
+      s"${missing.mkString(", ")} (got ${df.columns.mkString(", ")})")
+    write(df.select(declared.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*),
+      dir, table, shardCol, "append")
+  }
 
   private def write(df: DataFrame, dir: String, table: String, shardCol: String,
                     mode: String): Unit = {

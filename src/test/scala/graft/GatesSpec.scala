@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftSparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
 import org.apache.spark.sql.functions._
 
@@ -47,22 +43,6 @@ class GatesSpec extends SparkSpec {
     assert(gatesForced(hints(graft.rel.TokenSetJoin.selfJoinJaccard(labels, 0.6))) === 0)
   }
 
-  /** `f`'s result and the number of Spark jobs it launched. */
-  private def jobs[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftSparkInternals.drainListenerBus(sc, 10000L)
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      assert(GraftSparkInternals.drainListenerBus(sc, 10000L), "listener bus did not drain")
-      (out, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("Algorithms.cc measures its gate in one job") {
     val e = (1L to 40L).map(i => (i, 100L + i % 7)).toDF("src", "dst")
     val (labels, n) = jobs(Algorithms.cc(e).as[(Long, Long)].collect())
@@ -70,6 +50,15 @@ class GatesSpec extends SparkSpec {
     // the union-find tier streams the measured edges with one job per partition
     val streamed = e.rdd.getNumPartitions
     assert(n - streamed === 1, s"$n jobs, $streamed of them streaming the edges into union-find")
+  }
+
+  test("connectedComponentsStar (cc with every gate forced) counts each round in its checkpoint job") {
+    // two paths, 1-2-…-6 and 10-11-12: the star rounds need more than one pass
+    val e = ((1L to 5L).map(i => (i, i + 1)) ++ Seq((10L, 11L), (11L, 12L))).toDF("src", "dst")
+    val (labels, n) = jobs(gatesForced(Algorithms.cc(e).as[(Long, Long)].collect()))
+    assert(labels.toMap === ((1L to 6L).map(_ -> 1L) ++ (10L to 12L).map(_ -> 10L)).toMap)
+    // a Dataset count after each round's checkpoint would add two jobs a round
+    assert(n === 47, s"$n jobs")
   }
 
   test("userTransitions counts an unchanged feed once per session and a rewritten feed again") {

@@ -21,6 +21,17 @@ class TraversalsSpec extends SparkSpec {
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 1L))
   }
 
+  test("kHop launches no job past the first empty level") {
+    // from 1 the BFS reaches {2, 3}, then {4}, then nothing: a cap past
+    // that level costs no job
+    def run(cap: Int) = jobs(Traversals.kHop(edges, Seq(1L).toDF("id"), cap)
+      .as[(Long, Long)].collect().toMap)
+    val (at3, n3) = run(3)
+    val (at9, n9) = run(9)
+    assert(at9 === at3)
+    assert(n9 === n3, s"cap 9 ran $n9 jobs, cap 3 ran $n3")
+  }
+
   test("simplePaths guards cycles") {
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val paths = Traversals.simplePaths(cyc, 1L, 5).as[(String, Int)].collect().toMap
@@ -33,6 +44,16 @@ class TraversalsSpec extends SparkSpec {
       .withColumn("rel_type", lit("E"))
     val got = Traversals.egoNet(e, 1L, 2).select("src", "dst").as[(Long, Long)].collect().toSet
     assert(got === Set((1L, 2L), (2L, 3L))) // 3->4 excluded: 4 is 3 hops out
+  }
+
+  test("egoNet takes its reach size from the BFS level counts") {
+    // the reach set's size gates the induced joins' broadcasts; a count of
+    // the reach union would add two jobs (its exchange's and its result's)
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 10L)).toDF("src", "dst")
+      .withColumn("rel_type", lit("E"))
+    val (got, n) = jobs(Traversals.egoNet(e, 1L, 2).select("src", "dst").as[(Long, Long)].collect())
+    assert(got.toSet === Set((1L, 2L), (2L, 3L)))
+    assert(n === 14, s"$n jobs")
   }
 
   test("batched egoMembers/inducedEdges reproduce per-seed egoNet") {
@@ -124,6 +145,17 @@ class AlgorithmsSpec extends SparkSpec {
     assert(got(2L) === ((0.72, "1->3->2", 2)))
     assert(got(3L) === ((0.8, "1->3", 1)))
     assert(got(4L) === ((0.4, "1->3->4", 2)), "tie must break by chain string order")
+  }
+
+  test("strongestChain and harmonicKHop run one job per level") {
+    // one counted job per level plus the AQE stage jobs of its exchanges;
+    // a job for the lazy level 0 or a second job per level moves the pin
+    val chain = Seq((1L, 2L, 0.3), (1L, 3L, 0.8), (3L, 2L, 0.9), (1L, 4L, 0.4), (3L, 4L, 0.5))
+      .toDF("src", "dst", "weight")
+    val (_, nChain) = jobs(Ubo.strongestChain(chain, Seq(1L).toDF("owner"), maxHops = 3).collect())
+    val star = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)).toDF("src", "dst")
+    val (_, nHarmonic) = jobs(Algorithms.harmonicKHop(star, 3).collect())
+    assert((nChain, nHarmonic) === ((13, 13)))
   }
 
   test("strongestChain values match a GraphX Pregel max-product run") {

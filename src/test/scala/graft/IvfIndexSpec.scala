@@ -132,6 +132,34 @@ class IvfIndexSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters") && scan.contains("cluster"))
   }
 
+  test("double VecEvents applied to a float index read back as the one-pass union") {
+    import graft.stream.{IndexMaintain, VecEvent}
+    import graft.text.ShardStore
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val base = vecs.filter(col("vec_id") % 5 =!= 0)
+    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
+    val idx = IvfIndex.build(base, k = 16)
+    IvfIndex.save(idx, dir)
+    val events = vecs.filter(col("vec_id") % 5 === 0).as[(Long, Seq[Float])].collect()
+      .map { case (i, v) => VecEvent(i, v.map(_.toDouble), erased = false) }.toSeq
+    IndexMaintain.applyVecBatch(spark, dir, events.toDF())
+    val loaded = IvfIndex.load(spark, dir)
+    val unionOnePass = IvfIndex(idx.centroids, idx.assign(vecs))
+    def rows(i: IvfIndex) = i.assigned.select("vec_id", "cluster", "embedding")
+      .as[(Long, Long, Seq[Float])].collect().sortBy(_._1).toSeq
+    val got = rows(loaded)
+    assert(events.map(_.vec_id).toSet.subsetOf(got.map(_._1).toSet))
+    assert(got === rows(unionOnePass))
+    assert(topk(loaded) === topk(unionOnePass))
+    // a delta lacking a declared column fails before anything is written
+    def files() = new java.io.File(dir, "assigned").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).map(_.getName).toSet
+    val before = files()
+    intercept[IllegalArgumentException](ShardStore.append(vecs.select(col("vec_id")), dir,
+      ShardStore.manifest(spark, dir), "assigned", "cluster"))
+    assert(files() === before)
+  }
+
   test("candidate set is monotone in nprobe") {
     val ids = (n: Int) => built.candidates(qArr, n)
       .select("vec_id").as[Long].collect().toSet

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftSparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,5 +35,21 @@ abstract class SparkSpec extends AnyFunSuite {
   def gatesForced[T](f: => T): T = {
     spark.conf.set(Gates.ForceKey, "true")
     try f finally spark.conf.unset(Gates.ForceKey)
+  }
+
+  /** `f`'s result and the number of Spark jobs it launched. */
+  def jobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftSparkInternals.drainListenerBus(sc, 10000L)
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      assert(GraftSparkInternals.drainListenerBus(sc, 10000L), "listener bus did not drain")
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
   }
 }
