@@ -140,11 +140,12 @@ object Bm25Index {
     spark.range(0).select(col("id").as("doc_id"))
 
   /** The persisted tables read with their declared schemas (no Spark
-    * job), and the distinct tombstoned ids every read path anti-joins. */
+    * job), and the tombstoned ids every read path anti-joins (a replayed
+    * erasure repeats an id, which an anti-join does not mind). */
   private def tables(spark: SparkSession, dir: String) = {
     val m = ShardStore.manifest(spark, dir)
     (m, ShardStore.read(spark, dir, m, "postings"), ShardStore.read(spark, dir, m, "doclens"),
-     ShardStore.read(spark, dir, m, "tombstones").select(col("doc_id")).distinct())
+     ShardStore.read(spark, dir, m, "tombstones").select(col("doc_id")))
   }
 
   /** Load the SERVING view: postings/doclens with tombstoned docs
@@ -176,7 +177,8 @@ object Bm25Index {
     * layout): the ids land in the tombstone table and every read path
     * anti-joins them — erased docs are unservable from this call on, and
     * scores equal a rebuild over survivors. Replay is a serving no-op
-    * (tombstones are distinct'd at read; [[compact]] clears them). The
+    * (a repeated tombstone anti-joins the same rows; [[compact]] counts
+    * distinct ids and clears them). The
     * bytes remain until [[compact]] — the erasure-completion step. */
   def removeFrom(spark: SparkSession, dir: String, ids: DataFrame): Long = {
     val (idf, n) = graft.graph.Materialize.counted(ids.select(col("doc_id")).distinct())
@@ -195,15 +197,16 @@ object Bm25Index {
                 topK: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import spark.implicits._
     val (m, postings, doclens, tomb) = tables(spark, dir)
-    val terms = qterms.select(col("token")).distinct()
-      .transform(graft.graph.Materialize.apply)
-    // distinct within each partition, not across them: one job and no
-    // shuffle, at most nTermShards rows a partition
-    val shards = terms.select(tshardCol(m.int("n_term_shards"))).as[Long]
+    // the shards straight from the query table, distinct within each
+    // partition, not across them: one job and no shuffle, at most
+    // nTermShards rows a partition
+    val shards = qterms.select(tshardCol(m.int("n_term_shards"))).as[Long]
       .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+    // a repeated term on the build side of a semi-join changes nothing,
+    // so the terms broadcast as they come, with no distinct's shuffle
     val tf = postings
       .filter(col("tshard").isin(shards.map(java.lang.Long.valueOf): _*))
-      .join(broadcast(terms), Seq("token"), "left_semi")
+      .join(broadcast(qterms.select(col("token"))), Seq("token"), "left_semi")
       .join(tomb, Seq("doc_id"), "left_anti")
       .select("doc_id", "token", "tf")
     val dl = doclens.select("doc_id", "dl").join(tomb, Seq("doc_id"), "left_anti")
@@ -220,8 +223,8 @@ object Bm25Index {
     * Both rewrites are [[ShardStore.rewriteTouched]] (its crash-window
     * note applies; the tombstones are cleared only after both). */
   def compact(spark: SparkSession, dir: String): Bm25CompactStats = {
-    val (_, _, _, distinctTomb) = tables(spark, dir)
-    val (tomb, nTomb) = graft.graph.Materialize.counted(distinctTomb)
+    val (_, _, _, tombstones) = tables(spark, dir)
+    val (tomb, nTomb) = graft.graph.Materialize.counted(tombstones.distinct())
     if (nTomb == 0L) return Bm25CompactStats(0L, Seq.empty, Seq.empty)
     val termShards = ShardStore.rewriteTouched(spark, dir, "postings", "tshard", "doc_id", tomb)
     val dlShards = ShardStore.rewriteTouched(spark, dir, "doclens", "shard", "doc_id", tomb)

@@ -169,14 +169,17 @@ object IvfIndex {
 
   /** The index of a Lloyd fit (centroid table, assignments): centroids
     * collected to the driver (ids ascending, coordinates in position
-    * order), assignments joined to the input and materialized —
-    * build-once means the quantizer dataflow runs ONCE here, not lazily
-    * on every downstream action over the index. */
+    * order), then every vector assigned against them with [[assign]] and
+    * materialized — the fit's own assignment plan `a2` would re-run the
+    * whole lazy fit under the collected centroids, so it serves only the
+    * empty input, which has no centroids to assign against. */
   private def fitted(embeddings: DataFrame, fit: (DataFrame, DataFrame)): IvfIndex = {
     val (c1, a2) = fit
-    IvfIndex(centroidsOf(c1), embeddings.join(a2, "vec_id")
-      .withColumnRenamed("cid", "cluster")
-      .transform(graft.graph.Materialize.apply))
+    val cents = centroidsOf(c1)
+    val assigned =
+      if (cents.isEmpty) embeddings.join(a2, "vec_id").withColumnRenamed("cid", "cluster")
+      else IvfIndex(cents, embeddings.sparkSession.emptyDataFrame).assign(embeddings)
+    IvfIndex(cents, assigned.transform(graft.graph.Materialize.apply))
   }
 
   private def centroidsOf(c1: DataFrame): Array[(Long, Array[Double])] = {

@@ -1,6 +1,11 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import graft.{GraftSession, HostProbes, SparkEntry}
+import graft.GraftSession.Compiles
 import org.apache.spark.GraftSparkInternals
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -30,16 +35,20 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * `tasks`, `task_run_ms`, `task_gc_ms`, `shuffle_read_mb`,
   * `shuffle_write_mb`, `shuffle_records_written`, `spill_mb`; the plan
   * counters `exchanges` (shuffles), `reused_exchanges`,
-  * `broadcast_exchanges`, `scans` (file scans), `codegen_stages`; and
-  * `top_stages` (the pass's five longest stages). The Spark counters cover
-  * the last timed pass, read with the listener bus drained before and
-  * after it; the plan counters sum over EVERY plan that pass executed, so
+  * `broadcast_exchanges`, `scans` (file scans), `codegen_stages`; the
+  * Janino counters `codegen_compiles` and `codegen_ms` (generated classes
+  * compiled, and the time spent compiling them); and `top_stages` (the
+  * pass's five longest stages). The Spark and Janino counters cover the
+  * last timed pass, read with the listener bus drained before and after
+  * it; the plan counters sum over EVERY plan that pass executed, so
   * the per-level Materialize jobs of the iterative loops count (a loop's
   * final plan reads a checkpoint and shows none of them). After each
   * record the query's AQE-final formatted plan goes to stderr under
   * `== <query> ==`. The last stdout line is the summary (`total_s`
-  * includes the host drains); the exit code is 1 if any query failed.
-  * Under sbt, stdout lines carry sbt's `[info] ` prefix.
+  * includes the host drains; `codegen_compiles` counts every class the
+  * sweep compiled, `metaspace_mb` is read after a full GC at its end);
+  * the exit code is 1 if any query failed. Under sbt, stdout lines carry
+  * sbt's `[info] ` prefix.
   *
   * At rehearsal sfs (sf0.4+) each heavy query leaves a multi-GB dirty
   * writeback backlog that time-shares the single disk with the NEXT
@@ -107,11 +116,13 @@ object MicroBench {
     def drain(): Unit =
       if (!GraftSparkInternals.drainListenerBus(sc, 10000L))
         System.err.println(s"[microbench] $name: listener bus did not drain; counters may be short")
+    var compiled = Compiles(0L, 0.0)
     def pass(): Double = {
       drain(); stages.clear(); plans.clear(); jobs.set(0)
+      val c0 = GraftSession.compiles()
       val t0 = System.nanoTime()
       try build(spark).write.mode("overwrite").format("noop").save()
-      finally drain()
+      finally { drain(); compiled = GraftSession.compiles() - c0 }
       (System.nanoTime() - t0) / 1e9
     }
     sc.addSparkListener(stageListener)
@@ -153,6 +164,8 @@ object MicroBench {
       "broadcast_exchanges" -> count { case _: BroadcastExchangeLike => 1 },
       "scans" -> count { case _: FileSourceScanExec => 1 },
       "codegen_stages" -> count { case _: WholeStageCodegenExec => 1 },
+      "codegen_compiles" -> JInt(compiled.n),
+      "codegen_ms" -> JDouble(math.round(compiled.ms * 10) / 10.0),
       "top_stages" -> JArray(st.sortBy(s => (-s.wallMs, s.id)).take(5).toList.map(s =>
         JObject(List("id" -> JInt(s.id), "wall_ms" -> JInt(s.wallMs), "run_ms" -> JInt(s.runMs),
           "tasks" -> JInt(s.tasks), "name" -> JString(s.name)))))))
@@ -193,6 +206,7 @@ object MicroBench {
       val t0 = System.nanoTime()
       // session and reader start-up, kept out of the first query's pass
       spark.read.parquet(s"$sfDir/region.parquet").count()
+      val c0 = GraftSession.compiles()
       val failed = names.filterNot { n =>
         drain()
         val p = profile(spark, n, reps, SparkEntry.queries(n)(_, sfDir),
@@ -205,9 +219,19 @@ object MicroBench {
         "total_s" -> JDouble(math.round((System.nanoTime() - t0) / 1e6) / 1e3),
         "drain_s" -> JDouble(math.round(drainNs / 1e6) / 1e3),
         "queries" -> JInt(names.size),
+        "codegen_compiles" -> JInt((GraftSession.compiles() - c0).n),
+        "metaspace_mb" -> JDouble(math.round(metaspaceBytes() / 1e4) / 1e2),
         "failed" -> JArray(failed.toList.map(JString(_))))))))
       if (failed.isEmpty) 0 else 1
     } finally spark.stop()
+  }
+
+  /** Metaspace in use after a full GC: what the loaded classes, the
+    * cached generated ones among them, hold. */
+  private def metaspaceBytes(): Long = {
+    System.gc()
+    ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum
   }
 
   def main(args: Array[String]): Unit = {

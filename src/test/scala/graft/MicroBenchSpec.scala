@@ -17,7 +17,7 @@ class MicroBenchSpec extends SparkSpec {
     "jobs", "stages", "tasks", "task_run_ms", "task_gc_ms",
     "shuffle_read_mb", "shuffle_write_mb", "shuffle_records_written", "spill_mb",
     "exchanges", "reused_exchanges", "broadcast_exchanges", "scans", "codegen_stages",
-    "top_stages")
+    "codegen_compiles", "codegen_ms", "top_stages")
 
   private def profile(name: String) =
     MicroBench.profile(spark, name, 1, SparkEntry.queries(name)(_, sfDir), () => ())

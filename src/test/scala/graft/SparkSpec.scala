@@ -8,22 +8,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session: Spark startup
-  * dominates test wall-clock otherwise). Mirrors the Verify/Bench config.
+  * dominates test wall-clock otherwise): [[GraftSession]]'s contract at 4
+  * cores and 4 shuffle partitions, with a throwaway warehouse directory.
   */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.start(GraftSession.builder("4")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.shuffle.partitions", "4"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
