@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -19,17 +21,17 @@ object GraftSession {
     * every operation: with the default, index_churn's timed run (seed 3,
     * 4 cores) compiled 445 classes in 2.4 s of an 8.1 s run, because its
     * operation kinds evicted each other's classes. An entry is a class per
-    * class loader that asked for it, and in local mode the driver and the
-    * task threads carry different loaders, so most classes take two.
-    * Measured working sets with an unbounded cache: index_churn 258
-    * entries over set-up and run; `MicroBench 1 all` at sf0.01, every
-    * graded query in one session, 3,515. 4,096 holds the whole registry
-    * with ~16% headroom. Holding it costs ~30 MB of Metaspace (245 MB at
-    * the end of that sweep against 215 MB with the default, ~9 KB an
-    * entry). The cache is JVM-global and built when `CodeGenerator` is
-    * first used, from the conf of the session active on that thread
-    * (Spark's default when there is none), which is why [[start]] builds
-    * it. */
+    * class loader that asked for it; [[start]] gives the driver and the
+    * task threads one loader, so a class takes one entry.
+    * `MicroBench --no-drain 1 all` at sf0.01, every graded query in one
+    * session, compiles 2,100 classes (3,522 entries while the two sides
+    * carried different loaders), so 4,096 holds the whole registry with
+    * ~2x headroom. Metaspace after a full GC at the end of that sweep is
+    * 242 MB (215 MB with Spark's default 100 entries and two loaders,
+    * 245 MB with 3,522 entries: ~9 KB an entry). The cache is JVM-global
+    * and built when `CodeGenerator` is first used, from the conf of the
+    * session active on that thread (Spark's default when there is none),
+    * which is why [[start]] builds it. */
   val CodegenCacheEntries = 4096
 
   /** The session contract as a builder: `local[cpus]`, shuffle partitions
@@ -59,6 +61,15 @@ object GraftSession {
       // operation kind compiled nothing on its repeat. Only class names
       // change; plans and the generated logic are the same.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // The engine adds no session artifacts (no jars, no addArtifact, no
+      // Spark Connect). With isolation on, every SQL job carries the
+      // session's artifact state and its tasks run under a per-session
+      // ExecutorClassLoader, through which Janino's lookups of missing
+      // class names are slow; off, they run under the executor's default
+      // loader, the one [[start]] hands to the driver. Alone, this cut
+      // compile time on a cold l55_curation_tick + g03_ubo_exposure pass
+      // at sf0.01 (4 cores) from 2.34 to 1.40 s at the same 221 compiles.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // Optional shuffle/spill/broadcast codec override (lz4 default) for
     // rehearsal A/Bs at the single-disk I/O wall: a denser codec trades
     // CPU for disk bandwidth, which is the binding resource past ~500M
@@ -83,6 +94,7 @@ object GraftSession {
     // tier, which userTransitions only selects under its size threshold)
     // would otherwise drown the bench JSON line
     s.sparkContext.setLogLevel("ERROR")
+    shareTaskClassLoader(s)
     // Optional reliable-checkpoint mode: when set, Materialize upgrades
     // every iterative-loop lineage cut from localCheckpoint (executor
     // blocks, lost with the executor) to fault-tolerant dir-based
@@ -92,6 +104,28 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CKPT_DIR").foreach(s.sparkContext.setCheckpointDir)
     s
   }
+
+  private val taskLoader = new AtomicReference[ClassLoader]()
+
+  /** Local mode only: the calling thread adopts the class loader the
+    * executor's tasks run under. Spark's class cache keys each generated
+    * class on (thread context class loader, code), so while driver threads
+    * carry the application loader and task threads the executor's, every
+    * class a plan generates on both sides compiles twice. One 1-task job
+    * reads the task thread's loader; threads the caller starts afterwards
+    * (AQE's stage and broadcast pools among them) inherit it. The loader
+    * has no URLs of its own and delegates to the application loader, so
+    * class resolution does not change. Measured on the same cold pass as
+    * the isolation setting in [[builder]]: 221 cache entries for 145
+    * classes (76 under both loaders) and 2.34 s compiling, then 145
+    * entries and 0.87 s with both; batch_sweep's timed run (seed 3,
+    * 4 cores) compiled 228 classes in 1.08 s instead of 373 in 2.71 s. */
+  private def shareTaskClassLoader(s: SparkSession): Unit =
+    if (s.sparkContext.isLocal) {
+      s.sparkContext.parallelize(Seq(0), 1)
+        .foreach(_ => taskLoader.set(Thread.currentThread.getContextClassLoader))
+      Thread.currentThread.setContextClassLoader(taskLoader.get)
+    }
 
   /** Generated classes Janino has compiled in this JVM, and the time spent
     * compiling them. Take the difference of two readings around a pass. */

@@ -64,12 +64,16 @@ object Retrieval {
     * the tf/dl frames down — [[bm25Batch]] calls it after tokenizing, and
     * [[Bm25Index.probe]] calls it with persisted postings/doclens — so the
     * graded batch queries and the standing artifact share one scoring
-    * body (the LshIndex single-sourcing rule applied to retrieval). */
+    * body (the LshIndex single-sourcing rule applied to retrieval).
+    * `tf` must hold one row per (doc_id, token): postings and
+    * [[bm25Batch]]'s tf are both built by `groupBy(doc_id, token)`, and
+    * appends carry new doc ids only, so a token's row count is its
+    * document frequency and `df` needs no distinct (one shuffle fewer). */
   def scoreTf(tf: DataFrame, dl: DataFrame, qterms: DataFrame,
               topK: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val stats = dl.agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
                        count(lit(1)).as("n_docs"))
-    val df_ = tf.groupBy("token").agg(countDistinct(col("doc_id")).as("df"))
+    val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val w = tf.join(broadcast(df_), "token")
       .join(dl, "doc_id").crossJoin(broadcast(stats))
       .withColumn("idf", log(lit(1.0) +

@@ -19,7 +19,7 @@ import org.json4s.jackson.JsonMethods.{compact, render}
 /** The query profiler: times graded queries by registry name and prints
   * one JSON record per query. Build tool; not a graded surface.
   *
-  * Usage: runMain graft.tools.MicroBench <reps> <query ...|all>
+  * Usage: runMain graft.tools.MicroBench [--no-drain] <reps> <query ...|all>
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
   *
   * `all` is every [[SparkEntry.queries]] name, sorted. Names resolve before
@@ -59,11 +59,13 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * reps it runs the cheap io/dirty point check and drains only when
   * that reads stormy (a rep's own writeback backlog) — so every timed
   * rep starts against a settled device and `min` approximates the
-  * uncontended cost.
+  * uncontended cost. `--no-drain` skips every drain, for a sweep read for
+  * its counters (jobs, compiles, shuffle volume), which no drain changes;
+  * its walls then carry whatever else the host runs.
   */
 object MicroBench {
 
-  private val Usage = "usage: runMain graft.tools.MicroBench <reps> <query ...|all>"
+  private val Usage = "usage: runMain graft.tools.MicroBench [--no-drain] <reps> <query ...|all>"
 
   /** One query's profile: its stdout record and its final plan (empty when
     * no plan executed). */
@@ -182,21 +184,23 @@ object MicroBench {
   /** The command: 0 when every query ran, 1 when any failed, 2 on a usage
     * error (nothing runs). */
   def run(args: Seq[String]): Int = {
-    val reps = args.headOption.flatMap(_.toIntOption).filter(_ >= 1)
-    val names = resolve(args.drop(1), SparkEntry.queries.keySet)
+    val drains = !args.headOption.contains("--no-drain")
+    val rest = if (drains) args else args.tail
+    val reps = rest.headOption.flatMap(_.toIntOption).filter(_ >= 1)
+    val names = resolve(rest.drop(1), SparkEntry.queries.keySet)
     (reps, names) match {
       case (None, _) => System.err.println(Usage); 2
       case (_, Left(msg)) => System.err.println(msg); 2
-      case (Some(n), Right(qs)) => sweep(n, qs)
+      case (Some(n), Right(qs)) => sweep(n, qs, drains)
     }
   }
 
-  private def sweep(reps: Int, names: Seq[String]): Int = {
+  private def sweep(reps: Int, names: Seq[String], drains: Boolean): Int = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
     var drainNs = 0L
-    def drain(): Unit = {
+    def drain(): Unit = if (drains) {
       val t0 = System.nanoTime()
       val ok = HostProbes.awaitQuiet(t0 + 180L * 1000000000L)
       drainNs += System.nanoTime() - t0
@@ -210,7 +214,7 @@ object MicroBench {
       val failed = names.filterNot { n =>
         drain()
         val p = profile(spark, n, reps, SparkEntry.queries(n)(_, sfDir),
-          () => if (!HostProbes.ioQuiet()) drain())
+          () => if (drains && !HostProbes.ioQuiet()) drain())
         println(p.json)
         System.err.println(s"== $n ==\n${p.plan}")
         p.ok

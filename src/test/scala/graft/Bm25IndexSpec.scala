@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.text.{Bm25Index, Retrieval}
 
@@ -80,6 +83,16 @@ class Bm25IndexSpec extends SparkSpec {
     val planStr = probed.queryExecution.executedPlan.toString
     assert(planStr.contains("PartitionFilters") && planStr.contains("tshard"),
       s"expected a partition-pruned postings scan, got:\n$planStr")
+    // df counts the postings of each token, which are unique per
+    // (doc_id, token): no shuffle on that pair, as a distinct would add
+    probed.collect()
+    val shuffledOn = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(probed.queryExecution.executedPlan) {
+        case ShuffleExchangeExec(h: HashPartitioning, _, _, _) =>
+          h.expressions.flatMap(_.references.map(_.name)).toSet
+      }
+    assert(shuffledOn.nonEmpty && !shuffledOn.contains(Set("token", "doc_id")),
+      s"hash exchanges on ${shuffledOn.mkString(", ")}")
     val full = postingsFilesRead(Bm25Index.load(spark, dir).probe(qterms))
     val pruned = postingsFilesRead(Bm25Index.probeFrom(spark, dir, qterms))
     assert(pruned < full, s"pruned probe reads $pruned of $full posting files")

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Multiply, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -14,6 +17,8 @@ import graft.text.{Bm25Index, IvfIndex, LshIndex}
   * classes, once per value: both are literals in the generated filter,
   * and `topK` as a literal is what lets the optimizer cut each query's
   * candidates to `topK` before the rank shuffle (WindowGroupLimit).
+  * In local mode a class compiles once per JVM, not once per class loader:
+  * driver threads and task threads share the executor's loader.
   */
 class CodegenCacheSpec extends SparkSpec {
   import spark.implicits._
@@ -29,6 +34,38 @@ class CodegenCacheSpec extends SparkSpec {
     val c0 = GraftSession.compiles()
     val out = f
     (out, (GraftSession.compiles() - c0).n)
+  }
+
+  /** Spark's generated-class cache as (code, class loader) pairs. The cache
+    * is private; its keys are (weak reference to the loader, code). */
+  private def cacheKeys(): Seq[(CodeAndComment, ClassLoader)] = {
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val wrapper = cacheOf.invoke(CodeGenerator)
+    val guava = wrapper.getClass.getMethod("cache").invoke(wrapper)
+    val asMap = Class.forName("org.sparkproject.guava.cache.Cache").getMethod("asMap")
+    asMap.invoke(guava).asInstanceOf[java.util.Map[(java.lang.ref.WeakReference[ClassLoader], CodeAndComment), _]]
+      .keySet.asScala.toSeq.map { case (loader, code) => (code, loader.get) }
+  }
+
+  test("a plan with a shuffle and a broadcast join compiles each class under one loader") {
+    spark
+    val before = cacheKeys().map(_._1).toSet
+    // a fresh literal makes every class of the plan new to the cache; the
+    // aggregate's stages run from AQE's pool and the build side from the
+    // broadcast pool, which must carry the task threads' loader too
+    val k = System.nanoTime()
+    val sums = spark.range(0, 1000, 1, 4)
+      .select((col("id") % 17).as("g"), (col("id") * lit(k)).as("v"))
+      .groupBy("g").agg(sum("v").as("s"))
+    val small = spark.range(17).select(col("id").as("g"), (col("id") + lit(k)).as("w"))
+    assert(sums.join(broadcast(small), "g").collect().length === 17)
+    val keys = cacheKeys()
+    val fresh = keys.map(_._1).toSet -- before
+    assert(fresh.nonEmpty)
+    val twice = keys.filter(kv => fresh(kv._1)).groupBy(_._1)
+      .collect { case (code, ls) if ls.map(_._2).distinct.size > 1 => code }
+    assert(twice.isEmpty, s"${twice.size} of ${fresh.size} new classes compiled under two loaders")
   }
 
   test("the counter sees a class no earlier plan generated") {

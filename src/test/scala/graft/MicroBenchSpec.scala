@@ -75,6 +75,7 @@ class MicroBenchSpec extends SparkSpec {
       val code = Console.withOut(out)(MicroBench.run(Seq("1", "g02_khop", "no_such_query")))
       assert(code == 2)
       assert(MicroBench.run(Seq("zero", "g02_khop")) == 2)
+      assert(MicroBench.run(Seq("--no-drain", "1", "no_such_query")) == 2)
       assert(GraftSparkInternals.drainListenerBus(sc, 10000L), "listener bus did not drain")
     } finally sc.removeSparkListener(listener)
     assert(jobs.get == 0, "a query ran before the names were checked")
