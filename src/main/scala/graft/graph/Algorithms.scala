@@ -8,17 +8,16 @@ import graft.Gates
 
 /** Convergent graph algorithms (SURVEY.md §2 G4/G7/G9/G10, §3.2 path 2).
   *
-  * Two tiers, by design:
-  *  - GraphX implementations (this file) — the scale path: Pregel supersteps
-  *    with shuffle-based aggregateMessages, for algorithms whose iteration
-  *    count is data-dependent (convergence), matching the reference's
-  *    NetworkX analysis path (/root/reference/README.md:28) distributed.
-  *  - DataFrame "bounded twins" (in GraphQueries) — fixed-step unrollable
-  *    variants whose semantics a DuckDB recursive/unrolled CTE can mirror
-  *    exactly, used for the graded oracle checks. Expressing graph iteration
-  *    as dataflow join/agg steps follows the Pregel-on-dataflow line of work
-  *    (cf. "Pregelix: Big(ger) Graph Analytics on a Dataflow Engine",
-  *    VLDB 2014 — PAPERS.md).
+  * Every iteration here is a DataFrame step on [[Traversals.levels]], the
+  * one round loop: label propagation, Bellman–Ford (bounded or to a
+  * fixpoint), PageRank, HITS, the k-core and k-truss peels, star CC and
+  * the distributed Brandes passes. A round is a join/aggregate step, one
+  * plan per superstep, after "Pregelix: Big(ger) Graph Analytics on a
+  * Dataflow Engine" (VLDB 2014 — PAPERS.md); its semantics a DuckDB
+  * unrolled CTE can mirror exactly, which the graded oracle checks use.
+  * Audit-sized inputs take in-process tiers (union-find, Tarjan, local
+  * Brandes) behind measured gates ([[graft.Gates]]). GraphX remains only
+  * in cc's middle tier, scc's scale tier and the cross-check twins below.
   */
 object Algorithms {
 
@@ -36,9 +35,9 @@ object Algorithms {
     // edge/vertex partitions for the whole Pregel run, and at rehearsal
     // scale (g07's 166M contracted edges at sf12.8) memory-only caching
     // OOM'd a 32g JVM outright (round 10, measured) where disk-spillable
-    // partitions survive. Same level PropertyGraph.toGraphX always used;
-    // graded sfs fit in memory either way, so plans and timings there are
-    // unchanged — the level only matters under pressure.
+    // partitions survive. Graded sfs fit in memory either way, so plans
+    // and timings there are unchanged — the level only matters under
+    // pressure.
     val g = Graph.fromEdges(erdd, 0,
       edgeStorageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       vertexStorageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -160,20 +159,16 @@ object Algorithms {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     val sym = Traversals.symmetrize(edges).distinct().transform(Materialize.apply)
-    var lab = sym.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-    for (_ <- 1 to rounds) {
-      val counts = sym
-        .join(lab.withColumnRenamed("v", "src"), "src")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("v")).orderBy(col("c").desc, col("label").asc)
+    val lab0 = sym.select(col("src").as("v")).distinct().withColumn("label", col("v"))
+    Traversals.levels((lab0, Traversals.Unmeasured), rounds) { (lab, _, _) =>
+      sym.join(lab.withColumnRenamed("v", "src"), "src")
         .groupBy(col("dst").as("v"), col("label"))
         .agg(count(lit(1)).as("c"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("v")).orderBy(col("c").desc, col("label").asc)
-      lab = counts.withColumn("rn", row_number().over(w))
+        .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).select(col("v"), col("label"))
-        .transform(Materialize.apply)
-    }
-    lab.select(col("v").as("id"), col("label").as("community"))
+    }.last._1.select(col("v").as("id"), col("label").as("community"))
   }
 
   /** INCREMENTAL connected components — maintain a standing CC labeling
@@ -419,11 +414,11 @@ object Algorithms {
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id"))).distinct()
       .transform(Materialize.apply)
-    var (e, eCount) = Materialize.counted(sym0.filter(col("src") > col("dst"))
-      .select(col("src").as("u"), col("dst").as("v")).distinct())
-    var converged = false
-    var round = 0
-    while (round < maxRounds && !converged) {
+    // fixpoint test: equal-size sets with empty one-way difference are equal
+    val e = Traversals.levels(Materialize.counted(sym0.filter(col("src") > col("dst"))
+        .select(col("src").as("u"), col("dst").as("v")).distinct()), maxRounds,
+        (prev, last) => last._2 == prev._2 && last._1.except(prev._1).isEmpty,
+        fixpoint = true) { (e, _, _) =>
       val s = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       val minsL = s.groupBy("u").agg(min(col("v")).as("mv"))
         .select(col("u"), least(col("mv"), col("u")).as("m"))
@@ -433,19 +428,17 @@ object Algorithms {
       // large emits (bigger node, neighborhood min): already canonical u > v
       val minsS = large.groupBy("u").agg(min(col("v")).as("m"))
       val withM = large.join(minsS, "u")
-      val (small, smallCount) = Materialize.counted(withM.select(col("v").as("u"), col("m").as("v"))
+      withM.select(col("v").as("u"), col("m").as("v"))
         .unionByName(withM.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct())
-      // fixpoint test: equal-size sets with empty one-way difference are equal
-      converged = smallCount == eCount && small.except(e).isEmpty
-      e = small
-      eCount = smallCount
-      round += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxRounds rounds")
+        .filter(col("u") =!= col("v")).distinct()
+    }.last._1
+    // typed rows: ids are never null, and the schema says so, as the other
+    // tiers' tuple-built outputs do
+    val spark = edges.sparkSession
+    import spark.implicits._
     nodes.join(e, col("id") === col("u"), "left_outer")
       .select(col("id"), coalesce(col("v"), col("id")).as("component"))
+      .as[(Long, Long)].map(identity).toDF("id", "component")
   }
 
   /** SCC with tier auto-selection: exact local Tarjan below the
@@ -540,21 +533,6 @@ object Algorithms {
       .map { case (id, pr) => (id, pr) }.toDF("id", "pr")
   }
 
-  /** Weighted single-source shortest paths via Pregel min-plus. */
-  def ssspGraphX(edges: DataFrame, source: Long): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraph(edges).mapVertices((id, _) =>
-      if (id == source) 0.0 else Double.PositiveInfinity)
-    g.pregel(Double.PositiveInfinity)(
-        (_, d, msg) => math.min(d, msg),
-        t => if (t.srcAttr + t.attr < t.dstAttr) Iterator((t.dstId, t.srcAttr + t.attr))
-             else Iterator.empty,
-        (a, b) => math.min(a, b))
-      .vertices.filter(_._2 < Double.PositiveInfinity)
-      .map { case (id, dist) => (id, dist) }.toDF("id", "dist")
-  }
-
   /** Bounded max-product reachability from `source` via Pregel: vertex attr
     * carries the best walk product so far (source starts at 1.0, others at
     * 0.0), messages relax `srcAttr × weight`, `maxIterations` bounds the
@@ -577,24 +555,53 @@ object Algorithms {
       .map { case (id, p) => (id, p) }.toDF("id", "best_share")
   }
 
-  /** Bounded Bellman-Ford: shortest weighted distance from `source` using
-    * ≤ rounds edges (DataFrame twin of [[ssspGraphX]]; each round is one
-    * relaxation join + min-agg, mirrored by an unrolled CTE).
+  /** Bounded Bellman–Ford: the shortest weighted distance `d` from
+    * `source` to each node `id` over walks of ≤ rounds edges (`src`, `dst`,
+    * `cost`); each round is mirrored by one round of an unrolled CTE.
     */
-  def boundedSssp(edges: DataFrame, source: Long, rounds: Int): DataFrame = {
+  def boundedSssp(edges: DataFrame, source: Long, rounds: Int): DataFrame =
+    bellmanFord(edges, source, rounds, fixpoint = false)
+
+  /** Weighted single-source shortest paths: [[boundedSssp]] run to its
+    * fixpoint, the round where no distance improves (Pregel's "no message
+    * fired"). Positive costs make the fixpoint finite; a graph still
+    * improving after `maxRounds` rounds throws instead of returning a short
+    * answer. GraphAlgosSpec checks it against GraphX's Pregel min-plus.
+    */
+  def sssp(edges: DataFrame, source: Long, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
+    import spark.implicits._
+    // typed rows: a reached node's id and distance are never null, and the
+    // schema says so, as GraphX's vertex table did
+    bellmanFord(edges, source, maxRounds, fixpoint = true)
+      .as[(Long, Double)].map(identity).toDF("id", "d")
+  }
+
+  /** The rounds under [[boundedSssp]] and [[sssp]]. Round i's state is
+    * every reached node's distance `d`, and its count is the set of nodes
+    * whose distance improved in it (`improved`, the active vertices). Only
+    * those relax their out-edges (broadcast under the measured gate, so the
+    * edge table never shuffles), and one min-aggregate over the candidates
+    * and the previous distances gives the next state. That is the same
+    * double a relaxation of every node computes: a node that did not
+    * improve in round i−1 would offer round i only sums it already offered.
+    * An empty improved set is Pregel's "no message fired" stop.
+    */
+  private def bellmanFord(edges: DataFrame, source: Long, rounds: Int,
+                          fixpoint: Boolean): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("cost")).transform(Materialize.apply)
-    var dist = spark.range(1).select(lit(source).as("id"), lit(0.0).as("d"))
-    var i = 0
-    while (i < rounds) {
-      val relaxed = dist.join(e, col("id") === col("src"))
-        .select(col("dst").as("id"), (col("d") + col("cost")).as("d"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("id")).agg(min(col("d")).as("d"))
-        .transform(Materialize.apply)
-      i += 1
-    }
-    dist
+    val none = lit(null).cast("double")
+    val start = e.sparkSession.createDataFrame(Seq((source, 0.0, true))).toDF("id", "d", "improved")
+    Traversals.levels((start, 1L), rounds, fixpoint = fixpoint, active = Some("improved")) {
+      (dist, improved, _) =>
+        Gates.broadcastIf(dist.filter(col("improved")), improved, Gates.broadcastRows)
+          .join(e, col("id") === col("src"))
+          .select(col("dst").as("id"), (col("d") + col("cost")).as("c"), none.as("o"))
+          .unionByName(dist.select(col("id"), none.as("c"), col("d").as("o")))
+          .groupBy("id").agg(min(col("c")).as("c"), min(col("o")).as("o"))
+          .select(col("id"), least(col("c"), col("o")).as("d"),
+            (col("c").isNotNull && (col("o").isNull || col("c") < col("o"))).as("improved"))
+    }.last._1.select(col("id"), col("d"))
   }
 
   /** Weighted PageRank power iteration, fixed step count (DataFrame twin of
@@ -616,19 +623,14 @@ object Algorithms {
                         initPr: org.apache.spark.sql.Column,
                         teleport: org.apache.spark.sql.Column): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("weight")).transform(Materialize.apply)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct().transform(Materialize.apply)
-    var pr = nodes.withColumn("pr", initPr)
-    var i = 0
-    while (i < iters) {
+    val (nodes, n) = Materialize.counted(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct())
+    Traversals.levels((nodes.withColumn("pr", initPr), n), iters) { (pr, _, _) =>
       val msgs = pr.join(e, col("id") === col("src"))
         .groupBy(col("dst")).agg(sum(col("pr") * col("weight")).as("s"))
-      pr = nodes.join(msgs, col("id") === col("dst"), "left_outer")
+      nodes.join(msgs, col("id") === col("dst"), "left_outer")
         .select(col("id"), (teleport + lit(0.85) * coalesce(col("s"), lit(0.0))).as("pr"))
-        .transform(Materialize.apply)
-      i += 1
-    }
-    pr
+    }.last._1
   }
 
   /** Personalized PageRank, bounded power iteration: rank mass teleports to
@@ -656,34 +658,32 @@ object Algorithms {
     */
   def hitsBounded(edges: DataFrame, iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).transform(Materialize.apply)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct().transform(Materialize.apply)
-    // materialize the raw sums BEFORE normalizing: the normalizer reads the
-    // same frame twice (values + scalar total), and the division over a
-    // materialized input is a trivial recompute, so only one pass pays the
-    // join+agg.
-    def normalize1(raw: DataFrame): DataFrame = {
-      val m = Materialize(raw)
-      m.crossJoin(broadcast(m.agg(sum(col("v")).as("norm"))))
-        .select(col("id"), (col("v") / col("norm")).as("v"))
+    val (nodes, n) = Materialize.counted(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct())
+    // A round is one half-step and its level holds the RAW sums: the
+    // normalizer reads them twice (values + scalar total), and the division
+    // over a materialized input is a trivial recompute, so only one pass
+    // pays the join+agg. Odd rounds are authorities, even rounds hubs;
+    // level 0 is the all-ones hub vector, used as it is.
+    val raw = Traversals.levels((nodes.withColumn("v", lit(1.0)), n), 2 * iters) {
+      (prev, _, earlier) =>
+        val (from, to) = if (earlier.size % 2 == 0) ("src", "dst") else ("dst", "src")
+        nodes.join(
+            normalized(prev, earlier.isEmpty).join(e, col("id") === col(from))
+              .groupBy(col(to)).agg(sum(col("v")).as("s")),
+            col("id") === col(to), "left_outer")
+          .select(col("id"), coalesce(col("s"), lit(0.0)).as("v"))
     }
-    var hub = nodes.withColumn("v", lit(1.0))
-    var auth = hub
-    var i = 0
-    while (i < iters) {
-      auth = normalize1(nodes.join(
-          hub.join(e, col("id") === col("src")).groupBy(col("dst")).agg(sum(col("v")).as("s")),
-          col("id") === col("dst"), "left_outer")
-        .select(col("id"), coalesce(col("s"), lit(0.0)).as("v")))
-      hub = normalize1(nodes.join(
-          auth.join(e, col("id") === col("dst")).groupBy(col("src")).agg(sum(col("v")).as("s")),
-          col("id") === col("src"), "left_outer")
-        .select(col("id"), coalesce(col("s"), lit(0.0)).as("v")))
-      i += 1
-    }
-    hub.select(col("id"), col("v").as("hub"))
-      .join(auth.select(col("id"), col("v").as("auth")), Seq("id"))
+    def score(i: Int, name: String) =
+      normalized(raw(i)._1, i == 0).select(col("id"), col("v").as(name))
+    score(raw.size - 1, "hub").join(score(math.max(raw.size - 2, 0), "auth"), Seq("id"))
   }
+
+  /** A HITS level 1-norm normalized; level 0 (`first`) is used as it is. */
+  private def normalized(level: DataFrame, first: Boolean): DataFrame =
+    if (first) level
+    else level.crossJoin(broadcast(level.agg(sum(col("v")).as("norm"))))
+      .select(col("id"), (col("v") / col("norm")).as("v"))
 
   /** Bounded k-core peeling (Seidman 1983, "Network structure and minimum
     * degree"): `rounds` synchronous rounds of "drop every node whose degree
@@ -698,8 +698,9 @@ object Algorithms {
     * semi-restricting joins + one
     * aggregate — all shuffles keyed on the edge endpoints, no broadcast of
     * the (initially node-sized) survivor set, which is the posture that
-    * holds when nodes are billions. Returns survivors with their in-core
-    * degree.
+    * holds when nodes are billions. The rounds stop early at the first one
+    * that keeps every survivor ([[Traversals.Unchanged]]): later rounds
+    * would be no-ops. Returns survivors with their in-core degree.
     */
   def kCoreBounded(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val sym = graft.graph.Traversals.symmetrize(edges).distinct()
@@ -708,12 +709,10 @@ object Algorithms {
       sym.join(s.select(col("v").as("a")), col("src") === col("a"))
         .join(s.select(col("v").as("b")), col("dst") === col("b"))
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-    var s = sym.select(col("src").as("v")).distinct().transform(Materialize.apply)
-    var i = 0
-    while (i < rounds) {
-      s = coreDeg(s).filter(col("deg") >= k).select("v").transform(Materialize.apply)
-      i += 1
-    }
+    val s = Traversals.levels(Materialize.counted(sym.select(col("src").as("v")).distinct()),
+        rounds, Traversals.Unchanged) { (s, _, _) =>
+      coreDeg(s).filter(col("deg") >= k).select("v")
+    }.last._1
     coreDeg(s).select(col("v").as("id"), col("deg"))
   }
 
@@ -727,8 +726,9 @@ object Algorithms {
     * the surviving edge set, so bounded rounds dominate round one (the
     * full graph) at any scale. Bounded rounds may under-converge — pick
     * `rounds` at the calling site so an extra round is a no-op (the graded
-    * g26 calibration and its spec check exactly that). Returns surviving
-    * canonical edges with their in-truss support.
+    * g26 calibration and its spec check exactly that); the rounds stop
+    * early at the first one that keeps every edge, as [[kCoreBounded]]'s
+    * do. Returns surviving canonical edges with their in-truss support.
     */
   def kTrussBounded(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val sym = graft.graph.Traversals.symmetrize(edges).distinct()
@@ -741,13 +741,10 @@ object Algorithms {
         .unionByName(tri.select(col("a").as("src"), col("c").as("dst")))
         .groupBy("src", "dst").agg(count(lit(1)).as("sup"))
     }
-    var ed = sym.filter(col("src") < col("dst")).transform(Materialize.apply)
-    var i = 0
-    while (i < rounds) {
-      ed = ed.join(sup(ed).filter(col("sup") >= k - 2), Seq("src", "dst"))
-        .select("src", "dst").transform(Materialize.apply)
-      i += 1
-    }
+    val ed = Traversals.levels(Materialize.counted(sym.filter(col("src") < col("dst"))),
+        rounds, Traversals.Unchanged) { (ed, _, _) =>
+      ed.join(sup(ed).filter(col("sup") >= k - 2), Seq("src", "dst")).select("src", "dst")
+    }.last._1
     ed.join(sup(ed), Seq("src", "dst"), "left_outer")
       .select(col("src"), col("dst"), coalesce(col("sup"), lit(0L)).as("sup"))
   }
@@ -898,24 +895,21 @@ object Algorithms {
     // forward BFS: level d = (s, v, sigma) for nodes first reached at
     // distance d from source s, sigma = #shortest s→v paths
     val reached = Traversals.levels(Materialize.counted(sources
-      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))), maxDepth)(
+      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))), maxDepth,
+      fixpoint = true)(
       Traversals.bfs(Seq("s", "v"), Gates.betweennessBroadcastRows)(
         _.join(e, col("v") === col("src"))
           .groupBy(col("s"), col("dst"))
           .agg(sum(col("sigma")).as("sigma"))
           .select(col("s"), col("dst").as("v"), col("sigma"))))
-    if (reached.size > maxDepth && reached.last._2 > 0L) throw new IllegalStateException(
-      s"betweennessDistributed exceeded maxDepth=$maxDepth levels")
     val levels = if (reached.size > 1 && reached.last._2 == 0L) reached.init else reached
-    // backward accumulation: deepest level has delta = 0
-    var deltas = levels.last._1.withColumn("delta", lit(0.0))
-    var deltaRows = levels.last._2
-    val acc = scala.collection.mutable.ArrayBuffer(deltas)
-    // stop at level 1: level 0 is only (s, s) rows, which the final
-    // v =!= s filter discards — its accumulation superstep (a full edge
-    // scan + two joins + checkpoint) would be pure wasted work
-    for (d <- (levels.size - 2) to 1 by -1) {
-      val (lvl, lvlRows) = levels(d)
+    // backward accumulation, one round per level from the deepest (delta =
+    // 0) up to level 1: level 0 is only (s, s) rows, which the final v =!= s
+    // filter discards — its accumulation superstep (a full edge scan + two
+    // joins + checkpoint) would be pure wasted work
+    val acc = Traversals.levels((levels.last._1.withColumn("delta", lit(0.0)), levels.last._2),
+        levels.size - 2) { (deltas, deltaRows, earlier) =>
+      val (lvl, lvlRows) = levels(levels.size - 2 - earlier.size)
       val succ = deltas.select(col("s").as("ws"), col("v").as("w"),
         col("sigma").as("sigma_w"), col("delta").as("delta_w"))
       val contrib = gated(lvl, lvlRows)
@@ -926,15 +920,12 @@ object Algorithms {
           .as("delta"))
       // left-outer keeps BFS-DAG leaves (no successor → delta = 0), so the
       // reached row set matches the local tier exactly
-      deltas = lvl.join(contrib, Seq("s", "v"), "left_outer")
+      lvl.join(contrib, Seq("s", "v"), "left_outer")
         .select(col("s"), col("v"), col("sigma"),
           coalesce(col("delta"), lit(0.0)).as("delta"))
-        .transform(Materialize.apply)
-      deltaRows = lvlRows
-      acc += deltas
     }
     // sum dependencies over sources, excluding each source's own row
-    acc.map(_.select(col("s"), col("v"), col("delta")))
+    acc.map(_._1.select(col("s"), col("v"), col("delta")))
       .reduce(_ unionByName _)
       .filter(col("v") =!= col("s"))
       .groupBy(col("v").as("id"))

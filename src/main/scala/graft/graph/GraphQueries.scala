@@ -1161,8 +1161,7 @@ object GraphQueries {
 
     // G4 — shortest path, bounded weighted (Bellman-Ford, 4 relaxation
     // rounds) from user 0 over the strong user graph, cost = 1/multiplicity.
-    // The unbounded GraphX Pregel variant is Algorithms.ssspGraphX (tested
-    // in ScalaTest; convergence loops aren't CTE-mirrorable).
+    // g04b runs the same Algorithms.boundedSssp rounds to their fixpoint.
     E("g04_sssp_bounded", (s, d) => {
       val ce = Ubo.interactedPairs(Tables(s, d)).filter(col("cnt") >= 2)
         .select(col("src"), col("dst"),
@@ -1185,27 +1184,28 @@ object GraphQueries {
              SELECT e.dst, p.d + e.cost FROM d3 p JOIN ce e ON e.src = p.id) GROUP BY id)
       SELECT id, ROUND(d, 6) AS dist FROM d4 ORDER BY id""")),
 
-    // G4b — CONVERGED weighted shortest path (VERDICT r14 #7: the min-plus
-    // Pregel [[Algorithms.ssspGraphX]] was spec-covered but had no graded
-    // oracle row — g04 grades the 4-round BOUNDED relaxation, g59 grades
-    // max-product; this grades full min-plus convergence end to end).
-    // Same cost graph as g04 (1/cnt on the ≥2-interaction edges); Pregel
-    // relaxes until no message fires (positive weights ⇒ finite
-    // fixpoint). ORACLE: Bellman-Ford unrolled to 32 MATERIALIZED rounds
-    // (the g10 unrolled-oracle convention; MATERIALIZED because each
-    // round references its predecessor twice — inlined CTEs would double
-    // per round). 32 is measured headroom, not a guess: the probe
-    // converges in 4 rounds at sf0.01 and 23 at sf0.1 (round-15 DuckDB
-    // sweep), and an under-unrolled oracle would hash-mismatch, not
-    // silently pass. Both engines accumulate each path's sum
-    // prefix-first and min over the identical path set, so the doubles
-    // match bitwise (the g59 argument in min-plus form).
+    // G4b — CONVERGED weighted shortest path: g04 grades the 4-round
+    // BOUNDED relaxation, g59 grades max-product; this grades full min-plus
+    // convergence end to end. Same cost graph as g04 (1/cnt on the
+    // ≥2-interaction edges); [[Algorithms.sssp]] runs g04's Bellman-Ford
+    // rounds until no distance improves (positive weights ⇒ finite
+    // fixpoint) and throws past 40 rounds, the oracle's bound below.
+    // ORACLE: Bellman-Ford unrolled to 40 MATERIALIZED rounds (the g10
+    // unrolled-oracle convention; MATERIALIZED because each round
+    // references its predecessor twice — inlined CTEs would double per
+    // round). 40 is measured headroom, not a guess: the probe converges in
+    // 4 rounds at sf0.01 and 23 at sf0.1 (round-15 DuckDB sweep), and an
+    // under-unrolled oracle would hash-mismatch, not silently pass. Both
+    // engines accumulate each path's sum prefix-first and min over the
+    // identical path set, so the doubles match bitwise (the g59 argument
+    // in min-plus form); GraphAlgosSpec checks the same against GraphX's
+    // Pregel min-plus.
     E("g04b_sssp_weighted", (s, d) => {
       val ce = Ubo.interactedPairs(Tables(s, d)).filter(col("cnt") >= 2)
         .select(col("src"), col("dst"),
-          (lit(1.0) / col("cnt").cast("double")).as("weight"))
-      Algorithms.ssspGraphX(ce, GraphBuilder.UserBase)
-        .select(col("id"), round(col("dist"), 6).as("dist"))
+          (lit(1.0) / col("cnt").cast("double")).as("cost"))
+      Algorithms.sssp(ce, GraphBuilder.UserBase, 40)
+        .select(col("id"), round(col("d"), 6).as("dist"))
         .orderBy("id")
     }, Some({
       // 40 unrolled rounds (measured 23 needed at sf0.1 — 1.7× headroom)
@@ -1844,7 +1844,7 @@ object GraphQueries {
       val e2 = Ubo.interactedPairs(Tables(s, d)).filter(col("cnt") >= 2)
         .select(col("src"), col("dst"))
       val sym = Traversals.symmetrize(e2).distinct().transform(Materialize.apply)
-      val lab = Algorithms.labelPropagation(e2, 3).transform(Materialize.apply)
+      val lab = Algorithms.labelPropagation(e2, 3) // a projection of its last round's checkpoint
       val labeled = sym
         .join(lab.select(col("id").as("src"), col("community").as("la")), "src")
         .join(lab.select(col("id").as("dst"), col("community").as("lb")), "dst")
@@ -2067,7 +2067,7 @@ object GraphQueries {
       val e2 = Ubo.interactedPairs(Tables(s, d)).filter(col("cnt") >= 2)
         .select(col("src"), col("dst"))
       val sym = Traversals.symmetrize(e2).distinct().transform(Materialize.apply)
-      val lab = Algorithms.labelPropagation(e2, 3).transform(Materialize.apply)
+      val lab = Algorithms.labelPropagation(e2, 3) // a projection of its last round's checkpoint
       val labeled = sym
         .join(lab.select(col("id").as("src"), col("community").as("la")), "src")
         .join(lab.select(col("id").as("dst"), col("community").as("lb")), "dst")

@@ -24,11 +24,19 @@ object Materialize {
     * under AQE would add a second job for its single-partition exchange.
     * The reliable-checkpoint deployment keeps the eager form: a reliable
     * checkpoint writes files in its own job regardless.
+    *
+    * With `active`, the count measures only the rows whose boolean column
+    * of that name is true, in the same one job: the active vertices of a
+    * Pregel-style round whose frame also carries the settled ones.
     */
-  def counted(df: DataFrame): (DataFrame, Long) = {
+  def counted(df: DataFrame, active: Option[String] = None): (DataFrame, Long) = {
     val ck =
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
       else df.localCheckpoint(eager = false)
-    (ck, ck.queryExecution.toRdd.count())
+    val rows = ck.queryExecution.toRdd
+    (ck, active.fold(rows.count()) { c =>
+      val i = ck.schema.fieldIndex(c)
+      rows.filter(_.getBoolean(i)).count()
+    })
   }
 }

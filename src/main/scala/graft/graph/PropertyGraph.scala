@@ -1,10 +1,7 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Property graph encoded as two DataFrames — the relational encoding of the
   * reference's Neo4j/Memgraph property-graph model
@@ -20,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * Keeping the graph in DataFrames (rather than RDDs) means every
   * non-iterative graph operator stays inside Catalyst: temporal snapshot
   * filters push down to the parquet scan, label filters prune, joins get
-  * broadcast/AQE treatment. We only drop to GraphX for convergent iterative
-  * algorithms (SURVEY.md §4.3).
+  * broadcast/AQE treatment. Iterative algorithms stay there too, as rounds of
+  * DataFrame steps (Algorithms, SURVEY.md §4.3).
   */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 
@@ -45,19 +42,4 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
   }
 
   def edgesOf(relType: String): DataFrame = edges.filter(col("rel_type") === relType)
-
-  /** Materialize to GraphX for iterative algorithms (PageRank, CC, SSSP, …).
-    * Vertex attr = label; edge attr = weight. Caches both RDDs — callers run
-    * multi-pass algorithms; uncache via `Graph.unpersist()` when done.
-    */
-  def toGraphX: Graph[String, Double] = {
-    val vrdd: RDD[(VertexId, String)] =
-      nodes.select(col("id"), col("label")).rdd.map(r => (r.getLong(0), r.getString(1)))
-    val erdd: RDD[Edge[Double]] =
-      edges.select(col("src"), col("dst"), col("weight")).rdd
-        .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    Graph(vrdd, erdd, defaultVertexAttr = "?",
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-  }
 }

@@ -7,38 +7,65 @@ import org.apache.spark.sql.functions._
 import graft.Gates
 
 /** DataFrame-native bounded traversals (SURVEY.md §2 G2/G5/G14, §4.3) and
-  * the level loop under every graph frontier ([[levels]]).
+  * the round loop under every graph iteration ([[levels]]).
   */
 object Traversals {
 
-  /** One frontier level: its frame and its measured row count. */
+  /** One frontier level or whole-state round: its frame and its measured row count. */
   private[graph] type Level = (DataFrame, Long)
 
   /** The row count of a level 0 the caller leaves lazy (a walk's seed). */
   private[graph] val Unmeasured = -1L
 
-  /** The level loop under every frontier in this package: [[kHop]] and the
-    * ego traversals, [[Algorithms.betweennessDistributed]]'s forward pass,
+  /** A stop rule: `(previous level, last level) => stop`, read after every round. */
+  private[graph] type Stop = (Level, Level) => Boolean
+
+  /** The default rule: stop after the first empty level. Exact for every
+    * loop here: an empty level steps to an empty level. */
+  private[graph] val Empty: Stop = (_, last) => last._2 == 0L
+
+  /** The peel rule, for loops whose every level is a subset of the one
+    * before it: an equal row count then means an equal set, and every
+    * later round would return it unchanged. */
+  private[graph] val Unchanged: Stop = (prev, last) => last._2 == 0L || last._2 == prev._2
+
+  /** The round loop under every iteration in this package. Frontier loops:
+    * [[kHop]] and the ego traversals, [[Algorithms.betweennessDistributed]],
     * [[Algorithms.harmonicKHop]], [[Ubo.strongestChain]] and [[simplePaths]].
-    * Spark's DataFrame API has no recursion operator, so a bounded traversal
-    * is a driver-side loop of joins.
+    * Whole-state loops, which read only the last level: label propagation,
+    * Bellman–Ford, PageRank, HITS, the k-core and k-truss peels and star
+    * CC. Spark's DataFrame API has no recursion operator, so an iteration is
+    * a driver-side loop of joins; *Pregelix* (VLDB 2014) runs each
+    * vertex-centric superstep as such a dataflow step.
     *
     * Level i (1 ≤ i ≤ maxLevels) is `step(level i−1, its row count, levels
-    * 0..i−2)`, materialized and counted in ONE [[Materialize.counted]] job.
+    * 0..i−2)`, materialized and counted in ONE [[Materialize.counted]] job;
+    * with `active`, a level's count is its rows where that boolean column
+    * is true (a Pregel round's active vertices).
     * The checkpoint truncates lineage, so level k does not re-derive levels
     * 1..k−1 (the classic failure mode of iterative DataFrame code, SURVEY.md
-    * §7.3), and the count feeds the next step's gates. Level 0 is the
-    * caller's: counted when a step gates on it, or [[Unmeasured]] when the
-    * caller leaves it lazy. A level is computed from the one before it
-    * alone, so the first empty level ends the loop: no job runs past it.
+    * §7.3), and the count feeds the next step's gates and the stop rule.
+    * Level 0 is the caller's: counted when a step gates on it, or
+    * [[Unmeasured]] when the caller leaves it lazy. An empty level 0 runs
+    * no round; after each round `stop` decides ([[Empty]] by default,
+    * [[Unchanged]] for peels), and no job runs past the round it stops.
+    * With `fixpoint`, a loop still running after `maxLevels` rounds throws:
+    * the caller asked for a fixpoint, never a short answer.
     *
-    * Returns level 0 and every level computed, the empty last one included.
+    * Returns level 0 and every level computed, the last one included. A
+    * whole-state caller keeps only the last frame, so the earlier
+    * checkpoints become collectable when the loop returns.
     */
-  private[graph] def levels(level0: Level, maxLevels: Int)
+  private[graph] def levels(level0: Level, maxLevels: Int, stop: Stop = Empty,
+                            fixpoint: Boolean = false, active: Option[String] = None)
                            (step: (DataFrame, Long, Seq[Level]) => DataFrame): Seq[Level] = {
     var out = Vector(level0)
-    while (out.size <= maxLevels && out.last._2 != 0L)
-      out :+= Materialize.counted(step(out.last._1, out.last._2, out.init))
+    var done = level0._2 == 0L
+    while (!done && out.size <= maxLevels) {
+      out :+= Materialize.counted(step(out.last._1, out.last._2, out.init), active)
+      done = stop(out(out.size - 2), out.last)
+    }
+    if (fixpoint && !done) throw new IllegalStateException(s"no fixpoint in $maxLevels rounds")
     out
   }
 
@@ -266,9 +293,9 @@ object Traversals {
     * Pairs beyond 2·radius report dist −1 and path '-'.
     */
   def connectionPaths(edges: DataFrame, pairs: DataFrame, radius: Int): DataFrame = {
-    val m = egoMembersParents(edges, endpoints(pairs, "seed", Nil), radius)
-      .transform(Materialize.apply) // reused: both meet sides + 2·radius backtracks
-    var cur = shortestMeets(pairs, m, Nil)
+    // reused: both meet sides + 2·radius backtracks
+    val (m, rows) = Materialize.counted(egoMembersParents(edges, endpoints(pairs, "seed", Nil), radius))
+    var cur = shortestMeets(pairs, m, rows, Nil)
       .groupBy("s_id", "t_id", "dist")
       .agg(min(col("id")).as("meet"))
       .select(col("s_id"), col("t_id"), col("dist"),
@@ -325,9 +352,9 @@ object Traversals {
     */
   def connectionDistance(edges: DataFrame, pairs: DataFrame, radius: Int): DataFrame = {
     val k = asOfKey(pairs)
-    val m = egoMembers(edges, endpoints(pairs, "seed", k), radius)
-      .transform(Materialize.apply) // reused as both cone sides of the meet
-    val best = shortestMeets(pairs, m, k)
+    // reused as both cone sides of the meet
+    val (m, rows) = Materialize.counted(egoMembers(edges, endpoints(pairs, "seed", k), radius))
+    val best = shortestMeets(pairs, m, rows, k)
       .groupBy("s_id", ("t_id" +: k) :+ "dist": _*)
       .agg(count(lit(1)).as("n_meet"), min(col("id")).as("meet_min"))
     pairs.join(best, Seq("s_id", "t_id") ++ k, "left")
@@ -342,16 +369,22 @@ object Traversals {
     pairs.select(col("s_id").as(as) +: k.map(col): _*)
       .unionByName(pairs.select(col("t_id").as(as) +: k.map(col): _*)).distinct()
 
-  /** Meet nodes at each pair's least total depth: (s_id, t_id, k…, id, tot, dist). */
-  private def shortestMeets(pairs: DataFrame, m: DataFrame, k: Seq[String]): DataFrame = pairs
-    .join(m.select((col("seed").as("s_id") +: k.map(col)) ++
-      Seq(col("id"), col("depth").as("df")): _*), "s_id" +: k)
-    .join(m.select((col("seed").as("t_id") +: k.map(col)) ++
-      Seq(col("id"), col("depth").as("db")): _*), ("t_id" +: k) :+ "id")
-    .select((Seq(col("s_id"), col("t_id")) ++ k.map(col)) ++
-      Seq(col("id"), (col("df") + col("db")).as("tot")): _*)
-    .withColumn("dist", min(col("tot")).over(Window.partitionBy("s_id", "t_id" +: k: _*)))
-    .filter(col("tot") === col("dist"))
+  /** Meet nodes at each pair's least total depth: (s_id, t_id, k…, id, tot, dist).
+    * The member table `m` (`rows` rows) is checkpointed, so AQE has no
+    * stats for it: left to AQE, whether a meet join turns into a broadcast
+    * depends on which of its shuffle stages finishes first, and the plan and
+    * its job count vary between runs. The measured gate fixes the plan. */
+  private def shortestMeets(pairs: DataFrame, m: DataFrame, rows: Long, k: Seq[String]): DataFrame = {
+    def side(end: String, depth: String) = Gates.broadcastIf(
+      m.select((col("seed").as(end) +: k.map(col)) ++ Seq(col("id"), col("depth").as(depth)): _*),
+      rows, Gates.broadcastRows)
+    pairs.join(side("s_id", "df"), "s_id" +: k)
+      .join(side("t_id", "db"), ("t_id" +: k) :+ "id")
+      .select((Seq(col("s_id"), col("t_id")) ++ k.map(col)) ++
+        Seq(col("id"), (col("df") + col("db")).as("tot")): _*)
+      .withColumn("dist", min(col("tot")).over(Window.partitionBy("s_id", "t_id" +: k: _*)))
+      .filter(col("tot") === col("dist"))
+  }
 
   /** Batched s–t STRONGEST connection via bidirectional meet-in-the-middle
     * on MAX-PRODUCT: for every (s_id, t_id) pair, the maximum-product chain

@@ -27,13 +27,6 @@ object EventOps {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("win_start"), col("event_type"), col("cnt"))
 
-  /** T2 — sliding 1h/15min counts. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("n_users"))
-      .select(col("window.start").as("win_start"), col("cnt"), col("n_users"))
-
   /** T3 — per-user session windows with a 30-minute gap. */
   def sessionize(events: DataFrame): DataFrame =
     events.withWatermark("ts", "10 minutes")

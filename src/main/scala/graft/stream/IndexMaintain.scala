@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.text.{IvfIndex, LshIndex, Pq}
+import graft.text.{IvfIndex, LshIndex}
 
 /** Streaming maintenance of the TEXT indexes (VERDICT r15 #6 — the
   * t18/CcMaintain `foreachBatch` pattern applied to the standing dedup /
@@ -17,9 +17,7 @@ import graft.text.{IvfIndex, LshIndex, Pq}
   *     shards),
   *   - [[IvfIndex.appendTo]] / [[IvfIndex.removeFrom]] for the vector
   *     store (assign against the standing centroids; bucket-local
-  *     erasure),
-  *   - [[Pq.encodeTo]] / [[Pq.removeFrom]] for the serving code table
-  *     (encode against the FIXED codebooks; shard-local erasure).
+  *     erasure).
   *
   * WITHIN-BATCH ORDER: erasures apply FIRST, then arrivals — so a doc id
   * that is erased and re-ingested in the SAME micro-batch lands in its
@@ -58,13 +56,6 @@ object IndexMaintain {
   def applyVecBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit =
     applySigned(batch, "vec_id", "embedding")(
       IvfIndex.removeFrom(spark, dir, _), IvfIndex.appendTo(spark, dir, _))
-
-  /** Fold one signed micro-batch of vectors into a persisted [[Pq]] code
-    * table. Same batch shape as [[applyVecBatch]] — a deployment that
-    * serves IVF-PQ runs both against the same feed. */
-  def applyCodeBatch(spark: SparkSession, dir: String, batch: DataFrame): Unit =
-    applySigned(batch, "vec_id", "embedding")(
-      Pq.removeFrom(spark, dir, _), Pq.encodeTo(spark, dir, _))
 
   /** The signed-batch fold under every index: the erased ids go to
     * `remove`, then the arrivals' (id, payload) to `append`, each leg only

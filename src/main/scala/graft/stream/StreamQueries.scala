@@ -37,8 +37,7 @@ object StreamQueries {
              CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       FROM events GROUP BY 1, 2 ORDER BY win_start_s, event_type""")),
 
-    // T2 — sliding 1h/15min windows: each event lands in 4 windows
-    // (batch twin of EventOps.slidingCounts).
+    // T2 — sliding 1h/15min windows: each event lands in 4 windows.
     E("t02_sliding_window", (s, d) => {
       Tables(s, d).events
         .groupBy(window(col("ts"), "1 hour", "15 minutes"))

@@ -1398,12 +1398,12 @@ object LlmQueries {
     // side of each pair independently). Pairs here are the exact 3-gram
     // Jaccard join (l03's ground-truth generator); at 100 TB the pair
     // source is the MinHash-LSH candidate set (l02) and the CC step is the
-    // same tiered Algorithms.connectedComponents — candidates are sparse,
-    // so the cluster graph is tiny relative to the corpus.
+    // same tiered Algorithms.cc — candidates are sparse, so the cluster
+    // graph is tiny relative to the corpus.
     E("l16_dedup_clusters", (s, d) => {
       val pairs = ngramJaccardPairs(s, d)
         .select(col("da").as("src"), col("db").as("dst"))
-      graft.graph.Algorithms.connectedComponents(pairs)
+      graft.graph.Algorithms.cc(pairs)
         .groupBy(col("component").as("canonical_doc"))
         .agg(count(lit(1)).as("cluster_size"),
              array_join(transform(sort_array(collect_list(col("id"))), x => x.cast("string")), ",")
@@ -1427,7 +1427,7 @@ object LlmQueries {
     E("l20_dedup_apply", (s, d) => {
       val pairs = ngramJaccardPairs(s, d)
         .select(col("da").as("src"), col("db").as("dst"))
-      val drop = graft.graph.Algorithms.connectedComponents(pairs)
+      val drop = graft.graph.Algorithms.cc(pairs)
         .filter(col("id") =!= col("component"))
         .select(col("id").as("doc_id"))
       Tables(s, d).documents.select(col("doc_id"))

@@ -355,14 +355,46 @@ class AlgorithmsSpec extends SparkSpec {
     assert(local === forced, "local Tarjan tier and GraphX tier must agree")
   }
 
+  /** The GraphX oracle for [[Algorithms.boundedSssp]] and [[Algorithms.sssp]]:
+    * weighted single-source shortest paths as Pregel min-plus, relaxing
+    * until no message fires. Edges (src, dst, weight); returns (id, dist). */
+  private def ssspGraphX(edges: org.apache.spark.sql.DataFrame, source: Long) = {
+    import org.apache.spark.graphx.{Edge, Graph}
+    val g = Graph.fromEdges(edges.select(col("src"), col("dst"), col("weight")).rdd
+        .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2))), 0)
+      .mapVertices((id, _) => if (id == source) 0.0 else Double.PositiveInfinity)
+    g.pregel(Double.PositiveInfinity)(
+        (_, d, msg) => math.min(d, msg),
+        t => if (t.srcAttr + t.attr < t.dstAttr) Iterator((t.dstId, t.srcAttr + t.attr))
+             else Iterator.empty,
+        (a, b) => math.min(a, b))
+      .vertices.filter(_._2 < Double.PositiveInfinity)
+      .toDF("id", "dist")
+  }
+
   test("ssspGraphX equals boundedSssp when rounds cover the diameter") {
     val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 5.0), (3L, 4L, 1.0))
       .toDF("src", "dst", "weight")
-    val viaGraphX = Algorithms.ssspGraphX(e, 1L).as[(Long, Double)].collect().toMap
+    val viaGraphX = ssspGraphX(e, 1L).as[(Long, Double)].collect().toMap
     val viaDf = Algorithms.boundedSssp(e.withColumnRenamed("weight", "cost"), 1L, 4)
       .as[(Long, Double)].collect().toMap
     assert(viaGraphX === Map(1L -> 0.0, 2L -> 1.0, 3L -> 3.0, 4L -> 4.0))
     assert(viaDf === viaGraphX)
+  }
+
+  test("sssp to its fixpoint equals GraphX Pregel min-plus bitwise on the g04b cost graph") {
+    val t = Tables(spark, sfDir)
+    val ce = Ubo.interactedPairs(t).filter(col("cnt") >= 2)
+      .select(col("src"), col("dst"), (lit(1.0) / col("cnt").cast("double")).as("cost"))
+    val got = Algorithms.sssp(ce, GraphBuilder.UserBase, 40).as[(Long, Double)].collect().toMap
+    val gx = ssspGraphX(ce.withColumnRenamed("cost", "weight"), GraphBuilder.UserBase)
+      .as[(Long, Double)].collect().toMap
+    assert(got.size > 1, "the source reaches nothing: the comparison would show nothing")
+    assert(got.keySet === gx.keySet)
+    got.foreach { case (id, d) =>
+      assert(java.lang.Double.doubleToLongBits(d) === java.lang.Double.doubleToLongBits(gx(id)),
+        s"node $id: $d vs ${gx(id)}")
+    }
   }
 
   test("pageRankBounded: sink fed by all nodes ranks highest") {
