@@ -17,7 +17,7 @@ import graft.Gates
   * unrolled CTE can mirror exactly, which the graded oracle checks use.
   * Audit-sized inputs take in-process tiers (union-find, Tarjan, local
   * Brandes) behind measured gates ([[graft.Gates]]). GraphX remains only
-  * in cc's middle tier, scc's scale tier and the cross-check twins below.
+  * in cc's middle tier and scc's scale tier.
   */
 object Algorithms {
 
@@ -25,9 +25,9 @@ object Algorithms {
   // the layout that keeps aggregateMessages shuffles sane on wide clusters
   // (SCALE.md). It costs one full edge re-shuffle up front, so it pays only
   // when the algorithm iterates long enough to amortize it: keep it for
-  // PageRank/SCC/Pregel loops; skip it for fast-converging runs (CC on
+  // SCC's long coloring loops; skip it for fast-converging runs (CC on
   // low-diameter graphs — measured 3.9 s vs 3.0 s at sf0.1 without it).
-  private def toGraph(edges: DataFrame, partition2D: Boolean = true): Graph[Int, Double] = {
+  private def toGraph(edges: DataFrame, partition2D: Boolean): Graph[Int, Double] = {
     val erdd = edges.select(col("src"), col("dst"),
         if (edges.columns.contains("weight")) col("weight") else lit(1.0))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -46,35 +46,21 @@ object Algorithms {
     else g
   }
 
-  /** Neighborhood aggregation via GraphX aggregateMessages (the iterative-
-    * variant machinery SURVEY §2 G15 names): per target vertex, sum and max
-    * of incoming edge weights. Cross-validated against the DataFrame
-    * groupBy twin in AlgorithmsSpec.
-    */
-  def inWeightStats(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    toGraph(edges).aggregateMessages[(Double, Double)](
-        ctx => ctx.sendToDst((ctx.attr, ctx.attr)),
-        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
-      .map { case (id, (s, m)) => (id, s, m) }
-      .toDF("id", "in_weight_sum", "in_weight_max")
-  }
+  // No 2D re-partitioning for CC: it converges in ~diameter supersteps,
+  // too few to amortize the re-shuffle (see toGraph).
+  private val ccPartition2D = false
 
   /** Connected components (undirected semantics): (id, component) where
     * component = min vertex id in the component. "Untangle complex corporate
     * webs" (README.md:4-6) — clusters entities into webs.
     */
-  def connectedComponents(edges: DataFrame, partition2D: Boolean = false): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // components are invariant under edge multiplicity — dedupe first so the
     // multigraph (INTERACTED repeats, per-lineitem edges) doesn't multiply
-    // every Pregel superstep's message volume. partition2D defaults OFF:
-    // CC converges in ~diameter supersteps, too few to amortize the
-    // re-shuffle (see toGraph); enable it for wide-cluster, long-iteration
-    // deployments.
-    toGraph(edges.select(col("src"), col("dst")).distinct(), partition2D)
+    // every Pregel superstep's message volume.
+    toGraph(edges.select(col("src"), col("dst")).distinct(), ccPartition2D)
       .connectedComponents().vertices
       .map { case (id, comp) => (id, comp) }.toDF("id", "component")
   }
@@ -381,16 +367,21 @@ object Algorithms {
       .unionByName(isolated)
   }
 
+  // SCC's coloring loops iterate long enough to amortize the 2D
+  // re-shuffle (see toGraph).
+  private val sccPartition2D = true
+  // Generous headroom, not a budget: GraphX SCC early-exits once every
+  // vertex is colored, so unused iterations cost nothing, while an
+  // under-converged coloring would hash-mismatch the exact closure oracle.
+  private val sccColoringRounds = 50
+
   /** Strongly connected components (directed): nontrivial SCCs ⇒ ownership
     * loops (README.md:15). component = min vertex id in the SCC.
     */
-  // numIter is generous headroom, not a budget: GraphX SCC early-exits once
-  // every vertex is colored, so unused iterations cost nothing, while an
-  // under-converged coloring would hash-mismatch the exact closure oracle.
-  def stronglyConnectedComponents(edges: DataFrame, numIter: Int = 50): DataFrame = {
+  def stronglyConnectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    toGraph(edges).stronglyConnectedComponents(numIter).vertices
+    toGraph(edges, sccPartition2D).stronglyConnectedComponents(sccColoringRounds).vertices
       .map { case (id, comp) => (id, comp) }.toDF("id", "component")
   }
 
@@ -409,14 +400,17 @@ object Algorithms {
     * at each component's min id. Same output contract as
     * [[connectedComponents]]; cross-validated in AlgorithmsSpec.
     */
-  def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 12): DataFrame = {
+  def connectedComponentsStar(edges: DataFrame): DataFrame = {
+    // a bound, not a budget: the O(log² n) rounds stay far below it, and a
+    // labeling still changing at it throws (fixpoint) instead of returning
+    val starRounds = 12
     val sym0 = Traversals.symmetrize(edges).filter(col("src") =!= col("dst")).distinct()
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id"))).distinct()
       .transform(Materialize.apply)
     // fixpoint test: equal-size sets with empty one-way difference are equal
     val e = Traversals.levels(Materialize.counted(sym0.filter(col("src") > col("dst"))
-        .select(col("src").as("u"), col("dst").as("v")).distinct()), maxRounds,
+        .select(col("src").as("u"), col("dst").as("v")).distinct()), starRounds,
         (prev, last) => last._2 == prev._2 && last._1.except(prev._1).isEmpty,
         fixpoint = true) { (e, _, _) =>
       val s = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -523,38 +517,6 @@ object Algorithms {
     spark.createDataFrame(comp.toSeq).toDF("id", "component")
   }
 
-  /** Unnormalized static PageRank, GraphX implementation (uniform out-edge
-    * weights, rank = 0.15 + 0.85·Σ incoming).
-    */
-  def pageRankGraphX(edges: DataFrame, iters: Int, resetProb: Double = 0.15): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    toGraph(edges).staticPageRank(iters, resetProb).vertices
-      .map { case (id, pr) => (id, pr) }.toDF("id", "pr")
-  }
-
-  /** Bounded max-product reachability from `source` via Pregel: vertex attr
-    * carries the best walk product so far (source starts at 1.0, others at
-    * 0.0), messages relax `srcAttr × weight`, `maxIterations` bounds the
-    * walk length — one superstep extends walks by one edge, so k iterations
-    * cover exactly the ≤ k-hop walks. The GraphX cross-check for
-    * [[Ubo.strongestChain]]'s DP values (GraphAlgosSpec): both take the max
-    * over the same walk set and both accumulate each walk's product
-    * prefix-first, so the doubles match bitwise, not just approximately.
-    */
-  def maxProductGraphX(edges: DataFrame, source: Long, maxIters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraph(edges).mapVertices((id, _) => if (id == source) 1.0 else 0.0)
-    g.pregel(0.0, maxIterations = maxIters)(
-        (_, p, msg) => math.max(p, msg),
-        t => if (t.srcAttr * t.attr > t.dstAttr) Iterator((t.dstId, t.srcAttr * t.attr))
-             else Iterator.empty,
-        (a, b) => math.max(a, b))
-      .vertices.filter { case (id, p) => p > 0.0 && id != source }
-      .map { case (id, p) => (id, p) }.toDF("id", "best_share")
-  }
-
   /** Bounded Bellman–Ford: the shortest weighted distance `d` from
     * `source` to each node `id` over walks of ≤ rounds edges (`src`, `dst`,
     * `cost`); each round is mirrored by one round of an unrolled CTE.
@@ -604,8 +566,8 @@ object Algorithms {
     }.last._1.select(col("id"), col("d"))
   }
 
-  /** Weighted PageRank power iteration, fixed step count (DataFrame twin of
-    * [[pageRankGraphX]], generalized to weighted edges):
+  /** Weighted PageRank power iteration, fixed step count (GraphX's static
+    * PageRank generalized to weighted edges; GraphAlgosSpec checks the two):
     * pr_k(v) = 0.15 + 0.85 · Σ_{u→v} pr_{k-1}(u)·w(u,v), pr_0 = 1.
     * Fixed literals 0.15/0.85 keep the arithmetic bit-identical with the SQL
     * mirror (computing 1−0.15 would yield a different double than the 0.85
@@ -695,25 +657,30 @@ object Algorithms {
     * with in-core degree < k — callers claiming "the k-core" must verify
     * convergence (run with rounds and rounds+1 and compare, as the graded
     * g23 calibration and KCoreSpec do). Each round is two
-    * semi-restricting joins + one
-    * aggregate — all shuffles keyed on the edge endpoints, no broadcast of
-    * the (initially node-sized) survivor set, which is the posture that
-    * holds when nodes are billions. The rounds stop early at the first one
-    * that keeps every survivor ([[Traversals.Unchanged]]): later rounds
-    * would be no-ops. Returns survivors with their in-core degree.
+    * semi-restricting joins + one aggregate. The survivor set is broadcast
+    * to both joins while its measured count fits [[Gates.broadcastRows]];
+    * past it (nodes in the billions) both joins shuffle on the edge
+    * endpoints. The survivor sets are RDD-backed with unknown stats, so
+    * without the hint AQE plans a sort-merge join, submits the shuffle
+    * after the first join before the survivor stage reports it small, and
+    * then drops that shuffle for a broadcast join: a wasted job whose
+    * presence depends on which stage finishes first. The rounds stop early
+    * at the first one that keeps every survivor ([[Traversals.Unchanged]]):
+    * later rounds would be no-ops. Returns survivors with their in-core
+    * degree.
     */
   def kCoreBounded(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val sym = graft.graph.Traversals.symmetrize(edges).distinct()
       .transform(Materialize.apply)
-    def coreDeg(s: DataFrame): DataFrame =
-      sym.join(s.select(col("v").as("a")), col("src") === col("a"))
-        .join(s.select(col("v").as("b")), col("dst") === col("b"))
+    def coreDeg(s: DataFrame, rows: Long): DataFrame =
+      sym.join(Gates.broadcastIf(s.select(col("v").as("a")), rows), col("src") === col("a"))
+        .join(Gates.broadcastIf(s.select(col("v").as("b")), rows), col("dst") === col("b"))
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-    val s = Traversals.levels(Materialize.counted(sym.select(col("src").as("v")).distinct()),
-        rounds, Traversals.Unchanged) { (s, _, _) =>
-      coreDeg(s).filter(col("deg") >= k).select("v")
-    }.last._1
-    coreDeg(s).select(col("v").as("id"), col("deg"))
+    val (s, rows) = Traversals.levels(Materialize.counted(sym.select(col("src").as("v")).distinct()),
+        rounds, Traversals.Unchanged) { (s, rows, _) =>
+      coreDeg(s, rows).filter(col("deg") >= k).select("v")
+    }.last
+    coreDeg(s, rows).select(col("v").as("id"), col("deg"))
   }
 
   /** Bounded k-truss peel (Cohen 2008, "Trusses: cohesive subgraphs for
@@ -797,14 +764,13 @@ object Algorithms {
     * cross-validates the tiers and checks both against an independent
     * pair-dependency reimplementation.
     */
-  def betweennessSampled(edges: DataFrame, nSources: Int,
-                         maxDepth: Int = 128): DataFrame = {
+  def betweennessSampled(edges: DataFrame, nSources: Int): DataFrame = {
     val (distinct, n) = Materialize.counted(edges.select(col("src"), col("dst")).distinct())
     // the gate already deduped + checkpointed — the tiers must not repeat
     // that shuffle on the largest dataset in the job (prepped = true)
     if (Gates.fits(distinct.sparkSession, n, Gates.localEdges))
       betweennessLocal(distinct, nSources)
-    else betweennessDistributed(distinct, nSources, maxDepth, prepped = true)
+    else betweennessDistributed(distinct, nSources, prepped = true)
   }
 
   /** In-process Brandes tier (see [[betweennessSampled]] for the contract):
@@ -851,6 +817,11 @@ object Algorithms {
       .toDF("id", "betweenness")
   }
 
+  // BFS depth bound of the distributed forward pass: far past the diameter
+  // of any graph it serves, and a BFS still reaching new nodes at it throws
+  // (fixpoint) instead of returning a truncated betweenness
+  private val brandesMaxDepth = 128
+
   /** Distributed Brandes tier (see [[betweennessSampled]]): the same
     * sampled-source betweenness as dataflow, for graphs past the collect
     * gate.
@@ -874,7 +845,6 @@ object Algorithms {
     * driver-side structure.
     */
   def betweennessDistributed(edges: DataFrame, nSources: Int,
-                             maxDepth: Int = 128,
                              prepped: Boolean = false): DataFrame = {
     // the backward pass gates its broadcasts on the levels' counts, as the forward step does
     def gated(df: DataFrame, rows: Long): DataFrame =
@@ -895,7 +865,7 @@ object Algorithms {
     // forward BFS: level d = (s, v, sigma) for nodes first reached at
     // distance d from source s, sigma = #shortest s→v paths
     val reached = Traversals.levels(Materialize.counted(sources
-      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))), maxDepth,
+      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))), brandesMaxDepth,
       fixpoint = true)(
       Traversals.bfs(Seq("s", "v"), Gates.betweennessBroadcastRows)(
         _.join(e, col("v") === col("src"))

@@ -77,9 +77,9 @@ object GraphBuilder {
     * threshold.
     */
   def userTransitionsAtScale(t: Tables): DataFrame = {
-    graft.rel.OrderedLag.withLag1(
+    graft.rel.OrderedLag.withLag(
         t.events.select(col("user_id"), col("ts"), col("event_id")),
-        sortCols = Seq("ts", "event_id"), lagCols = Seq("user_id"))
+        sortCols = Seq("ts", "event_id"), lagCols = Seq("user_id"), k = 1)
       .filter(col("prev_user_id").isNotNull && col("prev_user_id") =!= col("user_id"))
       .select((lit(UserBase) + col("prev_user_id")).as("src"),
               (lit(UserBase) + col("user_id")).as("dst"), col("ts"))

@@ -168,7 +168,7 @@ object Ubo {
     * weights ≤ 1, any walk revisiting a node is dominated by the simple
     * path it contains, so the DP's argmax VALUE equals the simple-path
     * argmax; GraphAlgosSpec cross-checks the values against a GraphX
-    * Pregel max-product run ([[Algorithms.maxProductGraphX]]).
+    * Pregel max-product run.
     *
     * Scale posture: state is capped at |owners| × |nodes| rows per step BY
     * CONSTRUCTION (the rn=1 prune), each step one equi-join on the entity

@@ -104,10 +104,10 @@ object ErScore {
     * (id, label) by fused score, with every component surfaced as the
     * analyst's evidence columns. Candidates per the object doc:
     * prefix-filter pairs at `blockThreshold` on the normalized text ∪
-    * symmetric-delete lev ≤ `levTier` pairs on the raw text.
+    * symmetric-delete lev ≤ 1 pairs on the raw text.
     */
   def screeningQueue(registry: DataFrame, catalog: DataFrame,
-                     blockThreshold: Double, levTier: Int = 1, topK: Int = 3): DataFrame = {
+                     blockThreshold: Double, topK: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(registry.sparkSession)
     // reused: 2 blockers + rescoring
     val (reg, nReg) = Materialize.counted(registry.select(col("id"), col("raw"), col("norm")))
@@ -117,7 +117,7 @@ object ErScore {
       .select(col("id_l"), col("id_r"))
     val candB = FuzzyJoin.joinLev(
         reg.select(col("id"), col("raw").as("name")),
-        cat.select(col("id"), col("label").as("name")), levTier)
+        cat.select(col("id"), col("label").as("name")), maxDist = 1)
       .select(col("id_l"), col("id_r"))
     val scored = candA.unionByName(candB).distinct()
       .join(Gates.broadcastIf(reg.select(col("id").as("id_l"), col("raw").as("registry_label"),

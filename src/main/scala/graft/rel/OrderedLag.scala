@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.StructType
   * per partition to the driver (≤ P·k tiny tuples), then a second
   * partition-parallel pass pairs each row with the row k positions earlier,
   * seeding every partition with the trailing k rows of the partitions
-  * before it. Two jobs, all heavy work partition-parallel. At 100 TB this
+  * before it. Two jobs, all heavy work partition-parallel, over the
+  * session's `spark.sql.shuffle.partitions` ranges. At 100 TB this
   * is the standard "sessionize a total order" pattern; the
   * single-partition window form stays correct but serializes the feed
   * through one core. `lead` is lag over the reversed sort order.
@@ -26,18 +27,10 @@ import org.apache.spark.sql.types.StructType
   * shuffle output).
   */
 object OrderedLag {
-  def withLag1(df: DataFrame, sortCols: Seq[String], lagCols: Seq[String],
-               numPartitions: Int = 0): DataFrame =
-    withLag(df, sortCols, lagCols, 1, numPartitions)
-
   def withLag(df: DataFrame, sortCols: Seq[String], lagCols: Seq[String],
-              k: Int, numPartitions: Int = 0): DataFrame =
-    run(df, sortCols, descending = false, lagCols, k, numPartitions,
+              k: Int): DataFrame =
+    run(df, sortCols, descending = false, lagCols, k,
         if (k == 1) "prev_" else s"prev${k}_")
-
-  def withLead1(df: DataFrame, sortCols: Seq[String], leadCols: Seq[String],
-                numPartitions: Int = 0): DataFrame =
-    withLead(df, sortCols, leadCols, 1, numPartitions)
 
   /** `lead(c, k) OVER (ORDER BY sortCols)` — exactly [[withLag]] run over
     * the REVERSED total order (lead in an order is lag in its reverse), so
@@ -45,8 +38,8 @@ object OrderedLag {
     * Output columns are `next_<c>` / `next<k>_<c>`.
     */
   def withLead(df: DataFrame, sortCols: Seq[String], leadCols: Seq[String],
-               k: Int, numPartitions: Int = 0): DataFrame =
-    run(df, sortCols, descending = true, leadCols, k, numPartitions,
+               k: Int): DataFrame =
+    run(df, sortCols, descending = true, leadCols, k,
         if (k == 1) "next_" else s"next${k}_")
 
   /** Running MAX of a LONG column over all STRICTLY-PRIOR rows of a total
@@ -63,10 +56,9 @@ object OrderedLag {
     * is null still SEES the max of the prior non-null rows.
     */
   def withRunningMax(df: DataFrame, sortCols: Seq[String], valueCol: String,
-                     outCol: String, numPartitions: Int = 0): DataFrame = {
+                     outCol: String): DataFrame = {
     val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
+    val p = spark.sessionState.conf.numShufflePartitions
     val sortExprs = sortCols.map(col(_).asc)
     val sorted = df
       .repartitionByRange(p, sortExprs: _*)
@@ -109,12 +101,10 @@ object OrderedLag {
   }
 
   private def run(df: DataFrame, sortCols: Seq[String], descending: Boolean,
-                  lagCols: Seq[String], k: Int, numPartitions: Int,
-                  prefix: String): DataFrame = {
+                  lagCols: Seq[String], k: Int, prefix: String): DataFrame = {
     require(k >= 1, s"lag/lead offset must be >= 1, got $k")
     val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
+    val p = spark.sessionState.conf.numShufflePartitions
     val sortExprs = sortCols.map(c => if (descending) col(c).desc else col(c).asc)
     val sorted = df
       .repartitionByRange(p, sortExprs: _*)

@@ -62,20 +62,19 @@ object GraphImport {
          xpath_string(frag, lit(s"$elem/data[@key='$key']")))
       .otherwise(deflt)
 
-  /** (…keyCols, id LONG, label, name) — the nodes of each GraphML doc in
-    * `docCol`, one row per `<node>` (including self-closing ones). */
-  def graphmlNodes(docs: DataFrame, docCol: String = "graphml",
-                   keyCols: Seq[String] = Seq("seed")): DataFrame = {
-    val d = col(docCol)
+  /** (seed, id LONG, label, name) — the nodes of each GraphML doc in the
+    * `graphml` column, one row per `<node>` (including self-closing ones). */
+  def graphmlNodes(docs: DataFrame): DataFrame = {
+    val d = col("graphml")
     docs
       .withColumn("_def_label", keyDefault(d, "label"))
       .withColumn("_def_name", keyDefault(d, "name"))
-      .select(keyCols.map(col) ++ Seq(col("_def_label"), col("_def_name"),
-        explode(fragments(d, "node")).as("_frag")): _*)
-      .select(keyCols.map(col) ++ Seq(
+      .select(col("seed"), col("_def_label"), col("_def_name"),
+        explode(fragments(d, "node")).as("_frag"))
+      .select(col("seed"),
         expr("substring(xpath_string(_frag, 'node/@id'), 2)").cast("long").as("id"),
         dataOrDefault(col("_frag"), "node", "label", col("_def_label")).as("label"),
-        dataOrDefault(col("_frag"), "node", "name", col("_def_name")).as("name")): _*)
+        dataOrDefault(col("_frag"), "node", "name", col("_def_name")).as("name"))
   }
 
   private val nodeLinkNodeSchema = org.apache.spark.sql.types.DataType.fromDDL(
@@ -83,43 +82,40 @@ object GraphImport {
   private val nodeLinkEdgeSchema = org.apache.spark.sql.types.DataType.fromDDL(
     "array<struct<src:bigint,dst:bigint,rel_type:string,w_ppm:bigint>>")
 
-  /** (…keyCols, id, label, name) — the nodes of each Cytoscape NODE-LINK
+  /** (seed, id, label, name) — the nodes of each Cytoscape NODE-LINK
     * document (s07's format: a `nodes_json` array column), one row per
     * node. `from_json` with an explicit schema + `explode` — the JSON
     * sibling of [[graphmlNodes]]; the JSON parser owns escape handling
     * the way the XML parser does for GraphML. Documents with an empty
     * array contribute zero rows (explode semantics — the edgeless-doc
     * contract shared with the GraphML path). */
-  def nodeLinkNodes(docs: DataFrame, keyCols: Seq[String] = Seq("seed")): DataFrame =
-    docs.select(keyCols.map(col) :+
-        explode(from_json(col("nodes_json"), nodeLinkNodeSchema)).as("n"): _*)
-      .select(keyCols.map(col) ++ Seq(col("n.id").as("id"),
-        col("n.label").as("label"), col("n.name").as("name")): _*)
+  def nodeLinkNodes(docs: DataFrame): DataFrame =
+    docs.select(col("seed"), explode(from_json(col("nodes_json"), nodeLinkNodeSchema)).as("n"))
+      .select(col("seed"), col("n.id").as("id"),
+        col("n.label").as("label"), col("n.name").as("name"))
 
-  /** (…keyCols, src, dst, rel_type, w_ppm) — the edges of each Cytoscape
+  /** (seed, src, dst, rel_type, w_ppm) — the edges of each Cytoscape
     * node-link document (`edges_json`), one row per edge instance. */
-  def nodeLinkEdges(docs: DataFrame, keyCols: Seq[String] = Seq("seed")): DataFrame =
-    docs.select(keyCols.map(col) :+
-        explode(from_json(col("edges_json"), nodeLinkEdgeSchema)).as("e"): _*)
-      .select(keyCols.map(col) ++ Seq(col("e.src").as("src"), col("e.dst").as("dst"),
-        col("e.rel_type").as("rel_type"), col("e.w_ppm").as("w_ppm")): _*)
+  def nodeLinkEdges(docs: DataFrame): DataFrame =
+    docs.select(col("seed"), explode(from_json(col("edges_json"), nodeLinkEdgeSchema)).as("e"))
+      .select(col("seed"), col("e.src").as("src"), col("e.dst").as("dst"),
+        col("e.rel_type").as("rel_type"), col("e.w_ppm").as("w_ppm"))
 
-  /** (…keyCols, src LONG, dst LONG, rel_type, w_ppm LONG) — the edges of
-    * each GraphML doc in `docCol`, one row per `<edge>`. Same tolerant
-    * semantics as [[graphmlNodes]]: per-fragment reads, `<default>`
-    * fill for omitted keys, null when neither is present. */
-  def graphmlEdges(docs: DataFrame, docCol: String = "graphml",
-                   keyCols: Seq[String] = Seq("seed")): DataFrame = {
-    val d = col(docCol)
+  /** (seed, src LONG, dst LONG, rel_type, w_ppm LONG) — the edges of each
+    * GraphML doc in the `graphml` column, one row per `<edge>`. Same
+    * tolerant semantics as [[graphmlNodes]]: per-fragment reads,
+    * `<default>` fill for omitted keys, null when neither is present. */
+  def graphmlEdges(docs: DataFrame): DataFrame = {
+    val d = col("graphml")
     docs
       .withColumn("_def_rel", keyDefault(d, "rel"))
       .withColumn("_def_w", keyDefault(d, "w"))
-      .select(keyCols.map(col) ++ Seq(col("_def_rel"), col("_def_w"),
-        explode(fragments(d, "edge")).as("_frag")): _*)
-      .select(keyCols.map(col) ++ Seq(
+      .select(col("seed"), col("_def_rel"), col("_def_w"),
+        explode(fragments(d, "edge")).as("_frag"))
+      .select(col("seed"),
         expr("substring(xpath_string(_frag, 'edge/@source'), 2)").cast("long").as("src"),
         expr("substring(xpath_string(_frag, 'edge/@target'), 2)").cast("long").as("dst"),
         dataOrDefault(col("_frag"), "edge", "rel", col("_def_rel")).as("rel_type"),
-        dataOrDefault(col("_frag"), "edge", "w", col("_def_w")).cast("long").as("w_ppm")): _*)
+        dataOrDefault(col("_frag"), "edge", "w", col("_def_w")).cast("long").as("w_ppm"))
   }
 }

@@ -29,7 +29,7 @@ import graft.text.{IvfIndex, LshIndex}
   * batchIds it has already committed.
   *
   * Quantizer/codebook drift from accumulated arrivals stays the periodic
-  * refit's job ([[IvfIndex.refreshSampled]] / a PQ refit + save) — the
+  * refit's job ([[IvfIndex.refreshSampled]] / [[Pq.model]] + [[Pq.save]]) — the
   * ingest path never refits, which is exactly what makes it cheap:
   * per batch the work is ∝ batch (one sketch/assign/encode pass + an
   * erasure's touched-shard rewrites), never ∝ index.

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: tokenize-count at 100 TB is one corpus scan + one
   * per-doc_id partial aggregation; the merge chain runs inside
-  * whole-stage codegen between them. [[applyRef]] is the driver-side
-  * reference implementation BpeSpec checks the dataflow against.
+  * whole-stage codegen between them. BpeSpec checks the dataflow against
+  * a driver-side reference implementation.
   *
   * ALPHABET PRECONDITION (ADVICE r14): the bracketed encoding reserves
   * '(' and ')' as symbol delimiters — a literal paren in a word would
@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * not documentary: [[bracketSpark]]/[[bracketDuck]] STRIP parens from
   * the word before bracketing (identically on both engines — `translate`
   * / nested `replace`), and a word that was nothing but parens brackets
-  * to the empty string (0 tokens). [[applyRef]] applies the same filter,
-  * so the spec's cross-check covers the guard itself.
+  * to the empty string (0 tokens). BpeSpec's reference applies the same
+  * filter, so its cross-check covers the guard itself.
   */
 object Bpe {
 
@@ -203,8 +203,8 @@ object Bpe {
     * round-trips even though each round's aggregation is cheap. This
     * variant fuses a BATCH of merges per round while staying EXACTLY
     * equal to the sequential Sennrich learner (BpeSpec proves it against
-    * [[learnRef]]; the graded l49c therefore reuses the sequential
-    * unrolled oracle). Per round it pulls the top `slice` pairs by the
+    * a driver-side reference learner; the graded l49c therefore reuses
+    * the sequential unrolled oracle). Per round it pulls the top `slice` pairs by the
     * (count desc, a, b) order and accepts a PREFIX, cut by two rules:
     *
     *   1. PREFIX-DISJOINT: stop at the first pair that shares a symbol
@@ -343,78 +343,4 @@ object Bpe {
     (1 to rounds).foldLeft(bracketDuck(wordExpr)) { (e, r) =>
       s"replace($e, p$r, f$r)"
     }
-
-  /** Driver-side reference apply (BpeSpec's independent implementation):
-    * per rule in priority order, fuse left-to-right non-overlapping pair
-    * occurrences — the same function the replace chain computes. Strips
-    * reserved parens first (the alphabet guard, mirrored with
-    * [[bracketSpark]]/[[bracketDuck]]). */
-  def applyRef(word: String): Seq[String] = applyRef(word, merges)
-
-  /** [[applyRef]] against an arbitrary merge table (the learned-table
-    * spec path). */
-  def applyRef(word: String, table: Seq[(String, String)]): Seq[String] = {
-    var syms = word.filterNot(c => c == '(' || c == ')').map(_.toString).toVector
-    for ((a, b) <- table) {
-      val out = Vector.newBuilder[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-          out += (a + b); i += 2
-        } else { out += syms(i); i += 1 }
-      }
-      syms = out.result()
-    }
-    syms
-  }
-
-  /** Driver-side reference LEARNER (BpeSpec's independent Sennrich
-    * `learn_bpe`): per round, count adjacent symbol pairs over the
-    * occurrence-weighted distinct-word segmentations (every adjacent index
-    * pair counts — "aaa" contributes (a,a) twice), fuse the (count desc,
-    * a asc, b asc) max everywhere, repeat. The same function [[learn]]
-    * computes as dataflow. */
-  def learnRef(words: Seq[String], nMerges: Int): Seq[(String, String)] = {
-    val counts = words.iterator
-      .map(_.filterNot(c => c == '(' || c == ')'))
-      .filter(_.nonEmpty)
-      .foldLeft(Map.empty[String, Long]) { (m, w) =>
-        m.updated(w, m.getOrElse(w, 0L) + 1L)
-      }
-    var vocab: Map[Vector[String], Long] = counts.map { case (w, n) =>
-      w.map(_.toString).toVector -> n
-    }
-    val picked = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    var round = 0
-    var done = false
-    while (round < nMerges && !done) {
-      val pairCounts = scala.collection.mutable.Map[(String, String), Long]()
-      vocab.foreach { case (syms, n) =>
-        var i = 0
-        while (i + 1 < syms.length) {
-          val k = (syms(i), syms(i + 1))
-          pairCounts(k) = pairCounts.getOrElse(k, 0L) + n
-          i += 1
-        }
-      }
-      if (pairCounts.isEmpty) done = true
-      else {
-        val (a, b) = pairCounts.toSeq
-          .sortBy { case ((pa, pb), c) => (-c, pa, pb) }.head._1
-        picked += ((a, b))
-        vocab = vocab.map { case (syms, n) =>
-          val out = Vector.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-              out += (a + b); i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          out.result() -> n
-        }.groupMapReduce(_._1)(_._2)(_ + _)
-      }
-      round += 1
-    }
-    picked.toSeq
-  }
 }

@@ -191,20 +191,6 @@ object IvfIndex {
       }.toArray.sortBy(_._1)
   }
 
-  /** The PRODUCTION fit (round 16): [[build]] with the Lloyd update count
-    * as a knob instead of the graded fixed 1 — SCALE.md's planted-mixture
-    * recall curve isolated the composed IVF-PQ stack's remaining loss to
-    * quantizer underfit, and more update rounds (still deterministic:
-    * same lowest-id seeds, same tie orders — see
-    * LlmQueries.lloydModelIterated) are the recovery that touches NO
-    * serving dataflow: probe/append/remove/save are unchanged, only the
-    * centroid table improves. `updates = 1` equals [[build]] exactly
-    * (IvfIndexSpec pins it), which is why the graded queries keep the
-    * 1-update form — their DuckDB oracle mirrors it CTE for CTE. */
-  def buildIterated(embeddings: DataFrame, k: Int, updates: Int): IvfIndex =
-    fitted(embeddings, LlmQueries.lloydModelIterated(
-      embeddings.select(col("vec_id"), col("embedding")), k, updates))
-
   /** Persist: assignments partitioned by bucket (the layout that turns
     * nprobe into partition pruning), centroids as one small file, both
     * schemas in the manifest ([[ShardStore]]).
@@ -294,8 +280,7 @@ object IvfIndex {
     */
   def refreshSampled(spark: SparkSession, dir: String, k: Int,
                      rate: Double,
-                     minPerCluster: Int = minSamplesPerCluster,
-                     updates: Int = 1): IvfRefreshStats = {
+                     minPerCluster: Int = minSamplesPerCluster): IvfRefreshStats = {
     import spark.implicits._
     require(rate > 0.0 && rate <= 1.0, s"sample rate must be in (0,1], got $rate")
     require(minPerCluster >= 1, s"minPerCluster must be >= 1, got $minPerCluster")
@@ -334,12 +319,7 @@ object IvfIndex {
     val (sample, nSample) = graft.graph.Materialize.counted(body.filter(keep))
     require(nSample >= k,
       s"sample too small to fit $k centroids — raise rate (got rate=$rate, effective=$effRate)")
-    // `updates` threads the round-16 production-fit knob into the refit
-    // path it was designed for: the iterated rounds re-read THE SAMPLE
-    // (materialized above), so fit quality scales in rounds while cost
-    // stays ∝ sample — updates=1 is lloydModel exactly (the graded form)
-    val (c1, _) = LlmQueries.lloydModelIterated(
-      sample.select(col("vec_id"), col("embedding")), k, updates)
+    val (c1, _) = LlmQueries.lloydModel(sample.select(col("vec_id"), col("embedding")), k)
     val cents = centroidsOf(c1)
     val probeIdx = IvfIndex(cents, spark.emptyDataFrame)
     val freshAssigned = body.join(probeIdx.probe(body, nprobe = 1), "vec_id")

@@ -276,49 +276,6 @@ object LlmQueries {
     (c1, assign(c1))
   }
 
-  /** [[lloydModel]] generalized to `updates` centroid-update rounds — the
-    * PRODUCTION fit knob (round 16): SCALE.md's planted-mixture recall
-    * measurements isolated the composed IVF-PQ stack's remaining
-    * distortion to the QUANTIZER (the graded 1-update fit underfits; the
-    * serving dataflow is not the ceiling), and this is the recovery —
-    * same deterministic seeding (k lowest ids), same (d2, cid) tie order,
-    * same assign/update bodies, just iterated, with each round's
-    * centroids materialized so the plan stays one round deep instead of
-    * growing 2^rounds. `updates = 1` IS [[lloydModel]] (IvfIndexSpec pins
-    * the equality), so the graded oracle mirror stays single-sourced; the
-    * k-means objective is non-increasing in `updates` by construction
-    * (each assign is a per-point argmin, each update a per-cluster mean).
-    * Cost: one assignment join + one mean per round over the fit set —
-    * production runs it on [[IvfIndex.refreshSampled]]'s sample, so
-    * rounds scale against the sample, never the corpus. */
-  private[text] def lloydModelIterated(emb: DataFrame, k: Int,
-                                       updates: Int): (DataFrame, DataFrame) = {
-    require(updates >= 1, s"updates must be >= 1, got $updates")
-    def byPos(df: DataFrame, idCol: String, vCol: String) = df
-      .select(col(idCol), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col(idCol), col("pos").cast("long").as("pos"),
-              col("v").cast("double").as(vCol))
-    val pts = byPos(emb, "vec_id", "v")
-      .transform(graft.graph.Materialize.apply)
-    val init = byPos(emb.orderBy("vec_id").limit(k)
-      .withColumnRenamed("vec_id", "cid"), "cid", "c")
-    def assign(cent: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
-      pts.join(cent, Seq("pos"))
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(sum((col("v") - col("c")) * (col("v") - col("c"))).as("d2"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).select(col("vec_id"), col("cid"))
-    }
-    def update(asg: DataFrame): DataFrame =
-      asg.join(pts, Seq("vec_id"))
-        .groupBy(col("cid"), col("pos")).agg(avg(col("v")).as("c"))
-    var cent = init
-    for (_ <- 1 to updates)
-      cent = update(assign(cent)).transform(graft.graph.Materialize.apply)
-    (cent, assign(cent))
-  }
-
   private def lloydAssign(emb: DataFrame): DataFrame = lloydModel(emb, 4)._2
 
   /** DuckDB mirror of [[lloydModel]]: CTE chain ending in a2(vec_id, cid)

@@ -65,28 +65,6 @@ object Pq {
     (c1, encode(c1, emb, m))
   }
 
-  /** [[model]] with the Lloyd update count as a knob — the PQ half of the
-    * round-16 production-fit pair (see IvfIndex.buildIterated): same
-    * deterministic seeds and tie orders, `updates` assign/update rounds
-    * with per-round materialization (the plan stays one round deep), the
-    * per-subspace k-means objective non-increasing in `updates`.
-    * `updates = 1` equals [[model]] exactly (PqSpec pins it); the graded
-    * queries keep the 1-update form their oracles mirror. */
-  def modelIterated(emb: DataFrame, m: Int, k: Int,
-                    updates: Int): (DataFrame, DataFrame) = {
-    require(updates >= 1, s"updates must be >= 1, got $updates")
-    val pts = subPts(emb, m, "vec_id", "v")
-    val init = subPts(emb.orderBy("vec_id").limit(k)
-      .withColumnRenamed("vec_id", "cid"), m, "cid", "c")
-    def update(asg: DataFrame): DataFrame =
-      asg.join(pts, Seq("vec_id", "sub"))
-        .groupBy(col("sub"), col("cid"), col("pos")).agg(avg(col("v")).as("c"))
-    var cent = init
-    for (_ <- 1 to updates)
-      cent = update(encode(cent, emb, m)).transform(graft.graph.Materialize.apply)
-    (cent, encode(cent, emb, m))
-  }
-
   /** Encode vectors against a FIXED codebook — the assignment half of the
     * quantizer as a standalone function of (codebook, vectors): per
     * (vector, subspace) the squared-euclidean argmin over the k codes,

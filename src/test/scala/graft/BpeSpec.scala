@@ -12,26 +12,26 @@ class BpeSpec extends SparkSpec {
   import spark.implicits._
 
   test("hand-verified tokenizations, including multi-step merged-symbol builds") {
-    assert(Bpe.applyRef("spark") === Seq("spark"))   // s+p, sp+ar, spar+k
-    assert(Bpe.applyRef("join") === Seq("join"))     // j+o, jo+in
-    assert(Bpe.applyRef("batch") === Seq("batch"))   // four-step build
-    assert(Bpe.applyRef("window") === Seq("win", "d", "ow"))
-    assert(Bpe.applyRef("filter") === Seq("fil", "t", "er"))
-    assert(Bpe.applyRef("stream") === Seq("str", "e", "a", "m"))
-    assert(Bpe.applyRef("sparrow") === Seq("spar", "row"))
-    assert(Bpe.applyRef("x") === Seq("x"))
-    assert(Bpe.applyRef("") === Seq.empty)
+    assert(BpeRef.applyRef("spark") === Seq("spark"))   // s+p, sp+ar, spar+k
+    assert(BpeRef.applyRef("join") === Seq("join"))     // j+o, jo+in
+    assert(BpeRef.applyRef("batch") === Seq("batch"))   // four-step build
+    assert(BpeRef.applyRef("window") === Seq("win", "d", "ow"))
+    assert(BpeRef.applyRef("filter") === Seq("fil", "t", "er"))
+    assert(BpeRef.applyRef("stream") === Seq("str", "e", "a", "m"))
+    assert(BpeRef.applyRef("sparrow") === Seq("spar", "row"))
+    assert(BpeRef.applyRef("x") === Seq("x"))
+    assert(BpeRef.applyRef("") === Seq.empty)
   }
 
   test("priority order is semantics: an earlier rule consumes symbols a later rule wanted") {
     // (i,n) outranks (i,l): in "inl" the i fuses with n, so (i,l) never
     // fires; in "ilm" no n competes and (i,l) does
-    assert(Bpe.applyRef("inl") === Seq("in", "l"))
-    assert(Bpe.applyRef("ilm") === Seq("il", "m"))
+    assert(BpeRef.applyRef("inl") === Seq("in", "l"))
+    assert(BpeRef.applyRef("ilm") === Seq("il", "m"))
     // left-to-right non-overlap within one rule: "ererer" pairs as (er)(er)(er),
     // "rerere" as r(er)(er)e — the offset shifts which pairs exist
-    assert(Bpe.applyRef("ererer") === Seq("er", "er", "er"))
-    assert(Bpe.applyRef("rerere") === Seq("r", "er", "er", "e"))
+    assert(BpeRef.applyRef("ererer") === Seq("er", "er", "er"))
+    assert(BpeRef.applyRef("rerere") === Seq("r", "er", "er", "e"))
   }
 
   test("the replace-chain expression computes the reference apply, word for word") {
@@ -46,7 +46,7 @@ class BpeSpec extends SparkSpec {
       .as[(String, String, Long)].collect()
     assert(viaExpr.nonEmpty)
     viaExpr.foreach { case (w, m, n) =>
-      val ref = Bpe.applyRef(w)
+      val ref = BpeRef.applyRef(w)
       assert(m === ref.map(s => s"($s)").mkString(""),
         s"'$w': expression chain produced $m, reference ${ref.mkString("|")}")
       assert(n === ref.length.toLong, s"'$w': token count $n != ${ref.length}")
@@ -65,7 +65,7 @@ class BpeSpec extends SparkSpec {
       .map { case (id, text) =>
         val ws = text.split(" ").filter(_.nonEmpty)
         (id, ws.length.toLong, ws.map(_.length.toLong).sum,
-         ws.map(w => Bpe.applyRef(w).length.toLong).sum)
+         ws.map(w => BpeRef.applyRef(w).length.toLong).sum)
       }.sortBy(_._1).toSeq
     assert(got === want)
   }
@@ -81,7 +81,7 @@ class BpeSpec extends SparkSpec {
       .select(col("word"), col("m"), col("n_tok").cast("long"))
       .as[(String, String, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     fixtures.foreach { w =>
-      val ref = Bpe.applyRef(w)
+      val ref = BpeRef.applyRef(w)
       val (m, n) = viaExpr(w)
       assert(m === ref.map(s => s"($s)").mkString(""),
         s"'$w': expression $m, reference ${ref.mkString("|")}")
@@ -99,7 +99,7 @@ class BpeSpec extends SparkSpec {
     // "ab" dominates, then (ab, c) from the abc cluster, then (d, e)
     val words = Seq.fill(8)("abc") ++ Seq.fill(5)("abx") ++ Seq.fill(3)("de") ++ Seq("zq")
     val learned = Bpe.learn(words.toDF("word"), nMerges = 4)
-    val ref = Bpe.learnRef(words, 4)
+    val ref = BpeRef.learnRef(words, 4)
     assert(learned === ref, s"dataflow learn $learned != reference $ref")
     assert(learned.take(2) === Seq("a" -> "b", "ab" -> "c"))
     // applying the learned table agrees between expression chain and
@@ -110,7 +110,7 @@ class BpeSpec extends SparkSpec {
       .select(col("word"), col("m"), col("n_tok"))
       .as[(String, String, Long)].collect()
     viaExpr.foreach { case (w, m, n) =>
-      val r = Bpe.applyRef(w, learned)
+      val r = BpeRef.applyRef(w, learned)
       assert(m === r.map(s => s"($s)").mkString(""), s"'$w': $m vs ${r.mkString("|")}")
       assert(n === r.length.toLong)
     }
@@ -122,14 +122,14 @@ class BpeSpec extends SparkSpec {
       .filter(col("word") =!= "")
     val learned = Bpe.learn(corpus, nMerges = 12)
     val refWords = corpus.as[String].collect().toSeq
-    assert(learned === Bpe.learnRef(refWords, 12))
+    assert(learned === BpeRef.learnRef(refWords, 12))
     assert(learned.nonEmpty)
     // degenerate vocabulary: single characters have no pairs — learn
     // stops early instead of looping or erroring
     assert(Bpe.learn(Seq("a", "b", "a").toDF("word"), nMerges = 5) === Seq.empty)
     // and a fully-mergeable tiny vocab stops when pairs run out
     val tiny = Bpe.learn(Seq("aa").toDF("word"), nMerges = 5)
-    assert(tiny === Bpe.learnRef(Seq("aa"), 5))
+    assert(tiny === BpeRef.learnRef(Seq("aa"), 5))
   }
 
   test("learnBatched equals the sequential Sennrich reference on the corpus (VERDICT r15 #5)") {
@@ -139,7 +139,7 @@ class BpeSpec extends SparkSpec {
     val refWords = corpus.as[String].collect().toSeq
     for (batch <- Seq(1, 4, 16)) {
       assert(Bpe.learnBatched(corpus, nMerges = 24, maxBatch = batch) ===
-        Bpe.learnRef(refWords, 24), s"maxBatch=$batch diverged from sequential")
+        BpeRef.learnRef(refWords, 24), s"maxBatch=$batch diverged from sequential")
     }
   }
 
@@ -155,7 +155,7 @@ class BpeSpec extends SparkSpec {
       Seq.fill(1)("ab") ++     // (a,b) -> 60: the unambiguous first pick
       Seq.fill(58)("cd")       // (c,d)=58
     val df = words.toDF("word")
-    val ref = Bpe.learnRef(words, 4)
+    val ref = BpeRef.learnRef(words, 4)
     // sequential: (a,b) first; then the created (x,ab)=59 overtakes (c,d)=58
     assert(ref.take(3) === Seq(("a", "b"), ("x", "ab"), ("c", "d")))
     for (batch <- Seq(2, 8)) {
@@ -174,7 +174,7 @@ class BpeSpec extends SparkSpec {
       val n = 3 + rnd.nextInt(8)
       val got = Bpe.learnBatched(words.toDF("word"), nMerges = n,
         maxBatch = 1 + rnd.nextInt(8))
-      assert(got === Bpe.learnRef(words, n), s"trial $trial: $words")
+      assert(got === BpeRef.learnRef(words, n), s"trial $trial: $words")
     }
   }
 
@@ -196,5 +196,83 @@ class BpeSpec extends SparkSpec {
       .select(col("word"), Bpe.applyLearned(col("word"), t).as("m"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(toks(reloaded) === toks(learned))
+  }
+}
+
+/** The driver-side BPE references [[BpeSpec]] checks [[Bpe]]'s dataflow
+  * against. */
+object BpeRef {
+  /** Driver-side reference apply: per rule in priority order, fuse
+    * left-to-right non-overlapping pair occurrences — the same function
+    * the replace chain computes. Strips
+    * reserved parens first (the alphabet guard, mirrored with
+    * [[Bpe.bracketSpark]]/[[Bpe.bracketDuck]]). */
+  def applyRef(word: String): Seq[String] = applyRef(word, Bpe.merges)
+
+  /** [[applyRef]] against an arbitrary merge table (the learned-table
+    * spec path). */
+  def applyRef(word: String, table: Seq[(String, String)]): Seq[String] = {
+    var syms = word.filterNot(c => c == '(' || c == ')').map(_.toString).toVector
+    for ((a, b) <- table) {
+      val out = Vector.newBuilder[String]
+      var i = 0
+      while (i < syms.length) {
+        if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+          out += (a + b); i += 2
+        } else { out += syms(i); i += 1 }
+      }
+      syms = out.result()
+    }
+    syms
+  }
+
+  /** Driver-side reference LEARNER (an independent Sennrich
+    * `learn_bpe`): per round, count adjacent symbol pairs over the
+    * occurrence-weighted distinct-word segmentations (every adjacent index
+    * pair counts — "aaa" contributes (a,a) twice), fuse the (count desc,
+    * a asc, b asc) max everywhere, repeat. The same function [[Bpe.learn]]
+    * computes as dataflow. */
+  def learnRef(words: Seq[String], nMerges: Int): Seq[(String, String)] = {
+    val counts = words.iterator
+      .map(_.filterNot(c => c == '(' || c == ')'))
+      .filter(_.nonEmpty)
+      .foldLeft(Map.empty[String, Long]) { (m, w) =>
+        m.updated(w, m.getOrElse(w, 0L) + 1L)
+      }
+    var vocab: Map[Vector[String], Long] = counts.map { case (w, n) =>
+      w.map(_.toString).toVector -> n
+    }
+    val picked = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    var round = 0
+    var done = false
+    while (round < nMerges && !done) {
+      val pairCounts = scala.collection.mutable.Map[(String, String), Long]()
+      vocab.foreach { case (syms, n) =>
+        var i = 0
+        while (i + 1 < syms.length) {
+          val k = (syms(i), syms(i + 1))
+          pairCounts(k) = pairCounts.getOrElse(k, 0L) + n
+          i += 1
+        }
+      }
+      if (pairCounts.isEmpty) done = true
+      else {
+        val (a, b) = pairCounts.toSeq
+          .sortBy { case ((pa, pb), c) => (-c, pa, pb) }.head._1
+        picked += ((a, b))
+        vocab = vocab.map { case (syms, n) =>
+          val out = Vector.newBuilder[String]
+          var i = 0
+          while (i < syms.length) {
+            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+              out += (a + b); i += 2
+            } else { out += syms(i); i += 1 }
+          }
+          out.result() -> n
+        }.groupMapReduce(_._1)(_._2)(_ + _)
+      }
+      round += 1
+    }
+    picked.toSeq
   }
 }

@@ -167,7 +167,7 @@ class AlgorithmsSpec extends SparkSpec {
     val dp = Ubo.strongestChain(e, Seq(src).toDF("owner"), maxHops = 4)
       .filter(col("entity") =!= col("owner"))
       .select(col("entity"), col("share")).as[(Long, Double)].collect().toMap
-    val px = Algorithms.maxProductGraphX(e, src, maxIters = 4)
+    val px = maxProductGraphX(e, src, maxIters = 4)
       .as[(Long, Double)].collect().toMap
     assert(dp.nonEmpty && dp.keySet === px.keySet)
     dp.foreach { case (id, s) =>
@@ -178,7 +178,7 @@ class AlgorithmsSpec extends SparkSpec {
   test("aggregateMessages in-weight stats match the DataFrame groupBy twin") {
     val t = Tables(spark, sfDir)
     val e = graft.graph.Ubo.suppliedByEdges(t)
-    val gx = Algorithms.inWeightStats(e)
+    val gx = inWeightStats(e)
       .as[(Long, Double, Double)].collect().map(r => r._1 -> ((r._2 * 1e9).round, r._3)).toMap
     val df = e.groupBy(col("dst").as("id"))
       .agg(sum("weight").as("s"), max("weight").as("m"))
@@ -355,13 +355,20 @@ class AlgorithmsSpec extends SparkSpec {
     assert(local === forced, "local Tarjan tier and GraphX tier must agree")
   }
 
+  /** The GraphX graph of an edge frame (src, dst[, weight]); a missing
+    * weight reads 1.0. Builds the GraphX oracles below. */
+  private def graphX(edges: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.graphx.{Edge, Graph}
+    Graph.fromEdges(edges.select(col("src"), col("dst"),
+        if (edges.columns.contains("weight")) col("weight") else lit(1.0)).rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2))), 0)
+  }
+
   /** The GraphX oracle for [[Algorithms.boundedSssp]] and [[Algorithms.sssp]]:
     * weighted single-source shortest paths as Pregel min-plus, relaxing
     * until no message fires. Edges (src, dst, weight); returns (id, dist). */
   private def ssspGraphX(edges: org.apache.spark.sql.DataFrame, source: Long) = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val g = Graph.fromEdges(edges.select(col("src"), col("dst"), col("weight")).rdd
-        .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2))), 0)
+    val g = graphX(edges)
       .mapVertices((id, _) => if (id == source) 0.0 else Double.PositiveInfinity)
     g.pregel(Double.PositiveInfinity)(
         (_, d, msg) => math.min(d, msg),
@@ -371,6 +378,39 @@ class AlgorithmsSpec extends SparkSpec {
       .vertices.filter(_._2 < Double.PositiveInfinity)
       .toDF("id", "dist")
   }
+
+  /** The GraphX oracle for [[Ubo.strongestChain]]'s DP values: bounded
+    * max-product reachability from `source` via Pregel. The vertex attr
+    * carries the best walk product so far (source 1.0, others 0.0),
+    * messages relax `srcAttr × weight`, and one superstep extends walks by
+    * one edge, so `maxIters` supersteps cover exactly the ≤ maxIters-hop
+    * walks. Both take the max over the same walk set and both accumulate
+    * each walk's product prefix-first, so the doubles match bitwise. */
+  private def maxProductGraphX(edges: org.apache.spark.sql.DataFrame, source: Long,
+                               maxIters: Int) =
+    graphX(edges).mapVertices((id, _) => if (id == source) 1.0 else 0.0)
+      .pregel(0.0, maxIterations = maxIters)(
+        (_, p, msg) => math.max(p, msg),
+        t => if (t.srcAttr * t.attr > t.dstAttr) Iterator((t.dstId, t.srcAttr * t.attr))
+             else Iterator.empty,
+        (a, b) => math.max(a, b))
+      .vertices.filter { case (id, p) => p > 0.0 && id != source }
+      .toDF("id", "best_share")
+
+  /** Per target vertex, sum and max of incoming edge weights via GraphX
+    * aggregateMessages: the oracle for the DataFrame groupBy. */
+  private def inWeightStats(edges: org.apache.spark.sql.DataFrame) =
+    graphX(edges).aggregateMessages[(Double, Double)](
+        ctx => ctx.sendToDst((ctx.attr, ctx.attr)),
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      .map { case (id, (s, m)) => (id, s, m) }
+      .toDF("id", "in_weight_sum", "in_weight_max")
+
+  /** Unnormalized static PageRank in GraphX (uniform out-edge weights,
+    * rank = 0.15 + 0.85·Σ incoming): the oracle for
+    * [[Algorithms.pageRankBounded]]. */
+  private def pageRankGraphX(edges: org.apache.spark.sql.DataFrame, iters: Int) =
+    graphX(edges).staticPageRank(iters, 0.15).vertices.toDF("id", "pr")
 
   test("ssspGraphX equals boundedSssp when rounds cover the diameter") {
     val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 5.0), (3L, 4L, 1.0))
@@ -420,7 +460,7 @@ class AlgorithmsSpec extends SparkSpec {
     val weighted = raw.join(outDeg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("n")).as("weight"))
     val iters = 20
-    val gx = Algorithms.pageRankGraphX(raw, iters).as[(Long, Double)].collect().toMap
+    val gx = pageRankGraphX(raw, iters).as[(Long, Double)].collect().toMap
     val df = Algorithms.pageRankBounded(weighted, iters).as[(Long, Double)].collect().toMap
     gx.foreach { case (id, v) => assert(math.abs(v - df(id)) < 1e-4, s"node $id: $v vs ${df(id)}") }
   }

@@ -627,68 +627,4 @@ class IvfIndexSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(stored === recomputed)
   }
-
-  /** Sum of squared distances from each vector to its assigned centroid —
-    * the k-means objective the iterated fit must never raise. */
-  private def objective(idx: IvfIndex): Double = {
-    val centDf = idx.centroids.toSeq.toDF("cluster", "cent")
-    idx.assigned.join(broadcast(centDf), "cluster")
-      .select(expr("""aggregate(zip_with(embedding, cent,
-          (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
-          0D, (acc, v) -> acc + v)""").as("d2"))
-      .agg(sum("d2")).head().getDouble(0)
-  }
-
-  test("buildIterated(updates = 1) equals build exactly — the graded fit is the 1-update point") {
-    val it = IvfIndex.buildIterated(emb, k = 16, updates = 1)
-    assert(it.centroids.map(_._1).toSeq === built.centroids.map(_._1).toSeq)
-    it.centroids.zip(built.centroids).foreach { case ((_, a), (_, b)) =>
-      assert(a.toSeq === b.toSeq)
-    }
-    val ia = it.assigned.select("vec_id", "cluster").as[(Long, Long)].collect().toSet
-    val ba = built.assigned.select("vec_id", "cluster").as[(Long, Long)].collect().toSet
-    assert(ia === ba)
-  }
-
-  test("more Lloyd updates never raise the objective and rescue a bad-seed planted mixture") {
-    // two far clusters, 60 points each — with ids 0..59 BOTH seeds in
-    // cluster A, so the deterministic lowest-id seeding starts every
-    // centroid inside one true cluster: the worst case the 1-update
-    // graded fit can meet, and exactly what extra rounds exist to fix
-    // (k=2 so escaping the bad basin is a cascade Lloyd completes)
-    val pts = for (c <- 0 until 2; i <- 0 until 60) yield {
-      val id = (c * 60 + i).toLong
-      val v = Array.tabulate(8) { d =>
-        (c * 10.0 + 0.05 * math.sin(1.0 + id * 7.0 + d * 3.0)).toFloat
-      }.toSeq
-      (id, v)
-    }
-    val planted = pts.toDF("vec_id", "embedding")
-    val objs = Seq(1, 2, 4, 8).map(u =>
-      u -> objective(IvfIndex.buildIterated(planted, k = 2, updates = u)))
-    info(objs.map { case (u, o) => f"updates=$u obj=$o%.2f" }.mkString(", "))
-    objs.sliding(2).foreach { case Seq((ua, a), (ub, b)) =>
-      assert(b <= a * (1.0 + 1e-9),
-        f"objective rose from $a%.4f (updates=$ua) to $b%.4f (updates=$ub)")
-    }
-    val first = objs.head._2; val last = objs.last._2
-    assert(last < first * 0.5,
-      f"iterated fit should rescue the bad seeding: $first%.2f -> $last%.2f")
-  }
-
-  test("refreshSampled threads the update-rounds knob into the sampled refit and stays internally consistent") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
-    IvfIndex.save(IvfIndex.build(emb, k = 16), dir)
-    val stats = IvfIndex.refreshSampled(spark, dir, k = 16, rate = 0.5,
-      minPerCluster = 1, updates = 4)
-    assert(stats.nTotal === 500L)
-    // the refit's improved centroids still tessellate the store exactly:
-    // every stored assignment equals the nearest-centroid recomputation
-    val idx = IvfIndex.load(spark, dir)
-    val stored = idx.assigned.select("vec_id", "cluster")
-      .as[(Long, Long)].collect().toMap
-    val recomputed = idx.probe(idx.assigned.drop("cluster"), nprobe = 1)
-      .as[(Long, Long)].collect().toMap
-    assert(stored === recomputed)
-  }
 }

@@ -18,7 +18,7 @@ class OrderedLagSpec extends SparkSpec {
     // (ts, event_id); values deliberately collide across partitions
     val df = (1 to 2000).map(i => (rnd.nextInt(200).toLong, i.toLong, rnd.nextInt(50).toLong))
       .toDF("k", "seq", "v").repartition(13)
-    val viaOp = OrderedLag.withLag1(df, Seq("k", "seq"), Seq("v"), numPartitions = 7)
+    val viaOp = withShufflePartitions(7)(OrderedLag.withLag(df, Seq("k", "seq"), Seq("v"), k = 1))
       .select(col("k"), col("seq"), col("v"), col("prev_v"))
       .as[(Long, Long, Long, Option[Long])].collect().toSet
     val viaWindow = df
@@ -31,7 +31,7 @@ class OrderedLagSpec extends SparkSpec {
     val rnd = new scala.util.Random(23)
     val df = (1 to 500).map(i => (rnd.nextInt(40).toLong, i.toLong, rnd.nextInt(9).toLong))
       .toDF("k", "seq", "v").repartition(9)
-    val viaOp = OrderedLag.withLag(df, Seq("k", "seq"), Seq("v"), k = 3, numPartitions = 6)
+    val viaOp = withShufflePartitions(6)(OrderedLag.withLag(df, Seq("k", "seq"), Seq("v"), k = 3))
       .select(col("k"), col("seq"), col("prev3_v"))
       .as[(Long, Long, Option[Long])].collect().toSet
     val viaWindow = df
@@ -45,7 +45,7 @@ class OrderedLagSpec extends SparkSpec {
     val rnd = new scala.util.Random(31)
     val df = (1 to 2000).map(i => (rnd.nextInt(200).toLong, i.toLong, rnd.nextInt(50).toLong))
       .toDF("k", "seq", "v").repartition(11)
-    val viaOp = OrderedLag.withLead1(df, Seq("k", "seq"), Seq("v"), numPartitions = 6)
+    val viaOp = withShufflePartitions(6)(OrderedLag.withLead(df, Seq("k", "seq"), Seq("v"), k = 1))
       .select(col("k"), col("seq"), col("next_v"))
       .as[(Long, Long, Option[Long])].collect().toSet
     val viaWindow = df
@@ -59,7 +59,7 @@ class OrderedLagSpec extends SparkSpec {
     val rnd = new scala.util.Random(37)
     val df = (1 to 400).map(i => (rnd.nextInt(30).toLong, i.toLong, rnd.nextInt(9).toLong))
       .toDF("k", "seq", "v").repartition(7)
-    val viaOp = OrderedLag.withLead(df, Seq("k", "seq"), Seq("v"), k = 2, numPartitions = 5)
+    val viaOp = withShufflePartitions(5)(OrderedLag.withLead(df, Seq("k", "seq"), Seq("v"), k = 2))
       .select(col("k"), col("seq"), col("next2_v"))
       .as[(Long, Long, Option[Long])].collect().toSet
     val viaWindow = df
@@ -75,7 +75,7 @@ class OrderedLagSpec extends SparkSpec {
     // prefix max genuinely crosses partition boundaries
     val df = (1 to 2000).map(i => (rnd.nextInt(200).toLong, i.toLong, rnd.nextInt(500).toLong))
       .toDF("k", "seq", "v").repartition(13)
-    val viaOp = OrderedLag.withRunningMax(df, Seq("k", "seq"), "v", "pm", numPartitions = 7)
+    val viaOp = withShufflePartitions(7)(OrderedLag.withRunningMax(df, Seq("k", "seq"), "v", "pm"))
       .select(col("k"), col("seq"), col("v"), col("pm"))
       .as[(Long, Long, Long, Option[Long])].collect().toSet
     val viaWindow = df
@@ -90,7 +90,7 @@ class OrderedLagSpec extends SparkSpec {
     // the prior non-null max — exactly max OVER (... 1 PRECEDING) semantics
     val df = Seq((1L, Some(5L)), (2L, None), (3L, Some(3L)), (4L, None), (5L, Some(9L)))
       .toDF("seq", "v")
-    val viaOp = OrderedLag.withRunningMax(df, Seq("seq"), "v", "pm", numPartitions = 3)
+    val viaOp = withShufflePartitions(3)(OrderedLag.withRunningMax(df, Seq("seq"), "v", "pm"))
       .select(col("seq"), col("pm")).as[(Long, Option[Long])].collect().toMap
     val viaWindow = df
       .withColumn("pm", max(col("v")).over(Window.orderBy(col("seq"))
@@ -103,14 +103,14 @@ class OrderedLagSpec extends SparkSpec {
 
   test("withRunningMax handles a partition count exceeding the row count") {
     val df = Seq((1L, 5L), (2L, 3L), (3L, 9L)).toDF("seq", "v")
-    val got = OrderedLag.withRunningMax(df, Seq("seq"), "v", "pm", numPartitions = 16)
+    val got = withShufflePartitions(16)(OrderedLag.withRunningMax(df, Seq("seq"), "v", "pm"))
       .select(col("seq"), col("pm")).as[(Long, Option[Long])].collect().toMap
     assert(got === Map(1L -> None, 2L -> Some(5L), 3L -> Some(5L)))
   }
 
   test("withLag1 handles a partition count exceeding the row count") {
     val df = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("k", "v")
-    val got = OrderedLag.withLag1(df, Seq("k"), Seq("v"), numPartitions = 16)
+    val got = withShufflePartitions(16)(OrderedLag.withLag(df, Seq("k"), Seq("v"), k = 1))
       .select(col("k"), col("prev_v")).as[(Long, Option[Long])].collect().toSet
     assert(got === Set((1L, None), (2L, Some(1L)), (3L, Some(2L))))
   }

@@ -275,36 +275,4 @@ class PqSpec extends SparkSpec {
     assert(errRes < errRaw,
       f"residual encoding ($errRes%.4f) did not beat raw ($errRaw%.4f) on mean ADC error")
   }
-
-  /** Per-subspace quantization objective: sum over (vector, subspace) of
-    * the squared distance to the assigned code — what more Lloyd updates
-    * must never raise. */
-  private def pqObjective(codebook: org.apache.spark.sql.DataFrame,
-                          cds: org.apache.spark.sql.DataFrame): Double = {
-    val subDim = 64 / m
-    val pts = corp
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("vec_id"), (col("pos") / subDim).cast("long").as("sub"),
-              col("pos").cast("long").as("pos"), col("v").cast("double").as("v"))
-    pts.join(cds, Seq("vec_id", "sub"))
-      .join(broadcast(codebook), Seq("sub", "cid", "pos"))
-      .select(((col("v") - col("c")) * (col("v") - col("c"))).as("d2"))
-      .agg(sum("d2")).head().getDouble(0)
-  }
-
-  test("modelIterated(updates = 1) equals model exactly; more updates never raise the objective") {
-    val (cb1, codes1) = Pq.modelIterated(corp, m, k, updates = 1)
-    assert(cb1.as[(Long, Long, Long, Double)].collect().toSet ===
-           cb.as[(Long, Long, Long, Double)].collect().toSet)
-    assert(codes1.as[(Long, Long, Long)].collect().toSet ===
-           codes.as[(Long, Long, Long)].collect().toSet)
-    val obj1 = pqObjective(cb, codes)
-    val (cb4, codes4) = Pq.modelIterated(corp, m, k, updates = 4)
-    val obj4 = pqObjective(cb4, codes4)
-    info(f"PQ objective: 1 update $obj1%.2f vs 4 updates $obj4%.2f")
-    assert(obj4 <= obj1 * (1.0 + 1e-9),
-      f"objective rose with more updates: $obj1%.2f -> $obj4%.2f")
-    assert(obj4 < obj1,
-      "4 updates should strictly improve the underfit 1-update codebook on this corpus")
-  }
 }

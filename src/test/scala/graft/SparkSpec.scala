@@ -29,6 +29,18 @@ abstract class SparkSpec extends AnyFunSuite {
     try f finally spark.conf.unset(Gates.ForceKey)
   }
 
+  /** `f` run with `spark.sql.shuffle.partitions` = `n`, the partition
+    * count of the range-partitioned operators; the session's value is
+    * restored afterwards. The OrderedLag operators read the count and
+    * materialize their result when called, so the frame `f` returns
+    * keeps it. */
+  def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, n.toLong)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** `f`'s result and the number of Spark jobs it launched. */
   def jobs[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
