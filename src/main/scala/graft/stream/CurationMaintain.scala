@@ -16,10 +16,12 @@ import graft.text.{LlmQueries, LshIndex, ShardStore}
   * whole point of the loop: a re-crawl arriving three batches after its
   * original is dropped by state the pipeline itself maintained.
   *
-  * Stage bodies are the graded components' own (LshIndex single-sources
-  * l02/l52's sketch machinery; the gate and packer are l34/l51's factored
-  * bodies — the same ones l55 composes), so the streaming tick can never
-  * drift from the batch-audited pipeline.
+  * Stage bodies are the graded components' own (both dedup stages are
+  * [[LshIndex]]'s: the within-batch self-join is l02's
+  * [[LshIndex.selfPairs]], the standing-state dedup is l52's
+  * [[LshIndex.probe]]; the gate and packer are l34/l51's factored bodies
+  * — the same ones l55 composes), so the streaming tick can never drift
+  * from the batch-audited pipeline.
   *
   * The batch also dedups AGAINST ITSELF before probing the index (round
   * 16): two near-identical docs in one micro-batch collide with nothing
@@ -87,32 +89,14 @@ object CurationMaintain {
     // stage 1a: WITHIN-BATCH dedup — two near-identical docs arriving in
     // the SAME micro-batch collide with nothing in the standing index
     // (neither is ingested yet), so the batch dedups against itself
-    // first: LSH candidate pairs from the batch's own bucket table
-    // (ordered doc_id < doc_id so each pair appears once), exact-Jaccard
-    // reranked with the l02 threshold, and the HIGHER id of each
-    // confirmed pair drops (first-by-id wins — the deterministic greedy
-    // a single streaming pass can apply without closing clusters; a dup
-    // of a dropped doc still drops, because its smaller-id partner
-    // remains a pair witness whether or not that partner survived)
+    // first: l02's near-dup pairs over the batch (a < b, the index's band
+    // width), and the HIGHER id of each confirmed pair drops (first-by-id
+    // wins — the deterministic greedy a single streaming pass can apply
+    // without closing clusters; a dup of a dropped doc still drops,
+    // because its smaller-id partner remains a pair witness whether or
+    // not that partner survived)
     val idx = LshIndex.load(spark, s"$storeDir/lsh")
-    val bb = LshIndex.buckets(arrivals, idx.bandRows)
-      .transform(graft.graph.Materialize.apply)
-    val selfCand = bb.withColumnRenamed("doc_id", "a")
-      .join(bb.withColumnRenamed("doc_id", "b"),
-        LshIndex.bandCols(idx.bandRows))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    val tg = LshIndex.grams(arrivals)
-      .transform(graft.graph.Materialize.apply)
-    val sz = tg.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val selfDups = selfCand
-      .join(tg.select(col("doc_id").as("a"), col("g")), Seq("a"))
-      .join(tg.select(col("doc_id").as("b"), col("g")), Seq("b", "g"))
-      .groupBy("a", "b").agg(count(lit(1)).as("i"))
-      .join(sz.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
-      .join(sz.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
-      .filter(round(lit(1.0) - col("i").cast("double") /
-        (col("na") + col("nb") - col("i")), 6) <= 0.8)
+    val selfDups = LshIndex.selfPairs(arrivals, idx.bandRows)
       .select(col("b").as("doc_id")).distinct()
     val batchUnique = arrivals.join(selfDups, Seq("doc_id"), "left_anti")
     // stage 1b: dedup against everything accepted so far (post-erasure)

@@ -53,11 +53,10 @@ final case class Bm25Index(postings: DataFrame, doclens: DataFrame) {
     * corpus: tf rows come from the postings table pruned to the query's
     * terms (broadcast left-semi — the bm25Batch plan shape), stats from
     * the doclen table. */
-  def probe(qterms: DataFrame, topK: Int = 20,
-            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def probe(qterms: DataFrame, topK: Int = 20): DataFrame = {
     val terms = qterms.select(col("token")).distinct()
     val tf = postings.join(broadcast(terms), Seq("token"), "left_semi")
-    Retrieval.scoreTf(tf, doclens, qterms, topK, k1, b)
+    Retrieval.scoreTf(tf, doclens, qterms, topK)
   }
 
   /** In-memory append: the index over corpus ∪ delta (only the delta is
@@ -194,7 +193,7 @@ object Bm25Index {
     * Tombstones anti-join both tables, so a probe between removeFrom and
     * compact already serves survivors. */
   def probeFrom(spark: SparkSession, dir: String, qterms: DataFrame,
-                topK: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                topK: Int = 20): DataFrame = {
     import spark.implicits._
     val (m, postings, doclens, tomb) = tables(spark, dir)
     // the shards straight from the query table, distinct within each
@@ -210,7 +209,7 @@ object Bm25Index {
       .join(tomb, Seq("doc_id"), "left_anti")
       .select("doc_id", "token", "tf")
     val dl = doclens.select("doc_id", "dl").join(tomb, Seq("doc_id"), "left_anti")
-    Retrieval.scoreTf(tf, dl, qterms, topK, k1, b)
+    Retrieval.scoreTf(tf, dl, qterms, topK)
   }
 
   /** Erasure completion: physically drop every tombstoned doc's rows by

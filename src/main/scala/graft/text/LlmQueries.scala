@@ -95,6 +95,12 @@ object LlmQueries {
   // batch pipeline and LshIndex sketch with the SAME lanes by construction
   private def minhashMults: Seq[Long] = LshIndex.minhashMults
 
+  /** The oracles' 12-lane sketch select list over a gram column `g`:
+    * `MIN(poly_hash(g)) AS mh<lane>` per multiplier (l02/l02b/l46, l52,
+    * l55). Defined before `entries`, whose oracles read it. */
+  private val sketchSql: String = minhashMults.zipWithIndex.map { case (m, h) =>
+    s"MIN(${polyHashSql("g", 0L, m)}) AS mh$h" }.mkString(", ")
+
   /** Oracle SQL for l34 / l33, factored so l37 (the composed curation
     * decision) can embed them verbatim as subqueries — the judge-visible
     * single-sourcing rule: a composite's oracle must be built FROM its
@@ -335,29 +341,13 @@ object LlmQueries {
       .orderBy("eval_id")
   }
 
-  /** Exact 3-gram Jaccard near-dup pairs (da < db, jaccard >= 0.2) via an
-    * inverted-index join on the trigram — single-sourced for
-    * l03_ngram_jaccard (which grades the pairs) and l16_dedup_clusters
-    * (which closes them into clusters), so the tokenization/threshold can
-    * never drift between the two — LlmOpsSpec asserts their consistency.
-    */
-  /** Distinct word trigrams per doc + per-doc trigram counts — the shared
+  /** Shared-trigram pair counts with both doc sizes attached (da < db),
+    * over the distinct word-trigram sets of [[LshIndex.grams]] — the
     * inverted-index base of [[ngramJaccardPairs]] and l31 containment.
     */
-  private def trigramIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val ws = Tables(s, d).documents
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 3)
-    val tg = ws.select(col("doc_id"),
-        explode(expr("transform(sequence(0, size(ws) - 3), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))")).as("g"))
-      .distinct()
-    val sz = tg.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    (tg, sz)
-  }
-
-  /** Shared-trigram pair counts with both doc sizes attached (da < db). */
   private def trigramPairCounts(s: SparkSession, d: String): DataFrame = {
-    val (tg, sz) = trigramIndex(s, d)
+    val tg = LshIndex.grams(Tables(s, d).documents)
+    val sz = tg.groupBy("doc_id").agg(count(lit(1)).as("n"))
     tg.select(col("doc_id").as("da"), col("g"))
       .join(tg.select(col("doc_id").as("db"), col("g")), Seq("g"))
       .filter(col("da") < col("db"))
@@ -366,6 +356,12 @@ object LlmQueries {
       .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
   }
 
+  /** Exact 3-gram Jaccard near-dup pairs (da < db, jaccard >= 0.2) via an
+    * inverted-index join on the trigram — single-sourced for
+    * l03_ngram_jaccard (which grades the pairs) and l16_dedup_clusters
+    * (which closes them into clusters), so the tokenization/threshold can
+    * never drift between the two — LlmOpsSpec asserts their consistency.
+    */
   private def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
     trigramPairCounts(s, d)
       .withColumn("jaccard", round(col("i").cast("double") / (col("na") + col("nb") - col("i")), 6))
@@ -410,57 +406,11 @@ object LlmQueries {
       |          FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
       |          WHERE ROUND(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.2)""".stripMargin
 
-  /** MinHash-LSH near-dup pairs, parameterized by band WIDTH (`bandRows`
-    * minhashes per band, 12/bandRows bands): the banded candidate join +
-    * exact-Jaccard rerank shared by l02 (r=1, recall-first) and l02b
-    * (r=2, precision-first — the scale knob; see the l02b entry).
-    * Single-sourced with its SQL mirror [[minhashNearDupPairsSql]].
-    */
-  private def minhashNearDupPairs(s: SparkSession, d: String, bandRows: Int): DataFrame = {
+  /** DuckDB mirror of [[LshIndex.selfPairs]] at band width `bandRows`
+    * (12/bandRows bands of `bandRows` minhashes), sorted by (a, b). */
+  private def nearDupPairsSql(bandRows: Int): String = {
     require(minhashMults.size % bandRows == 0,
-      s"bandRows=$bandRows must divide the ${minhashMults.size}-hash sketch; " +
-        "a non-divisor would silently drop trailing minhashes from the banding")
-    graft.functions.GraftFunctions.register(s)
-    // the trigram / sketch / bucket builders are LshIndex's (round 15
-    // single-sourcing: the standing dedup index IS this pipeline persisted)
-    // NOT checkpointed (r17 opt): grams ends in a distinct — an Exchange on
-    // (doc_id, g) — and AQE's runtime exchange reuse dedups the identical
-    // subtree across all three consumers (sketch + both rerank sides), so
-    // the explode runs once either way. The old localCheckpoint added a
-    // blocking job + a block-manager write AND erased the partitioning
-    // (ExistingRDD/UnknownPartitioning), forcing the (b, g) rerank side to
-    // re-exchange rows the distinct had already hashed — with reuse, that
-    // side reads the shuffle files directly (verified: ReusedExchange in
-    // the executed plan, same pattern measured on l03).
-    val tg = LshIndex.grams(Tables(s, d).documents)
-    val bandCols = LshIndex.bandCols(bandRows)
-    // r17 opt (§2.3/§2.4): the per-doc distinct-trigram count rides the
-    // SKETCH aggregation (same groups) and the band rows carry it into the
-    // candidate join — the old separate sz groupBy (2 more full passes
-    // over tg) and the two post-rerank joins disappear. n is functionally
-    // determined by the doc id, so widening the distinct / group keys by
-    // (na, nb) changes no cardinality and no result.
-    val sketchN = LshIndex.sketchOf(tg, extra = Seq(count(lit(1)).as("n")))
-    val buckets = LshIndex.bucketsOf(sketchN, bandRows, carry = Seq("n"))
-    val cand = buckets.select(col("doc_id").as("a") +: col("n").as("na") +: bandCols.map(col): _*)
-      .join(buckets.select(col("doc_id").as("b") +: col("n").as("nb") +: bandCols.map(col): _*), bandCols)
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("na"), col("nb")).distinct()
-    cand
-      .join(tg.select(col("doc_id").as("a"), col("g")), Seq("a"))
-      .join(tg.select(col("doc_id").as("b"), col("g")), Seq("b", "g"))
-      .groupBy("a", "b", "na", "nb").agg(count(lit(1)).as("i"))
-      .withColumn("jaccard_dist",
-        round(lit(1.0) - col("i").cast("double") / (col("na") + col("nb") - col("i")), 6))
-      .filter(col("jaccard_dist") <= 0.8)
-      .select(col("a"), col("b"), col("jaccard_dist"))
-      .orderBy("a", "b")
-  }
-
-  /** DuckDB mirror of [[minhashNearDupPairs]] at the same band width. */
-  private def minhashNearDupPairsSql(bandRows: Int): String = {
-    require(minhashMults.size % bandRows == 0,
-      s"bandRows=$bandRows must divide the ${minhashMults.size}-hash sketch (see minhashNearDupPairs)")
+      s"bandRows=$bandRows must divide the ${minhashMults.size}-hash sketch (see LshIndex.selfPairs)")
     val nBands = minhashMults.size / bandRows
     val mhCols = (0 until bandRows).map(r => s"mh_r$r")
     val bktSelects = (0 until nBands).map(b =>
@@ -470,8 +420,7 @@ object LlmQueries {
     val bandEq = (Seq("h") ++ mhCols).map(c => s"ba.$c = bb.$c").mkString(" AND ")
     s"""
       WITH $trigramBaseSql,
-      sketch AS (SELECT doc_id, ${minhashMults.zipWithIndex.map { case (m, h) =>
-        s"MIN(${polyHashSql("g", 0L, m)}) AS mh$h" }.mkString(", ")}
+      sketch AS (SELECT doc_id, $sketchSql
                  FROM tg GROUP BY doc_id),
       bkt AS ($bktSelects),
       cand AS (SELECT DISTINCT ba.doc_id AS a, bb.doc_id AS b
@@ -535,8 +484,10 @@ object LlmQueries {
     // the polynomial fold exactly, so the WHOLE pipeline (sketch → bands →
     // bucket join → rerank) now grades in CORRECTNESS instead of a
     // recall-only spec (the l33/l35/l39 precedent).
-    E("l02_minhash_lsh", (s, d) => minhashNearDupPairs(s, d, bandRows = 1),
-      Some(minhashNearDupPairsSql(bandRows = 1))),
+    E("l02_minhash_lsh", (s, d) => {
+      graft.functions.GraftFunctions.register(s)
+      LshIndex.selfPairs(Tables(s, d).documents, bandRows = 1).orderBy("a", "b")
+    }, Some(nearDupPairsSql(bandRows = 1))),
 
     // L2e — the SAME pipeline with r=2 band rows (6 bands × 2 minhashes):
     // the banding parameter SCALE.md names as the knob to turn at larger
@@ -551,8 +502,10 @@ object LlmQueries {
     // equal ⇒ each equal alone), so this grades the documented
     // precision-recall tradeoff, not a different operator; LlmOpsSpec
     // asserts the subset relation and that high-J pairs survive.
-    E("l02b_minhash_lsh_r2", (s, d) => minhashNearDupPairs(s, d, bandRows = 2),
-      Some(minhashNearDupPairsSql(bandRows = 2))),
+    E("l02b_minhash_lsh_r2", (s, d) => {
+      graft.functions.GraftFunctions.register(s)
+      LshIndex.selfPairs(Tables(s, d).documents, bandRows = 2).orderBy("a", "b")
+    }, Some(nearDupPairsSql(bandRows = 2))),
 
     // L2b — exact 3-gram Jaccard near-dup join (oracle-able ground truth for
     // the LSH path; inverted-index join, NOT an all-pairs cross join).
@@ -2023,11 +1976,12 @@ object LlmQueries {
     // is this doc — the incremental-crawl health metric (a feed whose
     // novelty decays to 0 is re-crawling what you already have; the
     // content-level complement of l35's asset-identity dedup). Reuses the
-    // shared trigram index of l03/l16/l31 (single-sourced tokenization).
+    // trigram sets of l02/l03/l16/l31 (LshIndex.grams, single-sourced
+    // tokenization).
     // Exact integers + one division; the first-occurrence min is one
     // trigram-keyed aggregate — no per-pair work at any corpus size.
     E("l38_novelty", (s, d) => {
-      val (tg, sz) = trigramIndex(s, d)
+      val tg = LshIndex.grams(Tables(s, d).documents)
       val firstSeen = tg.groupBy("g").agg(min(col("doc_id")).as("first_doc"))
       tg.join(firstSeen, "g")
         .groupBy("doc_id").agg(
@@ -2255,7 +2209,7 @@ object LlmQueries {
     E("l43_bm25", (s, d) => {
       val docs = Tables(s, d).documents
       val terms = Seq("spark", "join", "filter")
-      val k1 = 1.2; val b = 0.75
+      import Retrieval.{B, K1}
       val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
       val stats = dl.agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
@@ -2267,8 +2221,8 @@ object LlmQueries {
         .join(dl, "doc_id").crossJoin(broadcast(stats))
         .withColumn("idf", log(lit(1.0) +
           (col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5)))
-        .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))))
+        .withColumn("w", col("idf") * (col("tf") * lit(K1 + 1)) /
+          (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl").cast("double") / col("avgdl"))))
       val scored = w.groupBy("doc_id")
         .agg(count(lit(1)).as("n_terms_hit"),
              (terms.map(t => coalesce(max(when(col("token") === t, col("w"))), lit(0.0)))
@@ -2668,10 +2622,10 @@ object LlmQueries {
 
     // L11c — FUZZY decontamination: l45 catches verbatim 13-token reuse;
     // paraphrase-level leakage (the Llama-class second screen) needs the
-    // resemblance sketch. Reuses the AUDITED l02 MinHash pipeline
-    // verbatim (deterministic poly_hash family, banded bucket join, exact
-    // Jaccard rerank on bucket-colliding candidates only — never
-    // all-pairs), keeps the cross-slice pairs (eval × corpus), and
+    // resemblance sketch. Reuses the AUDITED l02 MinHash pipeline,
+    // LshIndex.selfPairs (deterministic poly_hash family, banded bucket
+    // join, exact Jaccard rerank on bucket-colliding candidates only —
+    // never all-pairs), keeps the cross-slice pairs (eval × corpus), and
     // reports per eval doc: fuzzy-match count, the strongest match's
     // Jaccard and its doc (argmax via a (jaccard DESC, corpus_id) window
     // so the witness is deterministic), zeros included. Deployment shape
@@ -2680,7 +2634,9 @@ object LlmQueries {
     // it; the graded form runs the same banding symmetric because the
     // slices share one table here.
     E("l46_decontaminate_fuzzy", (s, d) => {
-      val pairs = minhashNearDupPairs(s, d, bandRows = 1)
+      graft.functions.GraftFunctions.register(s)
+      val pairs = LshIndex.selfPairs(Tables(s, d).documents, bandRows = 1)
+        .orderBy("a", "b")
       def isEval(c: Column) = c % 50 === 0
       val cross = pairs.filter(isEval(col("a")) =!= isEval(col("b")))
         .select(when(isEval(col("a")), col("a")).otherwise(col("b")).as("eval_id"),
@@ -2701,7 +2657,7 @@ object LlmQueries {
           coalesce(col("best_corpus_doc"), lit(-1L)).as("best_corpus_doc"))
         .orderBy("eval_id")
     }, Some(s"""
-      WITH pairs AS (SELECT * FROM (${minhashNearDupPairsSql(1)}) p),
+      WITH pairs AS (SELECT * FROM (${nearDupPairsSql(1)}) p),
       crossed AS (
         SELECT CASE WHEN a % 50 = 0 THEN a ELSE b END AS eval_id,
                CASE WHEN a % 50 = 0 THEN b ELSE a END AS corpus_id,
@@ -3007,12 +2963,12 @@ object LlmQueries {
     // index is scanned, never shuffled), exact-Jaccard rerank re-reads
     // the corpus for CANDIDATE docs only (left-semi pruning — rerank ∝
     // collisions, not corpus). Sketch lanes, trigram tokenization,
-    // threshold, and rounding are l02's VERBATIM (LshIndex single-sources
-    // them), so the ORACLE is the l02 CTE machinery with a cross-slice
-    // candidate condition. LshIndexSpec proves the persisted layout:
-    // probe-from-disk ≡ in-memory, append ≡ rebuild-over-union,
-    // removeFrom's byte-level shard trio, and erased docs never
-    // re-surface as candidates.
+    // threshold, and rounding are l02's VERBATIM (LshIndex.probe and
+    // LshIndex.selfPairs share them), so the ORACLE is the l02 CTE
+    // machinery with a cross-slice candidate condition. LshIndexSpec
+    // proves the persisted layout: probe-from-disk ≡ in-memory, append ≡
+    // rebuild-over-union, removeFrom's byte-level shard trio, and erased
+    // docs never re-surface as candidates.
     E("l52_dedup_incremental", (s, d) => {
       graft.functions.GraftFunctions.register(s)
       val docs = Tables(s, d).documents
@@ -3039,8 +2995,7 @@ object LlmQueries {
                WHERE len(string_split(text, ' ')) >= 3),
       tg AS (SELECT DISTINCT doc_id, is_batch, ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS g
              FROM toks, UNNEST(range(len(ws) - 2)) AS t(i)),
-      sketch AS (SELECT doc_id, is_batch, """ + minhashMults.zipWithIndex.map { case (m, h) =>
-        s"MIN(${polyHashSql("g", 0L, m)}) AS mh$h" }.mkString(", ") + """
+      sketch AS (SELECT doc_id, is_batch, """ + sketchSql + """
                  FROM tg GROUP BY doc_id, is_batch),
       bkt AS (""" + (0 until minhashMults.size).map(b =>
         s"SELECT doc_id, is_batch, $b AS h, mh$b AS mh_r0 FROM sketch").mkString(" UNION ALL ") + """),
@@ -3217,8 +3172,8 @@ object LlmQueries {
     // by construction — the inner probe join holds them out and the
     // anti-join keeps them); (3) the l34 Gopher gate; (4) the l51
     // shard-local greedy packer over the curated survivors. Every stage
-    // is the GRADED component's own dataflow (LshIndex single-sources
-    // l02/l52; the probe/cosine leg is l47b's shape on the batch side;
+    // is the GRADED component's own dataflow (LshIndex owns l02's and
+    // l52's near-dup decision; the probe/cosine leg is l47b's shape on the batch side;
     // gopherQuality/packGreedy are l34/l51's factored bodies), and the
     // ORACLE is the same four stages composed from the components' CTE
     // machinery verbatim (l52 sketch chain → lloydCtes probe → gopherCtes
@@ -3282,8 +3237,7 @@ object LlmQueries {
                WHERE len(string_split(text, ' ')) >= 3),
       dtg AS MATERIALIZED (SELECT DISTINCT doc_id, is_batch, ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS g
               FROM dtok, UNNEST(range(len(ws) - 2)) AS t(i)),
-      dsk AS MATERIALIZED (SELECT doc_id, is_batch, """ + minhashMults.zipWithIndex.map { case (m, h) =>
-        s"MIN(${polyHashSql("g", 0L, m)}) AS mh$h" }.mkString(", ") + """
+      dsk AS MATERIALIZED (SELECT doc_id, is_batch, """ + sketchSql + """
                FROM dtg GROUP BY doc_id, is_batch),
       dbkt AS MATERIALIZED (""" + (0 until minhashMults.size).map(b =>
         s"SELECT doc_id, is_batch, $b AS h, mh$b AS mh_r0 FROM dsk").mkString(" UNION ALL ") + s"""),

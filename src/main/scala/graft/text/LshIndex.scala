@@ -18,12 +18,16 @@ import org.apache.spark.sql.functions._
   * — 12 longs per document, ~1/1000th of a text corpus — so the standing
   * artifact is cheap to store and cheap to scan.
   *
-  * Single-sourcing: the trigram / sketch / bucket builders here ARE the
-  * graded l02/l02b/l46 dataflow (LlmQueries.minhashNearDupPairs calls
-  * them), so the index can never drift from the audited pipeline, and
-  * the graded l52_dedup_incremental carries the same DuckDB oracle
-  * machinery. Maintenance mirrors IvfIndex: [[appendTo]] lands new docs'
-  * bucket rows inside the sharded layout; [[removeFrom]] (erasure — the
+  * One owner of the near-duplicate decision: a word-trigram set
+  * ([[LshIndex.grams]]), a 12-lane poly_hash minhash, a band equi-join
+  * and an exact Jaccard distance ≤ 0.8 rounded to 6 places. Its two
+  * forms both live here: [[LshIndex.selfPairs]] (pairs within one doc
+  * set — l02/l02b/l46 and the streaming curation tick's within-batch
+  * dedup) and [[probe]] (a batch against the indexed corpus — l52, l55
+  * and the tick's stage 1b), so the graded queries, the standing index
+  * and the streaming loop can never drift apart. Maintenance mirrors
+  * IvfIndex: [[LshIndex.appendTo]] lands new docs' bucket rows inside the
+  * sharded layout; [[LshIndex.removeFrom]] (erasure — the
   * g68/g69/t17b/l47c contract) rewrites only the shards holding deleted
   * docs and is idempotent under at-least-once redelivery.
   *
@@ -40,13 +44,12 @@ final case class LshIndex(buckets: DataFrame, bandRows: Int) {
     * exact trigram Jaccard. `corpus` supplies the text for the rerank —
     * only CANDIDATE corpus docs are re-tokenized (left-semi pruning), so
     * the rerank cost is ∝ collisions, not corpus. Output: (batch_id,
-    * corpus_id, jaccard_dist) for pairs at distance ≤ `maxDist` — the
-    * l02 threshold and rounding, so probe results are comparable with
-    * the batch-graded pipeline. Batch ids must be disjoint from indexed
-    * ids (they are not yet ingested — the contract of an ingest dedup).
+    * corpus_id, jaccard_dist) for pairs within [[LshIndex.selfPairs]]'s
+    * distance, so probe results are comparable with the batch-graded
+    * pipeline. Batch ids must be disjoint from indexed ids (they are not
+    * yet ingested — the contract of an ingest dedup).
     */
-  def probe(batch: DataFrame, corpus: DataFrame,
-            maxDist: Double = 0.8): DataFrame = {
+  def probe(batch: DataFrame, corpus: DataFrame): DataFrame = {
     val bandCols = LshIndex.bandCols(bandRows)
     val bb = LshIndex.buckets(batch, bandRows)
       .withColumnRenamed("doc_id", "batch_id")
@@ -69,17 +72,9 @@ final case class LshIndex(buckets: DataFrame, bandRows: Int) {
       .groupBy("batch_id", "corpus_id").agg(count(lit(1)).as("i"))
       .join(szB, Seq("batch_id"))
       .join(szC, Seq("corpus_id"))
-      .withColumn("jaccard_dist",
-        round(lit(1.0) - col("i").cast("double") / (col("nb") + col("nc") - col("i")), 6))
-      .filter(col("jaccard_dist") <= maxDist)
+      .transform(LshIndex.nearDups("nb", "nc"))
       .select(col("batch_id"), col("corpus_id"), col("jaccard_dist"))
   }
-
-  /** In-memory append: the index over corpus ∪ delta (new docs sketched,
-    * bucket rows unioned — existing rows untouched; signatures are
-    * per-document, so append ≡ rebuild-over-union by construction). */
-  def append(delta: DataFrame): LshIndex =
-    copy(buckets = buckets.unionByName(LshIndex.buckets(delta, bandRows)))
 
   /** In-memory erasure: every bucket row of the given doc ids removed —
     * erased docs can never again surface as dedup candidates. Unknown ids
@@ -111,7 +106,10 @@ object LshIndex {
     * batch side broadcast. */
   val defaultRowsPerShard: Long = 1L << 20
 
-  private[graft] def bandCols(bandRows: Int): Seq[String] =
+  /** The near-duplicate threshold on the rounded Jaccard distance. */
+  private val maxDist = 0.8
+
+  private def bandCols(bandRows: Int): Seq[String] =
     Seq("h") ++ (0 until bandRows).map(r => s"mh_r$r")
 
   /** Distinct word-trigram set per doc — the l02/l03/l16 tokenization
@@ -124,44 +122,72 @@ object LshIndex {
         .as("g"))
       .distinct()
 
-  /** 12-lane minhash sketch per doc (poly_hash mins over the trigram
-    * set). Callers must have registered GraftFunctions. */
-  def sketch(docs: DataFrame): DataFrame = sketchOf(grams(docs))
-
-  /** [[sketch]] over an already-computed gram table (the graded pipeline
-    * reuses its materialized grams for sketch + sizes + rerank).
-    *
-    * `extra` — additional aggregates computed IN the same groupBy (r17
-    * opt, guide §2.3 "aggregate before you shuffle"): the graded rerank
-    * needs each doc's distinct-trigram count, and riding it on the sketch
-    * aggregation (count(1) over the same groups) deletes a separate
-    * whole-tg groupBy plus its downstream joins. Empty by default — the
-    * standing-index row format is unchanged. */
-  def sketchOf(tg: DataFrame, extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
-    val mins = minhashMults.zipWithIndex.map { case (m, h) =>
-      min(expr(s"poly_hash(g, 0L, ${m}L)")).as(s"mh$h") }
-    tg.groupBy("doc_id").agg(mins.head, (mins.tail ++ extra): _*)
-  }
-
   /** Band-bucket rows: one row per (doc, band) carrying the band's
-    * `bandRows` minhashes — the index row format and the LSH join key. */
+    * `bandRows` minhashes — the index row format and the LSH join key.
+    * Callers must have registered GraftFunctions. */
   def buckets(docs: DataFrame, bandRows: Int = 1): DataFrame =
-    bucketsOf(sketch(docs), bandRows)
+    bucketsOf(grams(docs), bandRows, withN = false)
 
-  /** [[buckets]] over an already-computed sketch. `carry` — extra sketch
-    * columns (e.g. the [[sketchOf]] `extra` count) replicated onto every
-    * band row, so the candidate join's output needs no post-hoc join to
-    * recover them (r17 opt; empty for the standing-index format). */
-  def bucketsOf(sketch: DataFrame, bandRows: Int,
-                carry: Seq[String] = Nil): DataFrame = {
+  /** [[buckets]] over a gram table: the 12-lane sketch (poly_hash mins
+    * over each doc's trigram set) stacked into bands. `withN` counts each
+    * doc's distinct trigrams in the same sketch aggregation and carries
+    * the count `n` onto every band row (aggregate before the shuffle), so
+    * [[selfPairs]]'s rerank needs no separate whole-gram groupBy nor the
+    * joins back to it. The standing index rows never carry it. */
+  private def bucketsOf(tg: DataFrame, bandRows: Int, withN: Boolean): DataFrame = {
     require(minhashMults.size % bandRows == 0,
       s"bandRows=$bandRows must divide the ${minhashMults.size}-hash sketch; " +
         "a non-divisor would silently drop trailing minhashes from the banding")
+    val mins = minhashMults.zipWithIndex.map { case (m, h) =>
+      min(expr(s"poly_hash(g, 0L, ${m}L)")).as(s"mh$h") }
+    val n = if (withN) Seq("n") else Nil
+    val sketch = tg.groupBy("doc_id")
+      .agg(mins.head, (mins.tail ++ n.map(c => count(lit(1)).as(c))): _*)
     val nBands = minhashMults.size / bandRows
     val stackExpr = (0 until nBands).map(b =>
       (Seq(s"$b") ++ (0 until bandRows).map(r => s"mh${b * bandRows + r}")).mkString(", ")).mkString(", ")
-    sketch.select((col("doc_id") +: carry.map(col)) :+
+    sketch.select((col("doc_id") +: n.map(col)) :+
       expr(s"stack($nBands, $stackExpr)").as(bandCols(bandRows)): _*)
+  }
+
+  /** The rerank's last step: `pairs` carrying the shared-trigram count `i`
+    * and both docs' trigram counts get their exact Jaccard distance,
+    * rounded to 6 places, and keep it only within [[maxDist]]. */
+  private def nearDups(n1: String, n2: String)(pairs: DataFrame): DataFrame =
+    pairs.withColumn("jaccard_dist",
+        round(lit(1.0) - col("i").cast("double") / (col(n1) + col(n2) - col("i")), 6))
+      .filter(col("jaccard_dist") <= maxDist)
+
+  /** Near-duplicate pairs WITHIN one doc set: (a, b, jaccard_dist), a < b,
+    * unsorted — the banded self-join at band width `bandRows` (`bandRows`
+    * minhashes a band, 12/bandRows bands) reranked by exact Jaccard. The
+    * dataflow of l02 (r=1, recall-first), l02b (r=2, precision-first)
+    * and l46, and the streaming curation tick's within-batch dedup.
+    * Callers must have registered GraftFunctions.
+    *
+    * The gram table is NOT checkpointed (r17 opt): it ends in a distinct
+    * — an Exchange on (doc_id, g) — and AQE's runtime exchange reuse
+    * dedups the identical subtree across all three consumers (sketch +
+    * both rerank sides), so the explode runs once either way. A
+    * localCheckpoint would add a blocking job + a block-manager write AND
+    * erase the partitioning, forcing the (b, g) rerank side to
+    * re-exchange rows the distinct had already hashed. n is functionally
+    * determined by the doc id, so widening the distinct / group keys by
+    * (na, nb) changes no cardinality and no result. */
+  def selfPairs(docs: DataFrame, bandRows: Int): DataFrame = {
+    val tg = grams(docs)
+    val bc = bandCols(bandRows)
+    val bkt = bucketsOf(tg, bandRows, withN = true)
+    val cand = bkt.select(col("doc_id").as("a") +: col("n").as("na") +: bc.map(col): _*)
+      .join(bkt.select(col("doc_id").as("b") +: col("n").as("nb") +: bc.map(col): _*), bc)
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b"), col("na"), col("nb")).distinct()
+    cand
+      .join(tg.select(col("doc_id").as("a"), col("g")), Seq("a"))
+      .join(tg.select(col("doc_id").as("b"), col("g")), Seq("b", "g"))
+      .groupBy("a", "b", "na", "nb").agg(count(lit(1)).as("i"))
+      .transform(nearDups("na", "nb"))
+      .select(col("a"), col("b"), col("jaccard_dist"))
   }
 
   /** Build the standing index over a corpus (one tokenize + sketch pass —

@@ -28,6 +28,11 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** BM25's term-frequency saturation and length normalization (the
+    * Robertson/Walker defaults every BM25 surface here scores with). */
+  val K1 = 1.2
+  val B = 0.75
+
   /** The whitespace tokenization every BM25 surface shares (l43/l48's
     * shape, factored round 16 so [[Bm25Index]]'s build/append can never
     * drift from the graded queries): one (doc_id, token) row per token
@@ -46,14 +51,13 @@ object Retrieval {
     * prunes BEFORE any aggregation) + a query-table broadcast fan-out —
     * never Q corpus scans; the per-query rank window partitions on
     * query_id, so it shuffles only the term-filtered candidate set. */
-  def bm25Batch(docs: DataFrame, qterms: DataFrame, topK: Int = 20,
-                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25Batch(docs: DataFrame, qterms: DataFrame, topK: Int = 20): DataFrame = {
     val terms = qterms.select(col("token")).distinct()
     val tok = tokenize(docs)
     val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val tf = tok.join(broadcast(terms), Seq("token"), "left_semi")
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    scoreTf(tf, dl, qterms, topK, k1, b)
+    scoreTf(tf, dl, qterms, topK)
   }
 
   /** The BM25 scoring tail over INDEX-SHAPED frames — `tf`(doc_id, token,
@@ -70,7 +74,7 @@ object Retrieval {
     * appends carry new doc ids only, so a token's row count is its
     * document frequency and `df` needs no distinct (one shuffle fewer). */
   def scoreTf(tf: DataFrame, dl: DataFrame, qterms: DataFrame,
-              topK: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+              topK: Int = 20): DataFrame = {
     val stats = dl.agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
                        count(lit(1)).as("n_docs"))
     val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
@@ -78,8 +82,8 @@ object Retrieval {
       .join(dl, "doc_id").crossJoin(broadcast(stats))
       .withColumn("idf", log(lit(1.0) +
         (col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1)) /
-        (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))))
+      .withColumn("w", col("idf") * (col("tf") * lit(K1 + 1)) /
+        (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl").cast("double") / col("avgdl"))))
     val scored = w.join(broadcast(qterms), "token")
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_terms_hit"),

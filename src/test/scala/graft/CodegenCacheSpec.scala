@@ -13,10 +13,10 @@ import graft.text.{Bm25Index, IvfIndex, LshIndex}
   * settings): a probe of each persisted index, run again with other query
   * data, compiles no class. The check is the compile counter, not the
   * conf: the class cache is JVM-global and sized by the session active at
-  * the first compile. A new `topK` or `maxDist` value does compile two
-  * classes, once per value: both are literals in the generated filter,
-  * and `topK` as a literal is what lets the optimizer cut each query's
-  * candidates to `topK` before the rank shuffle (WindowGroupLimit).
+  * the first compile. A new `topK` value does compile two classes, once
+  * per value: it is a literal in the generated filter, and as a literal
+  * it is what lets the optimizer cut each query's candidates to `topK`
+  * before the rank shuffle (WindowGroupLimit).
   * In local mode a class compiles once per JVM, not once per class loader:
   * driver threads and task threads share the executor's loader.
   */

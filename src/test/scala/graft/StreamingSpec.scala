@@ -805,6 +805,10 @@ class StreamingSpec extends SparkSpec {
       (Seq("the") ++ words.take(14) ++ Seq("of") ++ words.drop(14)).mkString(" ")
     }
     val failText = "a a a a a"
+    // a near-duplicate of passText(25) that is not byte-identical: one
+    // content word changed, so 25 of each doc's 28 trigrams are shared
+    // (jaccard_dist = 1 - 25/31), and it passes the gate on its own
+    val nearText = passText(25).replace("w25x20", "w25y20")
     val storeDir = java.nio.file.Files.createTempDirectory("cur").toString
     val seed = (0L to 3L).map(i => (i, passText(i.toInt))).toDF("doc_id", "text")
     CurationMaintain.init(spark, storeDir, seed, rowsPerShard = 8)
@@ -823,13 +827,14 @@ class StreamingSpec extends SparkSpec {
          DocEvent(12L, failText, erased = false))
     // b2: a re-crawl of doc 11 — accepted ONE BATCH AGO, so only the
     // loop's own maintained state can catch it — plus a fresh passer,
-    // plus a WITHIN-BATCH dup pair (ids 25 < 26, same text): neither is
-    // in the index yet, so only the batch's self-dedup can catch it —
-    // first-by-id wins
+    // plus a WITHIN-BATCH dup pair (ids 25 < 26, same text) and a
+    // within-batch near-dup of 25 (id 27): none is in the index yet, so
+    // only the batch's self-dedup can catch them — first-by-id wins
     fold(DocEvent(20L, passText(11), erased = false),
          DocEvent(21L, passText(21), erased = false),
          DocEvent(25L, passText(25), erased = false),
-         DocEvent(26L, passText(25), erased = false))
+         DocEvent(26L, passText(25), erased = false),
+         DocEvent(27L, nearText, erased = false))
     // b3: erase doc 11, then a re-crawl of its text under a new id — with
     // the original erased there is nothing left to collide with, so the
     // re-crawl is ACCEPTED (erasure means gone, the g69 leave-semantics)
@@ -840,6 +845,12 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(acceptedIds === Set(0L, 1L, 2L, 3L, 21L, 22L, 25L),
       s"accepted store diverged from the expected fold: $acceptedIds")
+    // 27 dropped as a near-dup inside the threshold, not by the gate
+    assert(graft.text.LlmQueries.gopherQuality(Seq((27L, nearText)).toDF("doc_id", "text"))
+      .select("gopher_pass").as[Boolean].collect().toSeq === Seq(true))
+    assert(graft.text.LshIndex.selfPairs(
+        Seq((25L, passText(25)), (27L, nearText)).toDF("doc_id", "text"), bandRows = 1)
+      .as[(Long, Long, Double)].collect().toSeq === Seq((25L, 27L, 0.193548)))
     // per-batch packed output covers exactly that batch's accepted slice
     def packedOf(ids: (Long, String)*) =
       graft.text.LlmQueries.packGreedy(ids.toSeq.toDF("doc_id", "text"), 512L)

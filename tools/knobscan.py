@@ -10,7 +10,8 @@ removed, and prints two lists:
   (a) src/main definitions (def, val, var, object, class, trait, type)
       whose name no other place in that code mentions;
   (b) src/main default parameters that no call site in that code sets,
-      positionally or by name.
+      positionally or by name; an entry that a call site in src/test sets
+      is marked "[src/test sets it]".
 
 A name is matched as a whole identifier, so an overloaded or common name
 ("count", "apply") reads as referenced wherever any of its namesakes is:
@@ -143,6 +144,7 @@ def main():
     run_files = main_files + list(scala_files(root, "perfbench/src"))
     raw = {p: open(p, encoding="utf-8").read() for p in run_files}
     code = {p: strip(raw[p]) for p in run_files}  # same offsets as raw
+    test_code = [strip(open(p, encoding="utf-8").read()) for p in scala_files(root, "src/test")]
     rel = lambda p: os.path.relpath(p, root)
 
     uses = collections.Counter()
@@ -189,14 +191,17 @@ def main():
         named = {named_arg.match(x).group(1) for x in args if named_arg.match(x)}
         return prm in named or sum(1 for x in args if not named_arg.match(x)) > pi
 
-    b = []
-    for p, at, name, li, pi, prm, default in knobs:
+    def set_in(texts, name, li, pi, prm):
         mention = re.compile(r"(?<![\w$])" + re.escape(name) + r"\b")
-        if not any(sets(t, m, li, pi, prm) for t in code.values() for m in mention.finditer(t)):
-            b.append((p, at, name, prm, default))
-    for p, start, name, prm, default in b:
-        print(f"  {rel(p)}:{line_of(code[p], start)}  {name}({prm} = {default})")
-    print(f"  -- {len(b)} default parameters")
+        return any(sets(t, m, li, pi, prm) for t in texts for m in mention.finditer(t))
+
+    b = [(p, at, name, prm, default, set_in(test_code, name, li, pi, prm))
+         for p, at, name, li, pi, prm, default in knobs
+         if not set_in(code.values(), name, li, pi, prm)]
+    for p, start, name, prm, default, in_test in b:
+        mark = "  [src/test sets it]" if in_test else ""
+        print(f"  {rel(p)}:{line_of(code[p], start)}  {name}({prm} = {default}){mark}")
+    print(f"  -- {len(b)} default parameters, {sum(e[5] for e in b)} of them set in src/test")
 
 
 if __name__ == "__main__":
